@@ -80,11 +80,6 @@ import graft.ocds.Metadata
   */
 object Cli {
 
-  private def loadPlane(lake: String): Control.Plane = PlaneStore.load(lake)
-
-  private def savePlane(lake: String, plane: Control.Plane): Unit =
-    PlaneStore.save(lake, plane)
-
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -98,11 +93,6 @@ object Cli {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  private def nowUtc(): String = PlaneStore.nowUtc()
-
-  private def treeIds(plane: Control.Plane, root: Long): Seq[Long] =
-    plane.treeIds(root)
 
   /** Usage-error exit: 'unknown collection 7', not a Map stack trace. */
   private def known(plane: Control.Plane, id: Long): Control.Collection =
@@ -119,9 +109,6 @@ object Cli {
       sys.exit(2)
     }
 
-  private def readOrEmpty(spark: SparkSession, path: String): Option[DataFrame] =
-    Sink.readOrEmpty(spark, path)
-
   /** A loaded collection's rows as the (source, doc_id, text) document
     * frame the corpus-pipeline engines consume: release or record facts by
     * the collection's format (compiled-release collections carry no raw
@@ -133,6 +120,15 @@ object Cli {
       spark: SparkSession, lake: String, plane: Control.Plane,
       cid: Long): Option[DataFrame] =
     Pipeline.collectionDocsOf(spark, lake, known(plane, cid))
+
+  /** The root's planned check step (`load --check`), run at the close of
+    * its lifecycle and persisting release_check/record_check rows, as the
+    * report suffix; empty when no check was planned. */
+  private def plannedChecks(
+      spark: SparkSession, lake: String, plane: Control.Plane, rid: Long): String =
+    (if (plane.collection(rid).steps.contains("check"))
+      Pipeline.runChecks(spark, lake, plane, rid) else None)
+      .map { case (n, f) => s" checked=$n check_failed=$f" }.getOrElse("")
 
   /** `--flag value` extraction; exits on a missing or flag-shaped value. */
   private def flagValue(rest: List[String], flag: String): Option[String] =
@@ -172,7 +168,7 @@ object Cli {
       val check = rest.contains("--check")
       val sample = rest.contains("--sample")
       val note = flagValue(rest, "--note")
-      val plane0 = loadPlane(lake)
+      val plane0 = PlaneStore.load(lake)
       val id =
         if (!rest.contains("--id"))
           plane0.collections.keys.maxOption.map(_ + 1).getOrElse(1L)
@@ -182,21 +178,23 @@ object Cli {
             case _ => // missing, flag-valued, overflowing, or non-positive
               System.err.println("--id needs a positive number"); sys.exit(2)
           }
-      // the load creates id (+1 upgraded) (+1 compiled when planned): all
-      // must be new, or the control rows would be overwritten while the
-      // lake APPENDS a second copy of every fact row under the same
-      // partitions
-      val span = id to (id + (if (upgrade) 1 else 0) + (if (compile) 1 else 0))
-      span.find(plane0.collections.contains).foreach { clash =>
-        System.err.println(s"collection $clash already exists; pick another --id")
-        sys.exit(2)
-      }
       val keepOpen = rest.contains("--keep-open")
       // -s/--source and -t/--time (load.py:43-56): the announced source
       // name and an explicit data_version, overriding the path default /
       // earliest file mtime
       val sourceId = flagValue(rest, "--source")
       val time = flagValue(rest, "--time")
+      // the tree the load will create (Pipeline.load builds the same one):
+      // every id must be new, or the control rows would be overwritten
+      // while the lake APPENDS a second copy of every fact row under the
+      // same partitions
+      val treeIds = Control.newTree(plane0, id, sourceId.getOrElse(input),
+        time.getOrElse(""), upgrade, compile, check) match {
+        case Left(errs) =>
+          System.err.println(s"${errs.mkString("; ")}; pick another --id")
+          sys.exit(2)
+        case Right(tree) => tree.treeIds(id)
+      }
       time.foreach { t =>
         // a REAL datetime parse, like load.py's -t handling — a
         // shape-only regex would accept '2020-13-45 25:99:99'
@@ -209,31 +207,21 @@ object Cli {
         }
       }
       val spark = session()
-      val now = nowUtc()
+      val now = PlaneStore.nowUtc()
       val stage = Pipeline.load(
         spark, input, lake, collectionId = id, now = now,
         upgrade = upgrade, keepOpen = keepOpen,
         sourceId = sourceId, dataVersionOverride = time,
         compile = compile, check = check)
       // --keep-open (load.py:156-161): skip the close latch AND the
-      // compile/check/finalize chain it gates — addfiles batches arrive
-      // next, then closecollection + compile finish the lifecycle.
-      // Without --compile there is no compiled child: the finisher leg is
-      // just the completion gates (finishUncompiled)
-      val compileStage =
-        if (keepOpen) None
-        else if (compile) Some(Pipeline.compileAndFinish(spark, lake, stage.plane, id, now))
-        else None
-      val finishedPlane =
-        if (keepOpen) stage.plane
-        else compileStage.map(_.plane)
-          .getOrElse(Pipeline.finishUncompiled(spark, lake, stage.plane, id, now))
+      // close chain it gates — addfiles batches arrive next, then
+      // closecollection + compile finish the lifecycle
+      val (report, compileStage) =
+        if (keepOpen) (stage.plane, None)
+        else Pipeline.finish(spark, lake, stage.plane, id, now)
       // --check: the planned check step runs inline at close (the checker
-      // worker's disposition), persisting release_check/record_check rows
-      val checkRun =
-        if (check && !keepOpen) Pipeline.runChecks(spark, lake, finishedPlane, id)
-        else None
-      val report = finishedPlane
+      // worker's disposition)
+      val checked = if (keepOpen) "" else plannedChecks(spark, lake, report, id)
       // --note: persisted like every other note — an INFO collection_note
       // row on the root collection (load.py's required -n/--note)
       note.foreach { text =>
@@ -245,15 +233,14 @@ object Cli {
       }
       // --sample: recorded on EVERY created collection, like the loader's
       // shared data dict (loader.py:73-78) and the API's create
-      val createdIds = id to (id + (if (upgrade) 2 else 1))
       val loaded =
         if (!sample) report
-        else createdIds.foldLeft(report)((p, cid) => p.copy(collections =
-          p.collections.updatedWith(cid)(_.map(_.copy(sample = true)))))
+        else treeIds.foldLeft(report)((p, cid) => p.copy(collections =
+          p.collections.updated(cid, p.collection(cid).copy(sample = true))))
       // merge into any pre-existing plane document (other collections; the
       // created ids are guaranteed fresh above, so the registry maps are
       // disjoint and the load's pending journal entries carry over whole)
-      savePlane(lake, plane0.copy(
+      PlaneStore.save(lake, plane0.copy(
         collections = plane0.collections ++ loaded.collections,
         files = plane0.files ++ loaded.files,
         steps = plane0.steps ++ loaded.steps,
@@ -267,7 +254,7 @@ object Cli {
           s" compiled_releases=${c.compiled} check_failures=${c.checkFailures}" +
             s" notes=${stage.notes + c.notes}")
           .getOrElse(s" notes=${stage.notes}" + (if (keepOpen) " (open)" else "")) +
-        checkRun.map { case (n, f) => s" checked=$n check_failed=$f" }.getOrElse(""))
+        checked)
 
     case "addfiles" :: lake :: id :: paths if paths.nonEmpty =>
       // the reference's addfiles (docs/cli.rst:37, addfiles.py): add more
@@ -277,7 +264,7 @@ object Cli {
       // (Pipeline.loadFilesInto) — register + stream-load + upgrade leg +
       // LOAD-step completion — the same disposition as `load` itself. A
       // later closecollection releases the compile gate.
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       val c = known(plane, cid)
       if (c.storeEndAt.nonEmpty) {
@@ -294,13 +281,9 @@ object Cli {
       val found = graft.ingest.Ingest.walk(spark, paths)
       if (found.isEmpty) { System.err.println("No files to load"); sys.exit(2) }
       found.foreach(p => System.err.println(s"Adding $p"))
-      val upgradedId = plane.collections.values
-        .find(k => k.parent.contains(cid) &&
-          k.transformType.contains(Control.Transform.Upgrade1011))
-        .map(_.id)
-      val (updated, nItems, _) =
-        Pipeline.loadFilesInto(spark, found, lake, plane, cid, upgradedId)
-      savePlane(lake, updated)
+      val (updated, nItems, _) = Pipeline.loadFilesInto(
+        spark, found, lake, plane, cid, plane.upgradedChild(cid).map(_.id))
+      PlaneStore.save(lake, updated)
       // loadFilesInto skips already-registered paths (replay dedup, T1) —
       // report what actually loaded
       val newFiles = updated.fileCount(cid) - plane.fileCount(cid)
@@ -311,7 +294,7 @@ object Cli {
       // list collections, filterable by source, newest first, with the
       // cached counts the finisher wrote — the control plane is
       // driver-sized, so this is a pure plane read, no Spark session
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val source = flagValue(rest, "--source")
       val withCompiled = rest.contains("--with-compiled")
       plane.collections.values.toSeq
@@ -344,7 +327,7 @@ object Cli {
       // process) could land a batch between the compaction's scan and its
       // swap, and the swap would retire that batch's files with the old
       // directory (ADVICE r7)
-      loadPlane(lake).collections.get(cid) match {
+      PlaneStore.load(lake).collections.get(cid) match {
         case Some(c) =>
           if (c.completedAt.isEmpty && c.deletedAt.isEmpty) {
             System.err.println(
@@ -411,8 +394,8 @@ object Cli {
       // the compiler → checker → finisher worker chain, run inline once the
       // close latch has released the gate (the keep-open/addfiles flow's
       // final step; `compiler.py`/`finisher.py` semantics via
-      // Pipeline.compileAndFinish)
-      val plane = loadPlane(lake)
+      // Pipeline.finish)
+      val plane = PlaneStore.load(lake)
       val rid = idArg(rootId)
       val c = known(plane, rid)
       if (c.parent.nonEmpty) {
@@ -420,52 +403,27 @@ object Cli {
           s"Collection $rid is not a root collection. Its parent is collection ${c.parent.get}.")
         sys.exit(2)
       }
-      // a compile-less keep-open lifecycle (`load --keep-open` without
-      // `--compile`) has no compile-releases child: its finisher leg is
-      // finishUncompiled + the planned check step, same as a bare `load`
-      // close (ADVICE r9: previously this path threw and the collection
-      // stayed open forever)
-      val compileBaseId = plane.upgradedChild(rid).map(_.id).getOrElse(rid)
-      if (plane.compiledChild(plane.collection(compileBaseId)).isEmpty) {
-        val spark = session()
-        val p2 =
-          try Pipeline.finishUncompiled(spark, lake, plane, rid, nowUtc())
-          catch {
-            case e @ (_: IllegalArgumentException | _: IllegalStateException) =>
-              System.err.println(e.getMessage)
-              sys.exit(2)
-          }
-        savePlane(lake, p2)
-        val checked =
-          if (c.steps.contains("check")) Pipeline.runChecks(spark, lake, p2, rid)
-          else None
-        println("compiled=- (no compile step planned; collection completed" +
-          " uncompiled)" +
-          checked.map { case (n, f) => s" checked=$n check_failed=$f" }.getOrElse(""))
-      } else {
-        // a closed gate (not yet closecollection'd, files still expected) or
-        // a replayed run (compilation already started) is a usage error, not
-        // a stack trace
-        val stage =
-          try Pipeline.compileAndFinish(session(), lake, plane, rid, nowUtc())
-          catch {
-            case e @ (_: IllegalArgumentException | _: IllegalStateException) =>
-              System.err.println(e.getMessage)
-              sys.exit(2)
-          }
-        savePlane(lake, stage.plane)
-        // a check step planned at load (`load --keep-open --check`) runs
-        // now, at the close of the keep-open lifecycle, persisting check
-        // rows
-        val checked =
-          if (c.steps.contains("check"))
-            Pipeline.runChecks(session(), lake, stage.plane, rid)
-          else None
-        println(s"compiled=${stage.compiledCollectionId}" +
-          s" compiled_releases=${stage.compiled}" +
-          s" check_failures=${stage.checkFailures} notes=${stage.notes}" +
-          checked.map { case (n, f) => s" checked=$n check_failed=$f" }.getOrElse(""))
-      }
+      // the close chain decides from the plane: a compile-less keep-open
+      // lifecycle (`load --keep-open` without `--compile`) completes
+      // uncompiled, same as a bare `load` close. A closed gate (not yet
+      // closecollection'd, files still expected) or a replayed run
+      // (compilation already started) is a usage error, not a stack trace
+      val spark = session()
+      val (finished, stage) =
+        try Pipeline.finish(spark, lake, plane, rid, PlaneStore.nowUtc())
+        catch {
+          case e @ (_: IllegalArgumentException | _: IllegalStateException) =>
+            System.err.println(e.getMessage)
+            sys.exit(2)
+        }
+      PlaneStore.save(lake, finished)
+      // a check step planned at load (`load --keep-open --check`) runs now,
+      // at the close of the keep-open lifecycle
+      val checked = plannedChecks(spark, lake, finished, rid)
+      println(stage.fold("compiled=- (no compile step planned; collection completed" +
+        " uncompiled)")(st => s"compiled=${st.compiledCollectionId}" +
+        s" compiled_releases=${st.compiled} check_failures=${st.checkFailures}" +
+        s" notes=${st.notes}") + checked)
 
     case "manifest" :: lake :: rest =>
       // read the incremental corpus-build manifest the close drain
@@ -505,10 +463,10 @@ object Cli {
       }
 
     case "collectionstatus" :: lake :: rootId :: Nil =>
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val rid = idArg(rootId)
       known(plane, rid)
-      treeIds(plane, rid).foreach { id =>
+      plane.treeIds(rid).foreach { id =>
         val c = plane.collection(id)
         println(s"collection $id" + c.transformType.map(t => s" ($t)").getOrElse(""))
         println(s"  steps:                ${c.steps.toSeq.sorted.mkString(", ")}")
@@ -533,7 +491,7 @@ object Cli {
       // beats an AnalysisException on the absent release table. Shared
       // engine with the load-planned --check step: Pipeline.runChecks.
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       known(plane, cid)
       Pipeline.runChecks(spark, lake, plane, cid) match {
@@ -563,7 +521,7 @@ object Cli {
       rejectStray("dedup",
         stripFlag(stripFlag(rest, "--checkpoint-dir"), "--max-bucket"))
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -586,7 +544,7 @@ object Cli {
       // keeper election → hash sampling) over a loaded collection's raw
       // documents — per-source attrition + selected-token totals
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -622,7 +580,7 @@ object Cli {
       // error, not a silent run at the default width (ADVICE r11)
       rejectStray("substr-dedup", stripFlag(rest, "--width"))
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -662,7 +620,7 @@ object Cli {
       // raw documents: the data-driven threshold readout (rank-based
       // ceil(n/10) cut by stopword-ratio, the q_quality_gate engine)
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -686,7 +644,7 @@ object Cli {
       // quality-gate's data-driven percentile cut (the q_gopher_rules
       // engine)
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -795,7 +753,7 @@ object Cli {
             "--epoch"), "--epoch-idx"), "--merges"), "--unimax")
           .filterNot(a => a == "--packed" || a == "--curriculum"))
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -917,7 +875,7 @@ object Cli {
         }
       }
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -942,7 +900,7 @@ object Cli {
       // token streams, so line rules see one line per doc unless the
       // loaded payloads carry real newlines)
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -972,7 +930,7 @@ object Cli {
       // docs are single-line token streams, so the pass dedups whole
       // docs unless the loaded payloads carry real newlines)
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -1034,7 +992,7 @@ object Cli {
         sys.exit(2)
       }
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       val scores: Option[org.apache.spark.sql.DataFrame] =
         if (indexed) {
@@ -1077,7 +1035,7 @@ object Cli {
       // at THIS moment; files added later need a re-index (or the
       // streaming leg, which maintains it per batch).
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -1112,7 +1070,7 @@ object Cli {
       }
       rejectStray("train-bpe", stripFlag(rest, "--merges"))
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -1153,7 +1111,7 @@ object Cli {
       val wdir = flagValue(rest, "--weights")
       rejectStray("dsir-select", stripFlag(stripFlag(rest, "--top"), "--weights"))
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       (collectionDocs(spark, lake, plane, idArg(rawId)),
         collectionDocs(spark, lake, plane, idArg(targetId))) match {
         case (Some(raw), Some(target)) =>
@@ -1473,7 +1431,7 @@ object Cli {
       // temperature-resampled (sqrt) training-mix weights over a loaded
       // collection's raw documents (the q_source_mix engine)
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -1500,7 +1458,7 @@ object Cli {
       // collection shingle join
       val spark = session()
       graft.functions.GraftExtensions.ensureRegistered(spark)
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val (ca, cb) = (idArg(idA), idArg(idB))
       if (ca == cb) {
         System.err.println("overlap needs two DIFFERENT collection ids")
@@ -1555,7 +1513,7 @@ object Cli {
       // over a loaded collection's raw documents — the
       // q_length_quantiles engine
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -1592,7 +1550,7 @@ object Cli {
       rejectStray("heavy-terms",
         stripFlag(stripFlag(stripFlag(rest, "--width"), "--min"), "--top"))
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val cid = idArg(id)
       collectionDocs(spark, lake, plane, cid) match {
         case None =>
@@ -1646,7 +1604,7 @@ object Cli {
       // closecollection.py: ROOT collections only; the upgraded child
       // latches in the same transaction (its compile gate waits on the
       // same close); an already-closed collection is left untouched
-      val plane = loadPlane(lake); val cid = idArg(id)
+      val plane = PlaneStore.load(lake); val cid = idArg(id)
       val c = known(plane, cid)
       if (c.parent.nonEmpty) {
         System.err.println(
@@ -1659,33 +1617,28 @@ object Cli {
       }
       if (c.storeEndAt.nonEmpty) println(s"already closed ${id}")
       else {
-        val now = nowUtc()
-        var p2 = Control.closeCollection(plane, cid, now, n)
-        p2.collections.values
-          .find(k => k.parent.contains(cid) &&
-            k.transformType.contains(Control.Transform.Upgrade1011))
-          .foreach(u => p2 = Control.closeCollection(p2, u.id, now, n))
-        savePlane(lake, p2)
+        val now = PlaneStore.nowUtc()
+        PlaneStore.save(lake, Control.closeTree(plane, cid, now, n))
         println(s"closed ${id}")
       }
 
     case "cancelcollection" :: lake :: id :: Nil =>
       // logical delete ONLY: the lake rows stay, so the file registry
       // stays too (Control's documented invariant) — no journal compaction
-      val plane = loadPlane(lake); val cid = idArg(id); known(plane, cid)
-      savePlane(lake, Control.cancel(plane, cid, nowUtc()))
+      val plane = PlaneStore.load(lake); val cid = idArg(id); known(plane, cid)
+      PlaneStore.save(lake, Control.cancel(plane, cid, PlaneStore.nowUtc()))
       println(s"cancelled ${id}")
 
     case "deletecollection" :: lake :: rootId :: Nil =>
       // S9: the lake is collection_id-partitioned, so wiping a tree is a
       // partition-directory drop per fact table — no data rewrite
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val rid = idArg(rootId)
       known(plane, rid)
-      val ids = treeIds(plane, rid).toSet
-      val now = nowUtc()
+      val ids = plane.treeIds(rid).toSet
+      val now = PlaneStore.nowUtc()
       Wipe.dropTreePartitions(lake, ids)
-      savePlane(lake, ids.foldLeft(plane)((p, id) => Control.cancel(p, id, now)))
+      PlaneStore.save(lake, ids.foldLeft(plane)((p, id) => Control.cancel(p, id, now)))
       // the wiped tree's file events are dead weight in the append-only
       // journal — filter them out (collection_file row deletes in the
       // reference); concurrent appends survive via the journal lock
@@ -1698,7 +1651,7 @@ object Cli {
       // MERGE, same plan shape)
       val spark = session()
       val store = Sink.readDedupStore(spark, s"$lake/data")
-      val refs = Seq(readOrEmpty(spark, s"$lake/release")).flatten
+      val refs = Seq(Sink.readOrEmpty(spark, s"$lake/release")).flatten
         .map(_.select("hash_md5"))
       val orphaned = Wipe.orphans(store, "hash_md5", refs).persist()
       val removed = orphaned.count()
@@ -1717,7 +1670,7 @@ object Cli {
 
     case "metadata" :: lake :: compiledId :: Nil =>
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val c = known(plane, idArg(compiledId))
       require(c.transformType.contains(Control.Transform.CompileReleases),
         "The collection must be a compiled collection")
@@ -1736,7 +1689,7 @@ object Cli {
 
     case "notes" :: lake :: rootId :: rest =>
       val spark = session()
-      val plane = loadPlane(lake)
+      val plane = PlaneStore.load(lake)
       val rid = idArg(rootId)
       known(plane, rid)
       // --limit N: the per-level bound, caller-visible (default 1000 —
@@ -1751,12 +1704,12 @@ object Cli {
       }
       val levels = stripFlag(rest, "--limit").filterNot(_.startsWith("--"))
       val lv = if (levels.isEmpty) Seq(Notes.Info, Notes.Warning, Notes.Error) else levels
-      readOrEmpty(spark, s"$lake/collection_note") match {
+      Sink.readOrEmpty(spark, s"$lake/collection_note") match {
         case None => println("no notes")
         case Some(notes) =>
           // collect() here is the command's OUTPUT: forTree groups to at
           // most one row per level (≤3) for the terminal print
-          Notes.forTree(notes, treeIds(plane, rid), lv, maxPerCode = limit)
+          Notes.forTree(notes, plane.treeIds(rid), lv, maxPerCode = limit)
             .collect().foreach { r =>
               val shown = r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("notes"))
               val total = r.getAs[Long]("n_total")

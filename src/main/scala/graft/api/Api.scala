@@ -160,67 +160,41 @@ final class Api(
     }
     val sourceId = body.get("source_id").asText
     val dataVersion = body.get("data_version").asText
-    val sample = bool(body, "sample")
-    val upgrade = bool(body, "upgrade")
-    val compile = bool(body, "compile")
-    val check = bool(body, "check")
-    val lineDedup = bool(body, "line_dedup")
-    val dsirScore = bool(body, "dsir_score")
-    val corpusManifest = bool(body, "corpus_manifest")
-    val mediaFingerprint = bool(body, "media_fingerprint")
-    // scene-level variant (r20): per-frame fingerprints at ingest, the
-    // at-ingest twin of q_video_neardup_scenes — implies the base step
-    val mediaFingerprintScenes = bool(body, "media_fingerprint_scenes")
+    // this engine's corpus-curation extensions: each planned as a root step
+    // named after its request field, gated the way checks are; the
+    // scene-level media variant (per-frame fingerprints at ingest, the
+    // at-ingest twin of q_video_neardup_scenes) implies the base step
+    val requested = Set("line_dedup", "dsir_score", "corpus_manifest",
+      "media_fingerprint", "media_fingerprint_scenes").filter(bool(body, _))
+    val extraSteps =
+      if (requested("media_fingerprint_scenes")) requested + "media_fingerprint"
+      else requested
     val note = Option(body.get("note")).filter(_.isTextual).map(_.asText).filter(_.nonEmpty)
 
-    var plane = PlaneStore.load(lake)
-    val rootId = plane.collections.keys.maxOption.map(_ + 1).getOrElse(1L)
-    // steps exactly as loader.py:79-85: check + (upgrade | compile);
-    // line_dedup is this engine's corpus-curation extension (the
-    // streaming LineStore leg), gated the same way checks are
-    val rootSteps = (if (check) Set("check") else Set.empty[String]) ++
-      (if (lineDedup) Set("line_dedup") else Set.empty[String]) ++
-      (if (dsirScore) Set("dsir_score") else Set.empty[String]) ++
-      (if (corpusManifest) Set("corpus_manifest") else Set.empty[String]) ++
-      (if (mediaFingerprint || mediaFingerprintScenes)
-        Set("media_fingerprint") else Set.empty[String]) ++
-      (if (mediaFingerprintScenes)
-        Set("media_fingerprint_scenes") else Set.empty[String]) ++
-      (if (upgrade) Set("upgrade") else if (compile) Set("compile") else Set.empty[String])
-    var created = List(Control.Collection(
-      rootId, sourceId, dataVersion, steps = rootSteps, sample = sample))
-    if (upgrade) created :+= Control.Collection(
-      rootId + 1, sourceId, dataVersion, parent = Some(rootId),
-      transformType = Some(Control.Transform.Upgrade1011),
-      steps = if (compile) Set("compile") else Set.empty, sample = sample)
-    if (compile) created :+= Control.Collection(
-      rootId + created.size, sourceId, dataVersion,
-      parent = Some(created.last.id),
-      transformType = Some(Control.Transform.CompileReleases), sample = sample)
-
-    for (c <- created) {
-      val errs = Control.validateNew(plane, c)
-      if (errs.nonEmpty) {
+    val plane0 = PlaneStore.load(lake)
+    val rootId = plane0.collections.keys.maxOption.map(_ + 1).getOrElse(1L)
+    val plane = Control.newTree(plane0, rootId, sourceId, dataVersion,
+      upgrade = bool(body, "upgrade"), compile = bool(body, "compile"),
+      check = bool(body, "check"), extraSteps, sample = bool(body, "sample")) match {
+      case Left(errs) =>
         respond(ex, 400, obj { o =>
           val a = o.putArray("non_field_errors"); errs.foreach(a.add); ()
         })
         return
-      }
-      plane = plane.copy(collections = plane.collections.updated(c.id, c))
+      case Right(p) => p
     }
     PlaneStore.save(lake, plane)
     note.foreach { text => // loader.py saves the note on every created collection
       import spark.implicits._
       Sink.writeByCollection(
-        created.map(c => (c.id, Notes.Info, text, "{}"))
+        plane.treeIds(rootId).map(id => (id, Notes.Info, text, "{}"))
           .toDF("collection_id", "code", "note", "data"),
         s"$lake/collection_note")
     }
     respond(ex, 200, obj { o =>
       o.put("collection_id", rootId)
-      created.find(_.transformType.contains(Control.Transform.Upgrade1011))
-        .foreach(c => o.put("upgraded_collection_id", c.id))
-      created.find(_.transformType.contains(Control.Transform.CompileReleases))
+      plane.upgradedChild(rootId).foreach(c => o.put("upgraded_collection_id", c.id))
+      plane.compiledChild(plane.compileBase(rootId))
         .foreach(c => o.put("compiled_collection_id", c.id))
       landingRoot.foreach { root =>
         val dir = java.nio.file.Paths.get(root, s"collection_$rootId", "landing")
@@ -236,9 +210,9 @@ final class Api(
     * reference's own behavior (`views.py:122` `.get(…, 0)`), and its
     * compiler likewise asserts when a "closed empty" collection turns out
     * to have files (`compiler.py:184-191`); crawlers always send the stat.
-    * Non-root and already-closed guards mirror the CLI's closecollection
-    * (ADVICE r6: a replayed close must not reset expected_files_count to 0
-    * on a collection that has files — 202 without mutation instead). */
+    * Non-root and already-closed guards mirror the CLI's closecollection:
+    * a replayed close must not reset expected_files_count to 0 on a
+    * collection that has files — 202 without mutation instead. */
   private def close(ex: HttpExchange, id: Long, body: JsonNode): Unit = lock.synchronized {
     var plane = PlaneStore.load(lake)
     val c = plane.collections.getOrElse(id, { notFound(ex); return })
@@ -249,19 +223,19 @@ final class Api(
     }
     if (c.storeEndAt.nonEmpty) {
       // already closed: 202 without re-latching — but in ingest mode a
-      // close whose inline compile crashed (or was interrupted between the
-      // latch save and the compile) must be re-attemptable, or the tree is
+      // close whose inline finish crashed (or was interrupted between the
+      // latch save and the finish) must be re-attemptable, or the tree is
       // stranded with no worker fleet to pick it up. The retry RE-RUNS THE
-      // LANDING-DIR DRAIN first (ADVICE r7): a file that landed mid-close,
+      // LANDING-DIR DRAIN first: a file that landed mid-close,
       // or was announced but arrived late, would otherwise never be loaded
       // by any code path — expected_files_count stays above the registered
       // count and compilable() gates false forever, where the reference's
       // workers would still process the late file. The checkpointed stream
-      // makes the re-drain a no-op when nothing new landed; the gate +
-      // run-once CAS make the retried compile idempotent.
+      // makes the re-drain a no-op when nothing new landed; the gates +
+      // run-once CAS make the retried finish idempotent.
       landingRoot.foreach { _ =>
         plane = drainLanding(plane, id)
-        val p2 = runPendingCompile(plane, id)
+        val p2 = runPendingFinish(plane, id)
         if (p2 ne plane) PlaneStore.save(lake, p2)
         runManifest(p2, id)
       }
@@ -276,11 +250,7 @@ final class Api(
     val expected = stats.flatMap(s =>
       Option(s.get("kingfisher_process_expected_files_count")).filter(_.isNumber)
         .map(_.asInt)).getOrElse(0)
-    val now = nowUtc()
-    plane = Control.closeCollection(plane, id, now, expected)
-    plane.upgradedChild(id)
-      .foreach(u => plane = Control.closeCollection(plane, u.id, now, expected))
-    plane = PlaneStore.save(lake, plane)
+    plane = PlaneStore.save(lake, Control.closeTree(plane, id, PlaneStore.nowUtc(), expected))
 
     val noteRows =
       Option(body.get("reason")).filter(_.isTextual).map(_.asText).filter(_.nonEmpty)
@@ -293,10 +263,10 @@ final class Api(
         s"$lake/collection_note")
     }
     // ingest mode: the close latch just released the compile gate — run
-    // the compiler → checker → finisher worker chain inline (the work the
-    // reference's collection_closed message triggers)
+    // the close chain inline (the work the reference's collection_closed
+    // message triggers)
     landingRoot.foreach { _ =>
-      val p2 = runPendingCompile(plane, id)
+      val p2 = runPendingFinish(plane, id)
       if (p2 ne plane) plane = PlaneStore.save(lake, p2)
       runManifest(plane, id)
     }
@@ -371,26 +341,23 @@ final class Api(
     plane
   }
 
-  /** Ingest-mode compile: run compileAndFinish iff the tree plans a
-    * compile, the compiled child hasn't completed, and the gate holds
-    * (expected > actual means announced files are still in flight) —
-    * callable from both the first close and a replayed one. Returns the
-    * plane unchanged when there is nothing to do, INCLUDING when the
-    * finish gates refuse (a record tree is "compilable" before all its
-    * announced files arrive, but not completable — the reference's
-    * finisher just waits; a close must stay 202, not 500). */
-  private def runPendingCompile(plane: Control.Plane, id: Long): Control.Plane = {
-    val base = plane.upgradedChild(id).getOrElse(plane.collection(id))
-    val pending = plane.compiledChild(base).exists(_.completedAt.isEmpty)
-    if (pending && Control.compilable(plane, base))
-      try graft.Pipeline.compileAndFinish(spark, lake, plane, id, nowUtc()).plane
+  /** Ingest-mode finish: the one close chain ([[graft.Pipeline.finish]])
+    * for a tree not yet completed — compile when the tree plans a compiled
+    * child, else complete it uncompiled. Callable from both the first
+    * close and a replayed one. Returns the plane unchanged when there is
+    * nothing to do, INCLUDING when a gate refuses (announced files still
+    * in flight; a record tree is "compilable" before all its announced
+    * files arrive, but not completable — the reference's finisher just
+    * waits; a close must stay 202, not 500). */
+  private def runPendingFinish(plane: Control.Plane, id: Long): Control.Plane =
+    if (plane.collection(id).completedAt.nonEmpty) plane
+    else
+      try graft.Pipeline.finish(spark, lake, plane, id, PlaneStore.nowUtc())._1
       catch {
         case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
-          System.err.println(s"[api] compile for collection $id not ready: ${e.getMessage}")
+          System.err.println(s"[api] finish for collection $id not ready: ${e.getMessage}")
           plane
       }
-    else plane
-  }
 
   /** `destroy` (`views.py:150-156` → `wiper.py`): wipe the tree rooted at
     * id — partition drops on the collection_id-partitioned lake plus
@@ -403,9 +370,9 @@ final class Api(
   private def destroy(ex: HttpExchange, id: Long): Unit = lock.synchronized {
     var plane = PlaneStore.load(lake)
     if (!plane.collections.contains(id)) { respond(ex, 202, null); return }
-    val ids = treeIds(plane, id).toSet
+    val ids = plane.treeIds(id).toSet
     Wipe.dropTreePartitions(lake, ids)
-    val now = nowUtc()
+    val now = PlaneStore.nowUtc()
     ids.foreach(i => plane = Control.cancel(plane, i, now))
     PlaneStore.save(lake, plane)
     // drop the wiped tree's dead file events from the append-only journal
@@ -533,7 +500,7 @@ final class Api(
       val arrays = levels.map(l => l -> o.putArray(l)).toMap
       readOrEmpty(s"$lake/collection_note").foreach { df =>
         // collect(): forTree bounds to ≤ maxPerCode rows per level (≤3 levels)
-        Notes.forTree(df, treeIds(plane, id), levels, maxPerCode = limit)
+        Notes.forTree(df, plane.treeIds(id), levels, maxPerCode = limit)
           .collect().foreach { r =>
           val arr = arrays(r.getAs[String]("code"))
           r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("notes")).foreach { n =>
@@ -555,7 +522,7 @@ final class Api(
     val isRoot = plane.collections.get(id).exists(_.parent.isEmpty)
     if (!isRoot) { notFound(ex); return }
     val rows = Canonical.mapper.createArrayNode()
-    treeIds(plane, id).foreach { cid =>
+    plane.treeIds(id).foreach { cid =>
       val c = plane.collection(cid)
       val o = rows.addObject()
       o.put("id", c.id)
@@ -596,12 +563,7 @@ final class Api(
 
   // --- plumbing -----------------------------------------------------------
 
-  private def treeIds(plane: Control.Plane, root: Long): Seq[Long] =
-    plane.treeIds(root)
-
   private def readOrEmpty(path: String) = Sink.readOrEmpty(spark, path)
-
-  private def nowUtc(): String = PlaneStore.nowUtc()
 
   private def bool(n: JsonNode, k: String): Boolean =
     Option(n.get(k)).exists(v => v.isBoolean && v.asBoolean)

@@ -93,6 +93,11 @@ object Control {
       files.getOrElse(id, scala.collection.immutable.VectorMap.empty[String, Boolean])
         .iterator.map { case (f, started) => CollectionFile(id, f, started) }.toSeq
 
+    /** The registered files of `id` as [[pathKey]]s, the identity replay
+      * dedup compares arriving paths against. */
+    def fileKeys(id: Long): Set[String] =
+      files.get(id).map(_.keysIterator.map(pathKey).toSet).getOrElse(Set.empty)
+
     /** Registered-file count for `id` — O(1). */
     def fileCount(id: Long): Int = files.get(id).map(_.size).getOrElse(0)
 
@@ -118,12 +123,57 @@ object Control {
       collections.values.find(k =>
         k.parent.contains(parentId) && k.transformType.contains(Transform.Upgrade1011))
 
+    /** The collection whose compile step the tree rooted at `rootId`
+      * plans: the upgraded child when there is one, else the root. */
+    def compileBase(rootId: Long): Collection =
+      upgradedChild(rootId).getOrElse(collection(rootId))
+
     /** Depth-first ids of `root` and every collection derived from it —
       * the tree the read endpoints and wipes operate over. */
     def treeIds(root: Long): Seq[Long] = {
       val children = collections.values
         .filter(_.parent.contains(root)).map(_.id).toSeq.sorted
       root +: children.flatMap(treeIds)
+    }
+  }
+
+  /** Scheme-insensitive file identity: "file:/x/a.json" (the binaryFile
+    * source's form) and "/x/a.json" (the CLI and batch form) are the same
+    * file. */
+  def pathKey(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  /** The collection tree a load or an API create builds
+    * (`loader.py:79-102`): the root at `rootId`, the upgraded child when
+    * `upgrade`, and the compiled child when `compile`, parented to the
+    * upgraded child when there is one. Steps are opt-in (`load.py:34`): the
+    * root plans `check` when asked, plus `upgrade`, else `compile`, because
+    * an upgrading tree compiles on its upgraded child. `extraRootSteps` are
+    * this engine's own root steps (`line_dedup`, `dsir_score`, …). Each
+    * collection is validated like `clean_fields` (V2) against `plane` as it
+    * grows; Left holds the errors, including an id that is already taken. */
+  def newTree(
+      plane: Plane, rootId: Long, sourceId: String, dataVersion: String,
+      upgrade: Boolean, compile: Boolean, check: Boolean,
+      extraRootSteps: Set[String] = Set.empty,
+      sample: Boolean = false): Either[Seq[String], Plane] = {
+    val root = Collection(rootId, sourceId, dataVersion, sample = sample,
+      steps = extraRootSteps ++ (if (check) Set("check") else Set.empty) ++
+        (if (upgrade) Set("upgrade") else if (compile) Set("compile") else Set.empty))
+    val upgraded = Option.when(upgrade)(Collection(
+      rootId + 1, sourceId, dataVersion, parent = Some(rootId),
+      transformType = Some(Transform.Upgrade1011), sample = sample,
+      steps = if (compile) Set("compile") else Set.empty))
+    val compiled = Option.when(compile)(Collection(
+      rootId + 1 + upgraded.size, sourceId, dataVersion,
+      parent = Some(upgraded.getOrElse(root).id),
+      transformType = Some(Transform.CompileReleases), sample = sample))
+    (root +: (upgraded.toSeq ++ compiled)).foldLeft[Either[Seq[String], Plane]](Right(plane)) {
+      case (Right(p), c) =>
+        val errs = (if (p.collections.contains(c.id)) Seq(s"collection ${c.id} already exists")
+          else Nil) ++ validateNew(p, c)
+        if (errs.nonEmpty) Left(errs)
+        else Right(p.copy(collections = p.collections.updated(c.id, c)))
+      case (left, _) => left
     }
   }
 
@@ -253,6 +303,12 @@ object Control {
     p.copy(collections = p.collections.updated(id, c.copy(
       storeEndAt = Some(now), expectedFilesCount = Some(expectedFiles))))
   }
+
+  /** Close a root and its upgraded child together: the upgraded child's
+    * compile gate waits on the same close (`closecollection.py`). */
+  def closeTree(p: Plane, rootId: Long, now: String, expectedFiles: Int): Plane =
+    (rootId +: p.upgradedChild(rootId).map(_.id).toSeq)
+      .foldLeft(p)(closeCollection(_, _, now, expectedFiles))
 
   /** S11: logical delete/cancel — workers then ack-and-skip
     * (`cancelcollection.py:23-26`). */

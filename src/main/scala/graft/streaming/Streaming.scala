@@ -410,8 +410,8 @@ object Streaming {
         // this guard just skips the call for all-replay batches).
         // Compared scheme-insensitively: the binaryFile source reports
         // "file:/…" URIs while CLI/batch loads register plain paths
-        val registered = p.filesOf(collectionId).map(f => pathKey(f.filename)).toSet
-        val fresh = arrived.filterNot(a => registered(pathKey(a)))
+        val registered = p.fileKeys(collectionId)
+        val fresh = arrived.filterNot(a => registered(graft.control.Control.pathKey(a)))
         if (fresh.nonEmpty) {
           val (p2, _, _) = graft.Pipeline.loadFilesInto(
             spark, fresh, lakeDir, p, collectionId, upgradedId)
@@ -633,7 +633,7 @@ object Streaming {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val p0 = plane.get()
-    val registered = p0.filesOf(collectionId).map(f => pathKey(f.filename)).toSet
+    val registered = p0.fileKeys(collectionId)
     def filesIn(table: String, cid: Long): Set[String] =
       graft.ingest.Sink.readOrEmpty(spark, s"$lakeDir/$table")
         .filter(_.columns.contains("filename")) // legacy/merge-only tables
@@ -649,7 +649,7 @@ object Streaming {
         cids.map(filesIn("record", _)).fold(Set.empty)(_ ++ _) ++
         cids.map(filesIn("compiled_release", _)).fold(Set.empty)(_ ++ _) ++
         filesIn("package_data", collectionId)
-    val partial = inLake.filterNot(f => registered(pathKey(f)))
+    val partial = inLake.filterNot(f => registered(graft.control.Control.pathKey(f)))
     if (partial.isEmpty) return
 
     purgeByFilename(spark, s"$lakeDir/release", cids, partial)
@@ -678,12 +678,6 @@ object Streaming {
       spark, partial.toSeq.sorted, lakeDir, p0, collectionId, upgradedId)
     plane.set(graft.control.PlaneStore.save(lakeDir, p2))
   }
-
-  /** Scheme-insensitive file identity: "file:/x/a.json" (the binaryFile
-    * source's form) and "/x/a.json" (the CLI/batch form) are the same
-    * file. */
-  private def pathKey(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
 
   /** Checkpoint-lineage marker for per-batch exactly-once guards
     * ([[FreqStore.appendBatch]]): the streaming query's persisted id from

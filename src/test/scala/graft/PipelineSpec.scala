@@ -43,6 +43,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(report.distinctData === 3)
     assert(report.compiled === 2) // ocds-a merged from 2 releases, ocds-b from 1
     assert(report.checkFailures === 1) // b1's missing initiationType
+    // the finisher's count-only check and the persisted check pass build
+    // the same check rows, so they agree on the failures
+    assert(Pipeline.runChecks(s, lake, report.plane, report.collectionId)
+      .map(_._2) === Some(report.checkFailures))
 
     val orig = report.plane.collection(report.collectionId)
     val comp = report.plane.collection(report.compiledCollectionId)
@@ -154,6 +158,9 @@ class PipelineSpec extends AnyFunSuite {
 
     assert(report.items === 2) // 2 records
     assert(report.compiled === 2) // r1 merged; r2 via its compiledRelease
+    // the finisher's count-only record check agrees with the persisted pass
+    assert(Pipeline.runChecks(s, lake, report.plane, report.collectionId)
+      .map(_._2) === Some(report.checkFailures))
     // records landed in the record fact table, keyed by ocid only
     val recs = Sink.readFacts(s, s"$lake/record")
       .filter(col("collection_id") === report.collectionId)

@@ -253,6 +253,37 @@ class CollectFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally apiC.stop()
   }
 
+  test("ingest mode: close completes a tree that planned no compile step") {
+    // the close chain decides from the plane, like `Cli compile`: a
+    // compile-less tree has no merge to run, so the close completes it
+    // uncompiled instead of leaving it open
+    val lakeU = Files.createTempDirectory("graft-nocompile-lake").toString
+    val root = Files.createTempDirectory("graft-nocompile-landing").toString
+    val apiU = new Api(s, lakeU, landingRoot = Some(root))
+    apiU.start()
+    try {
+      def postU(path: String, body: String): HttpResponse[String] =
+        client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${apiU.boundPort}$path"))
+            .method("POST", HttpRequest.BodyPublishers.ofString(body))
+            .header("Content-Type", "application/json").build(),
+          HttpResponse.BodyHandlers.ofString())
+      val created = Canonical.parse(postU("/api/collections/",
+        """{"source_id": "plain_spider", "data_version": "2020-03-01 00:00:00",
+          | "check": true}""".stripMargin).body())
+      assert(!created.has("compiled_collection_id"))
+      val id = created.get("collection_id").asLong
+      Files.writeString(java.nio.file.Paths.get(
+        created.get("landing_dir").asText, "u1.json"), pkg("ocds-u1", "r1"))
+      assert(postU(s"/api/collections/$id/close/",
+        """{"stats": {"kingfisher_process_expected_files_count": 1}}""")
+        .statusCode() == 202)
+      val c = PlaneStore.load(lakeU).collection(id)
+      assert(c.completedAt.nonEmpty)
+      assert(c.cachedReleasesCount.contains(1L))
+    } finally apiU.stop()
+  }
+
   test("ingest mode: the close drain runs line dedup iff the tree planned a line_dedup step") {
     // VERDICT r16 #6: the streaming line-dedup leg existed but nothing in
     // the production ingest path enabled it — the API now plans a
