@@ -683,9 +683,13 @@ object Pipeline {
   /** The already-checked slice a check pass anti-joins against. With
     * `batchRows` (the streaming leg), the scan statically prunes to the
     * batch ids' `check_bucket` partitions — the driver-side isin is
-    * bounded by the 64-value bucket domain (the NeardupStore idiom), so
-    * a micro-batch's idempotence read costs O(batch's bucket share of
-    * one collection), never the whole check history. Exposed at package
+    * bounded by the `Sink.CheckBuckets` domain (the NeardupStore idiom),
+    * so a micro-batch's idempotence read costs O(batch's bucket share of
+    * one collection), never the whole check history. The filter folds
+    * the directory value through `pmod(_, CheckBuckets)`: check tables
+    * written with 64 buckets hold `id mod 64`, and because 16 divides 64,
+    * `(id mod 64) mod 16 = id mod 16`, so their rows prune to the same
+    * buckets and a replay still anti-joins them away. Exposed at package
     * level so StreamingSpec can pin the PartitionFilters. */
   private[graft] def checkedSlice(
       spark: SparkSession, lakeDir: String, checkTable: String, cid: Long,
@@ -701,7 +705,8 @@ object Pipeline {
           .select(pmod(col("id"), lit(Sink.CheckBuckets.toLong)).as("b"))
           .distinct().as[Long].collect()
         if (touched.isEmpty) all.limit(0)
-        else all.filter(col("check_bucket").isin(touched: _*))
+        else all.filter(
+          pmod(col("check_bucket"), lit(Sink.CheckBuckets.toLong)).isin(touched: _*))
     }
   }
 

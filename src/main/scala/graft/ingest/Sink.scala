@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    (repartition before write), so the compile job's shuffle reads
   *    ocid-clustered files; on a warehouse with bucketed tables this
   *    becomes `bucketBy(ocid)` and the compile shuffle disappears;
-  *  - the content-addressed store partitioned by a 2-hex-char prefix of
-  *    `hash_md5` (256 buckets) — the dedup anti-join (S8) prunes to one
-  *    bucket per hash, and inserts spread uniformly.
+  *  - the content-addressed store partitioned by the first hex character
+  *    of `hash_md5` (16 buckets), so inserts spread uniformly while each
+  *    batch's write opens at most 16 files (see [[writeDedupStore]]).
   *
   * The serving copy mirrors the reference's PostgreSQL sink over JDBC with
   * its batch size of 1000 (`settings.py:262-263`); no database runs in this
@@ -287,18 +287,32 @@ object Sink {
       if (merge) spark.read.option("mergeSchema", "true").parquet(path)
       else spark.read.parquet(path)).toOption
 
-  /** S8 store: one row per content hash, partitioned by hash prefix. */
+  /** S8 store: content-addressed rows, partitioned by the first hex
+    * character of `hash_md5`. No reader prunes on `hash_bucket`; the
+    * domain only bounds the files one append opens. A batch's write is
+    * small enough that adaptive execution coalesces it into ONE task,
+    * which opens one parquet file per bucket it touches at roughly 15 ms
+    * each on a 4-core host — so the 16-way domain costs about 0.25 s per
+    * batch, and a two-character prefix (256 buckets) would cost about
+    * 4 s. 16 is one hex digit, and it keeps the table's directory listing
+    * under Spark's 32-path threshold for a distributed listing job.
+    *
+    * Appends do not anti-join against the stored hashes (a per-batch
+    * store scan), so the same content loaded twice lands twice; readers
+    * get one row per hash from [[readDedupStore]]. */
   def writeDedupStore(data: DataFrame, path: String, mode: String = "append"): Unit =
     data
-      .withColumn("hash_bucket", substring(col("hash_md5"), 1, 2))
+      .withColumn("hash_bucket", substring(col("hash_md5"), 1, 1))
       .repartition(col("hash_bucket"))
       .write
       .partitionBy("hash_bucket")
       .mode(mode)
       .parquet(path)
 
+  /** The store as one row per content hash, however many appends wrote
+    * that hash (the readers-distinct idiom of the corpus engines). */
   def readDedupStore(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.parquet(path).dropDuplicates("hash_md5")
 
   /** Sink for small per-collection tables (collection_note, package_data):
     * same collection_id partitioning as the fact tables (wipes stay
@@ -312,24 +326,29 @@ object Sink {
       .mode(mode)
       .parquet(path)
 
-  /** Bucket count for the check tables' id-pruning partitions — the same
-    * 64-dir sizing trade as the streaming stores' bucket domains. */
-  val CheckBuckets = 64
+  /** Bucket count for the check tables' id-pruning partitions. A batch's
+    * check write runs as one coalesced task that opens one file per
+    * touched bucket (about 15 ms each on a 4-core host), and a batch of a
+    * few thousand items touches every bucket, so the domain is a fixed
+    * per-batch cost: 16 files, about 0.25 s. 16 divides the 64 buckets of older check tables, so
+    * [[graft.Pipeline.checkedSlice]] prunes both layouts with one
+    * `pmod(check_bucket, 16)` filter, and 16 directories per collection
+    * stay under Spark's 32-path threshold for a distributed listing job. */
+  val CheckBuckets = 16
 
   /** The check-table writer (release_check / record_check): like
     * [[writeByCollection]] — collection_id stays the OUTER partition, so
     * tree wipes remain O(directories) and per-collection reads prune —
-    * plus an INNER `check_bucket = pmod(id, 64)` partition, so the
-    * streaming checker's per-batch idempotence anti-join reads only the
-    * batch ids' buckets instead of the collection's whole check history
-    * (VERDICT r15 finding #1: the anti-join side grew with stream
-    * lifetime). One narrow shuffle on the partition pair keeps per-batch
-    * file counts = touched buckets. A lake whose check tables were
-    * written by the pre-bucket (flat collection_id) layout needs a
-    * one-time rewrite: the layouts cannot mix inside one table, and an
-    * append would corrupt partition discovery for EVERY later read — so
-    * the writer FAILS FAST on a detected flat layout instead of
-    * corrupting (code-review r16). */
+    * plus an INNER `check_bucket = pmod(id, CheckBuckets)` partition, so
+    * the streaming checker's per-batch idempotence anti-join reads only
+    * the batch ids' buckets instead of the collection's whole check
+    * history, which would otherwise grow with the stream's lifetime. One
+    * narrow shuffle on the partition pair keeps per-batch file counts =
+    * touched buckets. A lake whose check tables were written by the
+    * pre-bucket (flat collection_id) layout needs a one-time rewrite: the
+    * layouts cannot mix inside one table, and an append would corrupt
+    * partition discovery for EVERY later read — so the writer FAILS FAST
+    * on a detected flat layout instead of appending. */
   def writeChecks(rows: DataFrame, path: String, mode: String = "append"): Unit = {
     requireBucketedCheckLayout(path)
     rows

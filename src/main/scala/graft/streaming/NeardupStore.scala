@@ -11,8 +11,8 @@ import graft.TextQueries
   * signature; the batch engine and the stream didn't compose).
   *
   * Two lake tables, both PRUNING-PARTITIONED so a micro-batch probe never
-  * scans the whole store (the dedup-store `hash_bucket` idiom,
-  * ingest/Sink.scala):
+  * scans the whole store (the check tables' `check_bucket` idiom,
+  * `Pipeline.checkedSlice`):
   *  - `neardup_sigs`: one row per (source, doc_id, band_id, band_hash),
   *    partitioned by `band_bucket = pmod(band_hash, 64)` — a batch's
   *    probe reads only the partitions its own band hashes land in;

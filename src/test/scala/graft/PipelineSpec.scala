@@ -411,6 +411,46 @@ class PipelineSpec extends AnyFunSuite {
     assert(stage.plane.collection(42L).cachedCompiledReleasesCount.contains(0L))
   }
 
+  test("the dedup store reads one row per hash when two collections load the same content") {
+    import org.apache.spark.sql.functions.col
+    val lake = Files.createTempDirectory("graft-lake-samedata").toString
+    val dir = inputTree().toString
+    Pipeline.load(s, dir, lake, collectionId = 1L, compile = false)
+    Pipeline.load(s, dir, lake, collectionId = 2L, compile = false)
+    val facts = Sink.readFacts(s, s"$lake/release")
+    assert(facts.filter(col("collection_id") === 2L).count() === 3L) // both loads landed
+    val distinct = facts.select("hash_md5").distinct().count()
+    assert(distinct === 3L)
+    assert(Sink.readDedupStore(s, s"$lake/data").count() === distinct)
+  }
+
+  test("a replayed check pass skips rows stored under the 64-bucket check layout") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import s.implicits._
+    val lake = Files.createTempDirectory("graft-lake-oldchecks").toString
+    val stage = Pipeline.load(s, inputTree().toString, lake, compile = false)
+    val cid = stage.collectionId
+    assert(Pipeline.runChecks(s, lake, stage.plane, cid) === Some((3L, 1L)))
+    // rewrite the collection's check rows the way 64-bucket tables hold
+    // them: check_bucket = pmod(id, 64)
+    val table = s"$lake/release_check"
+    val old = s"$lake/release_check_64"
+    s.read.parquet(table).drop("check_bucket")
+      .withColumn("check_bucket", pmod(col("id"), lit(64L)))
+      .write.partitionBy("collection_id", "check_bucket").parquet(old)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(table))
+    Files.move(java.nio.file.Paths.get(old), java.nio.file.Paths.get(table))
+    val stored = s.read.parquet(table).select("id", "check_bucket").as[(Long, Int)].collect()
+    assert(stored.length === 3)
+    // at least one row sits in a directory outside the 16-bucket domain,
+    // or the old layout would be indistinguishable from the new one
+    assert(stored.exists(_._2 >= Sink.CheckBuckets), "fixture degenerate: all buckets < 16")
+    val files = Sink.readFacts(s, s"$lake/release").filter(col("collection_id") === cid)
+      .select("filename").distinct().as[String].collect().toSeq
+    assert(Pipeline.runChecks(s, lake, stage.plane, cid, files = Some(files)) === Some((0L, 0L)))
+    assert(s.read.parquet(table).count() === 3L)
+  }
+
   test("a second run on the same ids is rejected by the run-once gates") {
     val lake = Files.createTempDirectory("graft-lake2").toString
     val dir = inputTree().toString

@@ -54,14 +54,49 @@ class SinkSpec extends AnyFunSuite {
     import s.implicits._
     val dir = Files.createTempDirectory("graft-store").toString
     val data = Seq(
-      ("aa11", "{\"x\":1}"), ("ab22", "{\"x\":2}"), ("aa33", "{\"x\":3}")
+      ("aa11", "{\"x\":1}"), ("ab22", "{\"x\":2}"), ("aa33", "{\"x\":3}"),
+      ("b044", "{\"x\":4}")
     ).toDF("hash_md5", "data")
     Sink.writeDedupStore(data, dir)
     val parts = new java.io.File(dir).list().filter(_.startsWith("hash_bucket=")).sorted
-    assert(parts === Array("hash_bucket=aa", "hash_bucket=ab"))
+    assert(parts === Array("hash_bucket=a", "hash_bucket=b"))
     val incoming = Seq(("aa11", "dup"), ("cc44", "new")).toDF("hash_md5", "data")
     val fresh = Ingest.dedupData(incoming, Some(Sink.readDedupStore(s, dir)))
     assert(fresh.select("hash_md5").as[String].collect().toSeq === Seq("cc44"))
+  }
+
+  private def parquetFiles(dir: String): Int = {
+    val stream = Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      stream.iterator.asScala.count(_.toString.endsWith(".parquet"))
+    } finally stream.close()
+  }
+
+  // Each batch's write runs as one coalesced task that pays per output
+  // file, so the hash-partitioned tables bound the files one batch opens.
+  private val MaxFilesPerBatch = 16
+
+  test("one dedup-store write opens at most 16 files, whatever the hashes") {
+    import org.apache.spark.sql.functions.{col, md5}
+    val dir = Files.createTempDirectory("graft-store-fanout").toString
+    val data = s.range(2000)
+      .select(md5(col("id").cast("string")).as("hash_md5"), col("id").cast("string").as("data"))
+    Sink.writeDedupStore(data, dir)
+    assert(Sink.readDedupStore(s, dir).count() === 2000L)
+    val files = parquetFiles(dir)
+    assert(files <= MaxFilesPerBatch, s"$files files for one batch")
+  }
+
+  test("one check write for one collection opens at most CheckBuckets files") {
+    import org.apache.spark.sql.functions.{col, lit, xxhash64}
+    val dir = Files.createTempDirectory("graft-checks-fanout").toString
+    val rows = s.range(2000)
+      .select(xxhash64(col("id")).as("id"), lit(true).as("ok"), lit(7L).as("collection_id"))
+    Sink.writeChecks(rows, dir)
+    val files = parquetFiles(dir)
+    assert(files <= Sink.CheckBuckets && files <= MaxFilesPerBatch, s"$files files for one batch")
+    assert(Sink.readFacts(s, dir).count() === 2000L)
   }
 
   test("a bucketed fact table compiles with ZERO exchanges; plain input still shuffles once") {
