@@ -35,6 +35,12 @@ import graft.ocds.{Compile, Upgrade}
   * [[finish]], the close chain every entry point shares. [[loadAndCompile]]
   * composes the stages for the common closed-load case. The only
   * cross-node movement is Spark shuffles.
+  *
+  * On small batches a stage costs about one scheduling latency per Spark
+  * job, so the stages run no job beside their real work: every count they
+  * report comes from the write of those rows ([[Sink.observedWrite]]), and
+  * the lake tables read with declared schemas, which opens no parquet
+  * footer ([[Sink.TableSchemas]]).
   */
 object Pipeline {
 
@@ -191,10 +197,8 @@ object Pipeline {
   private def upgradedLoaded(
       lakeDir: String, plane: Control.Plane, up: DataFrame, uid: Long,
       paths: Seq[String], format: String): (Control.Plane, Long) = {
-    val notes = Notes.fromUpgradeWarnings(up, uid).persist()
-    Sink.writeByCollection(notes, s"$lakeDir/collection_note")
-    val nNotes = notes.count()
-    notes.unpersist()
+    val nNotes = Sink.countedWrite(Notes.fromUpgradeWarnings(up, uid))(
+      Sink.writeByCollection(_, s"$lakeDir/collection_note"))
     (batchLoaded(plane, uid, paths, format), nNotes)
   }
 
@@ -205,21 +209,16 @@ object Pipeline {
     * of a crash window it lands on. An append, never a partition
     * overwrite: the partition also holds notes no compile wrote, such as
     * the creation note the API persists on every created collection.
-    * Counted (which materializes the cache) BEFORE the append, because
-    * the anti-join plan reads the very table being written. Returns the
-    * notes written. */
+    * Returns the notes written, counted by the write itself. */
   private def appendNotes(
       spark: SparkSession, lakeDir: String, cid: Long, fresh: DataFrame): Long = {
-    val notes = (Sink.readOrEmpty(spark, s"$lakeDir/collection_note") match {
+    val notes = Sink.readOrEmpty(spark, s"$lakeDir/collection_note") match {
       case Some(existing) => fresh.join(
         existing.filter(col("collection_id") === cid).select("code", "note", "data"),
         Seq("code", "note", "data"), "left_anti")
       case None => fresh
-    }).persist()
-    val n = notes.count()
-    Sink.writeByCollection(notes, s"$lakeDir/collection_note")
-    notes.unpersist()
-    n
+    }
+    Sink.countedWrite(notes)(Sink.writeByCollection(_, s"$lakeDir/collection_note"))
   }
 
   /** Release-package leg of [[loadFilesInto]]: stream-load items into the
@@ -238,7 +237,7 @@ object Pipeline {
     val items = Ingest.loadItems(spark, paths, dt).toDF()
       .withColumn("collection_id", lit(collectionId))
       .persist()
-    Sink.writeFacts(items, s"$lakeDir/release")
+    val nItems = Sink.countedWrite(items)(Sink.writeFacts(_, s"$lakeDir/release"))
     Sink.writeDedupStore(Ingest.dedupData(items), s"$lakeDir/data")
     val pkgs = Ingest.loadPackageData(spark, paths, dt).toDF()
     // persisted so later jobs (compile checks, addchecks, metadata) can
@@ -261,7 +260,6 @@ object Pipeline {
       up.unpersist()
       done
     }
-    val nItems = items.count()
     items.unpersist()
     (p2, nItems, nNotes)
   }
@@ -287,7 +285,7 @@ object Pipeline {
     val records = Ingest.loadRecords(spark, paths, dt).toDF()
       .withColumn("collection_id", lit(collectionId))
       .persist()
-    Sink.writeFacts(records, s"$lakeDir/record")
+    val nItems = Sink.countedWrite(records)(Sink.writeFacts(_, s"$lakeDir/record"))
     Sink.writeDedupStore(Ingest.dedupData(records), s"$lakeDir/data")
     val pkgs = Ingest.loadPackageData(spark, paths, dt).toDF()
     Sink.writeByCollection(
@@ -348,7 +346,6 @@ object Pipeline {
       // (finisher checks the compiled child's PARENT's files)
       paths.foreach(f => plane = Control.markFileCompiled(plane, baseId, f))
     }
-    val nItems = records.count()
     upgraded.foreach(_._1.unpersist())
     records.unpersist()
     (plane, nItems, nNotes)
@@ -375,8 +372,8 @@ object Pipeline {
     // filename rides along (the reference's CompiledRelease keeps its
     // collection_file FK): it is this format's ONLY filename-keyed trace
     // in the lake, which the streaming loader's crash repair keys on
-    def writeSummaries(src: DataFrame, cid: Long): Unit =
-      Sink.writeFacts(
+    def writeSummaries(src: DataFrame, cid: Long): Long =
+      Sink.countedWrite(
         src.select("filename", "ocid", "data")
           .as[(String, String, String)]
           .mapPartitions(_.map { case (filename, ocid, data) =>
@@ -385,9 +382,9 @@ object Pipeline {
           })
           .toDF("filename", "summary")
           .select(col("summary.*"), col("filename"))
-          .withColumn("collection_id", lit(cid)),
-        s"$lakeDir/compiled_release")
-    writeSummaries(items, collectionId)
+          .withColumn("collection_id", lit(cid)))(
+        Sink.writeFacts(_, s"$lakeDir/compiled_release"))
+    val nItems = writeSummaries(items, collectionId)
 
     // upgrade leg: a compiled release IS a release, so `upgrade_10_11`
     // applies exactly as for release packages (`file_worker.py:330-335`
@@ -400,7 +397,6 @@ object Pipeline {
       up.unpersist()
       done
     }
-    val nItems = items.count()
     items.unpersist()
     (p2, nItems, nNotes)
   }
@@ -447,8 +443,11 @@ object Pipeline {
     *    completes EMPTY and the root completes with its own compiled
     *    count. The reference's checker checks only release and record
     *    rows, so this format has no check pass.
-    * Then a count-only V1 structural check of the original rows and the
-    * completion gates + cached counts, leaf-first ([[completeTree]]).
+    * Then a count-only V1 structural check of the original rows (items
+    * and failures in one aggregate) and the completion gates + cached
+    * counts, leaf-first ([[completeTree]]). A release tree's compiled
+    * count is the merge write's; a tree with no file registered on its
+    * compile base is closed-empty and completes with zeros.
     * Reads everything it needs from the lake, so it composes with any load
     * history (keep-open loads, addfiles batches) — the worker hand-off
     * seam. */
@@ -478,43 +477,44 @@ object Pipeline {
     var plane = Control.startCompilation(plane0, compiledId)
       .orElse(Option.when(isRecord)(plane0))
       .getOrElse(throw new IllegalStateException("compilation already started"))
-    var nNotes = 0L
-    if (!isRecord) {
-      // closed-EMPTY tree (expected_files_count=0, trivially compilable,
-      // `compiler._collection_is_empty`): no facts were ever written for
-      // this tree — nothing to merge or check, finalize the chain with zeros
-      val treeHasFacts = Sink.readOrEmpty(spark, s"$lakeDir/release")
-        .exists(_.filter(col("collection_id") === base.id).limit(1).count() > 0)
-      if (!treeHasFacts)
-        return CompileStage(compiledId, 0L, 0L, 0L,
-          completeTree(plane, collectionId, now, 0L, Some(compiledId -> 0L)))
-      nNotes = mergeCompile(spark, lakeDir, base.id, compiledId)
+    // closed-EMPTY tree (expected_files_count=0, trivially compilable,
+    // `compiler._collection_is_empty`): no file was ever registered on the
+    // compile base, so no facts were written for this tree — nothing to
+    // merge or check, finalize the chain with zeros
+    if (plane.fileCount(base.id) == 0)
+      return CompileStage(compiledId, 0L, 0L, 0L,
+        completeTree(plane, collectionId, now, 0L, Some(compiledId -> 0L)))
+    // a record tree compiled batch by batch during load, so its compiled
+    // count is the table's; a release tree's is the merge write's
+    val (nCompiled, nNotes) =
+      if (isRecord) (Sink.readOrEmpty(spark, s"$lakeDir/compiled_release")
+        .map(_.filter(col("collection_id") === compiledId).count()).getOrElse(0L), 0L)
+      else mergeCompile(spark, lakeDir, base.id, compiledId)
+    if (!isRecord)
       plane = plane.copy(collections = plane.collections.updated(compiledId,
         plane.collection(compiledId).copy(compilationEnqueued = true)))
-    }
 
     // V1 structural checks of the ORIGINAL rows, counted only (the
-    // persisted pass is [[runChecks]]); the checker's kind is the name of
-    // the format's fact table
+    // persisted pass is [[runChecks]]) — items and failures in one
+    // aggregate; the checker's kind is the name of the format's fact table
     val (nItems, checkFailures) = factsOf(spark, lakeDir, plane, collectionId)
       .fold((0L, 0L)) { facts =>
-        val failures = Checker.checkItems(
+        val r = Checker.checkItems(
           checkRows(spark, lakeDir, plane, collectionId, facts),
           factTable(format), spark)
-          .filter(!col("ok")).count()
-        (facts.count(), failures)
+          .agg(count(lit(1)), count_if(!col("ok"))).head()
+        (r.getLong(0), r.getLong(1))
       }
-    val nCompiled = Sink.readOrEmpty(spark, s"$lakeDir/compiled_release")
-      .map(_.filter(col("collection_id") === compiledId).count()).getOrElse(0L)
     CompileStage(compiledId, nCompiled, checkFailures, nNotes,
       completeTree(plane, collectionId, now, nItems, Some(compiledId -> nCompiled)))
   }
 
   /** The release-package merge: ONE pass over the compile base's facts
     * emitting compiled rows and merge warnings together. Returns the
-    * warning notes written on the compiled collection. */
+    * compiled rows and the warning notes written on the compiled
+    * collection, both counted by their writes. */
   private def mergeCompile(
-      spark: SparkSession, lakeDir: String, baseId: Long, compiledId: Long): Long = {
+      spark: SparkSession, lakeDir: String, baseId: Long, compiledId: Long): (Long, Long) = {
     // Bucket once at the compile boundary, compile with ZERO exchanges:
     // `writeFacts` already ocid-clustered the lake files at load, so this
     // write re-materializes that distribution WITH catalog metadata, and
@@ -545,12 +545,13 @@ object Pipeline {
     // mid-write crash (the run-once latch only persists on success) must
     // replace its own partition, never duplicate it (T5's idempotence at
     // the storage layer)
-    Sink.overwriteCollectionPartitions(compiled, s"$lakeDir/compiled_release")
+    val nCompiled = Sink.countedWrite(compiled)(
+      Sink.overwriteCollectionPartitions(_, s"$lakeDir/compiled_release"))
     val nNotes = appendNotes(spark, lakeDir, compiledId, Notes.fromCompileWarnings(
       compileOut.filter(col("warning").isNotNull).select(col("warning.*")),
       compiledId))
     compileOut.unpersist()
-    nNotes
+    (nCompiled, nNotes)
   }
 
   /** The finisher's completion gates and cached counts (`finisher.py:
@@ -635,10 +636,11 @@ object Pipeline {
     * `--check` step run the same code): validate every item of `cid`
     * against the official schema, persist one check row per item into
     * release_check / record_check (incremental — rows already checked are
-    * anti-joined away), and return Some((checked, failed)). None when the
-    * collection's format has no check pass at all (compiled releases — the
-    * reference's checker handles only Release and Record rows) or the fact
-    * table is absent. */
+    * anti-joined away), and return Some((checked, failed)), counted by the
+    * check write itself, so a replay that finds every row already checked
+    * reports Some((0, 0)). None when the collection's format has no check
+    * pass at all (compiled releases — the reference's checker handles only
+    * Release and Record rows) or the fact table is absent. */
   def runChecks(
       spark: SparkSession,
       lakeDir: String,
@@ -648,9 +650,9 @@ object Pipeline {
       // checker leg); None = the whole collection (CLI addchecks)
       files: Option[Seq[String]] = None): Option[(Long, Long)] = {
     val table = factTable(plane.collection(cid).dataTypeFormat)
-    if (table == "compiled_release" || Sink.readOrEmpty(spark, s"$lakeDir/$table").isEmpty)
-      return None
-    val allFacts = Sink.readFacts(spark, s"$lakeDir/$table")
+    if (table == "compiled_release") return None
+    val allFacts = Sink.readOrEmpty(spark, s"$lakeDir/$table")
+      .getOrElse(return None)
       .filter(col("collection_id") === cid)
     val rows0 = checkRows(spark, lakeDir, plane, cid,
       files.fold(allFacts)(fs => allFacts.filter(col("filename").isin(fs: _*))))
@@ -667,14 +669,10 @@ object Pipeline {
       val existing = checkedSlice(spark, lakeDir, checkTable, cid,
         if (files.isDefined) Some(rows) else None)
       val checks = Checker.checkUnchecked(rows, existing, table, spark)
-        .toDF().withColumn("collection_id", lit(cid)).persist()
-      // count BEFORE the append: the plan reads the check table (the
-      // anti-join side) lazily, so evaluating it after writing to the
-      // same table would anti-join the rows against themselves → checked=0
-      val result = (checks.count(), checks.filter(!col("ok")).count())
-      Sink.writeChecks(checks, s"$lakeDir/$checkTable")
-      checks.unpersist()
-      Some(result)
+        .toDF().withColumn("collection_id", lit(cid))
+      val Seq(checked, failed) = Sink.observedWrite(checks, count(lit(1)), count_if(!col("ok")))(
+        Sink.writeChecks(_, s"$lakeDir/$checkTable"))
+      Some((checked, failed))
     } finally {
       if (files.isDefined) { rows.unpersist(); () }
     }

@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Persistence layout (SURVEY.md §2 S7, §1.4's 100 TB layout; reference
   * `file_worker.py:322-386` bulk_create + `core/settings.py:262-263`
@@ -18,11 +19,81 @@ import org.apache.spark.sql.functions._
   *    of `hash_md5` (16 buckets), so inserts spread uniformly while each
   *    batch's write opens at most 16 files (see [[writeDedupStore]]).
   *
+  * Each pipeline table has a declared schema ([[TableSchemas]]), so its
+  * reads list files but open no parquet footer, and the pipeline's counts
+  * come from the writes themselves ([[observedWrite]]): a stage runs the
+  * jobs its writes need and no eager probe or count beside them.
+  *
   * The serving copy mirrors the reference's PostgreSQL sink over JDBC with
   * its batch size of 1000 (`settings.py:262-263`); no database runs in this
   * harness, so that writer is contract-only.
   */
 object Sink {
+
+  /** The schema each pipeline lake table is read with, keyed by its
+    * directory name under the lake: the writer's row type, then the Hive
+    * partition columns typed as partition discovery types them (INT for
+    * the directory values these tables hold). A read with a declared
+    * schema skips schema inference, which costs one Spark job per read to
+    * open a parquet footer. SinkSpec checks each schema against what Spark
+    * infers from a table its writer has just written. */
+  val TableSchemas: Map[String, StructType] = {
+    def table(rowType: StructType, partitions: String*): StructType =
+      StructType(rowType.fields.map(_.copy(nullable = true)) ++
+        partitions.map(StructField(_, IntegerType)))
+    val compiled = StructType(Encoders.product[graft.ocds.Compile.CompiledSummary].schema.fields :+
+      StructField("filename", StringType))
+    val note = StructType(
+      Encoders.product[graft.control.Notes.Note].schema.filterNot(_.name == "collection_id"))
+    val check = Encoders.product[graft.check.Checker.CheckRow].schema
+    Map(
+      "release" -> table(Encoders.product[Ingest.ItemRow].schema, "collection_id"),
+      "record" -> table(Encoders.product[Ingest.RecordRow].schema, "collection_id"),
+      "compiled_release" -> table(compiled, "collection_id"),
+      "package_data" -> table(Encoders.product[Ingest.PackageRow].schema, "collection_id"),
+      "collection_note" -> table(note, "collection_id"),
+      "release_check" -> table(check, "collection_id", "check_bucket"),
+      "record_check" -> table(check, "collection_id", "check_bucket"))
+  }
+
+  /** The declared schema of the table at `path`, by its directory name.
+    * A table holding a collection id beyond INT gets a BIGINT
+    * `collection_id`, as partition discovery would type it; an INT
+    * schema would fail the read. */
+  private def declaredSchema(path: String): Option[StructType] = {
+    val dir = new java.io.File(path)
+    TableSchemas.get(dir.getName).map { schema =>
+      val ids = Option(dir.list()).toSeq.flatten.filter(_.startsWith("collection_id="))
+      if (ids.forall(_.stripPrefix("collection_id=").toIntOption.isDefined)) schema
+      else StructType(schema.map(f =>
+        if (f.name == "collection_id") f.copy(dataType = LongType) else f))
+    }
+  }
+
+  /** Runs `write` over `rows` and returns `metrics`, aggregate columns
+    * such as `count(lit(1))`, over exactly the rows that write consumed.
+    * They come from the write's own job through an [[Observation]], not
+    * from a second action: a count taken beside a write costs a job, and
+    * taken after an append to a table the plan reads (an anti-join
+    * against the same table), it re-evaluates against the appended state.
+    * A metric Spark does not report reads 0. An aggregate over zero rows
+    * reports null (a sum), and when adaptive execution proves the observed
+    * plan empty (an anti-join that drops every row) it removes the
+    * observation with the plan and the metrics map comes back empty. */
+  def observedWrite(rows: DataFrame, metrics: Column*)(write: DataFrame => Unit): Seq[Long] = {
+    val obs = Observation()
+    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+    write(rows.observe(obs, named.head, named.tail: _*))
+    val got = obs.get
+    named.indices.map(i => got.get(s"m$i") match {
+      case Some(n: Number) => n.longValue
+      case _ => 0L
+    })
+  }
+
+  /** [[observedWrite]] with one metric: the number of rows written. */
+  def countedWrite(rows: DataFrame)(write: DataFrame => Unit): Long =
+    observedWrite(rows, count(lit(1)))(write).head
 
   /** S7: append fact rows into the partitioned lake layout. */
   def writeFacts(facts: DataFrame, path: String, mode: String = "append"): Unit =
@@ -64,13 +135,14 @@ object Sink {
     * write consumes the OLD directory and the swap happens after, so the
     * read-own-write hazard (and the persist it forced) is gone. Zero rows
     * drop the partition (matching dynamic overwrite, which cannot write an
-    * empty one). Returns the new partition's row count.
+    * empty one). Returns the new partition's row count, counted by the
+    * write.
     *
     * On an object store a production deployment would swap a manifest
     * instead of renaming directories; the two-rename shape is the same
     * commit protocol. */
   def swapCollectionPartition(
-      spark: SparkSession, path: String, collectionId: Long, rows: DataFrame,
+      path: String, collectionId: Long, rows: DataFrame,
       // inner Hive partition columns to PRESERVE through the rewrite
       // (the check tables' check_bucket) — a flat rewrite of one
       // collection would conflict with the other collections' nested
@@ -88,10 +160,11 @@ object Sink {
     // restored rows — and if partDir itself was the debris, reads an empty
     // partition and the rewrite deletes the only copy (ADVICE r8).
     recoverSwapDebris(path, collectionId)
-    val writer = rows.drop("collection_id").write.mode("overwrite")
-    (if (innerPartition.nonEmpty) writer.partitionBy(innerPartition: _*) else writer)
-      .parquet(tmpDir.toString)
-    val n = spark.read.parquet(tmpDir.toString).count()
+    val n = countedWrite(rows.drop("collection_id")) { df =>
+      val writer = df.write.mode("overwrite")
+      (if (innerPartition.nonEmpty) writer.partitionBy(innerPartition: _*) else writer)
+        .parquet(tmpDir.toString)
+    }
     if (n == 0) deleteDir(tmpDir) // empty partition = dropped partition
     if (JF.exists(partDir)) JF.move(partDir, oldDir)
     if (n > 0) JF.move(tmpDir, partDir)
@@ -180,7 +253,7 @@ object Sink {
       if (clusterByOcid) part.repartition(col("ocid"))
       else if (innerPartition.nonEmpty) part.repartition(innerPartition.map(col): _*)
       else part.repartition(1)
-    swapCollectionPartition(spark, path, collectionId, clustered, innerPartition)
+    swapCollectionPartition(path, collectionId, clustered, innerPartition)
   }
 
   /** Streaming-outcome maintenance (the record-outcome analogue of
@@ -265,13 +338,19 @@ object Sink {
     promote(ready)
   }
 
-  /** Read back with partition pruning available on `collection_id`. */
+  /** Read back with partition pruning available on `collection_id`; a
+    * pipeline table reads with its declared schema ([[TableSchemas]]). */
   def readFacts(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    declaredSchema(path).fold(spark.read)(spark.read.schema).parquet(path)
 
   /** None for a missing OR fully-wiped table (a directory whose partitions
-    * were all dropped has no parquet footers to infer a schema from) —
-    * the read guard every optional lake table goes through.
+    * were all dropped holds no data file) — the read guard every optional
+    * lake table goes through. A pipeline table reads with its declared
+    * schema and is judged by its listing (`inputFiles` runs no job); any
+    * other error, such as a truncated part file or a denied directory,
+    * surfaces, where turning it into None would make the caller treat a
+    * damaged table as an absent one. A table without a declared schema
+    * infers one from its footers, and a failed inference reads as None.
     *
     * `merge = true` unions the schema across ALL footers instead of
     * sampling one — required for stores whose layout gained columns
@@ -283,9 +362,13 @@ object Sink {
   def readOrEmpty(
       spark: SparkSession, path: String, merge: Boolean = false): Option[DataFrame] =
     if (!new java.io.File(path).exists()) None
-    else scala.util.Try(
-      if (merge) spark.read.option("mergeSchema", "true").parquet(path)
-      else spark.read.parquet(path)).toOption
+    else declaredSchema(path) match {
+      case Some(schema) =>
+        Some(spark.read.schema(schema).parquet(path)).filter(_.inputFiles.nonEmpty)
+      case None => scala.util.Try(
+        if (merge) spark.read.option("mergeSchema", "true").parquet(path)
+        else spark.read.parquet(path)).toOption
+    }
 
   /** S8 store: content-addressed rows, partitioned by the first hex
     * character of `hash_md5`. No reader prunes on `hash_bucket`; the

@@ -634,21 +634,21 @@ object Streaming {
     import org.apache.spark.sql.functions.col
     val p0 = plane.get()
     val registered = p0.fileKeys(collectionId)
-    def filesIn(table: String, cid: Long): Set[String] =
-      graft.ingest.Sink.readOrEmpty(spark, s"$lakeDir/$table")
-        .filter(_.columns.contains("filename")) // legacy/merge-only tables
-        .map(_.filter(col("collection_id") === cid && col("filename").isNotNull)
-          .select("filename").distinct().as[String].collect().toSet)
-        .getOrElse(Set.empty)
     val cids = collectionId +: upgradedId.toSeq
+    // every filename-keyed table's filenames in ONE distinct-and-collect;
     // compiled_release filenames are non-null only for DIRECT compiled-
-    // release loads (the format's only filename-keyed trace); the filesIn
-    // distinct drops the merge-produced nulls via the filter below
+    // release loads (the format's only filename-keyed trace), so the
+    // isNotNull filter drops the merge-produced rows
+    val filenames = Seq("release" -> cids, "record" -> cids,
+      "compiled_release" -> cids, "package_data" -> Seq(collectionId))
+      .flatMap { case (table, ids) =>
+        graft.ingest.Sink.readOrEmpty(spark, s"$lakeDir/$table").map(
+          _.filter(col("collection_id").isin(ids: _*) && col("filename").isNotNull)
+            .select("filename"))
+      }
     val inLake =
-      cids.map(filesIn("release", _)).fold(Set.empty)(_ ++ _) ++
-        cids.map(filesIn("record", _)).fold(Set.empty)(_ ++ _) ++
-        cids.map(filesIn("compiled_release", _)).fold(Set.empty)(_ ++ _) ++
-        filesIn("package_data", collectionId)
+      if (filenames.isEmpty) Set.empty[String]
+      else filenames.reduce(_ union _).distinct().as[String].collect().toSet
     val partial = inLake.filterNot(f => registered(graft.control.Control.pathKey(f)))
     if (partial.isEmpty) return
 
@@ -741,7 +741,7 @@ object Streaming {
       val hit = part.filter(doomed).select(col("collection_id").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
       for (cid <- cids if hit(cid))
-        graft.ingest.Sink.swapCollectionPartition(spark, path, cid,
+        graft.ingest.Sink.swapCollectionPartition(path, cid,
           df.filter(col("collection_id") === cid).filter(!doomed)
             .repartition(col("collection_id")))
     }

@@ -339,4 +339,114 @@ class SinkSpec extends AnyFunSuite {
     assert(s.read.format("jdbc")
       .option("url", url).option("dbtable", "release_serving").load().count() === 4)
   }
+
+  /** Notes written to a fresh `collection_note` table through
+    * [[Sink.observedWrite]], with a row count and a sum that is null over
+    * zero rows. */
+  private def observedNotes(rows: org.apache.spark.sql.DataFrame, dir: String): Seq[Long] = {
+    import org.apache.spark.sql.functions.{count, length, lit, sum}
+    Sink.observedWrite(rows, count(lit(1)), sum(length(rows("note"))))(
+      Sink.writeByCollection(_, s"$dir/collection_note"))
+  }
+
+  private def noteRows(n: Int) = {
+    import s.implicits._
+    (1 to n).map(i => (7L, "WARNING", s"note $i", "{}"))
+      .toDF("collection_id", "code", "note", "data")
+  }
+
+  test("observedWrite counts the rows a non-empty write consumed") {
+    val dir = Files.createTempDirectory("graft-observe").toString
+    assert(observedNotes(noteRows(3), dir) === Seq(3L, 18L))
+    assert(s.read.parquet(s"$dir/collection_note").count() === 3L)
+  }
+
+  test("observedWrite reads 0, not null, for an empty write") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft-observe-empty").toString
+    assert(observedNotes(noteRows(3).filter(col("note") === "absent"), dir) === Seq(0L, 0L))
+  }
+
+  test("observedWrite reads 0 when an anti-join drops every row (adaptive execution prunes the metrics)") {
+    val dir = Files.createTempDirectory("graft-observe-anti").toString
+    val table = s"$dir/collection_note"
+    observedNotes(noteRows(3), dir)
+    // the replay of appendNotes: every fresh note is already stored
+    val replay = noteRows(3).join(
+      Sink.readOrEmpty(s, table).get.select("code", "note", "data"),
+      Seq("code", "note", "data"), "left_anti")
+    assert(observedNotes(replay, dir) === Seq(0L, 0L))
+    assert(s.read.parquet(table).count() === 3L)
+  }
+
+  test("readOrEmpty surfaces a truncated part file of a declared table instead of None") {
+    import s.implicits._
+    val lake = Files.createTempDirectory("graft-truncated").toString
+    val table = s"$lake/release"
+    Sink.writeFacts(Seq(Ingest.ItemRow("a.json", "ocds-a", "r1", "2020-01-01", "{}", "h1"))
+      .toDF().withColumn("collection_id", org.apache.spark.sql.functions.lit(1L)), table)
+    val parts = {
+      import scala.jdk.CollectionConverters._
+      val w = Files.walk(java.nio.file.Paths.get(table))
+      try w.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally w.close()
+    }
+    assert(parts.nonEmpty)
+    parts.foreach(p => Files.write(p, Files.readAllBytes(p).take(8)))
+    val err = intercept[Exception](SparkSuite.quietly(
+      Sink.readOrEmpty(s, table).map(_.collect())))
+    assert(err.getMessage != null)
+    // absence still reads as None: a missing table, and one whose every
+    // partition was dropped
+    assert(Sink.readOrEmpty(s, s"$lake/record").isEmpty)
+    parts.foreach(p => Files.delete(p))
+    assert(Sink.readOrEmpty(s, table).isEmpty)
+  }
+
+  test("a collection id beyond INT reads as BIGINT, as partition discovery types it") {
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val table = s"${Files.createTempDirectory("graft-bigid")}/release"
+    val big = Int.MaxValue.toLong + 1
+    Seq(1L, big).foreach(id => Sink.writeFacts(
+      Seq(Ingest.ItemRow(s"$id.json", "ocds-a", "r1", "2020-01-01", "{}", "h1")).toDF()
+        .withColumn("collection_id", lit(id)), table))
+    val facts = Sink.readOrEmpty(s, table).get
+    assert(facts.schema("collection_id").dataType === s.read.parquet(table).schema("collection_id").dataType)
+    assert(facts.filter(col("collection_id") === big).select("filename").as[String].collect()
+      === Array(s"$big.json"))
+  }
+
+  test("each declared table schema equals the one Spark infers from its writer's table") {
+    val input = Files.createTempDirectory("graft-drift-in")
+    // a 1.0 package whose supplier repeats the tenderer with an extra
+    // field, so the upgrade leg writes a differs-warning note
+    Files.writeString(input.resolve("p.json"),
+      """{"uri": "http://x/p", "version": "1.0", "publisher": {"name": "P"},
+        | "publishedDate": "2020-01-01T00:00:00Z",
+        | "releases": [{"ocid": "ocds-d", "id": "d1", "date": "2020-01-01T00:00:00Z",
+        |   "buyer": {"name": "B"}, "tender": {"tenderers": [{"name": "T"}]},
+        |   "awards": [{"id": "a", "suppliers": [{"name": "T", "details": "d"}]}]}]}""".stripMargin)
+    val recInput = Files.createTempDirectory("graft-drift-rec")
+    Files.writeString(recInput.resolve("r.json"),
+      """{"uri": "http://x/r", "version": "1.1", "publisher": {"name": "R"},
+        | "publishedDate": "2020-01-01T00:00:00Z",
+        | "records": [{"ocid": "ocds-r", "releases": [
+        |   {"ocid": "ocds-r", "id": "r1", "date": "2020-01-01T00:00:00Z",
+        |    "tag": ["tender"], "initiationType": "tender"}]}]}""".stripMargin)
+    val lake = Files.createTempDirectory("graft-drift-lake").toString
+    val now = "2020-06-01 00:00:00"
+    val rel = graft.Pipeline.load(s, input.toString, lake, 1L, now, upgrade = true)
+    graft.Pipeline.runChecks(s, lake,
+      graft.Pipeline.compileAndFinish(s, lake, rel.plane, 1L, now).plane, 1L)
+    val rec = graft.Pipeline.load(s, recInput.toString, lake, 10L, now)
+    graft.Pipeline.runChecks(s, lake, rec.plane, 10L)
+    assert(Sink.TableSchemas.keySet === Set("release", "record", "compiled_release",
+      "package_data", "collection_note", "release_check", "record_check"))
+    Sink.TableSchemas.foreach { case (table, declared) =>
+      assert(Sink.readOrEmpty(s, s"$lake/$table").exists(_.count() > 0), s"$table is empty")
+      val inferred = s.read.parquet(s"$lake/$table").schema
+      assert(inferred === declared, s"$table drifted from its declared schema")
+    }
+  }
 }
