@@ -31,8 +31,6 @@ import graft.ocds.Metadata
   *                                               find-collections query)
   *   compact <lake> <table> <collectionId>      (lake small-files maintenance;
   *                                               no reference analogue)
-  *   compact-outcomes <outDir>                  (fold a record-outcome
-  *                                               stream's batch partitions)
   *   addchecks <lake> <collectionId>            (addchecks + checker)
   *   dedup <lake> <collectionId> [--checkpoint-dir DIR] [--max-bucket N]
   *                                              (near-dup payoff report over the
@@ -366,29 +364,6 @@ object Cli {
         else Nil
       val rows = Sink.compactCollection(spark, s"$lake/$table", cid, clusterByOcid, inner)
       println(s"compacted $table/collection_id=$cid: $before -> ${partFiles()} files ($rows rows)")
-
-    case "compact-outcomes" :: outDir :: Nil =>
-      // streaming maintenance: fold a record-outcome stream's accumulated
-      // batch_id partitions (one per micro-batch) into a single clustered
-      // partition. Only run it against a TERMINATED stream — an in-flight
-      // replay of a folded batch would see the fold as data loss (the
-      // contract documented on Sink.compactOutcomes).
-      val spark = session()
-      def dirCount(): Int = {
-        val p = java.nio.file.Paths.get(outDir)
-        if (!java.nio.file.Files.isDirectory(p)) 0
-        else {
-          val stream = java.nio.file.Files.list(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            stream.iterator.asScala
-              .count(_.getFileName.toString.startsWith("batch_id="))
-          } finally stream.close()
-        }
-      }
-      val beforeDirs = dirCount()
-      val rows = Sink.compactOutcomes(spark, outDir)
-      println(s"folded $beforeDirs batch partitions -> ${dirCount()} ($rows rows)")
 
     case "compile" :: lake :: rootId :: Nil =>
       // the compiler → checker → finisher worker chain, run inline once the
@@ -1675,16 +1650,22 @@ object Cli {
       require(c.transformType.contains(Control.Transform.CompileReleases),
         "The collection must be a compiled collection")
       val root = plane.rootParent(c)
-      val compiled = Sink.readFacts(spark, s"$lake/compiled_release")
-        .filter(col("collection_id") === c.id)
-        .select(col("ocid"), col("max_date").as("release_date"))
-      val pkgs = spark.read.parquet(s"$lake/package_data")
-        .filter(col("collection_id") === root.id)
-      val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString
-      // collect() here is the command's OUTPUT: metadata() returns exactly
-      // one row at any table size (two single-row aggregates joined)
-      Metadata.metadata(compiled, pkgs, today).collect().foreach { r =>
-        r.schema.fieldNames.foreach(f => println(s"$f: ${Option(r.getAs[Any](f)).getOrElse("-")}"))
+      // a compiled-release load writes no package envelope, and a wiped
+      // lake has neither table: both read like GET /metadata/ does
+      (Sink.readOrEmpty(spark, s"$lake/compiled_release"),
+        Sink.readOrEmpty(spark, s"$lake/package_data")) match {
+        case (Some(cr), Some(pk)) =>
+          val compiled = cr.filter(col("collection_id") === c.id)
+            .select(col("ocid"), col("max_date").as("release_date"))
+          val pkgs = pk.filter(col("collection_id") === root.id)
+          val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString
+          // collect() here is the command's OUTPUT: metadata() returns
+          // exactly one row at any table size (two single-row aggregates
+          // joined)
+          Metadata.metadata(compiled, pkgs, today).collect().foreach { r =>
+            r.schema.fieldNames.foreach(f => println(s"$f: ${Option(r.getAs[Any](f)).getOrElse("-")}"))
+          }
+        case _ => println("no metadata")
       }
 
     case "notes" :: lake :: rootId :: rest =>
@@ -1744,7 +1725,6 @@ object Cli {
            |  addfiles <lake> <rootId> <path...>
            |  compile <lake> <rootId>
            |  compact <lake> <table> <collectionId>
-           |  compact-outcomes <outDir>
            |  collections <lake> [--source NAME] [--with-compiled]
            |  collectionstatus <lake> <rootId>
            |  addchecks <lake> <collectionId>

@@ -9,9 +9,7 @@ import org.apache.spark.sql.types._
   * last-write-wins compaction and gap sessionization (SURVEY.md §2.8 F1/F7,
   * §2.10). These are the batch forms of the reference's incremental
   * semantics; the last-write-wins compaction also runs live in
-  * [[graft.streaming.Streaming.lastWriteWins]] (`mapGroupsWithState`), and
-  * the incremental record-compile path in
-  * [[graft.streaming.Streaming.recordCompileStream]].
+  * [[graft.streaming.Streaming.lastWriteWins]] (`mapGroupsWithState`).
   *
   * `ts` arrives as epoch NANOS (LongType via nanosAsLong); all arithmetic is
   * integer microseconds (`ts_us`) to stay bit-identical with DuckDB's

@@ -137,9 +137,13 @@ object PlaneStore {
       } finally ch.close()
     }
 
-  /** write temp + ATOMIC_MOVE in the same directory: readers see either the
-    * old or the new document, never a truncated one. */
-  private def atomicWrite(target: Path, content: String): Unit = {
+  /** write temp + ATOMIC_MOVE in the same directory, creating it first:
+    * readers see either the old or the new document, never a truncated
+    * one. The one commit step of every small JSON document kept beside
+    * the lake — the plane, and the streaming stores' sketches, totals and
+    * replay watermarks. */
+  private[graft] def atomicWrite(target: Path, content: String): Unit = {
+    Files.createDirectories(target.toAbsolutePath.getParent)
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
     Files.writeString(tmp, content)
     try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,

@@ -256,88 +256,6 @@ object Sink {
     swapCollectionPartition(path, collectionId, clustered, innerPartition)
   }
 
-  /** Streaming-outcome maintenance (the record-outcome analogue of
-    * [[compactCollection]]): `Streaming.recordCompileStream` lands one
-    * `batch_id=N` partition per micro-batch forever — a long-lived stream
-    * fragments its outcome table into thousands of tiny-file directories.
-    * Fold every batch partition into the single highest one, preserving
-    * the outcome rows; per-row micro-batch provenance collapses to the
-    * fold id, which is dead weight once the stream has drained (its only
-    * live role is the dynamic-partition-overwrite replay dedup while the
-    * stream runs). MUST only run against a TERMINATED stream whose final
-    * batch committed its checkpoint: to an in-flight replay of a folded
-    * batch, the fold is indistinguishable from loss (the replay would
-    * overwrite only its own, now-absent, partition).
-    *
-    * Commit protocol (same family as [[swapCollectionPartition]], tuned so
-    * a concurrent reader can see brief DUPLICATES but never loss): the
-    * folded rows land in an underscore-prefixed dir (invisible to Spark
-    * readers, same filesystem) and a rename to `_fold_ready_batch_id=<max>`
-    * marks them complete; promotion then replaces ONLY the `batch_id=<max>`
-    * dir with the fold (the one sliver of loss window, bounded to that
-    * single batch and healed by the fold itself) and sweeps the lower
-    * batch dirs afterwards — a reader mid-sweep double-counts the
-    * not-yet-swept batches (their rows are already in the fold) instead of
-    * losing rows. A `_fold_sweeping_batch_id=<max>` marker brackets the
-    * promote+sweep so a crash resumes the sweep on the next call rather
-    * than starting a fresh fold over the duplicated residuals (which would
-    * bake the double-counting into the new fold). A crash anywhere else
-    * self-heals too: an unfinished write is deleted, a ready-but-
-    * unpromoted fold is promoted; batches newer than the fold (a stream
-    * resumed after the crash) are left alone. Returns the folded
-    * partition's row count. */
-  def compactOutcomes(spark: SparkSession, outDir: String): Long = {
-    import java.nio.file.{Files => JF, Paths => JP}
-    import scala.jdk.CollectionConverters._
-    val table = JP.get(outDir)
-    if (!JF.isDirectory(table)) return 0L
-    val Ready = "_fold_ready_batch_id="
-    val Sweeping = "_fold_sweeping_batch_id="
-    def ls(): Seq[java.nio.file.Path] = {
-      val stream = JF.list(table)
-      try stream.iterator.asScala.toSeq finally stream.close()
-    }
-    def batchDirs(): Seq[java.nio.file.Path] =
-      ls().filter(_.getFileName.toString.startsWith("batch_id="))
-    def idOf(p: java.nio.file.Path): Long =
-      p.getFileName.toString.dropWhile(_ != '=').drop(1).toLong
-    def sweepBelow(max: Long): Unit =
-      batchDirs().filter(idOf(_) < max).foreach(deleteDir)
-    def promote(ready: java.nio.file.Path): Long = {
-      val max = ready.getFileName.toString.stripPrefix(Ready).toLong
-      val marker = table.resolve(s"$Sweeping$max")
-      if (!JF.exists(marker)) JF.createFile(marker)
-      val dest = table.resolve(s"batch_id=$max")
-      deleteDir(dest)
-      JF.move(ready, dest)
-      sweepBelow(max)
-      JF.delete(marker)
-      spark.read.parquet(dest.toString).count()
-    }
-    deleteDir(table.resolve("_fold_tmp"))
-    // resume a crashed fold: a ready dir is promoted (finishing its sweep);
-    // a sweep marker without a ready dir means the fold IS live and only
-    // the sweep is unfinished — complete it before anything reads or
-    // refolds the duplicated residuals
-    ls().find(_.getFileName.toString.startsWith(Ready)) match {
-      case Some(ready) => promote(ready)
-      case None =>
-        ls().find(_.getFileName.toString.startsWith(Sweeping)).foreach { mk =>
-          sweepBelow(mk.getFileName.toString.stripPrefix(Sweeping).toLong)
-          JF.delete(mk)
-        }
-    }
-    val parts = batchDirs()
-    if (parts.isEmpty) return 0L
-    val max = parts.map(idOf).max
-    val tmp = table.resolve("_fold_tmp")
-    spark.read.parquet(outDir).drop("batch_id")
-      .repartition(1).write.mode("overwrite").parquet(tmp.toString)
-    val ready = table.resolve(s"$Ready$max")
-    JF.move(tmp, ready)
-    promote(ready)
-  }
-
   /** Read back with partition pruning available on `collection_id`; a
     * pipeline table reads with its declared schema ([[TableSchemas]]). */
   def readFacts(spark: SparkSession, path: String): DataFrame =

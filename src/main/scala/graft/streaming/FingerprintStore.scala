@@ -87,17 +87,7 @@ object FingerprintStore {
     val root = mapper.createObjectNode()
     root.put("last_batch_id", m.lastBatchId)
     root.put("lineage", m.lineage)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(lake))
-    val target = metaPath(lake)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp, mapper.writeValueAsString(root))
-    try java.nio.file.Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    graft.control.PlaneStore.atomicWrite(metaPath(lake), mapper.writeValueAsString(root))
   }
 
   /** Decode an (id BIGINT, content BINARY) media frame ONCE and emit
@@ -234,7 +224,7 @@ object FingerprintStore {
       scenes: Boolean = false): DataFrame = {
     val keyed = batchId >= 0L
     val replayed = keyed && loadMeta(lake).exists(m =>
-      m.lineage == lineage && batchId <= m.lastBatchId)
+      Streaming.replayed(m.lastBatchId, Some(m.lineage), batchId, lineage))
     val fps = fingerprintsOf(media, spark, scenes).localCheckpoint()
     val flags = probe(spark, lake, fps, maxHamming,
       excludeBatch = if (keyed) Some((lineage, batchId)) else None)

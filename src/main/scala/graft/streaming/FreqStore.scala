@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -28,8 +28,8 @@ import graft.functions.{FreqBuffer, FreqCtr, GraftExtensions, MisraGries}
   *    across partitions. The same fold merges per-day or per-source
   *    sketches at 100 TB without re-touching raw streams.
   *  - The store is ONE json document (<= capacity entries, ~1-2 MB at
-  *    2^16 — driver-bounded by construction), atomically replaced via
-  *    temp-file + ATOMIC_MOVE (the PlaneStore idiom): a crash mid-save
+  *    2^16 — driver-bounded by construction), atomically replaced by
+  *    [[graft.control.PlaneStore.atomicWrite]]: a crash mid-save
   *    leaves the previous sketch intact.
   *  - Exactly-once under foreachBatch replay: the stored `last_batch_id`
   *    skips re-delivered batch ids (Structured Streaming re-runs a batch
@@ -104,15 +104,7 @@ object FreqStore {
     // deterministic order (est desc, term asc) so the file is diffable
     s.items.toSeq.sortBy { case (k, v) => (-v, k) }
       .foreach { case (k, v) => items.put(k, v) }
-    Files.createDirectories(Paths.get(dir))
-    val target = path(dir)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(root))
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-    }
+    graft.control.PlaneStore.atomicWrite(path(dir), mapper.writeValueAsString(root))
   }
 
   /** Pure driver-side fold of a bounded batch sketch into the stored one
@@ -153,11 +145,8 @@ object FreqStore {
     require(store.capacity == capacity,
       s"stored sketch capacity ${store.capacity} != requested $capacity " +
         "(a capacity change needs a new store directory)")
-    // replay guard, valid only within one lineage: a stored marker that
-    // DIFFERS from the caller's means the checkpoint was reset and batch
-    // ids restarted — fold regardless of the old watermark
-    val sameLineage = store.lineage.forall(_ == lineage)
-    if (sameLineage && batchId <= store.lastBatchId) return store // replayed batch: no-op
+    if (Streaming.replayed(store.lastBatchId, store.lineage, batchId, lineage))
+      return store // replayed batch: no-op
     GraftExtensions.ensureRegistered(batch.sparkSession)
     // one bounded row: array<struct<item, est, err>> + the batch dropped
     // + the batch token total (the dropped fallback for the all-purged

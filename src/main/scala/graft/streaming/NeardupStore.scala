@@ -73,17 +73,18 @@ object NeardupStore {
       .write.mode("append").partitionBy("doc_bucket").parquet(docPath(lake))
   }
 
-  /** Small-file + duplicate-row maintenance for the two store tables —
-    * the NeardupStore analogue of `Sink.compactOutcomes`: every
-    * micro-batch appends up to `touched-buckets` part files per table, so
+  /** Small-file + duplicate-row maintenance for the two store tables
+    * (the streaming-store analogue of [[graft.ingest.Sink.compactCollection]]):
+    * every micro-batch appends up to `touched-buckets` part files per table, so
     * a long-lived stream fragments the store into thousands of tiny
     * files, and the at-least-once replay window can leave exact duplicate
     * rows (harmless to the probe, dead weight on disk). Compaction
     * rewrites each table DISTINCT, one file per bucket partition.
     *
-    * MUST only run against a terminated stream (same contract and reason
-    * as compactOutcomes: to an in-flight batch, a fold of its own append
-    * is indistinguishable from loss). Commit protocol per table, all
+    * MUST only run against a terminated stream: the fold reads a
+    * snapshot of the table and then replaces the whole directory, so a
+    * batch appended while it runs is swept with the old table and lost.
+    * Commit protocol per table, all
     * renames on the same filesystem:
     *   write distinct → `_compact_tmp` (invisible to readers) →
     *   rename `_compact_tmp` → `_compact_ready` (completeness marker) →

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,10 +24,10 @@ import org.apache.spark.sql.types.LongType
   *    token, all co-located in its bucket).
   *  - `<store>/_totals.json`: the corpus totals BM25 needs (n_docs,
   *    t_all) as ONE tiny document — two longs, never a table scan at
-  *    query time — atomically replaced via temp-file + ATOMIC_MOVE (the
-  *    FreqStore/PlaneStore idiom) with the same lineage-scoped batch-id
-  *    watermark as FreqStore: totals are ADDITIVE, so a replayed batch
-  *    must fold exactly once.
+  *    query time — atomically replaced by
+  *    [[graft.control.PlaneStore.atomicWrite]] under the same
+  *    lineage-scoped batch-id watermark as FreqStore: totals are
+  *    ADDITIVE, so a replayed batch must fold exactly once.
   *
   * Exactly-once posture (the NeardupStore contract): postings append
   * BEFORE the totals save, so the one crash window (postings committed,
@@ -82,15 +82,7 @@ object PostingsStore {
     root.put("t_all", t.tAll)
     root.put("last_batch_id", t.lastBatchId)
     t.lineage.foreach(root.put("lineage", _))
-    Files.createDirectories(Paths.get(store))
-    val target = totalsPath(store)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(root))
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-    }
+    graft.control.PlaneStore.atomicWrite(totalsPath(store), mapper.writeValueAsString(root))
   }
 
   /** Postings rows of a (doc_id, text) frame: one row per (token, doc_id)
@@ -124,8 +116,8 @@ object PostingsStore {
       store: String, docs: DataFrame, batchId: Long,
       lineage: String = "adhoc"): Totals = {
     val tot = loadTotals(store).getOrElse(Totals(0L, 0L, -1L, None))
-    val sameLineage = tot.lineage.forall(_ == lineage)
-    if (sameLineage && batchId <= tot.lastBatchId) return tot // replayed: no-op
+    if (Streaming.replayed(tot.lastBatchId, tot.lineage, batchId, lineage))
+      return tot // replayed: no-op
     postingsOf(docs)
       .repartition(col("token_bucket"))
       .write.mode("append").partitionBy("token_bucket")

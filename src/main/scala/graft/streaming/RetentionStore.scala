@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,11 +20,11 @@ import org.apache.spark.sql.types.LongType
   * totals" split doesn't apply): each fold writes the new matrix into a
   * VERSIONED directory (`matrix_b<batchId>`), derived deterministically
   * from the PREVIOUS meta pointer's matrix plus this batch's deltas,
-  * and then atomically swaps the `_retention_meta.json` pointer (tmp +
-  * ATOMIC_MOVE — the PlaneStore idiom). The pointer swap IS the commit:
-  * a crash after the directory write but before the swap replays the
-  * batch, which recomputes the SAME directory from the SAME inputs and
-  * swaps once; a replayed batch at-or-below the lineage-scoped
+  * and then atomically swaps the `_retention_meta.json` pointer
+  * ([[graft.control.PlaneStore.atomicWrite]]). The pointer swap IS the
+  * commit: a crash after the directory write but before the swap
+  * replays the batch, which recomputes the SAME directory from the SAME
+  * inputs and swaps once; a replayed batch at-or-below the lineage-scoped
   * watermark is a full no-op. Superseded directories are
   * garbage-collected after the swap (best-effort — a reader that
   * resolved the old pointer mid-fold retries through [[matrix]]).
@@ -56,15 +56,7 @@ object RetentionStore {
     root.put("last_batch_id", m.lastBatchId)
     root.put("lineage", m.lineage)
     root.put("dir", m.dir)
-    Files.createDirectories(Paths.get(store))
-    val target = metaPath(store)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(root))
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-    }
+    graft.control.PlaneStore.atomicWrite(metaPath(store), mapper.writeValueAsString(root))
   }
 
   private def emptyMatrix(spark: SparkSession): DataFrame = {
@@ -91,7 +83,8 @@ object RetentionStore {
       spark: SparkSession, store: String, deltas: DataFrame,
       batchId: Long, lineage: String = "adhoc"): Boolean = {
     val meta = loadMeta(store)
-    if (meta.exists(m => m.lineage == lineage && batchId <= m.lastBatchId))
+    if (meta.exists(m =>
+        Streaming.replayed(m.lastBatchId, Some(m.lineage), batchId, lineage)))
       return false
     val agg = deltas
       .groupBy(col("cohort"), col("offset"))

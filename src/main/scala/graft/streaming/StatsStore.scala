@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 
 import org.apache.spark.sql.DataFrame
@@ -190,15 +190,7 @@ object StatsStore {
         node.put(src, Base64.getEncoder.encodeToString(packLongs(mins)))
       }
     }
-    Files.createDirectories(Paths.get(dir))
-    val target = path(dir)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, mapper.writeValueAsString(root))
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-    }
+    graft.control.PlaneStore.atomicWrite(path(dir), mapper.writeValueAsString(root))
   }
 
   private def empty(precision: Int, qCapacity: Int): Stats =
@@ -236,8 +228,8 @@ object StatsStore {
     require(sourceCol.isEmpty || store.kmv.isEmpty || store.kmvK == kmvK,
       s"stored sketch params (kmv_k=${store.kmvK}) != requested (kmv_k=$kmvK)" +
         " — a param change needs a new store dir")
-    val sameLineage = store.lineage.forall(_ == lineage)
-    if (sameLineage && batchId <= store.lastBatchId) return store // replay: no-op
+    if (Streaming.replayed(store.lastBatchId, store.lineage, batchId, lineage))
+      return store // replay: no-op
     GraftExtensions.ensureRegistered(batch.sparkSession)
     // the fold runs 2 aggregations (3 with KMV) over the same batch; in
     // foreachBatch the frame is typically lake-parquet-backed and

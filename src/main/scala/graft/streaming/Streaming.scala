@@ -3,31 +3,33 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 
-import com.fasterxml.jackson.databind.node.ObjectNode
-
-import graft.ocds.{Canonical, RecordCompile}
-
 /** Structured-Streaming side of the engine (SURVEY.md §2 T1/T2/T4/T9;
   * reference: the always-on RabbitMQ dataflow of the
   * `process/management/commands` workers).
   *
   * Two reference semantics matter here:
   *
-  *  - **Record packages compile per-file immediately, while the collection
-  *    is still loading** (`compiler.py:146-148`): rendered as a file-source
-  *    stream over a landing directory with `foreachBatch` — every
-  *    micro-batch's records are decision-treed and persisted as they
-  *    arrive, no end-of-collection barrier. Exactly-once comes from the
-  *    checkpoint + an idempotent sink (each batch owns and overwrites its
-  *    own output partition on replay), replacing the reference's
-  *    at-least-once queue + dedup errback (T1/T2).
+  *  - **Files load, and record packages compile, as they land**
+  *    (`api_loader.py:28-50`, `compiler.py:146-148`): [[releaseLoadStream]]
+  *    is a file-source stream over a landing directory whose
+  *    `foreachBatch` hands each micro-batch's new files to
+  *    [[graft.Pipeline.loadFilesInto]], the batch loader itself, for every
+  *    package format. A record package therefore compiles per file while
+  *    its collection is still open, with the batch load's first-record
+  *    election, notes and replay guard — no end-of-collection barrier.
+  *    Exactly-once is file-granular and keyed on the control plane,
+  *    replacing the reference's at-least-once queue + dedup errback
+  *    (T1/T2).
   *  - **Last-write-wins key state** (the core of compile, W2) as live
   *    state: `mapGroupsWithState` keeps one latest-value state per key —
   *    the streaming form of the batch `row_number() = 1` compaction.
   *
-  * The landing format is concatenated JSON (one record per line) — one of
-  * the reference's physical shapes (S3) — so each streamed value costs
-  * O(item) memory, consistent with the batch ingest bound.
+  * The stream carries file arrivals, not contents: the loader re-opens
+  * each file with the O(item)-memory item reader, the batch ingest bound.
+  * The per-batch maintenance stores (sketches, postings, fingerprints,
+  * the retention matrix) share one commit step,
+  * [[graft.control.PlaneStore.atomicWrite]], and one lineage-scoped
+  * replay guard, [[replayed]].
   */
 object Streaming {
 
@@ -61,7 +63,7 @@ object Streaming {
       .getOrElse(spark.emptyDataFrame)
 
   /** Where the per-collection corpus-build manifest lives (the
-    * incremental twin of q_corpus_build — VERDICT r17 #7). */
+    * incremental twin of q_corpus_build, see [[appendCorpusManifest]]). */
   def corpusManifestPath(lakeDir: String): String = s"$lakeDir/corpus_manifest"
 
   /** THE reader for the incremental corpus-build manifest table. Rows are
@@ -73,7 +75,7 @@ object Streaming {
     graft.ingest.Sink.readOrEmpty(spark, corpusManifestPath(lakeDir))
       .getOrElse(spark.emptyDataFrame)
 
-  /** Per-close-drain corpus-build manifest (VERDICT r17 #7): the batch
+  /** Per-close-drain corpus-build manifest: the batch
     * manifest engine ([[graft.TextQueries.corpusBuildOf]] — the 9-stage
     * CCNet-order readout) composed over the control plane's collection
     * slice, refreshed at every close drain so a long-running crawl reads
@@ -138,7 +140,7 @@ object Streaming {
     * true)`). The table is an at-least-once raw append: a crash-replayed
     * batch re-writes byte-identical rows (the LineStore historical-view
     * invariance), so every consumer must fold duplicates — this helper
-    * centralizes that contract (ADVICE r16: a naive
+    * centralizes that contract (a naive
     * spark.read.parquet(clean_doc) double-counts after a replay), the
     * way the sibling stores fold at read. Empty frame when no batch has
     * ever run the leg. */
@@ -147,119 +149,34 @@ object Streaming {
       .map(_.distinct())
       .getOrElse(spark.emptyDataFrame)
 
-  /** One streamed record's compile outcome. */
-  final case class RecordOutcome(
-      ocid: String, outcome: String, compiled_id: String, batch_id: Long)
+  /** The binaryFile source's fixed schema, declared explicitly (streaming
+    * sources don't infer) — shared by the release loader (which reads
+    * only `path`) and the media-fingerprint leg (which reads `content`
+    * too). */
+  private val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
+    org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
 
-  /** T4 record-package path: compile each micro-batch of landed records
-    * immediately and persist the outcomes under `outDir`, partitioned by
-    * batch id. The write is IDEMPOTENT — a replayed batch (crash between
-    * the sink write and the checkpoint commit) dynamically overwrites its
-    * own `batch_id=` partition instead of appending duplicates, which is
-    * what upgrades the checkpoint's at-least-once replay to effective
-    * exactly-once. A malformed landed line (truncated file, blank line)
-    * yields a `malformed` outcome row rather than poisoning the batch
-    * forever — the reference marks the file failed and continues. */
-  def recordCompileStream(
-      spark: SparkSession, landingDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery =
-    recordCompileStream(spark, landingDir, outDir, checkpointDir, None)
-
-  /** [[recordCompileStream]] with the control plane threaded through
-    * (VERDICT r6 wrong #2): each micro-batch registers its files'
-    * collection_file + LOAD step rows, completes the LOAD steps, flips the
-    * per-file `compilationStarted` flag the record-package completion gate
-    * requires (T2/T3, the compiler's `collection_file.compilation_started`
-    * write, `compiler.py:186-189`), latches the collection's data_type
-    * format, and persists the plane — so a streamed record collection
-    * passes `completable` once closed, exactly like a batch-loaded one.
-    * `plane` carries (shared plane ref, collection id, lake dir for the
-    * plane save). */
-  def recordCompileStream(
-      spark: SparkSession, landingDir: String, outDir: String,
-      checkpointDir: String,
-      plane: Option[(java.util.concurrent.atomic.AtomicReference[graft.control.Control.Plane],
-        Long, String)]): StreamingQuery = {
-    import spark.implicits._
-    spark.readStream
-      .format("text")
-      .load(landingDir)
-      .select($"value", $"_metadata.file_path".as("path"))
-      .as[(String, String)]
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (withPath: Dataset[(String, String)], batchId: Long) =>
-        // collect(): distinct file paths are control-plane-sized
-        val files = withPath.select($"path").distinct().as[String].collect().sorted
-        val batch = withPath.map(_._1)
-        val outcomes = batch.mapPartitions { it =>
-          it.flatMap { line =>
-            val parsed =
-              try Some(Canonical.parse(line))
-              catch { case _: Exception => None }
-            parsed match {
-              case None if line.trim.isEmpty => None // blank separator lines
-              case None =>
-                Some(RecordOutcome("", "malformed", null, batchId))
-              case Some(node) if !node.isObject => None
-              case Some(node) =>
-                val rec = node.asInstanceOf[ObjectNode]
-                val ocid = Option(rec.get("ocid")).filter(_.isTextual)
-                  .map(_.asText).getOrElse("")
-                val d = RecordCompile.decide(ocid, rec)
-                Some(RecordOutcome(
-                  ocid, d.outcome,
-                  d.compiled.flatMap(c => Option(c.get("id")).map(_.asText)).orNull,
-                  batchId))
-            }
-          }
-        }
-        outcomes.write
-          .partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .parquet(outDir)
-        // plane bookkeeping AFTER the outcome write commits (same ordering
-        // contract as releaseLoadStream: a registered file is a done file);
-        // registerFile/markFileCompiled are idempotent under replay
-        plane.foreach { case (ref, cid, lakeDir) =>
-          var p = ref.get()
-          if (!p.collection(cid).dataTypeFormat.contains(
-              graft.control.Control.Format.RecordPackage))
-            p = p.copy(collections = p.collections.updated(cid,
-              p.collection(cid).copy(dataTypeFormat =
-                Some(graft.control.Control.Format.RecordPackage))))
-          for (f <- files) {
-            p = graft.control.Control.registerFile(p, cid, f)
-            p = graft.control.Control.completeStep(
-              p, cid, graft.control.Control.StepName.Load, Some(f))
-            p = graft.control.Control.markFileCompiled(p, cid, f)
-          }
-          if (p ne ref.get())
-            ref.set(graft.control.PlaneStore.save(lakeDir, p))
-        }
-        () // Unit-returning VoidFunction2 overload
-      }
-      .start()
-  }
-
-  /** S6/T1 release-package path — the api_loader's dataflow
+  /** S6/T1/T4 load path for every package format — the api_loader's dataflow
     * (`api_loader.py:28-50`: Collect announces a stored file, the loader
     * registers it and the file_worker loads it) as a Structured Streaming
     * query over a landing directory: each micro-batch's NEW files are
     * registered into the control plane and stream-loaded into the lake by
     * [[graft.Pipeline.loadFilesInto]] (the same engine the batch load
-    * runs), with the plane persisted after every batch.
+    * runs), with the plane persisted after every batch. Landed record
+    * packages compile per file here (`compiler.py:146-148`), with the
+    * batch loader's first-record election, notes and replay guard.
     *
     * Exactly-once is FILE-granular, keyed on the CONTROL PLANE, not the
     * lake: a batch's plane save runs strictly after all of its lake writes
     * commit, so "this file is registered in the saved plane" means "every
     * one of its legs (facts, dedup store, package metadata, upgrade leg,
     * notes) is in the lake". The per-batch idempotence check is therefore a
-    * driver-side set lookup — NO lake scan per micro-batch (the r6 design
-    * re-read the open collection's partition every batch, which at 100 TB
-    * collects millions of filenames per trigger). A checkpoint replay
+    * driver-side set lookup — NO lake scan per micro-batch (re-reading
+    * the open collection's partition every batch would, at 100 TB, collect
+    * millions of filenames per trigger). A checkpoint replay
     * (crash between plane save and checkpoint commit) re-offers registered
     * files and skips them all.
     *
@@ -320,8 +237,8 @@ object Streaming {
     * replayed rows byte-identical; readers distinct).
     *
     * `dsirScore = Some(weightsDir)` annotates each batch's loaded docs
-    * with their DSIR importance weights (VERDICT r17 #2 — quality-AT-
-    * INGEST, the production shape: the model trains ONCE offline from a
+    * with their DSIR importance weights (quality at ingest, the
+    * production shape: the model trains ONCE offline from a
     * curated target, `Cli dsir-select --weights`, and every arriving
     * micro-batch scores against the persisted ≤ B-row table without
     * ever touching the target corpus again). The weights load once per
@@ -332,16 +249,6 @@ object Streaming {
     * byte-identical replays; read via [[dsirScores]]). A missing model
     * fails the stream START loudly — scoring against an accidentally
     * absent model must never silently annotate nothing. */
-  /** The binaryFile source's fixed schema, declared explicitly (streaming
-    * sources don't infer) — shared by the release loader (which reads
-    * only `path`) and the media-fingerprint leg (which reads `content`
-    * too). */
-  private val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
-    org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType)))
-
   def releaseLoadStream(
       spark: SparkSession,
       landingDir: String,
@@ -416,7 +323,7 @@ object Streaming {
           val (p2, _, _) = graft.Pipeline.loadFilesInto(
             spark, fresh, lakeDir, p, collectionId, upgradedId)
           p = p2
-          // incremental NEAR-dup (VERDICT r11 Next #5): the exact-hash
+          // incremental NEAR-dup: the exact-hash
           // dedup above is blind to near-identical re-arrivals; probe the
           // batch's docs against the persistent signature store (bucket-
           // pruned, never a full-store scan — see NeardupStore), flag the
@@ -541,8 +448,8 @@ object Streaming {
     * At-least-once raw append of byte-identical rows; readers distinct. */
   def mediaFilesPath(lakeDir: String): String = s"$lakeDir/media_files"
 
-  /** Fingerprint-at-ingest for MEDIA arrivals (VERDICT r19 Next #3 —
-    * [[FingerprintStore]] wired into the production ingest path): a
+  /** Fingerprint-at-ingest for MEDIA arrivals ([[FingerprintStore]]
+    * wired into the production ingest path): a
     * binaryFile stream over the same landing directory the release
     * loader drains, glob-restricted to media payloads, decoding each
     * arrival ONCE ([[FingerprintStore.probeAppend]]) — near-dups of
@@ -555,10 +462,11 @@ object Streaming {
     * Exactly-once shape: the probe/append pair is keyed by (stream
     * lineage, batch id) — a crash-replayed batch skips the store append
     * and its probe excludes its own first-attempt rows, so the flags
-    * recompute byte-identically (the r20 FingerprintStore watermark) —
-    * and the flag/name tables partition by (collection_id, batch_id)
-    * with dynamic overwrite, so the replay REWRITES its own partition
-    * instead of appending duplicates (the recordCompileStream idiom).
+    * recompute byte-identically (the store's lineage-scoped batch-id
+    * watermark) — and the flag/name tables partition by (collection_id,
+    * batch_id) with dynamic overwrite, so the replay REWRITES its own
+    * partition instead of appending duplicates: the batch id, stable
+    * across a replay, makes the sink idempotent without reading it back.
     * Probe-before-append means within-batch near-dups are the batch
     * engines' job (q_image_neardup and siblings), not this leg's — the
     * store flags re-arrivals against HISTORY. */
@@ -708,6 +616,17 @@ object Streaming {
     } catch { case scala.util.control.NonFatal(_) => checkpointDir }
   }
 
+  /** The streaming stores' replay guard: a batch id at or below the
+    * stored watermark is a replay only within the lineage
+    * ([[streamLineage]]) that wrote it. A stored lineage that differs
+    * means the checkpoint was reset and batch ids restarted, so the batch
+    * folds regardless of the old watermark; a legacy store with no stored
+    * lineage keeps the plain batch-id guard. */
+  private[streaming] def replayed(
+      lastBatchId: Long, storedLineage: Option[String],
+      batchId: Long, lineage: String): Boolean =
+    storedLineage.forall(_ == lineage) && batchId <= lastBatchId
+
   private def purgeByFilename(
       spark: SparkSession, path: String, cids: Seq[Long], files: Set[String]): Unit = {
     import org.apache.spark.sql.functions.col
@@ -721,7 +640,7 @@ object Streaming {
     * matching `doomed`, one atomic partition swap per collection
     * ([[graft.ingest.Sink.swapCollectionPartition]]) — the keep-plan reads
     * the live directory while the replacement is written aside, so there
-    * is no cache-and-overwrite-own-source window (ADVICE r7), a reader
+    * is no cache-and-overwrite-own-source window, a reader
     * never sees a half-purged partition, and a partition left empty is
     * dropped. No-op when nothing matches. */
   private def purgeWhere(
@@ -730,7 +649,7 @@ object Streaming {
     import org.apache.spark.sql.functions.col
     // restore any mid-swap crash debris BEFORE readOrEmpty snapshots the
     // file listing — a plan built first would omit the restored rows and
-    // the rewrite below would drop them (ADVICE r8)
+    // the rewrite below would drop them
     cids.foreach(graft.ingest.Sink.recoverSwapDebris(path, _))
     graft.ingest.Sink.readOrEmpty(spark, path).foreach { df =>
       val part = df.filter(col("collection_id").isin(cids: _*))
@@ -888,8 +807,8 @@ object Streaming {
       user_id: Long, cohort: String, offset: Long, delta: Long)
 
   /** Cohort retention as live per-user state — the streaming twin of
-    * [[graft.EventQueries.retentionOf]] (VERDICT r18 Next #2, the
-    * [[funnelProgress]] pattern): per user, state is the distinct
+    * [[graft.EventQueries.retentionOf]] (the [[funnelProgress]]
+    * pattern): per user, state is the distinct
     * activity-period set; each batch emits DELTAS against the user's
     * previous (cohort, offset) contribution set, so a downstream
     * aggregation (or a keyed sink) maintains the exact retention matrix
@@ -944,7 +863,7 @@ object Streaming {
   }
 
   /** [[retentionProgress]] composed with its MATERIALIZED downstream
-    * sink (VERDICT r19 Next #5): the signed per-batch deltas fold into
+    * sink: the signed per-batch deltas fold into
     * the persisted [[RetentionStore]] matrix under the lineage-scoped
     * batch-id watermark, so `<store>/matrix_b*` always holds the exact
     * [[graft.EventQueries.retentionOf]] readout over every folded event

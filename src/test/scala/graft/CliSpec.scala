@@ -116,6 +116,9 @@ class CliSpec extends AnyFunSuite {
     // no release/record rows exist — the reference's checker only handles
     // those, so this must report zero, not die on the absent table
     assert(run("addchecks", lake, "1").contains("checked=0 failed=0"))
+    // nor does the load write a package envelope: metadata reports its
+    // absence instead of failing on the missing package_data table
+    assert(run("metadata", lake, "2").trim === "no metadata")
   }
 
   test("load --note/--sample persist") {

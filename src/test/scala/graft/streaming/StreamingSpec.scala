@@ -7,116 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
 
-/** graft.streaming semantics: incremental record-compile per micro-batch
-  * (T4's record-package path, `compiler.py:146-148`) with checkpointed
-  * resume, and last-write-wins key state via mapGroupsWithState (W2/T9). */
+/** graft.streaming semantics: landed packages of every format load per
+  * micro-batch through the batch loader, record packages compiling per
+  * file (T4's record-package path, `compiler.py:146-148`), with
+  * plane-keyed replay and crash recovery; plus the live state operators
+  * (last-write-wins via mapGroupsWithState, windows, funnel, retention;
+  * W2/T9). */
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val s = SparkSuite.spark
-
-  private def record(ocid: String, date: String): String =
-    s"""{"ocid":"$ocid","releases":[{"ocid":"$ocid","id":"$ocid-r","date":"$date","tag":["planning"]}]}"""
-
-  test("record packages compile per micro-batch as files land; checkpoint resumes") {
-    val base = Files.createTempDirectory("graft-stream")
-    val landing = Files.createDirectory(base.resolve("landing"))
-    val out = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-
-    def runOnce(): Unit = {
-      val q = Streaming.recordCompileStream(s, landing.toString, out, ckpt)
-      q.awaitTermination() // AvailableNow: drains what has landed, stops
-    }
-
-    Files.writeString(landing.resolve("f1.jsonl"),
-      record("ocds-1", "2020-01-01") + "\n" + record("ocds-2", "2020-01-02") + "\n")
-    runOnce()
-
-    val after1 = s.read.parquet(out)
-    assert(after1.count() === 2) // compiled BEFORE the collection is closed
-
-    // a malformed line must not poison the batch (the reference marks the
-    // file failed and continues); it surfaces as a `malformed` outcome row
-    Files.writeString(landing.resolve("f2.jsonl"),
-      record("ocds-3", "2020-01-03") + "\n{\"truncat\n")
-    runOnce()
-
-    import s.implicits._
-    val all = s.read.parquet(out)
-      .select("ocid", "outcome", "compiled_id", "batch_id")
-      .as[(String, String, String, Long)].collect()
-    val bad = all.filter(_._2 == "malformed")
-    assert(bad.length === 1 && bad.head._1 === "") // surfaced, not fatal
-    val rows = all.filterNot(_._2 == "malformed").sortBy(_._1)
-    assert(rows.map(_._1).toSeq === Seq("ocds-1", "ocds-2", "ocds-3"))
-    assert(rows.forall(_._2 == "merged"))
-    assert(rows.map(_._3).toSeq === Seq(
-      "ocds-1-2020-01-01", "ocds-2-2020-01-02", "ocds-3-2020-01-03"))
-    // the restarted query continued from the checkpoint: new batch id,
-    // and the first batch's rows were NOT reprocessed (counts prove it)
-    assert(rows.map(_._4).distinct.length === 2)
-  }
-
-  test("compactOutcomes folds a multi-batch outcome table and self-heals a crashed fold") {
-    import s.implicits._
-    val base = Files.createTempDirectory("graft-fold")
-    val landing = Files.createDirectory(base.resolve("landing"))
-    val out = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-    def runOnce(): Unit =
-      Streaming.recordCompileStream(s, landing.toString, out, ckpt).awaitTermination()
-    def batchDirs(): Seq[String] = {
-      val stream = Files.list(java.nio.file.Paths.get(out))
-      try {
-        import scala.jdk.CollectionConverters._
-        stream.iterator.asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("batch_id=")).toSeq.sorted
-      } finally stream.close()
-    }
-
-    // three drains → three batch_id partitions (the unbounded growth)
-    Files.writeString(landing.resolve("a.jsonl"), record("ocds-fa", "2020-01-01") + "\n")
-    runOnce()
-    Files.writeString(landing.resolve("b.jsonl"), record("ocds-fb", "2020-01-02") + "\n")
-    runOnce()
-    Files.writeString(landing.resolve("c.jsonl"), record("ocds-fc", "2020-01-03") + "\n")
-    runOnce()
-    assert(batchDirs().length === 3)
-    val before = s.read.parquet(out).select("ocid", "outcome", "compiled_id")
-      .as[(String, String, String)].collect().sortBy(_._1).toSeq
-
-    // fold: one partition, same outcome rows
-    assert(graft.ingest.Sink.compactOutcomes(s, out) === 3L)
-    assert(batchDirs() === Seq("batch_id=2"))
-    val after = s.read.parquet(out).select("ocid", "outcome", "compiled_id")
-      .as[(String, String, String)].collect().sortBy(_._1).toSeq
-    assert(after === before)
-
-    // crash between the ready-mark and the promote: the ready dir holds
-    // the fold, the source partitions are still live. The next call must
-    // resume the sweep WITHOUT double-counting, and leave a batch NEWER
-    // than the fold (a stream resumed after the crash) alone.
-    Files.writeString(landing.resolve("d.jsonl"), record("ocds-fd", "2020-01-04") + "\n")
-    runOnce() // batch 3 lands next to the fold
-    val tableDir = java.nio.file.Paths.get(out)
-    // simulate the crashed fold of batches ≤ 2: ready copy of batch_id=2
-    s.read.parquet(s"$out/batch_id=2").write
-      .parquet(tableDir.resolve("_fold_ready_batch_id=2").toString)
-    assert(graft.ingest.Sink.compactOutcomes(s, out) === 4L)
-    assert(batchDirs() === Seq("batch_id=3"))
-    assert(s.read.parquet(out).count() === 4L)
-
-    // crash mid-sweep: the fold is live at batch_id=3, a lower batch dir
-    // survived holding rows ALREADY in the fold (the duplicates-not-loss
-    // window), and the sweep marker brackets it. The next call must
-    // finish the sweep instead of folding the duplicates into a new fold.
-    s.read.parquet(s"$out/batch_id=3").limit(1).write
-      .parquet(tableDir.resolve("batch_id=2").toString)
-    Files.createFile(tableDir.resolve("_fold_sweeping_batch_id=3"))
-    assert(graft.ingest.Sink.compactOutcomes(s, out) === 4L)
-    assert(batchDirs() === Seq("batch_id=3"))
-    assert(s.read.parquet(out).count() === 4L)
-  }
 
   private def releasePkg(ocid: String, rid: String): String =
     s"""{"uri": "http://x/$rid", "version": "1.1", "publisher": {"name": "P"},
@@ -474,6 +373,14 @@ class StreamingSpec extends AnyFunSuite {
     val p = planeRef.get()
     assert(p.filesOf(21L).size === 1 && p.filesOf(21L).forall(_.compilationStarted))
     assert(p.collection(21L).dataTypeFormat.contains(C.Format.RecordPackage))
+    assert(p.stepsOf(21L).isEmpty) // LOAD steps consumed
+    // after the close latch, both gates release — the batch contract; the
+    // record loader already started the compiled child's compilation
+    val closed = C.closeCollection(p, 21L, "2020-06-01 00:00:00", 1)
+    assert(C.completable(closed, closed.collection(22L)))
+    assert(C.completable(closed, closed.collection(21L)))
+    // the persisted plane matches the in-memory one
+    assert(graft.control.PlaneStore.load(lake).filesOf(21L).size === 1)
     // replay with a lost checkpoint: plane-keyed dedup loads nothing twice
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
     Streaming.releaseLoadStream(s, landing.toString, lake, 21L, None, planeRef, ckpt)
@@ -589,36 +496,6 @@ class StreamingSpec extends AnyFunSuite {
       .filter($"collection_id" === 9).count() === 1) // the lost leg is back
     assert(planeRef.get().filesOf(9L).size === 1)
     assert(planeRef.get().stepsOf(9L).isEmpty)
-  }
-
-  test("streamed record collections register files and pass the completion gates (T2/T3)") {
-    val base = Files.createTempDirectory("graft-recstream")
-    val landing = Files.createDirectory(base.resolve("landing"))
-    val lake = Files.createDirectory(base.resolve("lake")).toString
-    val out = base.resolve("out").toString
-    val ckpt = base.resolve("ckpt").toString
-    val C = graft.control.Control
-    val planeRef = new java.util.concurrent.atomic.AtomicReference(C.Plane(Map(
-      11L -> C.Collection(11L, "src", "2020-01-01 00:00:00", steps = Set("compile")),
-      12L -> C.Collection(12L, "src", "2020-01-01 00:00:00", parent = Some(11L),
-        transformType = Some(C.Transform.CompileReleases)))))
-    Files.writeString(landing.resolve("r.jsonl"), record("ocds-z1", "2020-01-01") + "\n")
-    Streaming.recordCompileStream(
-      s, landing.toString, out, ckpt, Some((planeRef, 11L, lake)))
-      .awaitTermination()
-
-    var p = planeRef.get()
-    assert(p.filesOf(11L).size === 1)
-    assert(p.filesOf(11L).forall(_.compilationStarted)) // per-file compile tracking
-    assert(p.stepsOf(11L).isEmpty) // LOAD steps consumed
-    assert(p.collection(11L).dataTypeFormat.contains(C.Format.RecordPackage))
-    // after the close latch, both gates release — the batch contract
-    p = C.closeCollection(p, 11L, "2020-06-01 00:00:00", 1)
-    p = C.startCompilation(p, 12L).get
-    assert(C.completable(p, p.collection(12L)))
-    assert(C.completable(p, p.collection(11L)))
-    // the persisted plane matches the in-memory one
-    assert(graft.control.PlaneStore.load(lake).filesOf(11L).size === 1)
   }
 
   test("windowedCounts finalizes watermark-expired windows in bounded state (T9)") {
