@@ -60,14 +60,17 @@ import graft.ocds.Metadata
   *                                               store instead of scanning)
   *   source-mix <lake> <collectionId>           (sqrt-temperature mix weights)
   *   length-stats <lake> <collectionId>         (per-source token-length quantiles)
-  *   corpus-stats <lake>                        (streaming stats-store readout)
+  *   corpus-stats <lake>                        (stats-store readout; the close
+  *                                               drain of a tree created with
+  *                                               "corpus_stats": true writes it)
   *   heavy-terms <lake> <collectionId> [--width N] [--min N] [--top N]
   *                                              (heavy-hitter n-grams, bounded
   *                                               freq_items sketch)
   *   closecollection <lake> <id> <nFiles>       (closecollection)
   *   cancelcollection <lake> <id>               (cancelcollection)
   *   deletecollection <lake> <rootId>           (deletecollection + wiper)
-  *   deleteorphan <lake>                        (deleteorphan)
+  *   deleteorphan <lake>                        (deleteorphan; release and record
+  *                                               rows reference the data store)
   *   metadata <lake> <compiledId>               (the metadata endpoint)
   *   notes <lake> <rootId> [LEVEL...] [--limit N]  (the notes endpoint; --limit
   *                                               bounds notes shown per level)
@@ -974,8 +977,7 @@ object Cli {
           val store = graft.streaming.Streaming.bm25IndexPath(lake, cid)
           if (graft.streaming.PostingsStore.loadTotals(store).isEmpty) {
             System.err.println(s"collection $cid has no search index — " +
-              s"build one with `index $lake $cid` (or stream with the " +
-              "bm25Index leg)")
+              s"build one with `index $lake $cid`")
             sys.exit(2)
           }
           Some(graft.streaming.PostingsStore.probe(spark, store, terms))
@@ -1003,12 +1005,10 @@ object Cli {
       }
 
     case "index" :: lake :: id :: Nil =>
-      // build (or REBUILD from scratch — the one-shot batch counterpart
-      // of the streaming bm25Index leg) the collection's inverted-index
+      // build (or REBUILD from scratch) the collection's inverted-index
       // store: token-bucket-partitioned postings + the totals document.
       // Rebuild semantics: the store reflects the collection's documents
-      // at THIS moment; files added later need a re-index (or the
-      // streaming leg, which maintains it per batch).
+      // at THIS moment; files added later need a re-index.
       val spark = session()
       val plane = PlaneStore.load(lake)
       val cid = idArg(id)
@@ -1205,7 +1205,7 @@ object Cli {
       }
       if (graft.streaming.PostingsStore.loadTotals(pstore).isEmpty) {
         System.err.println(s"no postings store at $pstore — build one " +
-          "(Cli index, or PostingsStore.appendBatch)")
+          "with `index <lake> <collection_id>`")
         sys.exit(2)
       }
       val spark = session()
@@ -1541,13 +1541,14 @@ object Cli {
 
     case "corpus-stats" :: lake :: Nil =>
       // live dataset-card readout of the streaming stats store
-      // (<lake>/stats_sketch, populated by releaseLoadStream's
-      // corpusStats leg): distinct-token cardinality + token-length
-      // quantiles + totals, each flagged exact vs estimated
+      // (<lake>/stats_sketch, written by the close drain of a tree that
+      // planned the corpus_stats step): distinct-token cardinality +
+      // token-length quantiles + totals, each flagged exact vs estimated
       graft.streaming.StatsStore.load(s"$lake/stats_sketch") match {
         case None =>
           System.err.println(
-            s"no stats sketch at $lake/stats_sketch (stream with corpusStats = true)")
+            s"no stats sketch at $lake/stats_sketch (plan the corpus_stats step: " +
+              "create the collection through the API with \"corpus_stats\": true)")
           sys.exit(2)
         case Some(st) =>
           val (dt, exact) = st.distinctTokens
@@ -1622,25 +1623,25 @@ object Cli {
 
     case "deleteorphan" :: lake :: Nil =>
       // S10: data rows referenced by no fact table are dropped; the store
-      // is rewritten (at warehouse scale this is a partition-wise anti-join
-      // MERGE, same plan shape)
+      // is rewritten through Sink.replaceDir (at warehouse scale this is a
+      // partition-wise anti-join MERGE, same plan shape). Release and
+      // record packages both write their rows' content into the store, so
+      // both tables reference it.
       val spark = session()
-      val store = Sink.readDedupStore(spark, s"$lake/data")
-      val refs = Seq(Sink.readOrEmpty(spark, s"$lake/release")).flatten
-        .map(_.select("hash_md5"))
-      val orphaned = Wipe.orphans(store, "hash_md5", refs).persist()
-      val removed = orphaned.count()
-      val live = store.join(
-        orphaned.select(col("hash_md5").as("__orphan")),
-        col("hash_md5") === col("__orphan"), "left_anti")
-      val tmp = s"$lake/data_live"
-      Sink.writeDedupStore(live.select("hash_md5", "data"), tmp, mode = "overwrite")
-      orphaned.unpersist()
-      import scala.jdk.CollectionConverters._
-      val old = java.nio.file.Paths.get(s"$lake/data")
-      java.nio.file.Files.walk(old).iterator.asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp), old)
+      val removed = Sink.replaceDir(s"$lake/data") { tmp =>
+        val store = Sink.readDedupStore(spark, s"$lake/data")
+        val refs = Seq("release", "record")
+          .flatMap(t => Sink.readOrEmpty(spark, s"$lake/$t"))
+          .map(_.select("hash_md5"))
+        val orphaned = Wipe.orphans(store, "hash_md5", refs).persist()
+        val n = orphaned.count()
+        val live = store.join(
+          orphaned.select(col("hash_md5").as("__orphan")),
+          col("hash_md5") === col("__orphan"), "left_anti")
+        Sink.writeDedupStore(live.select("hash_md5", "data"), tmp, mode = "overwrite")
+        orphaned.unpersist()
+        n
+      }
       println(s"removed $removed orphaned data rows")
 
     case "metadata" :: lake :: compiledId :: Nil =>

@@ -8,8 +8,7 @@ import org.apache.spark.sql.types._
 /** Event-stream operator surface: JSON extraction, time bucketing,
   * last-write-wins compaction and gap sessionization (SURVEY.md §2.8 F1/F7,
   * §2.10). These are the batch forms of the reference's incremental
-  * semantics; the last-write-wins compaction also runs live in
-  * [[graft.streaming.Streaming.lastWriteWins]] (`mapGroupsWithState`).
+  * semantics.
   *
   * `ts` arrives as epoch NANOS (LongType via nanosAsLong); all arithmetic is
   * integer microseconds (`ts_us`) to stay bit-identical with DuckDB's
@@ -87,10 +86,8 @@ object EventQueries {
     * re-plan the whole corpus aggregation once per stage (measured: 3×
     * the exchange lines at 3 stages). The per-user window buffers a
     * user's events in one partition (human-scale per-user counts — the
-    * sessionize precedent); a degenerate 10⁸-event bot user wants either
-    * an upstream per-user cap or the incremental
-    * [[graft.streaming.Streaming.funnelProgress]] state engine, whose
-    * per-user state is the distinct funnel-stage timestamps only. */
+    * sessionize precedent); a degenerate 10⁸-event bot user wants an
+    * upstream per-user cap. */
   private[graft] def funnelOf(
       events: DataFrame,
       stages: Seq[String] = Seq("signup", "click", "purchase"),

@@ -681,7 +681,7 @@ object Pipeline {
   /** The already-checked slice a check pass anti-joins against. With
     * `batchRows` (the streaming leg), the scan statically prunes to the
     * batch ids' `check_bucket` partitions — the driver-side isin is
-    * bounded by the `Sink.CheckBuckets` domain (the NeardupStore idiom),
+    * bounded by the `Sink.CheckBuckets` domain,
     * so a micro-batch's idempotence read costs O(batch's bucket share of
     * one collection), never the whole check history. The filter folds
     * the directory value through `pmod(_, CheckBuckets)`: check tables

@@ -526,22 +526,16 @@ object TextQueries {
       maxBucket: Int = BucketPairs.DefaultMaxBucket): DataFrame =
     minhashJaccardPairsOf(Tables.documents(s, d), maxBucket)
 
-  /** The same engine over ANY (source, doc_id, text) frame — the seam the
-    * CLI's `dedup` command uses to run near-dup analysis over a loaded
-    * collection's fact rows instead of the bench documents table. */
   /** (source, doc_id, toks, nt) tokenized frame — the shared front of the
-    * MinHash engines (batch pair-finding AND the streaming signature
-    * store, which must produce bit-identical band hashes or a re-arrival
-    * of a stored doc would miss its own bucket). */
+    * MinHash pair-finding and its signature and verification frames. */
   private def tokDocsOf(docsIn: DataFrame): DataFrame = docsIn
     .select(col("source"), col("doc_id"), tokenSet(col("text")).as("toks"))
     .withColumn("nt", size(col("toks")))
 
   /** Banded MinHash signatures (source, doc_id, band_id, band_hash) over
     * ANY (source, doc_id, text) frame: 64 hash mins in one aggregation,
-    * banded 16×4. One narrow groupBy per doc — the LSH bucketing frame
-    * shared by [[minhashJaccardPairsOf]] and the streaming
-    * [[graft.streaming.NeardupStore]]. */
+    * banded 16×4. One narrow groupBy per doc — the LSH bucketing frame of
+    * [[minhashJaccardPairsOf]], exposed for the probes that time it. */
   private[graft] def minhashBandSigsOf(docsIn: DataFrame): DataFrame =
     bandSigsOfTok(tokDocsOf(docsIn))
 
@@ -564,13 +558,16 @@ object TextQueries {
   }
 
   /** (doc_id, nt, hs) verification frame: sorted 64-bit token hashes, the
-    * codegen'd sorted-intersect's input — shared by the batch verify join
-    * and the streaming store's persisted verification leg. */
+    * codegen'd sorted-intersect's input of the verify join, exposed for
+    * the probes that time it. */
   private[graft] def tokenHashFrameOf(docsIn: DataFrame): DataFrame =
     tokDocsOf(docsIn)
       .withColumn("hs", array_sort(transform(col("toks"), t => xxhash64(t))))
       .select(col("doc_id"), col("nt"), col("hs"))
 
+  /** The same engine over ANY (source, doc_id, text) frame — the seam the
+    * CLI's `dedup` command uses to run near-dup analysis over a loaded
+    * collection's fact rows instead of the bench documents table. */
   private[graft] def minhashJaccardPairsOf(
       docsIn: DataFrame,
       maxBucket: Int = BucketPairs.DefaultMaxBucket): DataFrame = {
@@ -1551,7 +1548,7 @@ object TextQueries {
     * the substr family. The context table is VOCABULARY-bounded — its
     * aggregation's map-side partials are vocab-sized — and broadcast.
     * At 100 TB the LM tables would be trained once and persisted (the
-    * NeardupStore/VectorStore pattern), leaving one scoring scan; the
+    * VectorStore pattern), leaving one scoring scan; the
     * one-query spelling keeps the oracle self-contained. */
   private[graft] def lmScoreOf(docsIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2067,7 +2064,7 @@ object TextQueries {
     * TakeOrdered k → rank window over the k-bounded result. Two corpus
     * passes total (count pass inside [[dsirWeightsOf]] + scoring pass);
     * at 100 TB the weights train once and persist beside the corpus
-    * (the NeardupStore/VectorStore pattern — the trained-model store),
+    * (the VectorStore pattern — the trained-model store),
     * leaving ONE scoring scan with zero corpus-keyed shuffles beyond
     * the per-doc combine. The lang column rides through for the
     * readout: a selection that works shows the target slice's language

@@ -40,7 +40,7 @@ object Control {
       dataVersion: String,
       parent: Option[Long] = None,
       transformType: Option[String] = None,
-      steps: Set[String] = Set.empty, // planned: {upgrade, compile, check, line_dedup, dsir_score, corpus_manifest, media_fingerprint}
+      steps: Set[String] = Set.empty, // planned: {upgrade, compile, check, line_dedup, dsir_score, corpus_manifest, corpus_stats, media_fingerprint}
       dataTypeFormat: Option[String] = None,
       storeEndAt: Option[String] = None,
       completedAt: Option[String] = None,

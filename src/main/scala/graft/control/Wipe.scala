@@ -43,15 +43,9 @@ object Wipe {
     * no row scan (`wiper.py` deletes rows; the partitioned layout makes the
     * same semantics O(directories)). Shared by the CLI's deletecollection
     * and the API's destroy endpoint. */
-  def dropTreePartitions(lake: String, ids: Set[Long]): Unit = {
-    import scala.jdk.CollectionConverters._
-    for (table <- FactTables; id <- ids) {
-      val dir = java.nio.file.Paths.get(s"$lake/$table/collection_id=$id")
-      if (java.nio.file.Files.exists(dir))
-        java.nio.file.Files.walk(dir).iterator.asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-    }
-  }
+  def dropTreePartitions(lake: String, ids: Set[Long]): Unit =
+    for (table <- FactTables; id <- ids)
+      graft.ingest.Sink.deleteDir(java.nio.file.Paths.get(s"$lake/$table/collection_id=$id"))
 
   /** S10/J4: content rows referenced by NONE of the fact projections — the
     * orphan set deleted by the GC. Each `refs` entry is a single-column

@@ -29,9 +29,8 @@ final class FreqBuffer(
     var dropped: Long)
 
 /** The buffer operations of the Misra–Gries summary, factored out of the
-  * Catalyst aggregate so DRIVER-side consumers (streaming/FreqStore's
-  * persistent sketch, which folds bounded per-batch sketches into a
-  * stored one between micro-batches) run the IDENTICAL math — one
+  * Catalyst aggregate so a DRIVER-side consumer (one folding bounded
+  * sketches into a stored one) runs the IDENTICAL math — one
   * implementation, one set of invariants (see [[FreqBuffer]]), property-
   * pinned once in FreqItemsSpec. */
 private[graft] object MisraGries {
@@ -122,8 +121,7 @@ private[graft] object MisraGries {
   * sketch-of-sketches surface. A stored summary's (item, est) rows
   * re-aggregate with weight = est into a valid summary of the combined
   * stream (plus the stored `dropped`s, added by the caller) — which is
-  * how streaming/FreqStore folds per-micro-batch sketches into a
-  * persistent one, and how per-day/per-source sketches would merge at
+  * how per-day/per-source sketches would merge at
   * 100 TB without ever re-touching the raw streams. Unweighted
   * `freq_items(item, capacity)` is the same aggregate with weight 1.
   *

@@ -225,11 +225,75 @@ object Sink {
     } else JF.delete(src)
   }
 
-  private def deleteDir(dir: java.nio.file.Path): Unit =
+  /** Crash-safe replacement of the whole directory `path`: `write` gets a
+    * sibling directory to fill, and what it leaves there replaces `path`.
+    * A write that leaves nothing changes nothing. Used by the store
+    * compactions ([[compactTable]]), `PostingsStore.rebuild` and
+    * `Cli deleteorphan`. Returns what `write` returns.
+    *
+    * Commit protocol, all renames on the same filesystem:
+    *   write → `<path>_compact_tmp` (invisible to readers) →
+    *   rename tmp → `_compact_ready` (the completeness marker) →
+    *   rename `path` → `_compact_old` → rename ready → `path` →
+    *   sweep old.
+    * A crash anywhere heals at the next call, before `write` runs: a tmp
+    * is an incomplete write and is deleted; a ready directory beside a
+    * live `path` is stale and is deleted (the write reruns); a ready
+    * directory with `path` absent died between the two live renames and
+    * is promoted; an old directory beside a live `path` is swept. Readers
+    * see the old directory or the new one; the absence window is the one
+    * rename pair, as in [[swapCollectionPartition]]. The `_compact_`
+    * names are those of the store compaction this protocol came from, so
+    * its crash debris in existing lakes still heals. */
+  def replaceDir[T](path: String)(write: String => T): T = {
+    import java.nio.file.{Files => JF, Paths => JP}
+    val target = JP.get(path)
+    val tmp = JP.get(path + "_compact_tmp")
+    val ready = JP.get(path + "_compact_ready")
+    val old = JP.get(path + "_compact_old")
+    deleteDir(tmp)
+    if (JF.exists(ready)) {
+      if (JF.exists(target)) deleteDir(ready)
+      else JF.move(ready, target)
+    }
+    if (JF.exists(old)) {
+      if (JF.exists(target)) deleteDir(old)
+      else JF.move(old, target)
+    }
+    val out = write(tmp.toString)
+    if (JF.exists(tmp)) {
+      JF.move(tmp, ready)
+      if (JF.exists(target)) JF.move(target, old)
+      JF.move(ready, target)
+      deleteDir(old)
+    }
+    out
+  }
+
+  /** Small-file and duplicate-row maintenance for an append-per-batch
+    * store table (the line registry, postings, vector and fingerprint
+    * stores): every micro-batch appends up to one file per touched
+    * bucket, and the at-least-once replay window can leave exact
+    * duplicate rows. Rewrites the table distinct, one file per `bucketCol`
+    * partition, through [[replaceDir]]. MUST only run against a
+    * terminated stream: the rewrite reads a snapshot and replaces the
+    * whole directory, so a batch appended meanwhile is lost. Returns the
+    * retained row count, 0 for an absent table. */
+  def compactTable(spark: SparkSession, path: String, bucketCol: String): Long =
+    replaceDir(path) { tmp =>
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path))) 0L
+      else countedWrite(spark.read.parquet(path).distinct().repartition(col(bucketCol))) {
+        _.write.mode("overwrite").partitionBy(bucketCol).parquet(tmp)
+      }
+    }
+
+  /** Deletes `dir` and everything under it; a no-op when it is absent. */
+  private[graft] def deleteDir(dir: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(dir)) {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator.asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
+      val s = java.nio.file.Files.walk(dir)
+      try s.iterator.asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+      finally s.close()
     }
 
   /** Lake maintenance: rewrite ONE collection's partition of `path` into

@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 
 /** Persistent perceptual-fingerprint store for MEDIA payloads — the
-  * production shape behind the q_image/audio/video_neardup batch queries
-  * (VERDICT r18 Next #7): those queries recompute every decode on every
+  * production shape behind the q_image/audio/video_neardup batch queries:
+  * those queries recompute every decode on every
   * run, which is exactly linear per-row CPU (the stamped q_audio_neardup
   * 10.68× tail), while a real pipeline decodes each payload ONCE at
   * ingest, persists the 64-bit fingerprint, and answers near-dup checks
-  * O(batch) against the store forever after — the [[NeardupStore]]
-  * pattern in the perceptual domain.
+  * O(batch) against the store forever after — banded LSH over a
+  * bucket-partitioned lake table, in the perceptual domain.
   *
   * One lake table, `media_fps`: one row per (id, kind, ahash, band_id,
   * band_val) — the 4×16-bit banding of the 64-bit hash materialized as
@@ -52,7 +52,10 @@ import graft.multimodal.Multimodal
   * reads only the batch's band buckets. */
 object FingerprintStore {
 
-  /** Partition-pruning bucket domain — [[NeardupStore.Buckets]]' rationale. */
+  /** Partition-pruning bucket domain: coarse enough that a small batch
+    * still prunes (a payload's 4 bands touch at most 4 of 64
+    * directories), small enough that the partition listing is a metadata
+    * no-op at any store size. */
   val Buckets = 64
 
   def fpPath(lake: String): String = s"$lake/media_fps"
@@ -61,8 +64,8 @@ object FingerprintStore {
     * [[PostingsStore.Totals]] discipline without the additive totals:
     * a replayed batch id within the same lineage skips the append
     * entirely, and the probe excludes the batch's OWN stored rows, so
-    * the dup-flag output of [[probeAppend]] is REPLAY-STABLE (ADVICE
-    * r19: without the exclusion, a batch replayed after a
+    * the dup-flag output of [[probeAppend]] is REPLAY-STABLE (without
+    * the exclusion, a batch replayed after a
     * crash-after-append would flag its within-batch near-dups against
     * the first attempt's stored copies — flags the first run never
     * emitted). */
@@ -94,7 +97,7 @@ object FingerprintStore {
     * (id, kind, ahash) — image/audio/video routed to their real decode
     * engines; payloads that decode no signal drop out.
     *
-    * `scenes = true` (r20 — the at-ingest twin of the batch
+    * `scenes = true` (the at-ingest twin of the batch
     * q_video_neardup_scenes rung) additionally emits one `kind =
     * "scene"` row PER DECODED FRAME of each multi-frame payload
     * ([[Multimodal.sceneHashesOf]], the ONE per-frame spelling), still
@@ -167,7 +170,7 @@ object FingerprintStore {
     val batch = bandsOf(fps)
     // bounded by the 64-value partition domain, never by batch size —
     // the driver-side list is what turns the store scan into static
-    // partition pruning (the NeardupStore idiom)
+    // partition pruning
     val touched = batch.select("band_bucket").distinct().as[Long].collect()
     if (touched.isEmpty) return empty
     store.filter(col("band_bucket").isin(touched: _*))
@@ -205,8 +208,8 @@ object FingerprintStore {
     * paid exactly once across the probe and the append.
     *
     * `batchId >= 0` keys the batch under the lineage-scoped replay
-    * watermark (the [[PostingsStore.appendBatch]] discipline, ADVICE
-    * r19): a replayed batch id skips the append (no duplicate rows
+    * watermark (the [[PostingsStore.appendBatch]] discipline): a
+    * replayed batch id skips the append (no duplicate rows
     * even across a crash-after-append, whose only residue is the
     * pre-watermark double-append the probe's distinct and [[compact]]
     * already fold), and the probe excludes the batch's own stored rows,
@@ -236,8 +239,9 @@ object FingerprintStore {
     flags
   }
 
-  /** Small-file + duplicate-row maintenance; same commit protocol and
-    * terminated-stream contract as [[NeardupStore.compact]]. */
+  /** Small-file + duplicate-row maintenance
+    * ([[graft.ingest.Sink.compactTable]]); MUST only run against a
+    * terminated stream. Returns the retained row count. */
   def compact(spark: SparkSession, lake: String): Long =
-    NeardupStore.compactTable(spark, fpPath(lake), "band_bucket")
+    graft.ingest.Sink.compactTable(spark, fpPath(lake), "band_bucket")
 }

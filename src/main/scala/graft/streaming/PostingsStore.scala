@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Persistent inverted-index (postings) store — the SERVING shape behind
-  * BM25 retrieval (VERDICT r15 Next #1): `Cli search` and q_bm25_topk
+  * BM25 retrieval: `Cli search` and q_bm25_topk
   * recompute tf/df/corpus totals with a full corpus scan per query, which
   * is the right ANALYTICS spelling but the wrong shape for ad-hoc
   * retrieval at 100 TB — there, the index is built once (or maintained
   * per micro-batch) and each query reads ONLY its terms' slice.
   *
-  * Layout (the NeardupStore/VectorStore lake-table pattern):
+  * Layout (the VectorStore/FingerprintStore lake-table pattern):
   *  - `<store>/postings`: one row per (token, doc_id) — (token, doc_id,
   *    tf, dl), partitioned by `token_bucket = pmod(xxhash64(token), 64)`.
   *    ALL postings of a token live in exactly one bucket, so a probe's
@@ -26,18 +26,19 @@ import org.apache.spark.sql.types.LongType
   *    t_all) as ONE tiny document — two longs, never a table scan at
   *    query time — atomically replaced by
   *    [[graft.control.PlaneStore.atomicWrite]] under the same
-  *    lineage-scoped batch-id watermark as FreqStore: totals are
+  *    lineage-scoped batch-id watermark as StatsStore: totals are
   *    ADDITIVE, so a replayed batch must fold exactly once.
   *
-  * Exactly-once posture (the NeardupStore contract): postings append
+  * Exactly-once posture: postings append
   * BEFORE the totals save, so the one crash window (postings committed,
   * totals not) replays the batch into duplicate posting ROWS — which the
   * probe folds with a bounded distinct over the matched slice and
   * [[compact]] folds away on disk — while the totals watermark keeps the
-  * ADDITIVE side exactly-once. In the composed pipeline
-  * ([[Streaming.releaseLoadStream]]) the control plane's registered-file
-  * guard additionally drops already-loaded files before they reach this
-  * store, exactly as for the near-dup signature store.
+  * ADDITIVE side exactly-once.
+  *
+  * Writers: `Cli index` builds a collection's store whole ([[rebuild]]);
+  * the declared queries (q_bm25_indexed, the hybrid retrieval legs of
+  * VectorQueries) build theirs once per dataset with [[appendBatch]].
   *
   * Scoring is [[graft.TextQueries.bm25ScoreExpr]] — the ONE spelling of
   * the exact-rational BM25 shared with the full-scan engine, so an
@@ -45,9 +46,10 @@ import org.apache.spark.sql.types.LongType
   * (q_bm25_indexed hash-matches q_bm25_topk against the same oracle). */
 object PostingsStore {
 
-  /** Partition-pruning bucket domain (see [[NeardupStore.Buckets]] for the
-    * sizing rationale: coarse enough to prune, small enough that the
-    * partition listing is a metadata no-op at any corpus size). */
+  /** Partition-pruning bucket domain: coarse enough that a few query
+    * terms still prune (a term touches one of 64 directories), small
+    * enough that the partition listing is a metadata no-op at any corpus
+    * size. */
   val Buckets = 64
 
   def postingsPath(store: String): String = s"$store/postings"
@@ -155,7 +157,7 @@ object PostingsStore {
     // bucket membership computed over a LOCAL relation of the query terms
     // (bounded by the 64-value partition domain, touches no store files) —
     // the driver-side isin is what turns the store scan into static
-    // partition pruning, the NeardupStore idiom
+    // partition pruning
     val buckets = qterms.toDF("token")
       .select(tokenBucket(col("token")).as("b"))
       .distinct().as[Long].collect()
@@ -191,10 +193,10 @@ object PostingsStore {
     * anyway, bounded by contract): a caller passing duplicate
     * (qid, token) rows would otherwise fold a matched posting into a
     * query's sum once per duplicate and silently inflate n_terms and
-    * score_dec (ADVICE r18) — exactly as [[probe]] is insensitive to a
+    * score_dec — exactly as [[probe]] is insensitive to a
     * repeated term in `qterms` via the postings-side distinct.
     *
-    * Fan-out shape (r20, guide §8 "decide with small rows"): the BM25
+    * Fan-out shape ("decide with small rows"): the BM25
     * term value depends only on (token, doc), never on which query
     * probes it, so each matched posting is DECIMAL-scored exactly once
     * and the per-(qid, doc) sums fold in ONE in-memory pass over the
@@ -293,50 +295,19 @@ object PostingsStore {
   }
 
   /** REBUILD the store from scratch without ever destroying the previous
-    * copy before the replacement exists (code-review r16: the first cut
-    * deleted then rebuilt, so a failed build job permanently lost the
-    * index) — the aside-write → swap idiom of the sibling stores:
-    * build into `<store>_rebuild_tmp`, then rename store → `_rebuild_old`
-    * → tmp → store → sweep old. A crash anywhere self-heals on the next
-    * call (or any later rebuild): a tmp with the store present is an
-    * incomplete build and is swept; an old dir with the store ABSENT is
-    * the one crash point between the two live renames and is promoted
-    * back. Readers (`search --indexed`) see the old store or the new
-    * one; the absence window is the single rename pair, as in
-    * `Sink.swapCollectionPartition`. */
-  def rebuild(store: String, docs: DataFrame, batchId: Long = 0L): Totals = {
-    import java.nio.file.{Files => JF, Paths => JP}
-    val target = JP.get(store)
-    val tmp = JP.get(store + "_rebuild_tmp")
-    val old = JP.get(store + "_rebuild_old")
-    // crash recovery, BEFORE anything else (idempotent)
-    if (JF.exists(old)) {
-      if (JF.exists(target)) deleteDir(old) // died pre-sweep: old is stale
-      else JF.move(old, target)             // died between the two renames
-    }
-    deleteDir(tmp) // any leftover tmp is an incomplete build
-    val tot = appendBatch(tmp.toString, docs, batchId)
-    if (JF.exists(target)) JF.move(target, old)
-    JF.move(tmp, target)
-    deleteDir(old)
-    tot
-  }
+    * copy before the replacement exists: the build writes aside and swaps
+    * in through [[graft.ingest.Sink.replaceDir]], so a failed build keeps
+    * the old index, a crash heals at the next rebuild, and readers
+    * (`search --indexed`) see the old store or the new one. */
+  def rebuild(store: String, docs: DataFrame, batchId: Long = 0L): Totals =
+    graft.ingest.Sink.replaceDir(store)(appendBatch(_, docs, batchId))
 
-  private def deleteDir(dir: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(dir)
-      try s.iterator.asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-      finally s.close()
-    }
-
-  /** Small-file + duplicate-row maintenance — [[NeardupStore.compactTable]]
-    * verbatim over the postings table (distinct rewrite, one file per
-    * bucket partition, aside-write → ready-mark → sweep-promote commit
-    * protocol with crash self-healing). MUST only run against a
-    * terminated stream, same contract as the sibling stores. The totals
-    * document is not touched: it is additive state, not foldable rows.
-    * Returns the retained posting-row count. */
+  /** Small-file + duplicate-row maintenance of the postings table
+    * ([[graft.ingest.Sink.compactTable]]: distinct rewrite, one file per
+    * bucket partition, crash-safe swap). MUST only run against a
+    * terminated stream. The totals document is not touched: it is
+    * additive state, not foldable rows. Returns the retained posting-row
+    * count. */
   def compact(spark: SparkSession, store: String): Long =
-    NeardupStore.compactTable(spark, postingsPath(store), "token_bucket")
+    graft.ingest.Sink.compactTable(spark, postingsPath(store), "token_bucket")
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftExtensions, Hll, HllBuffer, QBuffer, QSketch}
 
-/** Persistent corpus-statistics sketches — the 5th batch↔streaming store
-  * (exact-hash dedup, NeardupStore, VectorStore, FreqStore, this):
+/** Persistent corpus-statistics sketches — a batch↔streaming store
+  * beside the exact-hash dedup store, LineStore and VectorStore:
   * documents arriving in micro-batches keep the corpus's distinct-token
   * CARDINALITY ([[Hll]] two-regime sketch), token-length DISTRIBUTION
   * ([[QSketch]] two-regime quantiles) and per-source KMV shingle
@@ -17,7 +17,7 @@ import graft.functions.{GraftExtensions, Hll, HllBuffer, QBuffer, QSketch}
   * current without re-scanning history — the dataset-card numbers a
   * 100 TB ingest keeps live.
   *
-  * Design (the [[FreqStore]] pattern, with the sketches swapped in):
+  * Design:
   *  - Per batch, ONE distributed aggregation compresses the batch to a
   *    single bounded row: `distinct_sketch_bin` of the token stream +
   *    `quantile_sketch_bin` of per-doc token counts + doc/token totals.
@@ -31,15 +31,18 @@ import graft.functions.{GraftExtensions, Hll, HllBuffer, QBuffer, QSketch}
   *    blobs ride as base64 of the PUBLIC [[Hll.toBytes]]/
   *    [[QSketch.toBytes]] format.
   *  - Exactly-once under foreachBatch replay via (lineage, last_batch_id)
-  *    — the checkpoint-lineage-scoped guard FreqStore carries (r12
-  *    advice): a reset checkpoint's batch 0 folds instead of being
-  *    dropped as a replay; within a lineage, replayed ids no-op.
+  *    — the checkpoint-lineage-scoped guard [[Streaming.replayed]]: batch
+  *    ids restart at 0 when a checkpoint is reset, so a reset
+  *    checkpoint's batch 0 folds instead of being dropped as a replay;
+  *    within a lineage, replayed ids no-op.
   *    Across a lineage reset the store is at-least-once unless the
   *    caller's file-registry guard (the control plane, which survives
   *    checkpoint resets) filters re-deliveries — as
   *    [[Streaming.releaseLoadStream]]'s does.
-  *  - SINGLE-writer per store directory (the FreqStore ownership
-  *    contract); readers always see a complete document. */
+  *  - SINGLE-writer per store directory: one stream at a time owns it
+  *    (the same ownership contract as the stream's checkpoint dir), since
+  *    concurrent writers would interleave read-fold-save and lose counts;
+  *    readers always see a complete document. */
 object StatsStore {
 
   final case class Stats(

@@ -1,42 +1,35 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Structured-Streaming side of the engine (SURVEY.md §2 T1/T2/T4/T9;
+/** Structured-Streaming side of the engine (SURVEY.md §2 T1/T2/T4;
   * reference: the always-on RabbitMQ dataflow of the
   * `process/management/commands` workers).
   *
-  * Two reference semantics matter here:
-  *
-  *  - **Files load, and record packages compile, as they land**
-  *    (`api_loader.py:28-50`, `compiler.py:146-148`): [[releaseLoadStream]]
-  *    is a file-source stream over a landing directory whose
-  *    `foreachBatch` hands each micro-batch's new files to
-  *    [[graft.Pipeline.loadFilesInto]], the batch loader itself, for every
-  *    package format. A record package therefore compiles per file while
-  *    its collection is still open, with the batch load's first-record
-  *    election, notes and replay guard — no end-of-collection barrier.
-  *    Exactly-once is file-granular and keyed on the control plane,
-  *    replacing the reference's at-least-once queue + dedup errback
-  *    (T1/T2).
-  *  - **Last-write-wins key state** (the core of compile, W2) as live
-  *    state: `mapGroupsWithState` keeps one latest-value state per key —
-  *    the streaming form of the batch `row_number() = 1` compaction.
+  * Files load, and record packages compile, as they land
+  * (`api_loader.py:28-50`, `compiler.py:146-148`): [[releaseLoadStream]]
+  * is a file-source stream over a landing directory whose `foreachBatch`
+  * hands each micro-batch's new files to [[graft.Pipeline.loadFilesInto]],
+  * the batch loader itself, for every package format. A record package
+  * therefore compiles per file while its collection is still open, with
+  * the batch load's first-record election, notes and replay guard — no
+  * end-of-collection barrier. Exactly-once is file-granular and keyed on
+  * the control plane, replacing the reference's at-least-once queue +
+  * dedup errback (T1/T2).
   *
   * The stream carries file arrivals, not contents: the loader re-opens
   * each file with the O(item)-memory item reader, the batch ingest bound.
-  * The per-batch maintenance stores (sketches, postings, fingerprints,
-  * the retention matrix) share one commit step,
+  * The per-batch maintenance stores (stats sketch, line registry,
+  * fingerprints) share one commit step,
   * [[graft.control.PlaneStore.atomicWrite]], and one lineage-scoped
   * replay guard, [[replayed]].
   */
 object Streaming {
 
   /** Where a collection's inverted-index store lives — ONE definition
-    * shared by the streaming maintenance leg, `Cli index` and
-    * `Cli search --indexed`, so the writer and the probes can never
-    * disagree on the directory. */
+    * shared by `Cli index` and `Cli search --indexed`, so the writer and
+    * the probe can never disagree on the directory. */
   def bm25IndexPath(lakeDir: String, collectionId: Long): String =
     s"$lakeDir/bm25_index_c$collectionId"
 
@@ -194,22 +187,18 @@ object Streaming {
     * the loader re-opens each file executor-side with the O(item)-memory
     * item reader.
     *
-    * `neardupSignatures = true` additionally probes each batch's loaded
-    * docs against the persistent MinHash signature store and appends
-    * their signatures ([[NeardupStore]]) — near-identical re-arrivals the
-    * exact-hash dedup is blind to land in `<lake>/neardup_flag`.
+    * The API's close drain (`Api.drainLanding`) turns on each leg below
+    * iff the tree planned its step: `corpus_stats`, `check`, `line_dedup`
+    * or `dsir_score`.
     *
-    * `trendingTerms = true` additionally folds each batch's document
-    * token stream into the persistent `<lake>/freq_sketch` summary
-    * ([[FreqStore]]) — corpus term frequencies kept current per
-    * micro-batch, exactly-once via the sketch's stored batch id (a
-    * crash between the sketch save and the plane save replays the batch
-    * and the sketch skips it).
-    *
-    * `corpusStats = true` likewise folds each batch into the persistent
-    * `<lake>/stats_sketch` document ([[StatsStore]]): distinct-token
-    * cardinality + token-length quantiles + doc/token totals — the live
-    * dataset-card numbers, same exactly-once contract.
+    * `corpusStats = true` folds each batch's loaded docs into the
+    * persistent `<lake>/stats_sketch` document ([[StatsStore]]):
+    * distinct-token cardinality + token-length quantiles + doc/token
+    * totals + per-source KMV sketches — the live dataset-card numbers
+    * that `Cli corpus-stats` and `GET /api/stats/` read. Exactly-once via
+    * the sketch's lineage-scoped batch-id watermark: a crash between the
+    * sketch save and the plane save replays the batch and the sketch
+    * skips it.
     *
     * `checks = true` runs the V1 structural check over each batch's
     * loaded items (the reference's continuously-running checker,
@@ -217,15 +206,6 @@ object Streaming {
     * table — no batch `addchecks` needed for streamed arrivals;
     * duplicate-tolerant under replay via the content-stable check-id
     * anti-join.
-    *
-    * `bm25Index = true` additionally appends each batch's loaded docs to
-    * the collection's persistent inverted-index store
-    * (`<lake>/bm25_index_c<id>`, [[PostingsStore]]) — `Cli search
-    * --indexed` then probes the terms' token buckets instead of
-    * re-scanning the corpus per query. Postings appends ride the load
-    * path's file-granular idempotence like the near-dup signatures; the
-    * store's totals document is exactly-once via the same lineage-scoped
-    * batch-id watermark as the freq/stats sketches.
     *
     * `lineDedup = true` runs each batch's loaded docs through the
     * incremental corpus-wide line dedup ([[LineStore]]): lines already
@@ -258,11 +238,8 @@ object Streaming {
       plane: java.util.concurrent.atomic.AtomicReference[graft.control.Control.Plane],
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1000,
-      neardupSignatures: Boolean = false,
-      trendingTerms: Boolean = false,
       corpusStats: Boolean = false,
       checks: Boolean = false,
-      bm25Index: Boolean = false,
       lineDedup: Boolean = false,
       dsirScore: Option[String] = None): StreamingQuery = {
     import spark.implicits._
@@ -323,57 +300,23 @@ object Streaming {
           val (p2, _, _) = graft.Pipeline.loadFilesInto(
             spark, fresh, lakeDir, p, collectionId, upgradedId)
           p = p2
-          // incremental NEAR-dup: the exact-hash
-          // dedup above is blind to near-identical re-arrivals; probe the
-          // batch's docs against the persistent signature store (bucket-
-          // pruned, never a full-store scan — see NeardupStore), flag the
-          // hits, then append this batch's signatures. Probe-before-append
-          // keeps a doc from matching itself; running BEFORE the plane
-          // save makes signatures at-least-once (a crash here replays the
-          // batch and re-appends; the store and the flags table are
-          // duplicate-tolerant — readers distinct) rather than silently
-          // losable. Batch-internal pairs are the batch engine's job at
-          // compile/report time, not the per-arrival probe's.
-          if (neardupSignatures || trendingTerms || corpusStats || bm25Index ||
-              lineDedup || dsirScore.nonEmpty) {
+          // the document legs read this batch's loaded docs once; each
+          // runs BEFORE the plane save, so a crash replays the batch and
+          // each leg's own replay rule (sketch watermark, duplicate-
+          // tolerant appends) keeps its output exact
+          if (corpusStats || lineDedup || dsirScore.nonEmpty) {
             graft.Pipeline
               .collectionDocsOf(spark, lakeDir, p.collection(collectionId), Some(fresh))
               .foreach { docs =>
-                if (neardupSignatures) {
-                  val flags = NeardupStore
-                    .probeBatch(spark, lakeDir, docs)
-                    .withColumn("collection_id",
-                      org.apache.spark.sql.functions.lit(collectionId))
-                  flags.write.mode("append").parquet(s"$lakeDir/neardup_flag")
-                  NeardupStore.append(lakeDir, docs)
-                }
-                // trending terms: the distributed per-batch sketch folds
-                // into <lake>/freq_sketch; the stored batch id makes it
-                // exactly-once even though it runs before the plane save
-                if (trendingTerms)
-                  FreqStore.appendBatch(
-                    s"$lakeDir/freq_sketch", docs, "text", batchId,
-                    lineage = lineage)
                 // live dataset-card stats: distinct-token cardinality +
                 // length quantiles + per-source KMV shingle sketches
-                // (cross-source overlap), the same lineage-scoped
-                // exactly-once
+                // (cross-source overlap), folded exactly once under the
+                // lineage-scoped batch-id watermark
                 if (corpusStats)
                   StatsStore.appendBatch(
                     s"$lakeDir/stats_sketch", docs, "text", batchId,
                     lineage = lineage,
                     sourceCol = Some("source"))
-                // inverted-index maintenance: this batch's postings land
-                // in their token buckets, the totals document folds under
-                // the lineage watermark — searches over the store never
-                // re-scan the corpus (the serving shape; see PostingsStore)
-                if (bm25Index)
-                  PostingsStore.appendBatch(
-                    Streaming.bm25IndexPath(lakeDir, collectionId),
-                    docs.select(
-                      org.apache.spark.sql.functions.col("doc_id"),
-                      org.apache.spark.sql.functions.col("text")),
-                    batchId, lineage = lineage)
                 // incremental corpus-wide line dedup: drop lines already
                 // registered by earlier batches, persist the cleaned
                 // docs, register this batch's first occurrences (the
@@ -419,7 +362,7 @@ object Streaming {
           // save replays the batch, and the anti-join on the
           // content-stable check id skips the rows already written — the
           // same duplicate-tolerant at-least-once protocol as the
-          // near-dup signature leg above. Restricting to `fresh` keeps
+          // document legs above. Restricting to `fresh` keeps
           // the VALIDATION work O(batch) (the expensive part — schema
           // checks per item); the idempotence anti-join still reads the
           // collection's check table per batch, whose scale path is the
@@ -455,9 +398,8 @@ object Streaming {
     * arrival ONCE ([[FingerprintStore.probeAppend]]) — near-dups of
     * ALREADY-STORED media flag into `<lake>/media_dup_flag` and the
     * batch's fingerprints persist banded for pruning. The store is
-    * LAKE-level (cross-collection near-dup detection is the point — the
-    * NeardupStore posture); flags and the id→name registry carry the
-    * collection id.
+    * LAKE-level (cross-collection near-dup detection is the point);
+    * flags and the id→name registry carry the collection id.
     *
     * Exactly-once shape: the probe/append pair is keyed by (stream
     * lineage, batch id) — a crash-replayed batch skips the store append
@@ -588,7 +530,7 @@ object Streaming {
   }
 
   /** Checkpoint-lineage marker for per-batch exactly-once guards
-    * ([[FreqStore.appendBatch]]): the streaming query's persisted id from
+    * ([[StatsStore.appendBatch]]): the streaming query's persisted id from
     * `<checkpointDir>/metadata` — stable across restarts of the SAME
     * checkpoint (so replayed batch ids still dedupe) but NEW when the
     * checkpoint dir is deleted/recreated (so a fresh lineage's batch 0 is
@@ -664,255 +606,5 @@ object Streaming {
           df.filter(col("collection_id") === cid).filter(!doomed)
             .repartition(col("collection_id")))
     }
-  }
-
-  /** A timestamped event for windowed aggregation. */
-  final case class TimedEvent(key: String, ts: java.sql.Timestamp)
-
-  /** T9 extension (SURVEY §2.10: "if we add streaming windows they're
-    * built-ins"): watermarked tumbling-window counts per key. The
-    * watermark bounds state — windows older than (max event time −
-    * `watermark`) finalize, emit (in append mode) and drop their state,
-    * so the query runs forever in bounded memory. The reference has no
-    * analogue (it buffers everything until an explicit close); this is
-    * the monitoring-rollup (q_hourly_rollup) as a live query. */
-  def windowedCounts(
-      events: Dataset[TimedEvent],
-      window: String = "1 hour",
-      watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.{functions => F}
-    events.toDF()
-      .withWatermark("ts", watermark)
-      .groupBy(F.window(F.col("ts"), window), F.col("key"))
-      .count()
-      .select(F.col("window.start").as("window_start"), F.col("key"), F.col("count").as("n"))
-  }
-
-  /** A fingerprinted document arrival (streaming ingest dedup input). */
-  final case class DocArrival(fingerprint: String, doc_id: Long, ts: java.sql.Timestamp)
-
-  /** S8/T9 as a live query: streaming exact-dedup of re-landed documents by
-    * content fingerprint, state BOUNDED by the watermark — the in-flight
-    * half of the content-addressed dedup story. The batch path dedups
-    * against the persistent store with an anti-join (Ingest.dedupData);
-    * unbounded in-stream dedup would grow one state row per distinct
-    * fingerprint forever, so this keeps only the watermark horizon in
-    * state (crawl re-offers and retry storms land within minutes) and
-    * leaves cross-horizon duplicates to the store anti-join downstream —
-    * the classic two-tier layout: cheap bounded in-flight suppression,
-    * exact persistent-store reconciliation behind it. */
-  def dedupArrivals(
-      docs: Dataset[DocArrival], watermark: String = "10 minutes"): Dataset[DocArrival] =
-    docs
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("fingerprint")
-
-  /** A funnel-stage event arrival (streaming funnel input). */
-  final case class FunnelEvent(user_id: Long, event_type: String, ts_us: Long)
-
-  /** A user's current funnel progress (the streaming state row):
-    * `stage_reached` stages converted so far, `stage_ts` their chained
-    * conversion times t1..t_k, `n_seen` funnel-stage events folded. */
-  final case class FunnelProgress(
-      user_id: Long, stage_reached: Long, stage_ts: Seq[Long], n_seen: Long)
-
-  /** Internal funnel state: per stage, the user's DISTINCT sorted event
-    * times. Distinctness folds at-least-once replays for free (a
-    * replayed event changes nothing); keeping the full per-stage time
-    * lists — not just the current chain — is what makes LATE data exact:
-    * a late stage-1 event with an earlier timestamp lowers t1, which can
-    * re-open earlier stage-2 candidates that already streamed past, so
-    * the chain must recompute against history, not against its own last
-    * value. */
-  final case class FunnelState(byStage: Seq[Seq[Long]], nSeen: Long)
-
-  /** The ordered funnel as live per-user state — the streaming twin of
-    * [[graft.EventQueries.funnelOf]] (same chained-min semantics, same
-    * optional max-gap window; StreamingSpec referees the two over the
-    * union of batches, out-of-order arrivals included). Emits the user's
-    * new [[FunnelProgress]] whenever a batch touches them (outputMode
-    * "update" — the [[lastWriteWins]] shape).
-    *
-    * State per user = their distinct funnel-stage timestamps. That is
-    * the exact-late-data price (see [[FunnelState]]); it is bounded by
-    * the user's own funnel activity — the per-user boundedness the batch
-    * engine's WindowExec already assumes — and a production deployment
-    * caps it with a state TTL (GroupStateTimeout) at the cost of
-    * dropping later-than-TTL conversions, the standard trade. */
-  def funnelProgress(
-      events: Dataset[FunnelEvent],
-      stages: Seq[String] = Seq("signup", "click", "purchase"),
-      maxGapUs: Option[Long] = None): Dataset[FunnelProgress] = {
-    require(stages.nonEmpty, "a funnel needs at least one stage")
-    require(maxGapUs.forall(_ > 0), "maxGapUs must be positive")
-    import events.sparkSession.implicits._
-    val stageIdx: Map[String, Int] = stages.zipWithIndex.toMap
-    val nStages = stages.size
-    events
-      .filter(e => stageIdx.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          val prev = state.getOption
-            .getOrElse(FunnelState(Seq.fill(nStages)(Seq.empty), 0L))
-          val merged = Array.tabulate(nStages)(i =>
-            collection.mutable.SortedSet(prev.byStage(i): _*))
-          var seen = prev.nSeen
-          rows.foreach { e =>
-            seen += 1
-            merged(stageIdx(e.event_type)) += e.ts_us
-          }
-          // recompute the chained minimum against full history — the
-          // batch engine's t_{k+1} = min{ts of stage k+1 : ts > t_k
-          // (and ≤ t_k + W)} recurrence, over sorted distinct times
-          val chain = collection.mutable.ArrayBuffer.empty[Long]
-          var prevT: Option[Long] = Some(Long.MinValue)
-          for (k <- 0 until nStages if prevT.isDefined) {
-            val tk =
-              if (k == 0) merged(0).headOption
-              else {
-                val later = merged(k).iteratorFrom(prevT.get + 1)
-                (if (later.hasNext) Some(later.next()) else None)
-                  .filter(t => maxGapUs.forall(w => t <= prevT.get + w))
-              }
-            tk.foreach(chain += _)
-            prevT = tk
-          }
-          val next = FunnelState(merged.map(_.toSeq).toSeq, seen)
-          state.update(next)
-          FunnelProgress(uid, chain.size.toLong, chain.toSeq, seen)
-      }
-  }
-
-  /** A user-activity arrival (streaming retention input). */
-  final case class RetentionEvent(user_id: Long, ts_us: Long)
-
-  /** Internal retention state: the user's DISTINCT activity periods as
-    * epoch days (daily mode: the UTC day; weekly mode: the Monday of the
-    * UTC ISO week). Distinctness folds at-least-once replays for free,
-    * and keeping the full period set — not (cohort, max offset) — is
-    * what makes LATE data exact: a late event with an EARLIER period
-    * re-cohorts the user, which re-derives EVERY (cohort, offset) pair
-    * they contribute — unrecoverable from last-value state (the
-    * [[FunnelState]] argument verbatim). Bounded by the user's distinct
-    * active days/weeks, not their event count. */
-  final case class RetentionState(periods: Seq[Long])
-
-  /** One signed contribution to the (cohort, offset) → n_users rollup:
-    * `delta` = +1 (this user now counts there) or -1 (a late earlier
-    * event re-cohorted them away). Summing deltas over all emitted rows
-    * reproduces [[graft.EventQueries.retentionOf]] over the union of
-    * batches exactly (StreamingSpec referees it). */
-  final case class RetentionDelta(
-      user_id: Long, cohort: String, offset: Long, delta: Long)
-
-  /** Cohort retention as live per-user state — the streaming twin of
-    * [[graft.EventQueries.retentionOf]] (the [[funnelProgress]]
-    * pattern): per user, state is the distinct
-    * activity-period set; each batch emits DELTAS against the user's
-    * previous (cohort, offset) contribution set, so a downstream
-    * aggregation (or a keyed sink) maintains the exact retention matrix
-    * incrementally. In-order arrivals only ever ADD pairs; a late
-    * EARLIER arrival re-cohorts the user and the emission retracts
-    * every moved pair (-1) while asserting the re-derived ones (+1) —
-    * exactness under late data, never an approximation.
-    *
-    * Period arithmetic matches the batch engine bit-for-bit in the UTC
-    * session the engine runs in: daily periods are floor(ts_us / 86.4e9)
-    * epoch days; weekly periods truncate to Monday (epoch day 4 was a
-    * Monday — `d - floorMod(d - 4, 7)`), so week offsets are whole
-    * integer weeks by construction, the retentionOf `div 7` contract. */
-  def retentionProgress(
-      events: Dataset[RetentionEvent],
-      weekly: Boolean = false): Dataset[RetentionDelta] = {
-    import events.sparkSession.implicits._
-    val UsPerDay = 86_400_000_000L
-    def periodOf(tsUs: Long): Long = {
-      val d = Math.floorDiv(tsUs, UsPerDay)
-      if (weekly) d - Math.floorMod(d - 4L, 7L) else d
-    }
-    def pairsOf(periods: collection.SortedSet[Long]): Set[(Long, Long)] =
-      periods.headOption.fold(Set.empty[(Long, Long)]) { cohort =>
-        periods.iterator
-          .map(p => (cohort, if (weekly) (p - cohort) / 7L else p - cohort))
-          .toSet
-      }
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[RetentionEvent],
-         state: GroupState[RetentionState]) =>
-          val prev = collection.immutable.SortedSet(
-            state.getOption.map(_.periods).getOrElse(Seq.empty): _*)
-          val merged = prev ++ rows.map(e => periodOf(e.ts_us))
-          if (merged == prev) Iterator.empty
-          else {
-            state.update(RetentionState(merged.toSeq))
-            val before = pairsOf(prev)
-            val after = pairsOf(merged)
-            ((after -- before).iterator.map(p => (p, 1L)) ++
-              (before -- after).iterator.map(p => (p, -1L)))
-              .map { case ((cohort, off), d) =>
-                RetentionDelta(uid,
-                  java.time.LocalDate.ofEpochDay(cohort).toString, off, d)
-              }
-          }
-      }
-  }
-
-  /** [[retentionProgress]] composed with its MATERIALIZED downstream
-    * sink: the signed per-batch deltas fold into
-    * the persisted [[RetentionStore]] matrix under the lineage-scoped
-    * batch-id watermark, so `<store>/matrix_b*` always holds the exact
-    * [[graft.EventQueries.retentionOf]] readout over every folded event
-    * — late re-cohorts included — and a crash-replayed batch is a
-    * no-op. Read it back with [[RetentionStore.matrix]]. */
-  def retentionMatrixStream(
-      events: Dataset[RetentionEvent], store: String, checkpointDir: String,
-      weekly: Boolean = false): StreamingQuery = {
-    val spark = events.sparkSession
-    retentionProgress(events, weekly)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        lazy val lineage = streamLineage(checkpointDir)
-        (batch: Dataset[RetentionDelta], batchId: Long) =>
-          RetentionStore.foldBatch(spark, store, batch.toDF(), batchId, lineage)
-          ()
-      }
-      .start()
-  }
-
-  /** An event for the stateful compaction. */
-  final case class KeyedEvent(key: String, seq: Long, value: String)
-
-  /** The latest value per key (the streaming W2 state row). */
-  final case class Latest(key: String, seq: Long, value: String, n_seen: Long)
-
-  /** W2/T9 as live state: one `Latest` per key, updated as events arrive;
-    * later `seq` wins, ties keep the earlier arrival. Emits the key's new
-    * state each time it changes (use outputMode "update"). */
-  def lastWriteWins(events: Dataset[KeyedEvent]): Dataset[Latest] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[KeyedEvent], state: GroupState[Latest]) =>
-          val prev = state.getOption
-          var latest = prev
-          var seen = prev.map(_.n_seen).getOrElse(0L)
-          rows.foreach { e =>
-            seen += 1
-            if (latest.forall(_.seq < e.seq))
-              latest = Some(Latest(key, e.seq, e.value, seen))
-          }
-          val out = latest.map(_.copy(n_seen = seen))
-            .getOrElse(Latest(key, Long.MinValue, null, seen))
-          state.update(out)
-          out
-      }
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Persistent cell-partitioned vector store — the streaming leg of the
   * semantic-curation family, composing three proven pieces: the trained
   * k-means quantizer (VectorQueries.trainCentroids), the cell=N
-  * partition layout (q_ann_cell_layout), and NeardupStore's
-  * probe-before-append streaming contract.
+  * partition layout (q_ann_cell_layout), and the probe-before-append
+  * streaming contract it shares with FingerprintStore.
   *
   * One lake table, `vectors` (vec_id, embedding; partitioned by `cell`),
   * plus the quantizer persisted beside it (`centroids`) — assignments
@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * shuffle_hash (the store side grows with the corpus — never an
   * estimate-dependent broadcast), and the flag cosine is the per-row
   * fixed-order double dot (deterministic per pair; the streaming flags
-  * are operational signals, not oracle-hashed outputs — NeardupStore's
-  * jaccard makes the same call). Duplicate rows from the at-least-once
+  * are operational signals, not oracle-hashed outputs — FingerprintStore's
+  * hamming verify makes the same call). Duplicate rows from the at-least-once
   * replay window are harmless to the probe (flags are DISTINCT per
   * pair) and fold away in [[compact]]. */
 object VectorStore {
@@ -125,7 +125,7 @@ object VectorStore {
     graft.VectorQueries.AdcKit(cs, cbs, rot)
   }
 
-  /** The stored kit for SERVING — load-only, never train (ADVICE r17):
+  /** The stored kit for SERVING — load-only, never train:
     * [[kitOf]]'s load-or-train fallback is correct at APPEND time (the
     * first batch trains the store's permanent quantizers) but lethal at
     * probe time — a store whose codebook artifact vanished (partial
@@ -186,7 +186,7 @@ object VectorStore {
           "sq8 = true from the first batch) before serving SQ8 probes"))
 
   /** Cell + code assignment for append. `znorm` is the codes-side
-    * zero-norm marker (ADVICE r18): a zero-norm vector has no cosine,
+    * zero-norm marker: a zero-norm vector has no cosine,
     * so every serving path that ranks by cosine must exclude it — but
     * the batched join's ADC nomination reads ONLY the code bytes, which
     * cannot see the norm. Marking the row at append (when the raw
@@ -225,8 +225,8 @@ object VectorStore {
     }
   }
 
-  /** Cell assignment WITHOUT codes — the dedup probe's path (r17
-    * review: the probe only joins on the cell, so encoding 8 residual
+  /** Cell assignment WITHOUT codes — the dedup probe's path (the probe
+    * only joins on the cell, so encoding 8 residual
     * codes per probe-batch row was pure waste, and worse, a probe on a
     * lake whose codebooks don't exist yet would have TRAINED them from
     * the arbitrary probe batch and persisted that accident as the
@@ -282,7 +282,7 @@ object VectorStore {
     // a lake written before the coded-index layout has no codes column
     // (or null codes on its old rows after a mixed append): serving it
     // silently would drop stored vectors from every answer, so fail
-    // LOUDLY with the rebuild instruction instead (r17 review)
+    // LOUDLY with the rebuild instruction instead
     require(store.columns.contains("codes"),
       s"vector store at $lake predates the coded IVFADC layout — " +
         "rebuild it (re-append the corpus to a fresh store, or Cli " +
@@ -318,7 +318,7 @@ object VectorStore {
   }
 
   /** Serve an SQ8 top-k FROM THE STORE's persisted affine codes
-    * (VERDICT r18 Next #3 — the codebook-free serving rung below the
+    * (the codebook-free serving rung below the
     * PQ-family [[adcProbe]]): reconstruct-and-dot over the stored
     * uint8 column through the ONE [[graft.VectorQueries.Sq8Kit]]
     * spelling, so the served answer is byte-identical to the declared
@@ -350,7 +350,7 @@ object VectorStore {
       s"$nUncoded stored vectors have no sq8 codes (rows appended " +
         s"before the sq8 layout mixed into $lake) — rebuild the store " +
         "before serving SQ8 probes")
-    // one query → one LONG LUT, compiled driver-side (r20): scoring a
+    // one query → one LONG LUT, compiled driver-side: scoring a
     // stored row is 64 long lookups + adds, bit-identical to scoreDec
     // (Sq8Kit.scoreLutLong's same-scale argument; the q_ann_sq8
     // byte-identity pin gates it)
@@ -406,7 +406,7 @@ object VectorStore {
     *     a re-derived assignment. Byte-identical to the declared join
     *     by shared code, pinned in VectorStoreSpec; reads the embedding
     *     column of the probed cells.
-    *   - `sq8Nominate = true` (r19; requires the `--sq8` layout): the
+    *   - `sq8Nominate = true` (requires the `--sq8` layout): the
     *     middle rung — nominate from the stored SCALAR codes
     *     (reconstruct-and-dot through the shared
     *     [[graft.VectorQueries.Sq8Kit]]), an order of magnitude finer
@@ -427,7 +427,7 @@ object VectorStore {
     * pre-marker store the codes alone cannot see the norm, so a
     * zero-norm row can each waste one nomination slot there (the one
     * documented deviation from the declared query, post-nomination
-    * filtering only — ADVICE r18); rebuild or re-append to remove it.
+    * filtering only); rebuild or re-append to remove it.
     *
     * Replay duplicates from the at-least-once window fold once per
     * stage (byte-identical rows — same kit, same vector); the fold is
@@ -462,15 +462,15 @@ object VectorStore {
     if (compiled.isEmpty) return empty
     val cells = compiled.flatMap(_._2.probeSet).distinct.map(_.toLong).toSeq
     val pruned = store.filter(col("cell").isin(cells: _*))
-    // ONE validation job for both layout columns (r20): the codes check
+    // ONE validation job for both layout columns: the codes check
     // and (when sq8-nominating) the sq8 check each cost a full pruned-
     // store scan as separate jobs; a single two-column aggregate keeps
     // the identical loud-refusal contract at half the scan count
     val needSq8 = sq8Nominate && store.columns.contains("sq8")
     // coalesce(…, 0): sum() over an EMPTY pruned slice (probed cells with
     // zero stored rows) is SQL NULL, and getLong on a null row field
-    // throws — the pre-r20 per-check count() returned 0 and proceeded to
-    // an empty result, which is the contract this preserves (ADVICE r20)
+    // throws; an empty slice must proceed to an empty result, as a
+    // per-check count() of 0 would
     val chk = pruned.agg(
       coalesce(sum(when(col("codes").isNull, 1L).otherwise(0L)), lit(0L)).as("nc"),
       (if (needSq8)
@@ -485,7 +485,7 @@ object VectorStore {
     val candidates = excludeWhere.fold(pruned)(w => pruned.filter(!w))
 
     if (sq8Nominate) {
-      // nominate from the SQ8 scalar codes (r19 — the finer-than-PQ
+      // nominate from the SQ8 scalar codes (the finer-than-PQ
       // rung serving the batched join too): reconstruct-and-dot per
       // (probed row, probing query) through the ONE Sq8Kit spelling,
       // round-9 scores into the same r-bounded partials, then the
@@ -499,8 +499,8 @@ object VectorStore {
       val kit8 = servingSq8KitOf(spark, lake)
       val qUnits: Map[Long, Array[Double]] =
         raw.map { case (qid, v) => qid -> kit8.unitOf(v) }.toMap
-      // per-query LONG LUTs compiled once driver-side (r20, the
-      // declared knnJoinSq8's spelling; r21 parallel — Sq8Kit.lutLongsOf):
+      // per-query LONG LUTs compiled once driver-side, in parallel (the
+      // declared knnJoinSq8's spelling — Sq8Kit.lutLongsOf):
       // 128 KB of unscaled longs per query — one broadcast copy per
       // executor replaces the previous per-partition decimal-LUT cache
       // (which re-built ~0.8 MB of BigDecimals per (partition, qid));
@@ -658,8 +658,9 @@ object VectorStore {
       .select(col("vec_id"), col("m.dup_of").as("dup_of"), col("m.cosine").as("cosine"))
   }
 
-  /** Small-file + duplicate-row maintenance; same commit protocol and
-    * terminated-stream contract as [[NeardupStore.compact]]. */
+  /** Small-file + duplicate-row maintenance
+    * ([[graft.ingest.Sink.compactTable]]); MUST only run against a
+    * terminated stream. Returns the retained row count. */
   def compact(spark: SparkSession, lake: String): Long =
-    NeardupStore.compactTable(spark, vecPath(lake), "cell")
+    graft.ingest.Sink.compactTable(spark, vecPath(lake), "cell")
 }

@@ -100,10 +100,14 @@ class CliSpec extends AnyFunSuite {
     assert(run("addchecks", lake, "1").contains("checked=1"))
     assert(Files.exists(java.nio.file.Paths.get(s"$lake/record_check/collection_id=1")))
     assert(run("addchecks", lake, "1").contains("checked=0")) // incremental
+    // record rows reference the content store too: nothing is orphaned
+    assert(run("deleteorphan", lake).contains("removed 0"))
     // the wipe drops the record + record_check partitions too
     assert(run("deletecollection", lake, "1").contains("deleted"))
     assert(!Files.exists(java.nio.file.Paths.get(s"$lake/record/collection_id=1")))
     assert(!Files.exists(java.nio.file.Paths.get(s"$lake/record_check/collection_id=1")))
+    // and once the record is wiped, its content row is the orphan
+    assert(run("deleteorphan", lake).contains("removed 1"))
   }
 
   test("addchecks on a compiled-release collection is a clean no-op") {

@@ -253,6 +253,47 @@ class CollectFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally apiC.stop()
   }
 
+  test("the close drain folds corpus stats iff planned") {
+    // GET /api/stats/ and Cli corpus-stats read <lake>/stats_sketch; the
+    // close drain writes it for a tree that planned the corpus_stats step
+    val lakeS = Files.createTempDirectory("graft-cst-lake").toString
+    val root = Files.createTempDirectory("graft-cst-landing").toString
+    val apiS = new Api(s, lakeS, landingRoot = Some(root))
+    apiS.start()
+    try {
+      def send(method: String, path: String, body: String = ""): HttpResponse[String] =
+        client.send(
+          HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${apiS.boundPort}$path"))
+            .method(method, HttpRequest.BodyPublishers.ofString(body))
+            .header("Content-Type", "application/json").build(),
+          HttpResponse.BodyHandlers.ofString())
+      def mkTree(source: String, stats: Boolean): Unit = {
+        val created = Canonical.parse(send("POST", "/api/collections/",
+          s"""{"source_id": "$source", "data_version": "2020-03-01 00:00:00",
+             | "corpus_stats": $stats}""".stripMargin).body())
+        val id = created.get("collection_id").asLong
+        val landing = created.get("landing_dir").asText
+        Files.writeString(
+          java.nio.file.Paths.get(landing, s"$source.json"), pkg(s"ocds-$source", "r1"))
+        assert(send("POST", s"/api/collections/$id/close/",
+          """{"stats": {"kingfisher_process_expected_files_count": 1}}""")
+          .statusCode() == 202)
+      }
+      // a tree that did not plan the step adds no stats sketch
+      mkTree("nocst_spider", stats = false)
+      assert(send("GET", "/api/stats/").statusCode() === 404)
+      // a tree that planned it: its close drain folds its one document
+      mkTree("cst_spider", stats = true)
+      val got = send("GET", "/api/stats/")
+      assert(got.statusCode() === 200, got.body())
+      assert(Canonical.parse(got.body()).get("n_docs").asLong === 1L, got.body())
+      // and a later unplanned tree leaves the sketch as it was
+      mkTree("nocst2_spider", stats = false)
+      assert(Canonical.parse(send("GET", "/api/stats/").body())
+        .get("n_docs").asLong === 1L)
+    } finally apiS.stop()
+  }
+
   test("ingest mode: close completes a tree that planned no compile step") {
     // the close chain decides from the plane, like `Cli compile`: a
     // compile-less tree has no merge to run, so the close completes it

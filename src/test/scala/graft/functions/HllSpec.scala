@@ -62,7 +62,7 @@ class HllSpec extends AnyFunSuite {
 
   test("driver-side Hll merge equals the aggregate path (sketch-of-sketches)") {
     // fold two halves' buffers with Hll.merge and compare to one
-    // aggregate over the union — the FreqStore-style driver consumer
+    // aggregate over the union — the StatsStore driver fold
     val (a, b) = ((1 to 700).map(i => s"m$i"), (400 to 1100).map(i => s"m$i"))
     def bufOf(xs: Seq[String], p: Int): HllBuffer = {
       val buf = new HllBuffer(new java.util.HashSet[java.lang.Long](), null)

@@ -154,6 +154,58 @@ class SinkSpec extends AnyFunSuite {
     assert(Sink.readFacts(s, dir).filter(col("collection_id") === 2L).count() === 1)
   }
 
+  test("replaceDir: a crash at every protocol point heals at the next call without loss") {
+    import java.nio.file.{Files => JF, Paths => JP}
+    import s.implicits._
+    val path = Files.createTempDirectory("graft-replace").resolve("t").toString
+    def debris(suffix: String) = JP.get(path + suffix)
+    def rows(): Seq[Long] = s.read.parquet(path).select("v").as[Long].collect().sorted.toSeq
+    def noDebris(): Unit = Seq("_compact_tmp", "_compact_ready", "_compact_old")
+      .foreach(d => assert(!JF.exists(debris(d)), d))
+    // two appends, one of them a replayed duplicate row
+    Seq(1L, 2L).toDF("v").withColumn("b", $"v" % 2).write.partitionBy("b").parquet(path)
+    Seq(2L).toDF("v").withColumn("b", $"v" % 2).write.mode("append").partitionBy("b").parquet(path)
+    assert(rows() === Seq(1L, 2L, 2L))
+    // the compaction's write replaces the table: duplicates fold, one
+    // file per bucket; an absent table compacts to 0 and stays absent
+    assert(Sink.compactTable(s, path, "b") === 2L)
+    val want = Seq(1L, 2L)
+    assert(rows() === want && parquetFiles(path) === 2)
+    assert(Sink.compactTable(s, path + "_absent", "b") === 0L)
+    assert(!JF.exists(JP.get(path + "_absent")))
+    // crash 1: an incomplete write (tmp, no ready marker) is swept and the
+    // table is untouched; a write that leaves nothing changes nothing
+    JF.createDirectories(debris("_compact_tmp"))
+    Sink.replaceDir(path)(_ => ())
+    assert(rows() === want); noDebris()
+    // crash 2: between the two live renames — the table was retired to
+    // old and the complete replacement sits in ready: ready is promoted
+    JF.move(JP.get(path), debris("_compact_ready"))
+    JF.createDirectories(debris("_compact_old"))
+    Sink.replaceDir(path)(_ => ())
+    assert(rows() === want); noDebris()
+    // crash 3: a stale ready beside the live table is derived state and
+    // is dropped, never the table
+    JF.createDirectories(debris("_compact_ready"))
+    Sink.replaceDir(path)(_ => ())
+    assert(rows() === want); noDebris()
+    // crash 4: the table retired to old with no ready beside it (the
+    // rebuild crash): old is promoted back BEFORE the write runs, so the
+    // write sees the healed table
+    JF.move(JP.get(path), debris("_compact_old"))
+    JF.createDirectories(debris("_compact_tmp").resolve("postings"))
+    assert(Sink.replaceDir(path)(_ => rows()) === want); noDebris()
+    // a write that fails leaves the old table serving; its debris heals
+    intercept[IllegalStateException](Sink.replaceDir(path) { tmp =>
+      Seq(9L).toDF("v").write.parquet(tmp)
+      throw new IllegalStateException("build failed")
+    })
+    assert(rows() === want)
+    // a write that completes replaces the directory whole
+    Sink.replaceDir(path)(tmp => Seq(7L).toDF("v").write.parquet(tmp))
+    assert(rows() === Seq(7L)); noDebris()
+  }
+
   test("writeShards: one file per shard, seq order in-file, bytes reproducible") {
     import s.implicits._
     import scala.jdk.CollectionConverters._

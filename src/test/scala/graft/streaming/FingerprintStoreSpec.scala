@@ -12,7 +12,7 @@ import graft.multimodal.Multimodal
   * batch near-dup queries decode the whole corpus every run; the store
   * decodes each payload ONCE, persists the perceptual hash banded for
   * pruning, and answers near-dup checks O(batch) — probe-before-append,
-  * replay-tolerant, compactable, the NeardupStore posture. */
+  * replay-tolerant and compactable, like the sibling stores. */
 class FingerprintStoreSpec extends AnyFunSuite {
 
   private lazy val s = SparkSuite.spark

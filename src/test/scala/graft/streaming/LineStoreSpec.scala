@@ -162,7 +162,7 @@ class LineStoreSpec extends AnyFunSuite {
     // the historical view (earlier batches only) is unchanged by either
     // the compaction or the replay's own append, so the cleaned output is
     // byte-identical and the key population stable — the
-    // NeardupStoreSpec replay × compact interaction discipline
+    // replay × compact interaction the stores share
     val replay = cleanRows(LineStore.appendCleanBatch(s, store, docsDF(b2), 1L))
     assert(replay === first)
     assert(LineStore.keyCount(s, store) === keys)

@@ -206,13 +206,14 @@ class PostingsStoreSpec extends AnyFunSuite {
     assert(PostingsStore.loadTotals(store).get.nDocs === docsB.size.toLong)
     // crash between the two live renames: store gone, old present —
     // the next rebuild promotes the old copy back before building
-    JF.move(JP.get(store), JP.get(store + "_rebuild_old"))
+    JF.move(JP.get(store), JP.get(store + "_compact_old"))
     // also leave an incomplete tmp from the doomed build
-    JF.createDirectories(JP.get(store + "_rebuild_tmp", "postings"))
+    JF.createDirectories(JP.get(store + "_compact_tmp", "postings"))
     PostingsStore.rebuild(store, docsDF(docsA))
     assert(probeRows(store) === scanRows(docsA))
-    assert(!JF.exists(JP.get(store + "_rebuild_old")))
-    assert(!JF.exists(JP.get(store + "_rebuild_tmp")))
+    Seq("_compact_old", "_compact_tmp", "_compact_ready").foreach { d =>
+      assert(!JF.exists(JP.get(store + d)), d)
+    }
   }
 
   test("a missing store probes to an empty frame with the engine's schema") {

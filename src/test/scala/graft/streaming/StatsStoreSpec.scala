@@ -392,4 +392,40 @@ class StatsStoreSpec extends AnyFunSuite {
     assert(sk2.kmv("api").length > sk1.kmv("api").length,
       s"${sk1.kmv("api").length} !< ${sk2.kmv("api").length}")
   }
+
+  test("checkpoint reset + genuinely new file: the stream counts it (not a silent drop)") {
+    // after a first drain the checkpoint dir is deleted AND a new file
+    // lands; the restarted stream delivers it as batch 0 again, under a
+    // new lineage, so the lineage-scoped guard must fold it — a plain
+    // batch-id guard would drop it as a replay of the old batch 0
+    val baseDir = Files.createTempDirectory("graft-statslineage")
+    val landing = Files.createDirectories(baseDir.resolve("landing"))
+    val lake = Files.createDirectories(baseDir.resolve("lake")).toString
+    val ckpt = baseDir.resolve("ckpt").toString
+    val plane = new java.util.concurrent.atomic.AtomicReference(
+      graft.control.Control.Plane(Map(
+        74L -> graft.control.Control.Collection(74L, "api", "2020-01-01 00:00:00"))))
+    def pkg(rid: String, desc: String): String =
+      s"""{"uri": "http://x/$rid", "version": "1.1", "publisher": {"name": "P"},
+         | "publishedDate": "2020-01-01T00:00:00Z",
+         | "releases": [{"ocid": "ocds-st2", "id": "$rid",
+         |   "date": "2020-01-01T00:00:00Z", "tag": ["tender"],
+         |   "initiationType": "tender", "description": "$desc"}]}""".stripMargin
+    def runOnce(): Unit =
+      Streaming.releaseLoadStream(s, landing.toString, lake, 74L, None, plane,
+        ckpt, corpusStats = true).awaitTermination()
+
+    Files.writeString(landing.resolve("a.json"), pkg("r1", "delta delta"))
+    runOnce()
+    val sk1 = StatsStore.load(s"$lake/stats_sketch").get
+    assert(sk1.nDocs === 1L && sk1.lastBatchId === 0L, sk1)
+    // reset the checkpoint, land a NEW file: it arrives as batch 0 again
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
+    Files.writeString(landing.resolve("b.json"), pkg("r2", "epsilon"))
+    runOnce()
+    val sk2 = StatsStore.load(s"$lake/stats_sketch").get
+    assert(sk2.nDocs === 2L, s"new-lineage batch silently dropped: $sk2")
+    assert(sk2.lastBatchId === 0L && sk2.lineage != sk1.lineage, s"$sk1 vs $sk2")
+    assert(sk2.nTokens > sk1.nTokens, s"$sk1 vs $sk2")
+  }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSuite
@@ -10,9 +9,8 @@ import graft.SparkSuite
 /** graft.streaming semantics: landed packages of every format load per
   * micro-batch through the batch loader, record packages compiling per
   * file (T4's record-package path, `compiler.py:146-148`), with
-  * plane-keyed replay and crash recovery; plus the live state operators
-  * (last-write-wins via mapGroupsWithState, windows, funnel, retention;
-  * W2/T9). */
+  * plane-keyed replay and crash recovery, and the document legs the
+  * close drain gates on planned steps. */
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val s = SparkSuite.spark
@@ -158,48 +156,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(filesRead < filesStored,
       s"bucket pruning read the whole collection slice ($filesRead of $filesStored)")
-  }
-
-  test("releaseLoadStream(bm25Index=true) maintains the postings store; indexed == scan") {
-    import s.implicits._
-    val base = Files.createTempDirectory("graft-streamidx")
-    val landing = Files.createDirectory(base.resolve("landing"))
-    val lake = Files.createDirectory(base.resolve("lake")).toString
-    val ckpt = base.resolve("ckpt").toString
-    val plane = new java.util.concurrent.atomic.AtomicReference(
-      graft.control.Control.Plane(Map(
-        11L -> graft.control.Control.Collection(11L, "api", "2020-01-01 00:00:00"))))
-    def runOnce(): Unit =
-      Streaming.releaseLoadStream(s, landing.toString, lake, 11L, None, plane, ckpt,
-        bm25Index = true).awaitTermination()
-
-    Files.writeString(landing.resolve("a.json"), releasePkg("ocds-x1", "r1"))
-    Files.writeString(landing.resolve("b.json"), releasePkg("ocds-x2", "r2"))
-    runOnce()
-    val store = Streaming.bm25IndexPath(lake, 11L)
-    val tot1 = PostingsStore.loadTotals(store).get
-    assert(tot1.nDocs === 2L)
-    // a later arrival appends incrementally; a lost checkpoint replays
-    // every file and the plane's registered-file guard skips them all
-    Files.writeString(landing.resolve("c.json"), releasePkg("ocds-x3", "r3"))
-    runOnce()
-    assert(PostingsStore.loadTotals(store).get.nDocs === 3L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-    runOnce()
-    assert(PostingsStore.loadTotals(store).get.nDocs === 3L)
-
-    // the maintained index serves the SAME scores as the full scan of the
-    // collection's documents (the shared bm25ScoreExpr contract)
-    val docs = graft.Pipeline
-      .collectionDocsOf(s, lake, plane.get().collection(11L)).get
-    val terms = Seq("ocds-x1", "tender")
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .orderBy($"doc_id")
-      .select($"doc_id", $"n_terms", $"score_dec".cast("string"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    val indexed = rows(PostingsStore.probe(s, store, terms))
-    assert(indexed.nonEmpty)
-    assert(indexed === rows(graft.TextQueries.bm25ScoresOf(docs, terms)))
   }
 
   test("releaseLoadStream(lineDedup=true): cross-batch line dedup the exact-dedup store cannot do") {
@@ -496,346 +452,5 @@ class StreamingSpec extends AnyFunSuite {
       .filter($"collection_id" === 9).count() === 1) // the lost leg is back
     assert(planeRef.get().filesOf(9L).size === 1)
     assert(planeRef.get().stepsOf(9L).isEmpty)
-  }
-
-  test("windowedCounts finalizes watermark-expired windows in bounded state (T9)") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def ev(key: String, minute: Int) =
-      Streaming.TimedEvent(key, java.sql.Timestamp.valueOf(f"2020-01-01 10:$minute%02d:00"))
-    val input = MemoryStream[Streaming.TimedEvent]
-    val q = Streaming.windowedCounts(input.toDS(), window = "10 minutes", watermark = "5 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("wc").start()
-
-    input.addData(ev("a", 1), ev("a", 4), ev("b", 7))
-    q.processAllAvailable() // nothing finalized: watermark at 10:02
-    assert(s.table("wc").count() === 0)
-
-    // an event at 10:31 moves the watermark to 10:26 → both earlier
-    // 10-minute windows close and emit; their state is dropped
-    input.addData(ev("a", 31))
-    q.processAllAvailable()
-    val rows = s.table("wc")
-      .select("window_start", "key", "n")
-      .as[(java.sql.Timestamp, String, Long)].collect()
-      .map { case (w, k, n) => (w.toString, k, n) }.sortBy(r => (r._1, r._2))
-    assert(rows.toSeq === Seq(
-      ("2020-01-01 10:00:00.0", "a", 2L),
-      ("2020-01-01 10:00:00.0", "b", 1L)))
-    q.stop()
-  }
-
-  test("dedupArrivals suppresses in-horizon duplicates in bounded state (S8/T9)") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def doc(fp: String, id: Long, minute: Int) =
-      Streaming.DocArrival(fp, id,
-        java.sql.Timestamp.valueOf(f"2020-01-01 10:$minute%02d:00"))
-    val input = MemoryStream[Streaming.DocArrival]
-    val q = Streaming.dedupArrivals(input.toDS(), watermark = "5 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("dd").start()
-
-    // a retry storm re-lands the same content thrice within the horizon:
-    // exactly one row survives (the first arrival in batch order)
-    input.addData(doc("fpA", 1, 1), doc("fpA", 2, 2), doc("fpB", 3, 2))
-    q.processAllAvailable()
-    input.addData(doc("fpA", 4, 3)) // still within the horizon
-    q.processAllAvailable()
-    assert(s.table("dd").select("fingerprint").as[String].collect().sorted
-      === Array("fpA", "fpB"))
-
-    // past the watermark the state row is gone: the same fingerprint
-    // passes again — cross-horizon dedup belongs to the persistent
-    // store's anti-join, not to unbounded stream state
-    input.addData(doc("zz", 9, 31)) // watermark → 10:26, fpA state expires
-    q.processAllAvailable()
-    input.addData(doc("fpA", 5, 32))
-    q.processAllAvailable()
-    val fpa = s.table("dd").filter($"fingerprint" === "fpA")
-      .select("doc_id").as[Long].collect().sorted
-    assert(fpa === Array(1L, 5L))
-    q.stop()
-  }
-
-  test("funnelProgress == the batch funnel over the union, out-of-order batches included") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import Streaming.FunnelEvent
-    val stages = Seq("signup", "click", "purchase")
-    // three users; u2's signup arrives LATE (batch 2) with an EARLIER
-    // timestamp than their already-seen click — t1 must lower and the
-    // chain must re-open the click that had streamed past; u3 converts
-    // fully; an off-funnel event type must fold into nothing
-    val batch1 = Seq(
-      FunnelEvent(2L, "click", 5000L),
-      FunnelEvent(3L, "signup", 100L),
-      FunnelEvent(3L, "click", 200L),
-      FunnelEvent(1L, "signup", 1000L),
-      FunnelEvent(1L, "view", 1500L))
-    val batch2 = Seq(
-      FunnelEvent(2L, "signup", 4000L), // late, earlier than the click
-      FunnelEvent(3L, "purchase", 300L),
-      FunnelEvent(2L, "click", 5000L)) // exact replay of batch 1's event
-    val input = MemoryStream[FunnelEvent]
-    val q = Streaming.funnelProgress(input.toDS(), stages)
-      .writeStream.outputMode("update").format("memory").queryName("fnl").start()
-    try {
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // latest state per user
-    val latest = s.table("fnl")
-      .groupBy("user_id").agg(org.apache.spark.sql.functions.max_by(
-        org.apache.spark.sql.functions.struct("stage_reached", "stage_ts", "n_seen"),
-        org.apache.spark.sql.functions.col("n_seen")).as("st"))
-      .select("user_id", "st.stage_reached", "st.stage_ts")
-      .as[(Long, Long, Seq[Long])].collect().sortBy(_._1)
-    // u2: the late signup re-opened the click — 2 stages, chain (4000, 5000)
-    assert(latest.toSeq === Seq(
-      (1L, 1L, Seq(1000L)),
-      (2L, 2L, Seq(4000L, 5000L)),
-      (3L, 3L, Seq(100L, 200L, 300L))))
-    // referee: per-stage user counts == the BATCH engine over the union
-    val union = (batch1 ++ batch2)
-      .toDF("user_id", "event_type", "ts_us")
-    val want = graft.EventQueries.funnelOf(union, stages)
-      .select("stage", "n_users").as[(Long, Long)].collect().toMap
-    val got = (1 to stages.size).map(k =>
-      (k.toLong, latest.count(_._2 >= k).toLong)).toMap
-    assert(got === want, "streamed progress must referee against funnelOf")
-    // the max-gap contract streams identically: a 500 µs window cuts
-    // u2's 1000 µs signup→click hop but keeps u3's tight chain
-    val input2 = MemoryStream[FunnelEvent]
-    val q2 = Streaming.funnelProgress(input2.toDS(), stages, maxGapUs = Some(500L))
-      .writeStream.outputMode("update").format("memory").queryName("fnlw").start()
-    try {
-      input2.addData(batch1: _*)
-      q2.processAllAvailable()
-      input2.addData(batch2: _*)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val latestW = s.table("fnlw")
-      .groupBy("user_id").agg(org.apache.spark.sql.functions.max_by(
-        org.apache.spark.sql.functions.struct("stage_reached", "n_seen"),
-        org.apache.spark.sql.functions.col("n_seen")).as("st"))
-      .select("user_id", "st.stage_reached")
-      .as[(Long, Long)].collect().toMap
-    val wantW = graft.EventQueries.funnelOf(union, stages, maxGapUs = Some(500L))
-      .select("stage", "n_users").as[(Long, Long)].collect().toMap
-    val gotW = (1 to stages.size).map(k =>
-      (k.toLong, latestW.values.count(_ >= k).toLong)).toMap
-    assert(gotW === wantW)
-    assert(latestW(2L) === 1L, "the gap bound must cut u2's wide hop")
-  }
-
-  test("funnelProgress final state is batching-invariant (1 batch == 3 batches, any order)") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import Streaming.FunnelEvent
-    val rnd = new scala.util.Random(7)
-    val stages = Seq("signup", "click", "purchase")
-    val events = (1 to 40).map { i =>
-      FunnelEvent(1L + rnd.nextInt(5),
-        Seq("signup", "click", "purchase", "view")(rnd.nextInt(4)),
-        (1 + rnd.nextInt(50)).toLong * 100L)
-    }
-    def finalState(batches: Seq[Seq[FunnelEvent]], name: String): Map[Long, (Long, Seq[Long])] = {
-      val input = MemoryStream[FunnelEvent]
-      val q = Streaming.funnelProgress(input.toDS(), stages, maxGapUs = Some(2000L))
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      finally q.stop()
-      s.table(name)
-        .groupBy("user_id").agg(org.apache.spark.sql.functions.max_by(
-          org.apache.spark.sql.functions.struct("stage_reached", "stage_ts", "n_seen"),
-          org.apache.spark.sql.functions.col("n_seen")).as("st"))
-        .select("user_id", "st.stage_reached", "st.stage_ts")
-        .as[(Long, Long, Seq[Long])].collect()
-        .map(x => x._1 -> (x._2, x._3)).toMap
-    }
-    val one = finalState(Seq(events), "fnl_one")
-    // a shuffled 3-way split — events arrive out of order ACROSS batches
-    val shuffled = rnd.shuffle(events)
-    val three = finalState(
-      Seq(shuffled.take(13), shuffled.slice(13, 26), shuffled.drop(26)), "fnl_three")
-    assert(three === one,
-      "the chained-min over full per-user history must not depend on batching")
-  }
-
-  test("retentionProgress deltas == retentionOf over the union, late re-cohort included") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import Streaming.RetentionEvent
-    val day = 86_400_000_000L
-    // u1 active on days 10, 12; u2 on day 11 — then u2's LATE day-9
-    // event arrives: their cohort moves 11 → 9 and the old (day 11,
-    // offset 0) contribution must retract while (day 9, 0) and
-    // (day 9, 2) assert; a same-day replay folds to nothing
-    val batch1 = Seq(
-      RetentionEvent(1L, 10L * day + 5L),
-      RetentionEvent(1L, 12L * day + 9L),
-      RetentionEvent(2L, 11L * day + 1L))
-    val batch2 = Seq(
-      RetentionEvent(2L, 9L * day + 3L), // late, earlier: re-cohort
-      RetentionEvent(1L, 10L * day + 7L)) // same day again: no delta
-    def run(name: String, weekly: Boolean): Unit = {
-      val input = MemoryStream[RetentionEvent]
-      val q = Streaming.retentionProgress(input.toDS(), weekly)
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      try {
-        input.addData(batch1: _*)
-        q.processAllAvailable()
-        input.addData(batch2: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    run("rtn_d", weekly = false)
-    val got = s.table("rtn_d")
-      .groupBy("cohort", "offset")
-      .agg(org.apache.spark.sql.functions.sum("delta").as("n_users"))
-      .filter($"n_users" =!= 0L)
-      .as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    val union = (batch1 ++ batch2).toDF("user_id", "ts_us")
-    val want = graft.EventQueries.retentionOf(union)
-      .as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    assert(got === want, "summed deltas must reproduce the batch retention")
-    // the retraction really happened: u2's old cohort row was emitted
-    // then withdrawn
-    val u2 = s.table("rtn_d").filter($"user_id" === 2L)
-      .select("cohort", "offset", "delta")
-      .as[(String, Long, Long)].collect().toSeq
-    assert(u2.contains(("1970-01-12", 0L, 1L)) && u2.contains(("1970-01-12", 0L, -1L)),
-      s"late re-cohort must retract the old pair, got $u2")
-    // weekly mode referees the same way (days 9-12 of 1970 span the
-    // Mon-Jan-05 and Mon-Jan-12 weeks, so there IS a 1-week offset)
-    run("rtn_w", weekly = true)
-    val gotW = s.table("rtn_w")
-      .groupBy("cohort", "offset")
-      .agg(org.apache.spark.sql.functions.sum("delta").as("n_users"))
-      .filter($"n_users" =!= 0L)
-      .as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    val wantW = graft.EventQueries.retentionOf(union, weekly = true)
-      .as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    assert(gotW === wantW, "weekly deltas must reproduce the batch retention")
-  }
-
-  test("retention matrix sink: folded table == retentionOf over the union; replayed fold no-ops") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import Streaming.RetentionEvent
-    val day = 86_400_000_000L
-    val store = java.nio.file.Files.createTempDirectory("graft-rtn-store").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rtn-ckpt").toString
-    // the referee test's batches verbatim — batch 2 carries the late
-    // EARLIER event that re-cohorts u2, so the fold must APPLY a
-    // retraction, not just additions
-    val batch1 = Seq(
-      RetentionEvent(1L, 10L * day + 5L),
-      RetentionEvent(1L, 12L * day + 9L),
-      RetentionEvent(2L, 11L * day + 1L))
-    val batch2 = Seq(
-      RetentionEvent(2L, 9L * day + 3L),
-      RetentionEvent(1L, 10L * day + 7L))
-    val input = MemoryStream[RetentionEvent]
-    val q = Streaming.retentionMatrixStream(input.toDS(), store, ckpt)
-    try {
-      input.addData(batch1: _*)
-      q.processAllAvailable()
-      input.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    def sorted(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
-      df.as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    val got = sorted(RetentionStore.matrix(s, store)
-      .select("cohort", "offset", "n_users"))
-    val want = sorted(graft.EventQueries.retentionOf(
-      (batch1 ++ batch2).toDF("user_id", "ts_us")))
-    assert(got === want,
-      "the persisted matrix must equal the batch retention over the union")
-    // u2's stale (1970-01-12, 0) row really left the TABLE (the
-    // retraction folded, not merely emitted)
-    assert(!got.exists(r => r._1 == "1970-01-12" && r._2 == 0L))
-    // replay-tolerance at the store seam: re-folding an already-folded
-    // batch id (same lineage) is a no-op — matrix unchanged, fold
-    // reports the skip
-    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(store, "_retention_meta.json")))
-    val lastBatch = meta.get("last_batch_id").asLong()
-    val lineage = meta.get("lineage").asText()
-    val replayDeltas = Seq(("1970-01-10", 0L, 5L))
-      .toDF("cohort", "offset", "delta")
-    assert(!RetentionStore.foldBatch(s, store, replayDeltas, lastBatch, lineage),
-      "an already-folded batch id must be a no-op")
-    assert(sorted(RetentionStore.matrix(s, store)
-      .select("cohort", "offset", "n_users")) === want)
-    // …while a NEW batch id folds (and a +/-0 net change drops the row)
-    val zeroNet = Seq(("1970-01-09", 2L, 1L), ("1970-01-09", 2L, -1L))
-      .toDF("cohort", "offset", "delta")
-    assert(RetentionStore.foldBatch(s, store, zeroNet, lastBatch + 1, lineage))
-    assert(sorted(RetentionStore.matrix(s, store)
-      .select("cohort", "offset", "n_users")) === want)
-  }
-
-  test("retentionProgress summed deltas are batching-invariant (1 batch == 3 batches, any order)") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import Streaming.RetentionEvent
-    val rnd = new scala.util.Random(13)
-    val day = 86_400_000_000L
-    val events = (1 to 60).map { _ =>
-      RetentionEvent(1L + rnd.nextInt(6),
-        (5L + rnd.nextInt(20)) * day + rnd.nextInt(1000))
-    }
-    def summed(batches: Seq[Seq[RetentionEvent]], name: String): Seq[(String, Long, Long)] = {
-      val input = MemoryStream[RetentionEvent]
-      val q = Streaming.retentionProgress(input.toDS(), weekly = true)
-        .writeStream.outputMode("update").format("memory").queryName(name).start()
-      try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      finally q.stop()
-      s.table(name)
-        .groupBy("cohort", "offset")
-        .agg(org.apache.spark.sql.functions.sum("delta").as("n_users"))
-        .filter($"n_users" =!= 0L)
-        .as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    }
-    val one = summed(Seq(events), "rtn_one")
-    val shuffled = rnd.shuffle(events)
-    val three = summed(
-      Seq(shuffled.take(20), shuffled.slice(20, 40), shuffled.drop(40)), "rtn_three")
-    assert(three === one,
-      "delta accounting over full per-user history must not depend on batching")
-    // and both agree with the batch engine
-    val want = graft.EventQueries
-      .retentionOf(events.toDF("user_id", "ts_us"), weekly = true)
-      .as[(String, Long, Long)].collect().sortBy(x => (x._1, x._2)).toSeq
-    assert(one === want)
-  }
-
-  test("lastWriteWins keeps latest per key across batches; late data never regresses (T9)") {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = MemoryStream[Streaming.KeyedEvent]
-    val q = Streaming.lastWriteWins(input.toDS())
-      .writeStream.outputMode("update").format("memory").queryName("lww").start()
-
-    input.addData(
-      Streaming.KeyedEvent("k1", 1, "v1"),
-      Streaming.KeyedEvent("k1", 3, "v3"),
-      Streaming.KeyedEvent("k2", 2, "v2"))
-    q.processAllAvailable()
-    input.addData(Streaming.KeyedEvent("k1", 2, "late")) // late arrival
-    q.processAllAvailable()
-
-    val latest = s.table("lww")
-      .groupBy("key").agg(org.apache.spark.sql.functions.max_by(
-        org.apache.spark.sql.functions.struct("seq", "value", "n_seen"),
-        org.apache.spark.sql.functions.col("n_seen")).as("st"))
-      .select("key", "st.seq", "st.value", "st.n_seen")
-      .as[(String, Long, String, Long)].collect().sortBy(_._1)
-    assert(latest === Array(("k1", 3L, "v3", 3L), ("k2", 2L, "v2", 1L)))
-    q.stop()
   }
 }
