@@ -7,6 +7,7 @@ import graft.check.Checker
 import graft.control.{Control, Notes, PlaneStore, Wipe}
 import graft.ingest.Sink
 import graft.ocds.Metadata
+import graft.streaming.VectorStore.Rung
 
 /** The reference's management-command surface (`docs/cli.rst`) as one
   * dispatching main over the library's modules. Control state persists as
@@ -81,19 +82,8 @@ import graft.ocds.Metadata
   */
 object Cli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def session(): SparkSession =
+    SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
   /** Usage-error exit: 'unknown collection 7', not a Map stack trace. */
   private def known(plane: Control.Plane, id: Long): Control.Collection =
@@ -1172,11 +1162,11 @@ object Cli {
         }
       }
       // --sq8: serve the dense leg from the store's scalar codes
-      // (sq8Probe — the finer-than-PQ rung) instead of the ADC probe;
-      // requires the store to carry the --sq8 layout. sq8Probe is a
-      // full codes scan with no probe-set parameter, so --probes would
-      // be silently ignored — reject the combination instead (ADVICE
-      // r19, the vector-search --exact/--sq8 conflict pattern)
+      // (VectorStore.sq8Probe — the finer-than-PQ rung) instead of the
+      // ADC probe; requires the store to carry the --sq8 layout. The
+      // SQ8 probe scans every cell's codes and takes no probe count, so
+      // --probes would be silently ignored — reject the combination
+      // instead, as vector-search rejects --exact with --sq8
       val hSq8 = rest0.contains("--sq8")
       if (hSq8 && flagValue(rest0, "--probes").isDefined) {
         System.err.println(
@@ -1260,7 +1250,8 @@ object Cli {
       // sampled ids are excluded from the candidate side as a pushed
       // scan predicate, and nomination runs from the stored code bytes
       // (--exact switches to the raw-vector nominate — q_knn_join_ivf's
-      // engine over the persisted cell layout)
+      // engine over the persisted cell layout; --sq8 to the stored
+      // scalar codes)
       def intFlag(flag: String, dflt: Int): Int = flagValue(rest, flag) match {
         case None => dflt
         case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse {
@@ -1273,8 +1264,6 @@ object Cli {
       val bTop = intFlag("--top", 5)
       val bRerank = intFlag("--rerank", 20)
       val exact = rest.contains("--exact")
-      // --sq8: nominate from the store's scalar codes (the finer rung;
-      // requires the --sq8 layout) instead of the 8-byte ADC
       val bSq8 = rest.contains("--sq8")
       if (exact && bSq8) {
         System.err.println("--exact and --sq8 are different nomination " +
@@ -1292,7 +1281,8 @@ object Cli {
       val hits = graft.streaming.VectorStore.knnJoin(
         spark, store, queries, probes = bProbes, r = bRerank, k = bTop,
         excludeWhere = Some(pmod(col("vec_id"), lit(mod)) === 0),
-        adcNominate = !exact, sq8Nominate = bSq8).collect()
+        nominate = if (exact) Rung.Exact else if (bSq8) Rung.Sq8 else Rung.Adc)
+        .collect()
       if (hits.isEmpty) println("empty store or no queries in the sample")
       else hits.foreach { r =>
         println(s"qid=${r.getAs[Long]("qid")}" +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit diagnostic: `runMain graft.Explain [sfDir] q_a q_b ...`
   * (no args = all queries). Prints a one-line summary of the plan features
   * that matter at 100 TB — exchange count (shuffles), broadcast vs
@@ -15,15 +13,7 @@ object Explain {
       case d :: rest if d.startsWith("/") => (d, rest)
       case rest                           => ("/root/testdata/sf0.001", rest)
     }
-    val spark = SparkSession.builder()
-      .withExtensions(graft.functions.GraftExtensions.install)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session("4", logLevel = "ERROR")
     val targets = if (names.nonEmpty) names else Queries.all.map(_.name).toList
     targets.foreach { name =>
       val df = Queries.byName(name).run(spark, sfDir)

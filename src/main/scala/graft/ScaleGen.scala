@@ -39,15 +39,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dest, fStr) = args.take(3)
     val factor = fStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     generate(spark, src, dest, factor)
     spark.stop()
   }

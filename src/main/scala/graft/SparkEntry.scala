@@ -23,4 +23,21 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     Queries.all.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap
+
+  /** The session every main of this library runs in: `local[cpus]` with
+    * as many shuffle partitions, the graft functions installed, UTC,
+    * nanos-as-long parquet timestamps, no UI, and `logLevel` on the
+    * context. */
+  def session(cpus: String, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .withExtensions(graft.functions.GraftExtensions.install)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

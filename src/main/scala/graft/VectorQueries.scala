@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * results are identical across Spark partitionings AND identical to the
   * DuckDB oracle. Only the final cosine = dot / (||a||·||b||) is double.
   *
-  * Performance design (VERDICT r3): the exact decimal fold is ~192 BigDecimal
+  * Performance design: the exact decimal fold is ~192 BigDecimal
   * ops per pair — far too slow to run on every candidate pair. Every pair
   * query therefore computes a cheap DOUBLE cosine first (64 fused multiplies)
   * and only pays decimal on pairs within 1e-6 of the threshold boundary; the
@@ -53,8 +53,8 @@ object VectorQueries {
   /** Exact decimal dot product of two float vectors, folded in-row:
     * sum_i cast(double(a_i)*double(b_i) as decimal(38,18)).
     *
-    * Stays a higher-order `aggregate(zip_with(...))` fold on purpose: the
-    * r4 flat-expression experiment (64 getItem terms + per-step casts)
+    * Stays a higher-order `aggregate(zip_with(...))` fold on purpose: a
+    * flat expression (64 getItem terms + per-step casts) measured
     * BLEW UP decimal codegen — 2-6× slower across every vector query —
     * while the HOF fold's interpreted lambda is cheap next to BigDecimal
     * arithmetic itself. (The primitive-double prune below is the opposite
@@ -70,7 +70,7 @@ object VectorQueries {
   /** Cheap double dot product for pruning (NOT for output: double addition
     * is order-sensitive, so this is never compared across engines).
     * Delegates to the native codegen'd [[graft.functions.DotDouble]]
-    * expression — r5 profiling on the 451k-pair verify stream showed the
+    * expression — profiling on the 451k-pair verify stream showed the
     * two declarative spellings both interpret: a flat 64-term `reduce`
     * JIT-bails on method size (~12 µs/row) and an `aggregate(zip_with)`
     * HOF walks `Expression.eval` per element (~2 µs/row); the native
@@ -91,7 +91,7 @@ object VectorQueries {
     * every vector vs vec 0), shared VERBATIM by the q_ann_bruteforce
     * oracle and the q_hybrid_rrf oracle's dense leg: ONE spelling of the
     * decimal-summed cosine, like the Scala side's one [[bruteCosineOf]] —
-    * a change here changes both oracles together (r15 review). */
+    * a change here changes both oracles together. */
   private[graft] val CosineOracleCtes: String =
     s"""q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
        |sums AS (
@@ -111,8 +111,8 @@ object VectorQueries {
        |  FROM sums, qn WHERE sums.vec_id <> 0)""".stripMargin
 
   /** The lexical rank list both hybrid fusions and the retrieval eval
-    * share: BM25 served from the persisted inverted-index store (VERDICT
-    * r16 #5 — the serving composition eats its own index): the postings
+    * share: BM25 served from the persisted inverted-index store (the
+    * serving composition eats its own index): the postings
     * store builds once per dataset through the real PostingsStore write
     * path (shared with q_bm25_indexed via the same materializeDir key),
     * the probe statically prunes to the query terms' token buckets and
@@ -145,8 +145,8 @@ object VectorQueries {
     * (doc_id, rank_lex), `denseCte` (doc_id, rank_dense)) — ONE SQL
     * spelling of [[rrfFuseOf]]'s bit-stable cross-multiplied arithmetic,
     * composed by the q_hybrid_rrf, q_hybrid_rrf_ann and q_retrieval_eval
-    * oracles (which previously carried four verbatim copies of the CASE —
-    * code-review r16; the shared-oracle-CTE discipline). */
+    * oracles, so the CASE exists once (the shared-oracle-CTE
+    * discipline). */
   private def rrfFusedCteSql(name: String, lexCte: String, denseCte: String): String =
     s"""$name AS (
        |  SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
@@ -159,7 +159,7 @@ object VectorQueries {
        |              ELSE 1.0 / CAST(60 + v.rank_dense AS DOUBLE) END AS rrf
        |  FROM $lexCte l FULL OUTER JOIN $denseCte v ON l.doc_id = v.doc_id)""".stripMargin
 
-  /** [[rrfFusedCteSql]] per PROBE (the r19 hybrid eval's oracle leg):
+  /** [[rrfFusedCteSql]] per PROBE (the hybrid eval's oracle leg):
     * `lexCte` must expose (qid, doc_id, rank_lex), `denseCte`
     * (qid, doc_id, rank_dense); the fusion keys on (qid, doc_id) and
     * keeps the RAW rrf for the per-qid rank window downstream — the
@@ -215,8 +215,8 @@ object VectorQueries {
       .orderBy("rank_fused")
   }
 
-  /** [[rrfFuseOf]] per PROBE — the batched fusion (r19, the hybrid
-    * eval's engine): `lex` must carry (qid, doc_id, rank_lex), `dns`
+  /** [[rrfFuseOf]] per PROBE — the batched fusion (the hybrid eval's
+    * engine): `lex` must carry (qid, doc_id, rank_lex), `dns`
     * (qid, doc_id, rank_dense), each qid's lists K-bounded; the
     * full-outer join keys on (qid, doc_id) and the fused rank windows
     * per qid (parallelism = probe count — the frame is probes × 2K
@@ -287,8 +287,7 @@ object VectorQueries {
     * embedding, four orders under this margin. Projections genuinely inside
     * the margin (P ≈ 1e-7 per plane for O(1)-scale data) fall back to the
     * exact-decimal fold, so every emitted bit equals the decimal oracle's
-    * bit-for-bit — the r4 pair-prune trick applied to signatures
-    * (VERDICT r4 #9). */
+    * bit-for-bit — the pair-prune margin trick applied to signatures. */
   private val SignMargin = 1e-6
 
   /** DOUBLE projection onto plane p — the ±1 weights make every product
@@ -314,11 +313,10 @@ object VectorQueries {
     * per band. All 16 hyperplane projections are IN-ROW double HOF folds
     * (sign certified by [[SignMargin]], decimal fallback for near-zero) —
     * no posexplode, no aggregation, no shuffle: the signature stage is one
-    * map over the scan. (History: r4 moved the then-DECIMAL folds to
-    * exploded SUM aggregates because BigDecimal-in-HOF was the cost; r5's
-    * margin trick makes DOUBLE projections safe, and in-row double folds
-    * beat both the exploded aggregation — which pays a groupBy shuffle —
-    * and the flat-expression form, which JIT-bails; see [[dotDouble]].)
+    * map over the scan. The sign margin makes DOUBLE projections safe,
+    * and in-row double folds beat both an exploded SUM aggregation —
+    * which pays a groupBy shuffle — and the flat-expression form, which
+    * JIT-bails; see [[dotDouble]].
     * Norms are NOT computed here — [[verifyPairs]] folds them in-row. */
   private[graft] def signatures(emb: DataFrame, blockCols: Seq[String]): DataFrame = {
     graft.functions.GraftExtensions.ensureRegistered(emb.sparkSession)
@@ -347,7 +345,7 @@ object VectorQueries {
     * similar-pair density, not n²/|blocking key|. */
   private[graft] def bucketPairs(sig: DataFrame, blockCols: Seq[String]): DataFrame =
     // shared bounded bucket-local engine (graft.BucketPairs): all-pairs
-    // within normal buckets (sorted ids, vec_a < vec_b — the r5 chained-
+    // within normal buckets (sorted ids, vec_a < vec_b — the chained-
     // generator shape), star pairs in oversized ones so candidate volume
     // scales with similar-pair density AND stays bounded under adversarial
     // bucket skew
@@ -363,13 +361,13 @@ object VectorQueries {
     * relative, far inside the 1e-6 prune margin), then score ONLY the
     * survivors' pair DOT exactly. The exact-decimal NORMS are per-VECTOR
     * work, computed once in `n` and carried through the joins (16 bytes a
-    * side) — r21 change: they used to be recomputed per surviving PAIR,
-    * and the sf1 phase probe (AbEmbProbe) put 4.9 s of q_neardup_embedding's
-    * 9.7 s in the survivor decimal scoring, two-thirds of it these norm
-    * folds (129k pairs × 2 recomputed norms vs 20k vectors × 1). Same
-    * expression over the same rows, exact arithmetic ⇒ bit-identical
-    * cosines; the r5 "decimal proportional to output" property degrades
-    * only by the vector count, which the join touches anyway. */
+    * side) rather than recomputed per surviving PAIR: the sf1 phase
+    * probe (AbEmbProbe) put 4.9 s of q_neardup_embedding's 9.7 s in the
+    * survivor decimal scoring, two-thirds of it per-pair norm folds
+    * (129k pairs × 2 norms vs 20k vectors × 1). Same expression over the
+    * same rows, exact arithmetic ⇒ bit-identical cosines; the "decimal
+    * proportional to output" property degrades only by the vector count,
+    * which the join touches anyway. */
   private[graft] def verifyPairs(
       cand: DataFrame, emb: DataFrame, threshold: Double): DataFrame = {
     graft.functions.GraftExtensions.ensureRegistered(emb.sparkSession)
@@ -480,12 +478,12 @@ object VectorQueries {
     for (_ <- 0 until iters) {
       val bc = s.sparkContext.broadcast(centroids)
       // one narrow pass: per-partition fixed-point sums per cell, ONE
-      // k × (Dim+1) long partial out per partition, tree-folded (r21 —
-      // the r20 spelling collect()ed every partition's partial
-      // SIMULTANEOUSLY, so driver memory grew with the sample's
-      // partition count, not the contract bound; treeFoldPartials keeps
-      // the incremental single-job fold below 64 partitions and adds
-      // combine levels beyond, guide §5). Long addition is exact and
+      // k × (Dim+1) long partial out per partition, tree-folded so the
+      // driver never holds every partition's partial at once (driver
+      // memory would grow with the sample's partition count, not the
+      // contract bound; treeFoldPartials keeps the incremental
+      // single-job fold below 64 partitions and adds combine levels
+      // beyond). Long addition is exact and
       // commutative, so any fold shape/arrival order is bit-identical
       // and the centroids are unchanged.
       val totals = treeFoldPartials(
@@ -522,13 +520,13 @@ object VectorQueries {
     * per partition, all same shape) into one total with driver memory
     * bounded at O(one partial), never O(partitions × partial):
     *  - ≤ 64 partitions: `reduce` via treeReduce(depth 1) — ONE job, no
-    *    extra stage (the r20 driver-fold shape), but partials merge
+    *    extra stage (a driver fold), but partials merge
     *    INCREMENTALLY as task results arrive instead of being held all
     *    at once by collect();
-    *  - beyond 64: one tree combine level per 64× partitions (guide §5
-    *    — at 100 TB the 1/11 training sample is 10⁵-10⁶ partitions, so
-    *    the r20 collect() would have pulled GBs of partials per Lloyd
-    *    iteration to the driver).
+    *  - beyond 64: one tree combine level per 64× partitions (at
+    *    100 TB the 1/11 training sample is 10⁵-10⁶ partitions, so a
+    *    collect() would pull GBs of partials per Lloyd iteration to the
+    *    driver).
     * Element-wise long addition is exact and commutative, so every fold
     * shape gives bit-identical totals (AnnRecallSpec's partitioning
     * pins). In-place merge into the left argument is safe: each partial
@@ -674,7 +672,7 @@ object VectorQueries {
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/kmeans_centroids")
   }
 
-  /** nDCG binary-relevance discount table (VERDICT r18 Next #4):
+  /** nDCG binary-relevance discount table:
     * (rank, disc, cum) for rank 1..k with disc = 1/log2(rank+1) and cum
     * its running sum (cum at rank n = IDCG of n relevant docs). The
     * logarithm is the one libm-dependent bit the eval family had
@@ -759,11 +757,11 @@ object VectorQueries {
     for (_ <- 0 until iters) {
       val bc = s.sparkContext.broadcast(cbs)
       // one (PqM × PqK) × (PqSub+1) long partial per partition,
-      // tree-folded like trainCentroids (r21 — see [[treeFoldPartials]]:
-      // the r20 collect() held every partition's partial simultaneously,
+      // tree-folded like trainCentroids (see [[treeFoldPartials]]: a
+      // collect() would hold every partition's partial at once,
       // O(partitions) driver memory; exact commutative long adds keep
       // every fold shape bit-identical, one stage per Lloyd iteration
-      // below the tree threshold exactly as before)
+      // below the tree threshold)
       val merged = treeFoldPartials(
         srdd.mapPartitions { it =>
           val cb = bc.value
@@ -1146,69 +1144,6 @@ object VectorQueries {
           GROUP BY c.vec_id)
         SELECT vec_id, adc FROM adc ORDER BY adc DESC, vec_id LIMIT 10"""
 
-  /** Shared IVF-PQ engine (q_ann_ivf_pq single-probe, _multiprobe at 4,
-    * _refine's candidate stage): probe set = the `probes` centroids nearest
-    * the query (same (dot desc, cell) ranking as assignment), rows in
-    * probed cells scored by ADC with the DECIMAL(38,18)-pinned LUT sum
-    * (order-exact vs the oracle's SUM over decimal-cast dots). Returns the
-    * UN-truncated per-row ADC frame (vec_id, adc) — callers rank/limit. */
-  private def ivfPqAdc(s: SparkSession, d: String, probes: Int): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val centroids = trainCentroids(emb, s)
-    val cbs = trainPqCodebooks(emb, s)
-    val hns = cbs.map(halfNormsOf)
-    val qu = unit(emb.filter(col("vec_id") === 0)
-      .select(col("embedding")).as[Seq[Float]].head())
-    val probeSet: Set[Int] = centroids.zipWithIndex.map { case (c, i) =>
-      var dot = 0.0
-      var j = 0
-      while (j < Dim) { dot += qu(j) * c(j); j += 1 }
-      (dot, i)
-    }.sortBy { case (dot, i) => (-dot, i) }.take(probes).map(_._2).toSet
-    val lut = Array.tabulate(PqM) { m =>
-      Array.tabulate(PqK) { j =>
-        var ip = 0.0
-        var i = 0
-        while (i < PqSub) { ip += qu(m * PqSub + i) * cbs(m)(j)(i); i += 1 }
-        ip
-      }
-    }
-    val bcCs = s.sparkContext.broadcast(centroids)
-    val bcCb = s.sparkContext.broadcast(cbs)
-    val bcHn = s.sparkContext.broadcast(hns)
-    val bcLut = s.sparkContext.broadcast(lut)
-    emb.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val cs = bcCs.value; val cb = bcCb.value
-        val hn = bcHn.value; val lt = bcLut.value
-        val ltDec = lt.map(_.map(dd =>
-          new java.math.BigDecimal(dd)
-            .setScale(18, java.math.RoundingMode.HALF_UP)))
-        it.flatMap { case (id, v) =>
-          val u = unit(v)
-          if (!probeSet.contains(nearestCell(cs, u))) None
-          else {
-            var adc = java.math.BigDecimal.ZERO
-            var m = 0
-            while (m < PqM) {
-              adc = adc.add(ltDec(m)(nearestCode(cb(m), hn(m), u, m * PqSub)))
-              m += 1
-            }
-            Some((id, adc.doubleValue))
-          }
-        }
-      }
-      .toDF("vec_id", "adc")
-      .select(col("vec_id"), round(col("adc"), 9).as("adc"))
-  }
-
-  private def ivfPqTopK(s: SparkSession, d: String, probes: Int): DataFrame =
-    ivfPqAdc(s, d, probes)
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(10)
-
   /** IVFADC + exact re-ranking — the third stage of the production ANN
     * stack (Jégou et al.): the compressed-domain ADC scan nominates
     * [[RefineR]] candidates, and ONLY those rows' raw vectors are read
@@ -1223,9 +1158,7 @@ object VectorQueries {
     * full candidate rank list). */
   private def ivfPqRefinedCosine(
       s: SparkSession, d: String, probes: Int): DataFrame = {
-    val adcTop = ivfPqAdc(s, d, probes)
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(RefineR)
+    val adcTop = annTopK(s, d, ivfPqKitOf(s, d), probes, RefineR)
     val emb = Tables.embeddings(s, d)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("qe"),
@@ -1357,55 +1290,81 @@ object VectorQueries {
                generate_series(1, $Dim) t(i)
           GROUP BY refn.vec_id, refn.norm_dec, refq.qnorm_dec)"""
 
-  // ---- residual-encoded IVFADC (q_ann_ivfadc) -------------------------------
+  // ---- the quantizer kits and the one scan and nominate stage over them ----
 
-  /** ONE spelling of the residual-IVFADC encode/score arithmetic, shared
-    * by the batch query ([[ivfadcTopK]]) and the streaming
-    * [[graft.streaming.VectorStore]] index (the bm25ScoreExpr discipline:
-    * one expression, two callers, so the persisted index and the declared
-    * query cannot drift). Row side: unit-normalize, Voronoi cell,
-    * residual codes. Query side ([[AdcQuery]]): probe set, the
-    * DECIMAL(38,18) LUT of raw query subvectors × residual codewords, and
-    * the per-cell constants q·c — all driver-computed and broadcastable.
+  /** One all-zero cell: the cells of a rung without a coarse quantizer
+    * (plain PQ, OPQ, SQ8). Every row falls in cell 0, `u − 0.0` is exact
+    * in IEEE arithmetic and the cell constant is dec(0.0), so such a kit
+    * codes and scores bit-for-bit like an encoder without cells. */
+  private val OneCell: Array[Array[Double]] = Array(new Array[Double](Dim))
+
+  /** Dots of a unit vector with every cell centroid, ascending-index
+    * loops (the order the oracles' list_inner_product replays). */
+  private def cellDotsOf(cs: Array[Array[Double]], u: Array[Double]): Array[Double] =
+    cs.map { c =>
+      var dot = 0.0
+      var j = 0
+      while (j < Dim) { dot += u(j) * c(j); j += 1 }
+      dot
+    }
+
+  /** The `n` best cells by (dot desc, cell asc) — the probe ranking. */
+  private def topCells(dots: Array[Double], n: Int): Seq[Int] =
+    dots.indices.sortBy(i => (-dots(i), i)).take(n)
+
+  /** The quantizer surface every rung of the vector ladder scores
+    * through. The row side assigns a unit vector its gate cell and its
+    * codes; the query side compiles a raw query vector into a
+    * [[QuantQuery]]. The declared queries and the persisted
+    * [[graft.streaming.VectorStore]] share these kits, so a served answer
+    * cannot drift from the declared one. */
+  private[graft] sealed trait Quantizer extends Serializable {
+    /** the coarse cells that gate a scan ([[OneCell]] when the rung has none) */
+    def cs: Array[Array[Double]]
+    def unitOf(v: Seq[Float]): Array[Double] = unit(v)
+    def cellOf(u: Array[Double]): Int = nearestCell(cs, u)
+    def codesOf(u: Array[Double], cell: Int): Array[Int]
+    def query(qv: Seq[Float], probes: Int): QuantQuery
+  }
+
+  /** A compiled query: the cells it probes, and the exact decimal score
+    * of one row's codes. */
+  private[graft] sealed trait QuantQuery extends Serializable {
+    def probeSet: Set[Int]
+    def scoreDec(cell: Int, codes: Array[Int]): java.math.BigDecimal
+  }
+
+  /** The product-quantizer kit: cells `cs`, per-subspace codebooks `cbs`
+    * and an optional OPQ rotation. With `residual` the codes quantize the
+    * coarse residual u − c_cell and the score adds the per-cell constant,
+    * the exact decomposition of the true IVFADC (Jégou, Douze & Schmid
+    * 2011 §III-C)
+    *   q·x̂ = q·c_cell + Σ_m q_m·cw_m(code_m).
+    * Without it (IVF-PQ) the cells only gate the scan, the codes quantize
+    * u itself and the cell constant is 0. The rotation applies to the
+    * residual on the row side and to the query in the LUT, since
+    * q·Rᵀŷ = (R·q)·ŷ; the probe set and the cell constants use the
+    * unrotated query, because the cells live in the unrotated space.
     * Serializable (arrays only; the half-norms re-derive lazily after
     * deserialization). */
   private[graft] final case class AdcKit(
       cs: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
-      rot: Array[Array[Double]] = null)
-      extends Serializable {
+      rot: Array[Array[Double]] = null, residual: Boolean = true)
+      extends Quantizer {
     @transient private lazy val hns = cbs.map(halfNormsOf)
-    def unitOf(v: Seq[Float]): Array[Double] = unit(v)
-    def cellOf(u: Array[Double]): Int = nearestCell(cs, u)
-    /** Residual (optionally rotated — the IVF-OPQ composition) codes. */
     def codesOf(u: Array[Double], cell: Int): Array[Int] = {
-      val ctr = cs(cell)
-      val r = new Array[Double](Dim)
-      var i = 0
-      while (i < Dim) { r(i) = u(i) - ctr(i); i += 1 }
-      val x = if (rot == null) r else rotate(rot, r)
-      val codes = new Array[Int](PqM)
-      var m = 0
-      while (m < PqM) {
-        codes(m) = nearestCode(cbs(m), hns(m), x, m * PqSub)
-        m += 1
+      val r = if (!residual) u else {
+        val ctr = cs(cell)
+        Array.tabulate(Dim)(i => u(i) - ctr(i))
       }
-      codes
+      val x = if (rot == null) r else rotate(rot, r)
+      Array.tabulate(PqM)(m => nearestCode(cbs(m), hns(m), x, m * PqSub))
     }
-    /** Driver-side query compilation: probe set + decimal LUT/constants.
-      * The probe set and per-cell constants rank/score the RAW unit
-      * query (cells live in the unrotated space); the LUT pairs the
-      * ROTATED query with the rotated-space codewords when `rot` is set
-      * — q·Rᵀŷ = (R·q)·ŷ, the exact-IP identity. */
+    /** Driver-side compilation: probe set, the DECIMAL(38,18) LUT of
+      * query subvectors × codewords, and the per-cell constants. */
     def query(qv: Seq[Float], probes: Int): AdcQuery = {
       val qu = unit(qv)
-      val cellDot = cs.map { c =>
-        var dot = 0.0
-        var j = 0
-        while (j < Dim) { dot += qu(j) * c(j); j += 1 }
-        dot
-      }
-      val probeSet = cellDot.zipWithIndex
-        .sortBy { case (dot, i) => (-dot, i) }.take(probes).map(_._2).toSet
+      val cellDot = cellDotsOf(cs, qu)
       val lq = if (rot == null) qu else rotate(rot, qu)
       val lut = Array.tabulate(PqM) { m =>
         Array.tabulate(cbs(m).length) { j =>
@@ -1417,28 +1376,29 @@ object VectorQueries {
       }
       def dec(d: Double) = new java.math.BigDecimal(d)
         .setScale(18, java.math.RoundingMode.HALF_UP)
-      AdcQuery(probeSet, lut.map(_.map(dec)), cellDot.map(dec))
+      AdcQuery(topCells(cellDot, probes).toSet, lut.map(_.map(dec)),
+        cellDot.map(d => dec(if (residual) d else 0.0)))
     }
   }
 
   /** A compiled ADC query: 8 decimal lookups + one add per row.
     *
-    * Scoring arithmetic (r20): every table entry is a scale-18 decimal
-    * (see [[AdcKit.query]]'s `dec`), and BigDecimal addition of
-    * same-scale operands is EXACT unscaled addition — no rounding, any
-    * order — so the fold runs on the unscaled longs ([[ltL]]/[[cdL]],
-    * derived once per (de)serialized instance) and wraps the one final
-    * sum back into a decimal. Fits: every entry is an inner product of
-    * unit-bounded vectors, so |unscaled| ≤ ~6e18 and the 9-term sum is
-    * bounded by Cauchy–Schwarz over the concatenated codeword at
-    * < 9.2e18; `Math.addExact` turns that proof into a loud fallback
-    * (the decimal fold, identical by construction) instead of a silent
-    * wrap. Measured: the long fold removes the per-pair BigDecimal
-    * allocation chain from the batched joins' nomination hot loop. */
+    * Every table entry is a scale-18 decimal (see [[AdcKit.query]]'s
+    * `dec`), and BigDecimal addition of same-scale operands is EXACT
+    * unscaled addition — no rounding, any order — so the fold runs on the
+    * unscaled longs ([[ltL]]/[[cdL]], derived once per (de)serialized
+    * instance) and wraps the one final sum back into a decimal. Fits:
+    * every entry is an inner product of unit-bounded vectors, so
+    * |unscaled| ≤ ~6e18 and the 9-term sum is bounded by Cauchy–Schwarz
+    * over the concatenated codeword at < 9.2e18; `Math.addExact` turns
+    * that proof into a loud fallback (the decimal fold, identical by
+    * construction) instead of a silent wrap. The long fold keeps the
+    * per-pair BigDecimal allocation chain out of the batched joins'
+    * nomination hot loop. */
   private[graft] final case class AdcQuery(
       probeSet: Set[Int],
       ltDec: Array[Array[java.math.BigDecimal]],
-      cdDec: Array[java.math.BigDecimal]) extends Serializable {
+      cdDec: Array[java.math.BigDecimal]) extends QuantQuery {
     @transient private lazy val ltL: Array[Array[Long]] =
       ltDec.map(_.map(_.unscaledValue().longValueExact()))
     @transient private lazy val cdL: Array[Long] =
@@ -1464,18 +1424,17 @@ object VectorQueries {
       }
   }
 
-  /** The SQ8 affine kit (FAISS's scalar quantizer, q_ann_sq8's rung):
-    * per-dimension min/max over the training unit vectors, codes
+  /** The SQ8 affine kit (FAISS's scalar quantizer): per-dimension
+    * min/max over the training unit vectors, codes
     * code_i = round((u_i − mn_i)/(mx_i − mn_i)·255) clamped to uint8,
-    * reconstruct-and-dot scoring with DECIMAL-pinned per-dim terms —
-    * ONE spelling of encode and score, shared by the declared query and
-    * the persisted [[graft.streaming.VectorStore]] SQ8 layout so the
-    * two cannot drift (the AdcKit discipline). A degenerate dimension
-    * (mx ≤ mn) codes 0 and reconstructs mn — the declared query's exact
-    * arithmetic. */
-  private[graft] final case class Sq8Kit(mn: Array[Double], mx: Array[Double])
-      extends Serializable {
-    def unitOf(v: Seq[Float]): Array[Double] = unit(v)
+    * reconstruct-and-dot scoring with DECIMAL-pinned per-dim terms. A
+    * degenerate dimension (mx ≤ mn) codes 0 and reconstructs mn. The
+    * codes never depend on the cell: `cs` only gates the scan (the
+    * trained IVF cells for the cell-pruned joins, [[OneCell]] for the
+    * full-scan q_ann_sq8). */
+  private[graft] final case class Sq8Kit(
+      mn: Array[Double], mx: Array[Double], cs: Array[Array[Double]] = OneCell)
+      extends Quantizer {
     def codesOf(u: Array[Double]): Array[Int] = Array.tabulate(Dim) { i =>
       val w = mx(i) - mn(i)
       if (w > 0)
@@ -1483,6 +1442,7 @@ object VectorQueries {
           math.round((u(i) - mn(i)) / w * 255.0))).toInt
       else 0
     }
+    def codesOf(u: Array[Double], cell: Int): Array[Int] = codesOf(u)
     def scoreDec(qu: Array[Double], codes: Array[Int]): java.math.BigDecimal = {
       var adc = java.math.BigDecimal.ZERO
       var i = 0
@@ -1496,16 +1456,13 @@ object VectorQueries {
       adc
     }
 
-    /** The per-QUERY decimal LUT (r20, the PQ-LUT idiom applied to the
-      * scalar rung): lut(i)(c) = the EXACT per-term value [[scoreDec]]
-      * constructs for dimension i at code c — new BigDecimal(qu(i) *
-      * recon).setScale(18, HALF_UP) — precomputed once per query
-      * (64 × 256 entries, ~0.8 MB), so scoring a row becomes 64 lookups
-      * + adds instead of 64 exact double→decimal conversions. The
-      * conversion is the dominant cost of the batched sq8-nominated
-      * join's hot loop; [[scoreLut]] adds the identical values in the
-      * identical order, so results are bit-for-bit [[scoreDec]]'s
-      * (VectorStoreSpec's byte-identity pins gate it). */
+    /** The per-QUERY decimal LUT (the PQ-LUT idiom applied to the scalar
+      * rung): lut(i)(c) = the EXACT per-term value [[scoreDec]]
+      * constructs for dimension i at code c, precomputed once per query
+      * (64 × 256 entries), so scoring a row becomes 64 lookups + adds
+      * instead of 64 exact double→decimal conversions. [[scoreLut]] adds
+      * the identical values in the identical order, so results are
+      * bit-for-bit [[scoreDec]]'s. */
     def lutOf(qu: Array[Double]): Array[Array[java.math.BigDecimal]] =
       Array.tabulate(Dim) { i =>
         val w = mx(i) - mn(i)
@@ -1530,43 +1487,22 @@ object VectorQueries {
       adc
     }
 
-    /** [[lutOf]] carried as UNSCALED scale-18 longs (r20): every LUT
-      * entry is a scale-18 decimal of a product of unit-bounded values
-      * (|qu_i| ≤ 1, recon_i ∈ [mn_i, mx_i] ⊆ [−1, 1] — both sides of
-      * the kit are unit-normalized), so |unscaled| ≤ ~1e18 and fits a
-      * long exactly ([[java.math.BigDecimal#longValueExact]] is the
-      * loud guard). 64 × 256 longs ≈ 128 KB per query — 50× smaller
-      * than the decimal table, cheap enough to precompile for a whole
-      * bounded probe frame driver-side. */
+    /** [[lutOf]] carried as UNSCALED scale-18 longs: every LUT entry is a
+      * scale-18 decimal of a product of unit-bounded values (|qu_i| ≤ 1,
+      * recon_i ∈ [mn_i, mx_i] ⊆ [−1, 1]), so |unscaled| ≤ ~1e18 and fits
+      * a long exactly ([[java.math.BigDecimal#longValueExact]] is the
+      * loud guard). 64 × 256 longs ≈ 128 KB per query, 50× smaller than
+      * the decimal table. */
     def lutLongOf(qu: Array[Double]): Array[Array[Long]] =
       lutOf(qu).map(_.map(_.unscaledValue().longValueExact()))
 
-    /** [[lutLongOf]] over a whole probe frame, compiled in PARALLEL on
-      * the driver (r21 — the r20 sf1 stamp diagnosed the serial loop at
-      * ~2.6 s for 800 queries: 800 × 16,384 exact double→decimal
-      * conversions on one core while 32 sit idle). Each query's table is
-      * an independent pure function of (kit, qu), so a parallel index
-      * loop is deterministic and bit-identical to the sequential map —
-      * the outputs land by position, never by completion order. */
-    def lutLongsOf(
-        qUnits: Map[Long, Array[Double]]): Map[Long, Array[Array[Long]]] = {
-      val entries = qUnits.toArray
-      val out = new Array[Array[Array[Long]]](entries.length)
-      java.util.stream.IntStream.range(0, entries.length).parallel()
-        .forEach(i => out(i) = lutLongOf(entries(i)._2))
-      entries.iterator.zipWithIndex
-        .map { case ((qid, _), i) => qid -> out(i) }.toMap
-    }
-
     /** [[scoreLut]] over the long table: same-scale BigDecimal addition
-      * is exact unscaled addition, so folding the longs and wrapping
-      * the one final sum is bit-for-bit [[scoreLut]] (= [[scoreDec]]).
+      * is exact unscaled addition, so folding the longs and wrapping the
+      * one final sum is bit-for-bit [[scoreLut]] (= [[scoreDec]]).
       * |sum| < 9.2e18 by Cauchy–Schwarz over the unit-bounded vectors
       * (Σ|qu_i·recon_i| ≤ ‖qu‖·‖recon‖ ≤ 8, unscaled ≤ 8e18 + rounding
       * slack); `Math.addExact` + the decimal-fold fallback turn that
-      * proof into a loud recovery instead of a silent wrap. Replaces
-      * 64 BigDecimal allocations per scored pair with 64 long adds —
-      * the hot loop of the sq8-nominated batched joins. */
+      * proof into a loud recovery instead of a silent wrap. */
     def scoreLutLong(
         lutL: Array[Array[Long]], lut: => Array[Array[java.math.BigDecimal]],
         codes: Array[Int]): java.math.BigDecimal =
@@ -1581,6 +1517,21 @@ object VectorQueries {
       } catch {
         case _: ArithmeticException => scoreLut(lut, codes)
       }
+
+    def query(qv: Seq[Float], probes: Int): Sq8Query = {
+      val qu = unit(qv)
+      Sq8Query(this, qu, lutLongOf(qu), topCells(cellDotsOf(cs, qu), probes).toSet)
+    }
+  }
+
+  /** A compiled SQ8 query: 64 long lookups + adds per row through
+    * [[Sq8Kit.scoreLutLong]]; the decimal LUT is built only on the
+    * overflow fallback. */
+  private[graft] final case class Sq8Query(
+      kit: Sq8Kit, qu: Array[Double], lutL: Array[Array[Long]],
+      probeSet: Set[Int]) extends QuantQuery {
+    def scoreDec(cell: Int, codes: Array[Int]): java.math.BigDecimal =
+      kit.scoreLutLong(lutL, kit.lutOf(qu), codes)
   }
 
   /** Train the [[Sq8Kit]]: exact per-dim min/max over the training
@@ -1590,9 +1541,9 @@ object VectorQueries {
   private[graft] def trainSq8(vecs: DataFrame, s: SparkSession): Sq8Kit = {
     import s.implicits._
     // per-partition (mn, mx) partials, tree-folded like the Lloyd
-    // trainers (r21 — the collect() held one partial per partition;
+    // trainers so the driver never holds one partial per partition;
     // min/max is exact and order-insensitive, so any fold shape gives
-    // the identical kit)
+    // the identical kit
     val parts = vecs
       .select(col("embedding")).as[Seq[Float]]
       .rdd.mapPartitions { it =>
@@ -1629,63 +1580,131 @@ object VectorQueries {
     Sq8Kit(mm(0), mm(1))
   }
 
-  /** The trained IVFADC kit for a dataset — coarse centroids + residual
-    * codebooks, both the deterministic trainers above. */
+  /** The trained residual IVFADC kit for a dataset — coarse centroids +
+    * residual codebooks, both the deterministic trainers above. */
   private[graft] def ivfadcKitOf(s: SparkSession, d: String): AdcKit = {
     val emb = Tables.embeddings(s, d)
     val centroids = trainCentroids(emb, s)
     AdcKit(centroids, trainPqCodebooks(emb, s, res = centroids))
   }
 
-  /** The TRUE IVFADC encoding (Jégou, Douze & Schmid 2011 §III-C): the
-    * product quantizer codes the coarse RESIDUAL r(x) = u − c_cell(u)
-    * instead of the raw unit vector (the q_ann_ivf_pq family's
-    * simplification). Residuals carry far less energy than points on the
-    * sphere, so the same 8 code bytes quantize finer — the published
-    * accuracy rung between plain IVF-PQ and the refine stage. Scoring is
-    * the exact inner-product decomposition
-    *   q·x̂ = q·c_cell + Σ_m q_m·cw_m(code_m)
-    * — the per-cell constant q·c_cell is driver-computed once per
-    * centroid (k doubles) and the LUT holds the RAW query subvectors
-    * against the residual codewords, so the scan stays 8 lookups + one
-    * add per row. Same scan shape and cost as [[ivfPqAdc]]: probed-cell
-    * pruning, 8-byte codes, DECIMAL-pinned sums, zero exchanges before
-    * the TakeOrdered; at 100 TB the cell is the partition key and this
-    * is a pruned memory-bound scan. */
-  /** The ONE kit-driven ADC scan shared by q_ann_ivfadc and
-    * q_ann_ivf_opq (the r17 review's dedup: the IVF-OPQ leg had
-    * re-implemented this inline): probe-pruned mapPartitions, per-row
-    * encode through the kit, decimal score, round-9 top-10. */
-  private def adcTopK(
-      s: SparkSession, d: String, kit: AdcKit, probes: Int): DataFrame = {
-    import s.implicits._
+  /** The IVF-PQ kit: the trained cells gate WHICH rows score, the plain
+    * PQ codebooks say HOW (codes of the raw unit vector, no residual). */
+  private def ivfPqKitOf(s: SparkSession, d: String): AdcKit = {
     val emb = Tables.embeddings(s, d)
-    val q = kit.query(
-      emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).as[Seq[Float]].head(),
-      probes)
-    val bcKit = s.sparkContext.broadcast(kit)
-    val bcQ = s.sparkContext.broadcast(q)
-    emb.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
+    AdcKit(trainCentroids(emb, s), trainPqCodebooks(emb, s), residual = false)
+  }
+
+  /** The scan frame of a declared query: raw (vec_id, embedding) rows
+    * encoded on the fly through `kit` into (vec_id, cell, codes,
+    * embedding). A row whose cell is outside `gate` is never encoded.
+    * The persisted store reads the same frame from its stored codes. */
+  private def encodedOf(
+      rows: DataFrame, kit: Quantizer,
+      gate: Set[Int]): Dataset[(Long, Int, Array[Int], Seq[Float])] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast((kit, gate))
+    rows.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
       .mapPartitions { it =>
-        val k = bcKit.value
-        val qq = bcQ.value
+        val (k, g) = bc.value
         it.flatMap { case (id, v) =>
           val u = k.unitOf(v)
           val cell = k.cellOf(u)
-          if (!qq.probeSet.contains(cell)) None
-          else Some((id, qq.scoreDec(cell, k.codesOf(u, cell)).doubleValue))
+          if (g.contains(cell)) Some((id, cell, k.codesOf(u, cell), v)) else None
+        }
+      }
+  }
+
+  /** The one single-query scorer of the ladder: every (vec_id, cell,
+    * codes) row in a probed cell gets `q`'s exact decimal score, rounded
+    * to 9 places (the spelling the oracles replay bit-stably), and the
+    * top `k` by (adc desc, vec_id) come back as (vec_id, adc). A narrow
+    * mapPartitions and a TakeOrdered: no exchange. */
+  private[graft] def scanTopK(
+      frame: Dataset[(Long, Int, Array[Int])], q: QuantQuery, k: Int): DataFrame = {
+    val s = frame.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(q)
+    frame
+      .mapPartitions { it =>
+        val qq = bc.value
+        it.collect { case (id, cell, codes) if qq.probeSet.contains(cell) =>
+          (id, qq.scoreDec(cell, codes).doubleValue)
         }
       }
       .toDF("vec_id", "adc")
       .select(col("vec_id"), round(col("adc"), 9).as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))
-      .limit(10)
+      .limit(k)
   }
 
-  private def ivfadcTopK(s: SparkSession, d: String, probes: Int): DataFrame =
-    adcTopK(s, d, ivfadcKitOf(s, d), probes)
+  /** The single-query rungs: row 0 is the query, every other row is
+    * encoded on the fly through `kit` and scored by [[scanTopK]]. At
+    * 100 TB the codes are a stored column written at ingest; the
+    * persisted VectorStore serves the same scan from them. */
+  private def annTopK(
+      s: SparkSession, d: String, kit: Quantizer, probes: Int,
+      k: Int = 10): DataFrame = {
+    import s.implicits._
+    val emb = Tables.embeddings(s, d)
+    val q = kit.query(emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).as[Seq[Float]].head(), probes)
+    scanTopK(encodedOf(emb.filter(col("vec_id") =!= 0), kit, q.probeSet)
+      .map { case (id, cell, codes, _) => (id, cell, codes) }, q, k)
+  }
+
+  /** Compile a bounded (qid, embedding) probe frame against `kit` on the
+    * driver. Zero vectors are dropped: they have no cosine, and
+    * [[knnQueryFrameOf]] drops them too. The queries compile in
+    * parallel — an SQ8 query is 16,384 exact double→decimal conversions,
+    * ~2.6 s serially for an 800-query frame — and each one is a pure
+    * function of (kit, vector) that lands by position, so the result is
+    * the sequential map's. */
+  private[graft] def compiledOf(
+      kit: Quantizer, queries: DataFrame, probes: Int): Seq[(Long, QuantQuery)] = {
+    val s = queries.sparkSession
+    import s.implicits._
+    val raw = queries.select(col("qid"), col("embedding")).as[(Long, Seq[Float])]
+      .collect().filter { case (_, v) => v.exists(_ != 0f) }
+    val out = new Array[QuantQuery](raw.length)
+    java.util.stream.IntStream.range(0, raw.length).parallel()
+      .forEach(i => out(i) = kit.query(raw(i)._2, probes))
+    raw.map(_._1).toSeq.zip(out)
+  }
+
+  /** The one batched nominate stage: each (vec_id, cell, codes, payload)
+    * row scores against every compiled query probing its cell, and per
+    * query the `r` best by (round-9 score desc, vec_id) survive through
+    * the bounded topk_pairs partials as (qid, vec_id, payload). A
+    * driver-built inverted map cell → probing queries keeps the per-row
+    * work at |queries probing this row's cell|, and the one shuffle
+    * carries q × r rows per partition. The declared joins carry the
+    * embedding as payload, so the corpus is scanned once; the store
+    * carries vec_id and reads the nominees' embeddings afterwards. */
+  private[graft] def nominatedOf[P](
+      frame: Dataset[(Long, Int, Array[Int], P)],
+      compiled: Seq[(Long, QuantQuery)], r: Int)(
+      implicit enc: Encoder[(Long, Long, Double, P)]): DataFrame = {
+    val byCell: Map[Int, Array[(Long, QuantQuery)]] = compiled
+      .flatMap { case (qid, q) => q.probeSet.iterator.map(c => (c, (qid, q))) }
+      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
+    val bc = frame.sparkSession.sparkContext.broadcast(byCell)
+    frame
+      .mapPartitions { it =>
+        val m = bc.value
+        it.flatMap { case (id, cell, codes, p) =>
+          m.getOrElse(cell, Array.empty[(Long, QuantQuery)]).iterator
+            .map { case (qid, q) => (qid, id, q.scoreDec(cell, codes).doubleValue, p) }
+        }
+      }
+      .toDF("qid", "vec_id", "score", "payload")
+      .groupBy("qid")
+      .agg(call_function("topk_pairs",
+        round(col("score"), 9), col("vec_id"), col("payload"), lit(r)).as("cand"))
+      .select(col("qid"), explode(col("cand")).as("c"))
+      .select(col("qid"), col("c.id").as("vec_id"), col("c.payload").as("payload"))
+  }
 
   /** Oracle-side artifact for q_ann_ivfadc: the residual-trained PQ
     * codebooks ([[trainPqCodebooks]] with `res` = the trained coarse
@@ -1782,7 +1801,7 @@ object VectorQueries {
     val emb = Tables.embeddings(s, d)
     val centroids = trainCentroids(emb, s)
     val (rot, cbs) = trainOpq(emb, s, res = centroids)
-    adcTopK(s, d, AdcKit(centroids, cbs, rot), probes)
+    annTopK(s, d, AdcKit(centroids, cbs, rot), probes)
   }
 
   /** Oracle-side artifacts for q_ann_ivf_opq: the residual-space
@@ -2003,7 +2022,7 @@ object VectorQueries {
   private[graft] val LexK = 10
 
   /** The store-served lexical rank lists for a probe sample — the
-    * q_retrieval_eval_lex SYSTEM leg, factored so the hybrid eval (r19)
+    * q_retrieval_eval_lex SYSTEM leg, factored so the hybrid eval
     * runs the identical spelling: probes = the doc_id % `qmod` document
     * sample, each probe's query = its first [[LexNT]] DISTINCT tokens
     * in document order, ONE batched bucket-pruned store read for ALL
@@ -2104,20 +2123,13 @@ object VectorQueries {
     * does (unit() passes it through raw, every dot is 0, ties resolve to
     * the lowest cells) — the SAME ranking the kmeans oracles replay, so
     * every caller of this helper agrees with every oracle on the
-    * degenerate case too (r12 review: an earlier return-empty special
-    * case silently diverged from the multiprobe query's inline loop).
+    * degenerate case too (a return-empty special case would silently
+    * diverge from the kits' probe sets, which rank the same way).
     * Shared by q_ann_ivf_kmeans_multiprobe, q_ann_cell_layout, the
     * q_knn_join_ivf probe stage and KnnJoinSpec's structural replay. */
   private[graft] def probeCellsOf(
-      cs: Array[Array[Double]], v: Seq[Float], n: Int): Seq[Long] = {
-    val u = unit(v)
-    cs.indices.map { ci =>
-      var dot = 0.0
-      var j = 0
-      while (j < Dim) { dot += u(j) * cs(ci)(j); j += 1 }
-      (dot, ci)
-    }.sortBy { case (dot, ci) => (-dot, ci) }.take(n).map(_._2.toLong)
-  }
+      cs: Array[Array[Double]], v: Seq[Float], n: Int): Seq[Long] =
+    topCells(cellDotsOf(cs, unit(v)), n).map(_.toLong)
 
   /** (qid, qe, qnorm_dec) from an arbitrary (qid, embedding) query
     * batch — the seam the declared joins ([[knnQueries]]' fixed vec_id
@@ -2243,7 +2255,7 @@ object VectorQueries {
     graft.functions.GraftExtensions.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val q = knnQueries(emb)
-    // fanOut below the filters (r20): the corpus side's per-row work is
+    // fanOut below the filters: the corpus side's per-row work is
     // |queries| exact dots + the topk_pairs partials — ~1.1 s of CPU on
     // the single-row-group scan's ONE task (sweep-measured); the
     // round-robin moves the narrow (vec_id, embedding) rows once. Also
@@ -2347,66 +2359,30 @@ object VectorQueries {
           WHERE rn <= $KnnR),
         $knnRerankSql"""
 
-  /** The ADC-NOMINATED batched k-NN join (q_knn_join_ivfadc's body): the
-    * rung between q_knn_join_ivf (exact double nomination over the
-    * probed cells) and the pure-ADC single query (q_ann_ivfadc) — each
-    * probed corpus row is scored against every query probing its cell
-    * with the 8-lookup residual-ADC decimal (the [[AdcKit]] arithmetic,
-    * shared with the persisted [[graft.streaming.VectorStore]] index),
-    * the r-bounded topk_pairs nominate carries the embedding payload so
-    * the corpus is scanned ONCE, and the exact DECIMAL refine
-    * ([[knnRefine]]) re-ranks the q × r survivors. The driver-built
-    * inverted cell → probing-queries map keeps per-row work at |queries
-    * probing this cell|; nomination scores round to 9 (the adcProbe
-    * output contract — also what lets the DuckDB oracle replay the
-    * ordering bit-stably). Recall follows the residual-PQ trade
-    * q_ann_ivfadc documents: the 8-byte code can misrank a true
-    * neighbor out of the r slots — the exact refine fixes rank order
-    * among nominees, never nomination misses. This is the batch twin of
-    * the store-served VectorStore.knnJoin(adcNominate = true), pinned
-    * byte-identical in VectorStoreSpec (the adcProbe ↔ q_ann_ivfadc
-    * precedent). */
-  private def knnJoinAdc(s: SparkSession, d: String): DataFrame = {
+  /** The quantizer-nominated batched k-NN join — q_knn_join_ivfadc with
+    * the residual [[AdcKit]], q_knn_join_sq8 with the cell-gated
+    * [[Sq8Kit]] — the rungs between q_knn_join_ivf (exact double
+    * nomination over the probed cells) and the single-query scans. Each
+    * query probes its KnnProbes nearest cells, [[nominatedOf]] scores
+    * every probed corpus row by its codes and keeps KnnR per query with
+    * the embedding as payload (one corpus scan), and [[knnRefine]]
+    * re-ranks the q × r survivors exactly. A code can misrank a true
+    * neighbor out of the r slots; the refine fixes rank order among the
+    * nominees, never nomination misses. The batch twin of
+    * VectorStore.knnJoin(nominate = Rung.Adc / Rung.Sq8), pinned
+    * byte-identical in VectorStoreSpec. */
+  private def knnJoinQuantized(s: SparkSession, d: String, kit: Quantizer): DataFrame = {
     graft.functions.GraftExtensions.ensureRegistered(s)
     import s.implicits._
-    val kit = ivfadcKitOf(s, d)
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(pmod(col("vec_id"), lit(KnnQMod)) === 0)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val compiled = queries.as[(Long, Seq[Float])].collect()
-      .filter { case (_, v) => v.exists(_ != 0f) }
-      .map { case (qid, v) => (qid, kit.query(v, KnnProbes)) }
-    val byCell: Map[Int, Array[(Long, AdcQuery)]] = compiled.toSeq
-      .flatMap { case (qid, qq) => qq.probeSet.iterator.map(c => (c, (qid, qq))) }
-      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
-    val bcKit = s.sparkContext.broadcast(kit)
-    val bcByCell = s.sparkContext.broadcast(byCell)
-    val scored = emb.filter(pmod(col("vec_id"), lit(KnnQMod)) =!= 0)
+    val compiled = compiledOf(kit, queries, KnnProbes)
+    val corpus = emb.filter(pmod(col("vec_id"), lit(KnnQMod)) =!= 0)
       .filter(dotDouble(col("embedding"), col("embedding")) > 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val k = bcKit.value
-        val m = bcByCell.value
-        it.flatMap { case (id, v) =>
-          val u = k.unitOf(v)
-          val cell = k.cellOf(u)
-          m.get(cell) match {
-            case None => Iterator.empty
-            case Some(qs) =>
-              val codes = k.codesOf(u, cell)
-              qs.iterator.map { case (qid, qq) =>
-                (qid, id, qq.scoreDec(cell, codes).doubleValue, v)
-              }
-          }
-        }
-      }
-      .toDF("qid", "vec_id", "adc", "embedding")
-    val nominated = scored
-      .groupBy("qid")
-      .agg(call_function("topk_pairs",
-        round(col("adc"), 9), col("vec_id"), col("embedding"), lit(KnnR)).as("cand"))
-      .select(col("qid"), explode(col("cand")).as("c"))
-      .select(col("qid"), col("c.id").as("vec_id"), col("c.payload").as("embedding"))
+    val nominated = nominatedOf(
+        encodedOf(corpus, kit, compiled.flatMap(_._2.probeSet).toSet), compiled, KnnR)
+      .withColumnRenamed("payload", "embedding")
     knnRefine(nominated, knnQueryFrameOf(queries), KnnK)
   }
 
@@ -2477,87 +2453,6 @@ object VectorQueries {
           WHERE rn <= $KnnR),
         $knnRerankSql"""
 
-  /** The SQ8-NOMINATED batched k-NN join (q_knn_join_sq8's body —
-    * VERDICT r19 Next #2): the middle rung between the 8-byte ADC
-    * nomination ([[knnJoinAdc]]) and the exact-double one
-    * ([[knnJoinIvf]]) — each probed corpus row scores against every
-    * query probing its cell by reconstruct-and-dot over its 64 uint8
-    * scalar codes (the ONE [[Sq8Kit]] spelling q_ann_sq8 and the
-    * persisted store share), an order of magnitude finer reconstruction
-    * than PQ at 8× the code bytes, then the shared exact DECIMAL refine.
-    * The Sq8 kit trains on the FULL table (the store's first-append
-    * frame — [[graft.streaming.VectorStore]] appends the whole corpus,
-    * so the served `knnJoin(sq8Nominate = true)` is byte-identical to
-    * this declaration; VectorStoreSpec pins it). One corpus scan: the
-    * r-bounded topk_pairs partials carry the embedding payload
-    * ([[knnJoinAdc]]'s shape). Round-9 nomination scores — the spelling
-    * that lets the oracle replay the ordering bit-stably. */
-  private def knnJoinSq8(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftExtensions.ensureRegistered(s)
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val centroids = trainCentroids(emb, s)
-    val kit8 = trainSq8(emb, s)
-    val queries = emb.filter(pmod(col("vec_id"), lit(KnnQMod)) === 0)
-      .select(col("vec_id").as("qid"), col("embedding"))
-    // bounded probe frame, compiled driver-side (the knnJoinAdc shape)
-    val raw = queries.as[(Long, Seq[Float])].collect()
-      .filter { case (_, v) => v.exists(_ != 0f) }
-    val byCell: Map[Long, Array[Long]] = raw.toSeq
-      .flatMap { case (qid, v) =>
-        probeCellsOf(centroids, v, KnnProbes).map(c => (c, qid))
-      }
-      .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
-    val qUnits: Map[Long, Array[Double]] =
-      raw.map { case (qid, v) => qid -> kit8.unitOf(v) }.toMap
-    // per-query LONG LUTs, compiled ONCE driver-side (r20; r21 compiles
-    // them in PARALLEL — the serial loop measured ~2.6 s for the sf1
-    // 800-query frame, see Sq8Kit.lutLongsOf): the decimal LUT was too
-    // heavy to precompile for the whole frame (q × ~0.8 MB per task was
-    // the old inline comment's veto), but the unscaled-long table is
-    // 128 KB per query — the full frame broadcasts once per executor,
-    // and scoring a pair drops from 64 exact double→decimal conversions
-    // to 64 long adds (bit-identical — Sq8Kit.scoreLutLong's same-scale
-    // argument; the oracle hash gates it)
-    val qLuts: Map[Long, Array[Array[Long]]] = kit8.lutLongsOf(qUnits)
-    val bcC = s.sparkContext.broadcast(centroids)
-    val bcK8 = s.sparkContext.broadcast(kit8)
-    val bcByCell = s.sparkContext.broadcast(byCell)
-    val bcQU = s.sparkContext.broadcast(qUnits)
-    val bcQL = s.sparkContext.broadcast(qLuts)
-    val scored = emb.filter(pmod(col("vec_id"), lit(KnnQMod)) =!= 0)
-      .filter(dotDouble(col("embedding"), col("embedding")) > 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        val k8 = bcK8.value
-        val m = bcByCell.value
-        val qs = bcQU.value
-        val ql = bcQL.value
-        it.flatMap { case (id, v) =>
-          val cell = probeCellsOf(cs, v, 1).head
-          m.get(cell) match {
-            case None => Iterator.empty
-            case Some(qids) =>
-              val codes = k8.codesOf(k8.unitOf(v))
-              qids.iterator.map { qid =>
-                (qid, id,
-                  k8.scoreLutLong(ql(qid), k8.lutOf(qs(qid)), codes)
-                    .doubleValue, v)
-              }
-          }
-        }
-      }
-      .toDF("qid", "vec_id", "s8", "embedding")
-    val nominated = scored
-      .groupBy("qid")
-      .agg(call_function("topk_pairs",
-        round(col("s8"), 9), col("vec_id"), col("embedding"), lit(KnnR)).as("cand"))
-      .select(col("qid"), explode(col("cand")).as("c"))
-      .select(col("qid"), col("c.id").as("vec_id"), col("c.payload").as("embedding"))
-    knnRefine(nominated, knnQueryFrameOf(queries), KnnK)
-  }
-
   /** q_knn_join_sq8's oracle: [[cellsCtes]]' assignment + the shared
     * probe CTE, the q_ann_sq8 min/max + affine-code spellings with a
     * qid dimension (trained over the FULL table — the store's
@@ -2606,7 +2501,7 @@ object VectorQueries {
   /** The persisted vector store both hybrid evals serve their dense leg
     * from — built ONCE per dataset with the SQ8 layout enabled, so the
     * same store serves the ADC-nominated leg (codes column; the sq8
-    * column is inert there) and the SQ8-nominated leg (r20). */
+    * column is inert there) and the SQ8-nominated leg. */
   private[graft] def hybridEvalStoreOf(s: SparkSession, d: String): String =
     Tables.materializeDir("vector_store", d) { p =>
       graft.streaming.VectorStore.append(s, p,
@@ -2614,17 +2509,20 @@ object VectorQueries {
         sq8 = true)
     }
 
-  /** The served-path hybrid eval engine (q_retrieval_eval_hybrid's body,
-    * extracted r20 so the SQ8 variant shares every seam): `sq8Dense`
-    * selects the dense SYSTEM leg — the store-served ADC-nominated join
-    * (byte-identical to q_knn_join_ivfadc) or the store-served
-    * SQ8-nominated one (byte-identical to q_knn_join_sq8). TRUTH is the
-    * same lexical list fused with the EXACT dense join either way, so
-    * the two declared readouts isolate what EACH nomination rung does to
-    * the fused ranking. */
-  private[graft] def hybridEvalOf(s: SparkSession, d: String, sq8Dense: Boolean): DataFrame = {
-        // the HYBRID eval over the SERVED paths (VERDICT r18 Next #5 —
-        // the `Cli hybrid-search` composition finally grades itself):
+  /** The served-path hybrid eval engine (the body of both
+    * q_retrieval_eval_hybrid variants, so they share every seam): `dense`
+    * names the nomination rung of the dense SYSTEM leg — the
+    * store-served ADC-nominated join (byte-identical to
+    * q_knn_join_ivfadc) or the store-served SQ8-nominated one
+    * (byte-identical to q_knn_join_sq8). TRUTH is the same lexical list
+    * fused with the EXACT dense join either way, so the two declared
+    * readouts isolate what EACH nomination rung does to the fused
+    * ranking. */
+  private[graft] def hybridEvalOf(
+      s: SparkSession, d: String,
+      dense: graft.streaming.VectorStore.Rung): DataFrame = {
+        // the HYBRID eval over the SERVED paths (the `Cli hybrid-search`
+        // composition grading itself):
         // SYSTEM = per-probe RRF fusion of the store-served BM25 rank
         // list (PostingsStore.probeBatch, ONE bucket-pruned read for all
         // probes — byte-identical to the full-scan BM25 by the postings
@@ -2643,7 +2541,7 @@ object VectorQueries {
         // stay ONE pruned store read + two corpus scans (ADC nominate +
         // exact truth), independent of probe count.
         import s.implicits._
-        // r21 (guide §2.6 — overlap independent jobs): the three rank
+        // overlap independent jobs: the three rank
         // legs are data-independent until fusion, but each one
         // materializes eagerly (the lexical probe collect + checkpoint,
         // the store join's validation scans, the exact truth join), so
@@ -2678,7 +2576,7 @@ object VectorQueries {
                 .select(col("vec_id").as("qid"), col("embedding"))
               graft.streaming.VectorStore.knnJoin(s, vstore, queries,
                   excludeWhere = Some(pmod(col("vec_id"), lit(KnnQMod)) === 0),
-                  adcNominate = !sq8Dense, sq8Nominate = sq8Dense)
+                  nominate = dense)
                 .select(col("qid"), col("vec_id").as("doc_id"),
                   col("knn_rank").cast(LongType).as("rank_dense"))
                 .localCheckpoint()
@@ -2950,54 +2848,10 @@ object VectorQueries {
         // iterative (not SQL-expressible) but deterministic, so the oracle
         // reads the materialized codebooks and re-derives every code
         // assignment and the ADC top-k itself, exactly like
-        // q_ann_ivf_kmeans's oracle.
-        import s.implicits._
-        val emb = Tables.embeddings(s, d)
-        val cbs = trainPqCodebooks(emb, s)
-        val hns = cbs.map(halfNormsOf)
-        val qu = unit(emb.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Seq[Float]].head())
-        // query LUT: dot of the query subvector with every codeword,
-        // ascending-index loops — the arithmetic the oracle's
-        // list_inner_product reproduces
-        val lut = Array.tabulate(PqM) { m =>
-          Array.tabulate(PqK) { j =>
-            var ip = 0.0
-            var i = 0
-            while (i < PqSub) { ip += qu(m * PqSub + i) * cbs(m)(j)(i); i += 1 }
-            ip
-          }
-        }
-        val bcCb = s.sparkContext.broadcast(cbs)
-        val bcHn = s.sparkContext.broadcast(hns)
-        val bcLut = s.sparkContext.broadcast(lut)
-        emb.filter(col("vec_id") =!= 0)
-          .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-          .mapPartitions { it =>
-            val cb = bcCb.value; val hn = bcHn.value; val lt = bcLut.value
-            // the 8-dot LUT values pre-rounded to DECIMAL(38,18) once —
-            // the sum is then EXACT (order-insensitive), matching the
-            // oracle's SUM(CAST(dot AS DECIMAL(38,18))) regardless of
-            // DuckDB's aggregation order (an unpinned double SUM could
-            // differ by ulps at a round-to-9 boundary)
-            val ltDec = lt.map(_.map(d =>
-              new java.math.BigDecimal(d)
-                .setScale(18, java.math.RoundingMode.HALF_UP)))
-            it.map { case (id, v) =>
-              val u = unit(v)
-              var adc = java.math.BigDecimal.ZERO
-              var m = 0
-              while (m < PqM) {
-                adc = adc.add(ltDec(m)(nearestCode(cb(m), hn(m), u, m * PqSub)))
-                m += 1
-              }
-              (id, adc.doubleValue)
-            }
-          }
-          .toDF("vec_id", "adc")
-          .select(col("vec_id"), round(col("adc"), 9).as("adc"))
-          .orderBy(col("adc").desc, col("vec_id"))
-          .limit(10)
+        // q_ann_ivf_kmeans's oracle. One all-zero cell: no coarse
+        // quantizer, every row scored.
+        annTopK(s, d, AdcKit(OneCell, trainPqCodebooks(Tables.embeddings(s, d), s)),
+          probes = 1)
       },
       Some(pqOracleSql),
       "Product-quantization ANN (ADC): 8×16 deterministic per-subspace codebooks " +
@@ -3023,32 +2877,9 @@ object VectorQueries {
         // train and one rung coarser than PQ's subspace codebooks.
         // DECIMAL-pinned per-dim terms (the PQ order-insensitivity
         // discipline) so the oracle's SUM replays the fold bit-for-bit.
-        import s.implicits._
-        val emb = Tables.embeddings(s, d)
-        // train + encode + score through the ONE Sq8Kit spelling (shared
-        // with the persisted VectorStore SQ8 layout — r19: the inline
-        // arithmetic moved into the kit verbatim so store serving cannot
-        // drift from this declaration)
-        val kit = trainSq8(emb.filter(col("vec_id") =!= 0), s)
-        val qu = unit(emb.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Seq[Float]].head())
-        // one query -> one LONG LUT (r20): 64 long lookups + adds per
-        // row, bit-identical to scoreDec (scoreLutLong's same-scale
-        // argument); the per-row cost left is the encode itself
-        val bc = s.sparkContext.broadcast((kit, qu, kit.lutLongOf(qu)))
-        emb.filter(col("vec_id") =!= 0)
-          .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-          .mapPartitions { it =>
-            val (k, u, lutL) = bc.value
-            it.map { case (id, v) =>
-              (id, k.scoreLutLong(lutL, k.lutOf(u), k.codesOf(k.unitOf(v)))
-                .doubleValue)
-            }
-          }
-          .toDF("vec_id", "adc")
-          .select(col("vec_id"), round(col("adc"), 9).as("adc"))
-          .orderBy(col("adc").desc, col("vec_id"))
-          .limit(10)
+        // The kit trains on the rows it scores (row 0 is the query).
+        annTopK(s, d, trainSq8(Tables.embeddings(s, d).filter(col("vec_id") =!= 0), s),
+          probes = 1)
       },
       Some(s"""WITH dv AS (
                  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS d FROM embeddings),
@@ -3098,49 +2929,8 @@ object VectorQueries {
         // training-sample reconstruction error is ≤ plain PQ's by
         // construction (AnnRecallSpec pins it); oracle re-derives rotated
         // vectors, codes and the ADC top-k from the two artifacts.
-        import s.implicits._
-        val emb = Tables.embeddings(s, d)
-        val (rot, cbs) = trainOpq(emb, s)
-        val hns = cbs.map(halfNormsOf)
-        val qu = rotate(rot, unit(emb.filter(col("vec_id") === 0)
-          .select(col("embedding")).as[Seq[Float]].head()))
-        val lut = Array.tabulate(PqM) { m =>
-          Array.tabulate(cbs(m).length) { j =>
-            var ip = 0.0
-            var i = 0
-            while (i < PqSub) { ip += qu(m * PqSub + i) * cbs(m)(j)(i); i += 1 }
-            ip
-          }
-        }
-        val bcR = s.sparkContext.broadcast(rot)
-        val bcCb = s.sparkContext.broadcast(cbs)
-        val bcHn = s.sparkContext.broadcast(hns)
-        val bcLut = s.sparkContext.broadcast(lut)
-        emb.filter(col("vec_id") =!= 0)
-          .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-          .mapPartitions { it =>
-            val rr = bcR.value; val cb = bcCb.value
-            val hn = bcHn.value; val lt = bcLut.value
-            // DECIMAL-pinned LUT sum — the q_ann_pq order-insensitivity
-            // contract
-            val ltDec = lt.map(_.map(d =>
-              new java.math.BigDecimal(d)
-                .setScale(18, java.math.RoundingMode.HALF_UP)))
-            it.map { case (id, v) =>
-              val x = rotate(rr, unit(v))
-              var adc = java.math.BigDecimal.ZERO
-              var m = 0
-              while (m < PqM) {
-                adc = adc.add(ltDec(m)(nearestCode(cb(m), hn(m), x, m * PqSub)))
-                m += 1
-              }
-              (id, adc.doubleValue)
-            }
-          }
-          .toDF("vec_id", "adc")
-          .select(col("vec_id"), round(col("adc"), 9).as("adc"))
-          .orderBy(col("adc").desc, col("vec_id"))
-          .limit(10)
+        val (rot, cbs) = trainOpq(Tables.embeddings(s, d), s)
+        annTopK(s, d, AdcKit(OneCell, cbs, rot), probes = 1)
       },
       Some(opqOracleSql),
       "Optimized product quantization (Ge et al. 2014): one jointly-trained " +
@@ -3163,7 +2953,7 @@ object VectorQueries {
       // recipes above, so the oracle re-derives cell assignments, the
       // probe, every code, and the ADC top-k from the two materialized
       // artifacts.
-      (s, d) => ivfPqTopK(s, d, probes = 1),
+      (s, d) => annTopK(s, d, ivfPqKitOf(s, d), probes = 1),
       Some(ivfPqOracleSql(1)),
       "IVF-PQ ANN (the IVFADC layout): trained coarse cells prune the scan to the " +
         "query's probe, PQ codes give 8-lookup ADC scoring inside it — cell = " +
@@ -3176,7 +2966,7 @@ object VectorQueries {
       // the full production ANN stack: multi-probe recall knob on top of
       // the IVFADC layout — probe the 4 query-nearest trained cells, ADC
       // inside them. 4/16 of the table scanned at 8 LUT lookups per row.
-      (s, d) => ivfPqTopK(s, d, probes = 4),
+      (s, d) => annTopK(s, d, ivfPqKitOf(s, d), probes = 4),
       Some(ivfPqOracleSql(4)),
       "Multi-probe IVF-PQ: the 4 query-nearest trained cells pruned, 8-lookup ADC " +
         "scoring inside them — the recall knob composed onto the IVFADC layout; " +
@@ -3198,7 +2988,7 @@ object VectorQueries {
 
     QueryDef(
       "q_ann_ivfadc", Seq("A5", "O5", "J2"),
-      (s, d) => ivfadcTopK(s, d, probes = 4),
+      (s, d) => annTopK(s, d, ivfadcKitOf(s, d), probes = 4),
       Some(ivfadcOracleSql(4)),
       "Residual-encoded IVFADC (Jégou et al. 2011 §III-C — the paper's actual " +
         "encoding): PQ codebooks trained on coarse residuals u − c_cell, scored by " +
@@ -3285,7 +3075,7 @@ object VectorQueries {
         // SAME signature/bucket engine as q_neardup_lsh, with `label`
         // prepended to the bucket key — within-label candidates track
         // similar-pair density instead of enumerating all n²/|label| pairs
-        // (VERDICT r4: the label-only join was the last quadratic plan)
+        // (a label-only join would be quadratic within each label)
         val emb = Tables.embeddings(s, d)
         val cand = bucketPairs(signatures(emb, Seq("label")), Seq("label"))
         verifyPairs(cand, emb, 0.3)
@@ -3629,13 +3419,13 @@ object VectorQueries {
       "q_knn_join_ivfadc", Seq("A5", "J2", "J1"),
       (s, d) => {
         // the ADC-NOMINATED batched k-NN join — the index-serving rung of
-        // the join ladder (see [[knnJoinAdc]]): nomination costs 8
+        // the join ladder (see [[knnJoinQuantized]]): nomination costs 8
         // decimal lookups + one add per (probed row, query) instead of
         // the 64-term cosine, the shape the persisted IVFADC store serves
         // at 100 TB (VectorStore.knnJoin — byte-identical by the shared
         // kit, pinned in VectorStoreSpec); exact decimal refine restores
         // true ranks among the nominees.
-        knnJoinAdc(s, d)
+        knnJoinQuantized(s, d, ivfadcKitOf(s, d))
       },
       Some(knnJoinAdcOracleSql),
       "ADC-nominated batched k-NN join: each probed corpus row scores against its " +
@@ -3649,15 +3439,19 @@ object VectorQueries {
     QueryDef(
       "q_knn_join_sq8", Seq("A5", "J2", "J1"),
       (s, d) => {
-        // the SQ8-NOMINATED batched k-NN join (VERDICT r19 Next #2) —
-        // the middle rung of the nomination ladder (see [[knnJoinSq8]]):
-        // 64 uint8 scalar codes reconstruct-and-dot per (probed row,
-        // probing query) instead of the 8-LUT ADC or the exact cosine,
-        // the shape the persisted store serves as
-        // VectorStore.knnJoin(sq8Nominate = true) — byte-identical by
-        // the shared Sq8Kit, pinned in VectorStoreSpec; exact decimal
-        // refine restores true ranks among the nominees.
-        knnJoinSq8(s, d)
+        // the SQ8-NOMINATED batched k-NN join — the middle rung of the
+        // nomination ladder (see [[knnJoinQuantized]]): 64 uint8 scalar
+        // codes reconstruct-and-dot per (probed row, probing query)
+        // instead of the 8-LUT ADC or the exact cosine, an order of
+        // magnitude finer reconstruction than PQ at 8× the code bytes.
+        // The kit trains on the FULL table (the store's first-append
+        // frame), gated by the trained cells, so the persisted store
+        // serves it as VectorStore.knnJoin(nominate = Rung.Sq8) —
+        // byte-identical by the shared Sq8Kit, pinned in VectorStoreSpec;
+        // exact decimal refine restores true ranks among the nominees.
+        val emb = Tables.embeddings(s, d)
+        val cells = trainCentroids(emb, s)
+        knnJoinQuantized(s, d, trainSq8(emb, s).copy(cs = cells))
       },
       Some(knnJoinSq8OracleSql),
       "SQ8-nominated batched k-NN join: each probed corpus row scores against its " +
@@ -3818,7 +3612,7 @@ object VectorQueries {
     QueryDef(
       "q_hybrid_rrf_ann", Seq("A4", "J2", "O3", "W2", "A5"),
       (s, d) => {
-        // the PRODUCTION hybrid composition (VERDICT r15 Next #2):
+        // the PRODUCTION hybrid composition:
         // q_hybrid_rrf proves the fusion arithmetic against a brute-force
         // dense leg; here the dense leg is the ANN ladder's top stage —
         // the IVFADC multi-probe scan nominates RefineR candidates, their
@@ -3865,8 +3659,7 @@ object VectorQueries {
     QueryDef(
       "q_retrieval_eval", Seq("A4", "O3", "J2"),
       (s, d) => {
-        // retrieval-quality readout as a DECLARED query (VERDICT r15 Next
-        // #7): recall@10 and MRR of the production rankings against their
+        // retrieval-quality readout as a DECLARED query: recall@10 and MRR of the production rankings against their
         // exact ground truths — AnnRecallSpec measures this in tests, but
         // a production corpus wants it as a monitored dataset-card number
         // recomputed with every index build. Two systems:
@@ -3881,7 +3674,7 @@ object VectorQueries {
         // Every stage is 10-to-100-row bounded after the probes, and the
         // truth lists broadcast into the hit joins.
         //
-        // COST SHAPE (VERDICT r16 #4+#5): the ANN nomination runs ONCE —
+        // COST SHAPE: the ANN nomination runs ONCE —
         // the RefineR-bounded ivfPqRefinedCosine result localCheckpoints
         // (50 rows) and both the standalone ranking and the hybrid's
         // dense leg read the materialization, instead of re-running the
@@ -3902,7 +3695,7 @@ object VectorQueries {
           df.orderBy(score.desc, id).limit(n)
             .select(id.as("doc_id"), row_number()
               .over(Window.orderBy(score.desc, id)).cast(LongType).as("rank"))
-        // r21 (guide §2.6): the three leg materializations are
+        // the three leg materializations are
         // data-independent — overlap them on driver threads exactly like
         // hybridEvalOf (each is deterministic; Await rethrows loudly)
         val (bruteTop, ann, lex) = {
@@ -3934,7 +3727,7 @@ object VectorQueries {
         val sysH = rrfFuseOf(lex, dnsA)
           .orderBy("rank_fused").limit(10)
           .select(col("doc_id"), col("rank_fused").as("rank"))
-        // ndcg@10 (r19, the eval-symmetry sweep): both truths are exact
+        // ndcg@10 (eval symmetry with the other evals): both truths are exact
         // top-10 lists, so IDCG is the discount table's cum at rank 10 —
         // one driver-side constant; DCG joins the k-row literal
         val discDf = ndcgDiscounts(LexK).toDF("rank", "disc", "cum")
@@ -4059,7 +3852,7 @@ object VectorQueries {
         // the cell pruning strands) that the averaged single number
         // hides. Output is per-probe, probe-sample-bounded rows.
         // the truth leg serves TWO consumers (the hit join and the probe
-        // DOMAIN — ADVICE r17: a probe whose probed cells hold zero
+        // DOMAIN: a probe whose probed cells hold zero
         // corpus rows produces no system rows at all, and its
         // recall-0/MRR-0 row is exactly the stranded-neighborhood signal
         // this per-probe readout exists to expose, so the output domain
@@ -4067,7 +3860,7 @@ object VectorQueries {
         // shares no common subplan across two frame references —
         // localCheckpoint the probes × KnnK truth rows once.
         import s.implicits._
-        // r21 (guide §2.6): the truth checkpoint and the system leg's
+        // the truth checkpoint and the system leg's
         // eager setup (knnJoinIvf trains the coarse centroids on the
         // driver) are independent — overlap them on driver threads
         val (tru, sysJoin) = {
@@ -4084,7 +3877,7 @@ object VectorQueries {
             (Await.result(fTru, Duration.Inf), Await.result(fSys, Duration.Inf))
           } finally pool.shutdown()
         }
-        // the driver-materialized discount table (r19: ndcg@k joins as a
+        // the driver-materialized discount table (ndcg@k joins as a
         // k-row literal — the distributed plan never computes a log)
         val discDf = ndcgDiscounts(LexK).toDF("knn_rank", "disc", "cum")
         val sysEval = sysJoin
@@ -4156,16 +3949,16 @@ object VectorQueries {
         "oracle via nested WITH); the per-probe rows expose which probes' " +
         "neighborhoods the cell pruning strands — the output domain is the EXACT " +
         "leg's probe set, so a probe with zero system rows surfaces as an explicit " +
-        "recall-0/MRR-0 row instead of vanishing (ADVICE r17); ndcg@k via the " +
-        "driver-materialized StrictMath discount table (r19 — the log never runs " +
+        "recall-0/MRR-0 row instead of vanishing; ndcg@k via the " +
+        "driver-materialized StrictMath discount table (the log never runs " +
         "distributed, both engines read one artifact)",
       aux = Some((s, d, out) => { writeKmeansAux(s, d, out); writeNdcgAux(s, d, out) })),
 
     QueryDef(
       "q_retrieval_eval_lex", Seq("A4", "J2", "A1"),
       (s, d) => {
-        // the LEXICAL twin of q_retrieval_eval_multi (eval symmetry —
-        // VERDICT r17 #8): the postings store gets the same per-probe
+        // the LEXICAL twin of q_retrieval_eval_multi (eval symmetry):
+        // the postings store gets the same per-probe
         // quality readout the dense index has. Probes = the
         // deterministic doc_id % LexQMod document sample; each probe's
         // query = its first LexNT DISTINCT tokens in document order
@@ -4214,8 +4007,8 @@ object VectorQueries {
             count(col("rank")).as("n_hits"),
             min(col("rank")).as("first_rel"),
             sum(col("disc")).as("dcg_dec"))
-        // output domain = ALL probes (the ADVICE-r17 lesson: a probe
-        // with no relevant docs surfaces as an explicit row). IDCG =
+        // output domain = ALL probes (a probe with no relevant docs
+        // surfaces as an explicit row, never vanishes). IDCG =
         // cum(min(n_rel, k)) — truth here can exceed the k-bounded rank
         // list, unlike the dense eval
         nT.join(broadcast(truthAgg), Seq("qid"), "left")
@@ -4288,13 +4081,13 @@ object VectorQueries {
     QueryDef(
       "q_retrieval_eval_hybrid", Seq("A4", "J2", "A1", "O3"),
       (s, d) => {
-        // the HYBRID eval over the SERVED paths (VERDICT r18 Next #5 —
-        // the `Cli hybrid-search` composition finally grades itself);
-        // body extracted to [[hybridEvalOf]] (shared with the r20 SQ8
-        // variant): SYSTEM = store-served BM25 ⊕ store-served
-        // ADC-nominated join, TRUTH = the same lexical list ⊕ the EXACT
-        // dense join, per-probe RRF, metrics over the fused top-LexK.
-        hybridEvalOf(s, d, sq8Dense = false)
+        // the HYBRID eval over the SERVED paths (the `Cli hybrid-search`
+        // composition grading itself); body in [[hybridEvalOf]] (shared
+        // with the SQ8 variant): SYSTEM = store-served BM25 ⊕
+        // store-served ADC-nominated join, TRUTH = the same lexical list
+        // ⊕ the EXACT dense join, per-probe RRF, metrics over the fused
+        // top-LexK.
+        hybridEvalOf(s, d, graft.streaming.VectorStore.Rung.Adc)
       },
       Some(hybridEvalOracleSql(knnJoinAdcOracleSql)),
       "Hybrid retrieval eval over the SERVED paths: per probe of the dense " +
@@ -4312,9 +4105,9 @@ object VectorQueries {
     QueryDef(
       "q_retrieval_eval_hybrid_sq8", Seq("A4", "J2", "A1", "O3"),
       (s, d) => {
-        // the hybrid eval with the SQ8-nominated dense leg (VERDICT r19
-        // Next #4): `Cli hybrid-search --sq8`'s finer-recall serving
-        // path graded through the identical fusion/metric engine —
+        // the hybrid eval with the SQ8-nominated dense leg:
+        // `Cli hybrid-search --sq8`'s finer-recall serving path graded
+        // through the identical fusion/metric engine —
         // SYSTEM = store-served BM25 ⊕ store-served SQ8-nominated join
         // (byte-identical to q_knn_join_sq8 by the VectorStore pins),
         // TRUTH unchanged, so the two declared hybrid readouts differ
@@ -4322,7 +4115,7 @@ object VectorQueries {
         // measure exactly what the finer scalar codes buy the fused
         // ranking. Shares the one materialized store with the ADC
         // variant (built sq8-enabled; each leg reads its own codes).
-        hybridEvalOf(s, d, sq8Dense = true)
+        hybridEvalOf(s, d, graft.streaming.VectorStore.Rung.Sq8)
       },
       Some(hybridEvalOracleSql(knnJoinSq8OracleSql)),
       "Hybrid retrieval eval over the SQ8-nominated served path: the store-served " +

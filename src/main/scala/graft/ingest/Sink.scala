@@ -56,6 +56,14 @@ object Sink {
       "record_check" -> table(check, "collection_id", "check_bucket"))
   }
 
+  /** The content store's schema ([[writeDedupStore]]). Its `hash_bucket`
+    * partition holds hex digits, so it is a STRING, which is not always
+    * what partition discovery infers: a store whose rows all fall in
+    * digit buckets infers INT. It stays out of [[TableSchemas]], whose
+    * schemas SinkSpec checks against inference. */
+  val DedupStoreSchema: StructType =
+    StructType(Seq("hash_md5", "data", "hash_bucket").map(StructField(_, StringType)))
+
   /** The declared schema of the table at `path`, by its directory name.
     * A table holding a collection id beyond INT gets a BIGINT
     * `collection_id`, as partition discovery would type it; an INT
@@ -375,9 +383,12 @@ object Sink {
       .parquet(path)
 
   /** The store as one row per content hash, however many appends wrote
-    * that hash (the readers-distinct idiom of the corpus engines). */
+    * that hash (the readers-distinct idiom of the corpus engines). It
+    * reads with the declared [[DedupStoreSchema]]: no footer job, and a
+    * store left with no data file (an orphan sweep that removed every
+    * row) reads as empty instead of failing schema inference. */
   def readDedupStore(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).dropDuplicates("hash_md5")
+    spark.read.schema(DedupStoreSchema).parquet(path).dropDuplicates("hash_md5")
 
   /** Sink for small per-collection tables (collection_note, package_data):
     * same collection_id partitioning as the fact tables (wipes stay

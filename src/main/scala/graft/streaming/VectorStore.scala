@@ -125,30 +125,6 @@ object VectorStore {
     graft.VectorQueries.AdcKit(cs, cbs, rot)
   }
 
-  /** The stored kit for SERVING — load-only, never train:
-    * [[kitOf]]'s load-or-train fallback is correct at APPEND time (the
-    * first batch trains the store's permanent quantizers) but lethal at
-    * probe time — a store whose codebook artifact vanished (partial
-    * store copy, deleted dir) while its coded rows survived would
-    * silently retrain NEW codebooks and score the OLD persisted code
-    * bytes against them, serving mixed-epoch ADC scores with no error.
-    * Serving requires both trained artifacts to already exist and fails
-    * with the rebuild instruction otherwise. */
-  def servingKitOf(spark: SparkSession, lake: String): graft.VectorQueries.AdcKit = {
-    def missing(what: String) =
-      s"vector store at $lake has coded rows but no persisted $what — " +
-        "retraining at serve time would score the stored codes against " +
-        "a different quantizer epoch; rebuild the store (re-append the " +
-        "corpus to a fresh store, or Cli vector-index) before serving " +
-        "ADC probes"
-    require(graft.ingest.Sink.readOrEmpty(spark, centroidPath(lake)).isDefined,
-      missing("coarse quantizer (vector_centroids)"))
-    require(graft.ingest.Sink.readOrEmpty(spark, codebookPath(lake)).isDefined,
-      missing("PQ codebooks (vector_codebooks)"))
-    kitOf(spark, lake,
-      sys.error("unreachable: servingKitOf verified both artifacts exist"))
-  }
-
   /** Load the stored SQ8 affine kit, or train it from `vecs` and
     * persist it when `enable` (FIRST sq8-enabled append — train-once,
     * the codebook/rotation discipline: the per-dim min/max written here
@@ -174,16 +150,87 @@ object VectorStore {
     }
   }
 
-  /** The stored SQ8 kit for SERVING — load-only, never train (the
-    * servingKitOf discipline): fails with the rebuild instruction when
-    * the artifact is missing. */
-  private def servingSq8KitOf(spark: SparkSession, lake: String): graft.VectorQueries.Sq8Kit =
-    sq8KitOf(spark, lake,
-      sys.error("unreachable: serving never trains"), enable = false)
+  /** The nomination rung of a served k-NN join ([[knnJoin]]): what
+    * scores the probed rows before the exact refine. */
+  sealed trait Rung
+  object Rung {
+    /** the exact double cosine over the raw vectors — q_knn_join_ivf's
+      * engine over the persisted cell layout */
+    case object Exact extends Rung
+    /** the 8 stored residual-PQ code bytes (q_knn_join_ivfadc) */
+    case object Adc extends Rung
+    /** the 64 stored SQ8 scalar codes (q_knn_join_sq8); needs the
+      * `--sq8` layout */
+    case object Sq8 extends Rung
+  }
+
+  /** Serving loads stored quantizers and never trains them: a store
+    * whose artifact vanished (partial store copy, deleted dir) while its
+    * coded rows survived would otherwise silently retrain and score the
+    * OLD persisted codes against a new quantizer epoch. */
+  private def requireStored(
+      spark: SparkSession, lake: String, path: String, what: String): Unit =
+    require(graft.ingest.Sink.readOrEmpty(spark, path).isDefined,
+      s"vector store at $lake has coded rows but no persisted $what — " +
+        "retraining at serve time would score the stored codes against " +
+        "a different quantizer epoch; rebuild the store (re-append the " +
+        "corpus to a fresh store, or Cli vector-index) before serving")
+
+  /** The stored ADC kit for SERVING — load-only, never train
+    * ([[kitOf]]'s load-or-train fallback is correct at APPEND time only;
+    * see [[requireStored]]). */
+  def servingKitOf(spark: SparkSession, lake: String): graft.VectorQueries.AdcKit = {
+    requireStored(spark, lake, centroidPath(lake), "coarse quantizer (vector_centroids)")
+    requireStored(spark, lake, codebookPath(lake), "PQ codebooks (vector_codebooks)")
+    kitOf(spark, lake,
+      sys.error("unreachable: servingKitOf verified both artifacts exist"))
+  }
+
+  /** The stored SQ8 kit for SERVING — load-only, never train — gated by
+    * the stored cells (a full scan probes them all). Fails with the build
+    * instruction when the store never enabled the layout. */
+  private def servingSq8KitOf(spark: SparkSession, lake: String): graft.VectorQueries.Sq8Kit = {
+    requireStored(spark, lake, centroidPath(lake), "coarse quantizer (vector_centroids)")
+    sq8KitOf(spark, lake, sys.error("unreachable: serving never trains"), enable = false)
       .getOrElse(throw new IllegalArgumentException(
         s"vector store at $lake has no persisted SQ8 kit (vector_sq8) — " +
           "build the layout (Cli vector-index --sq8, or append with " +
           "sq8 = true from the first batch) before serving SQ8 probes"))
+      .copy(cs = centroidsOf(spark, lake, sys.error("unreachable: checked above")))
+  }
+
+  /** The stored layout a rung scores, checked once: the serving kit and
+    * the column holding its codes. A lake written before the layout has
+    * no such column, and serving it silently would drop stored vectors
+    * from every answer, so it fails LOUDLY with the build instruction.
+    * The exact rung probes with the ADC kit's cells, which rank like
+    * the declared join's probeCellsOf. */
+  private def servingLayout(
+      spark: SparkSession, lake: String, store: DataFrame,
+      rung: Rung): (graft.VectorQueries.Quantizer, String) = rung match {
+    case Rung.Sq8 =>
+      require(store.columns.contains("sq8"),
+        s"vector store at $lake has no sq8 column — build the layout " +
+          "(Cli vector-index --sq8, or append with sq8 = true from the " +
+          "first batch) before serving SQ8 probes")
+      (servingSq8KitOf(spark, lake), "sq8")
+    case _ =>
+      require(store.columns.contains("codes"),
+        s"vector store at $lake predates the coded IVFADC layout — " +
+          "rebuild it (re-append the corpus to a fresh store, or Cli " +
+          "vector-index) before serving ADC probes")
+      (servingKitOf(spark, lake), "codes")
+  }
+
+  /** Fails LOUDLY when a row of the probed slice has null `codes` (rows
+    * appended before the layout, mixed in by a later append). One job. */
+  private def requireCoded(slice: DataFrame, codes: String, lake: String): Unit = {
+    val n = slice.filter(col(codes).isNull).count()
+    require(n == 0L,
+      s"$n stored vectors in the probed cells have no $codes codes " +
+        s"(rows appended before that layout mixed into $lake) — rebuild " +
+        "the store before serving from it")
+  }
 
   /** Cell + code assignment for append. `znorm` is the codes-side
     * zero-norm marker: a zero-norm vector has no cosine,
@@ -198,31 +245,19 @@ object VectorStore {
       kit: graft.VectorQueries.AdcKit,
       sq8: Option[graft.VectorQueries.Sq8Kit] = None): DataFrame = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(kit)
-    val base = vecs.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
-    sq8 match {
-      case None =>
-        base.mapPartitions { it =>
-          val k = bc.value
-          it.map { case (id, v) =>
-            val u = k.unitOf(v)
-            val cell = k.cellOf(u)
-            (id, v, cell.toLong, k.codesOf(u, cell).toSeq, v.forall(_ == 0f))
-          }
-        }.toDF("vec_id", "embedding", "cell", "codes", "znorm")
-      case Some(sk) =>
-        val bcS = spark.sparkContext.broadcast(sk)
-        base.mapPartitions { it =>
-          val k = bc.value
-          val s8 = bcS.value
-          it.map { case (id, v) =>
-            val u = k.unitOf(v)
-            val cell = k.cellOf(u)
-            (id, v, cell.toLong, k.codesOf(u, cell).toSeq, v.forall(_ == 0f),
-              s8.codesOf(u).toSeq)
-          }
-        }.toDF("vec_id", "embedding", "cell", "codes", "znorm", "sq8")
-    }
+    val bc = spark.sparkContext.broadcast((kit, sq8))
+    val rows = vecs.select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
+      .mapPartitions { it =>
+        val (k, s8) = bc.value
+        it.map { case (id, v) =>
+          val u = k.unitOf(v)
+          val cell = k.cellOf(u)
+          (id, v, cell.toLong, k.codesOf(u, cell).toSeq, v.forall(_ == 0f),
+            s8.map(_.codesOf(u).toSeq))
+        }
+      }.toDF("vec_id", "embedding", "cell", "codes", "znorm", "sq8")
+    // a store without the SQ8 layout grows no sq8 column
+    if (sq8.isEmpty) rows.drop("sq8") else rows
   }
 
   /** Cell assignment WITHOUT codes — the dedup probe's path (the probe
@@ -271,163 +306,92 @@ object VectorStore {
     * probed `cell=` partitions, fold replay duplicates, and ADC-score
     * the 8 stored code bytes per row — the embedding column is never
     * read. Byte-identical to the batch q_ann_ivfadc on the same rows
-    * (same kit arithmetic by construction; VectorStoreSpec pins it).
-    * At 100 TB the probe reads probes/k of the code column only. */
+    * (same kit and scorer; VectorStoreSpec pins it). At 100 TB the probe
+    * reads probes/k of the code column only. */
   def adcProbe(
       spark: SparkSession, lake: String, qv: Seq[Float],
-      probes: Int, k: Int, exclude: Set[Long] = Set.empty): DataFrame = {
-    import spark.implicits._
-    val store = graft.ingest.Sink.readOrEmpty(spark, vecPath(lake), merge = true)
-      .getOrElse(return Seq.empty[(Long, Double)].toDF("vec_id", "adc"))
-    // a lake written before the coded-index layout has no codes column
-    // (or null codes on its old rows after a mixed append): serving it
-    // silently would drop stored vectors from every answer, so fail
-    // LOUDLY with the rebuild instruction instead
-    require(store.columns.contains("codes"),
-      s"vector store at $lake predates the coded IVFADC layout — " +
-        "rebuild it (re-append the corpus to a fresh store, or Cli " +
-        "vector-index) before serving ADC probes")
-    val kit = servingKitOf(spark, lake)
-    val q = kit.query(qv, probes)
-    val cells = q.probeSet.map(_.toLong).toSeq
-    val bcQ = spark.sparkContext.broadcast(q)
-    val pruned = store.filter(col("cell").isin(cells: _*))
-    val nUncoded = pruned.filter(col("codes").isNull).count()
-    require(nUncoded == 0L,
-      s"$nUncoded stored vectors in the probed cells have no codes " +
-        s"(pre-layout rows mixed into $lake) — rebuild the store before " +
-        "serving ADC probes")
-    pruned
-      .filter(if (exclude.isEmpty) lit(true)
-              else !col("vec_id").isin(exclude.toSeq: _*))
-      // at-least-once replay rows are byte-identical (same kit, same
-      // vector) — one survives, whichever
-      .dropDuplicates("vec_id")
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Long, Seq[Int])]
-      .mapPartitions { it =>
-        val qq = bcQ.value
-        it.map { case (id, cell, codes) =>
-          (id, qq.scoreDec(cell.toInt, codes.toArray).doubleValue)
-        }
-      }
-      .toDF("vec_id", "adc")
-      .select(col("vec_id"), round(col("adc"), 9).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(k)
-  }
+      probes: Int, k: Int, exclude: Set[Long] = Set.empty): DataFrame =
+    servedTopK(spark, lake, qv, Rung.Adc, probes, k, exclude)
 
-  /** Serve an SQ8 top-k FROM THE STORE's persisted affine codes
-    * (the codebook-free serving rung below the
-    * PQ-family [[adcProbe]]): reconstruct-and-dot over the stored
-    * uint8 column through the ONE [[graft.VectorQueries.Sq8Kit]]
-    * spelling, so the served answer is byte-identical to the declared
-    * q_ann_sq8 on the same rows (VectorStoreSpec pins it — same train
-    * frame, same codes, same DECIMAL terms, same round-9 ranking).
-    * The scan reads (vec_id, sq8) ONLY — neither the raw embeddings
-    * nor the PQ codes; plain SQ8 has no coarse quantizer so there is no
-    * cell pruning (q_ann_sq8's full-scan shape, an order of magnitude
-    * finer reconstruction than PQ at 8× the bytes — the rate-distortion
-    * position AnnRecallSpec pins). Zero-norm stored rows score like the
-    * declared query scores them (unit() passes them through raw) —
-    * SQ8 ranks by reconstructed inner product, not cosine, so they need
-    * no special casing. Replay duplicates fold once (byte-identical
-    * rows — same stored kit). Fails LOUDLY on a store without the sq8
-    * layout or with pre-layout uncoded rows (the adcProbe contract). */
+  /** Serve an SQ8 top-k FROM THE STORE's persisted affine codes (the
+    * codebook-free serving rung below [[adcProbe]]): reconstruct-and-dot
+    * over the stored uint8 column through the shared
+    * [[graft.VectorQueries.Sq8Kit]], so the served answer is
+    * byte-identical to the declared q_ann_sq8 on the same rows
+    * (VectorStoreSpec pins it — same train frame, same codes, same
+    * DECIMAL terms, same round-9 ranking). Plain SQ8 prunes nothing: it
+    * probes every cell, reading (vec_id, sq8) only — neither the raw
+    * embeddings nor the PQ codes. Zero-norm stored rows score like the
+    * declared query scores them (SQ8 ranks by reconstructed inner
+    * product, not cosine). */
   def sq8Probe(
       spark: SparkSession, lake: String, qv: Seq[Float], k: Int,
-      exclude: Set[Long] = Set.empty): DataFrame = {
+      exclude: Set[Long] = Set.empty): DataFrame =
+    servedTopK(spark, lake, qv, Rung.Sq8, Int.MaxValue, k, exclude)
+
+  /** The served single-query scan behind [[adcProbe]] and [[sq8Probe]]:
+    * the rung's stored layout, pruned to the query's probed cells, scored
+    * by [[graft.VectorQueries.scanTopK]] — the scorer the declared
+    * queries run over their on-the-fly codes. At-least-once replay rows
+    * are byte-identical (same kit, same vector): one survives,
+    * whichever. */
+  private def servedTopK(
+      spark: SparkSession, lake: String, qv: Seq[Float], rung: Rung,
+      probes: Int, k: Int, exclude: Set[Long]): DataFrame = {
     import spark.implicits._
     val store = graft.ingest.Sink.readOrEmpty(spark, vecPath(lake), merge = true)
       .getOrElse(return Seq.empty[(Long, Double)].toDF("vec_id", "adc"))
-    require(store.columns.contains("sq8"),
-      s"vector store at $lake has no sq8 column — build the layout " +
-        "(Cli vector-index --sq8, or append with sq8 = true from the " +
-        "first batch) before serving SQ8 probes")
-    val kit = servingSq8KitOf(spark, lake)
-    val nUncoded = store.filter(col("sq8").isNull).count()
-    require(nUncoded == 0L,
-      s"$nUncoded stored vectors have no sq8 codes (rows appended " +
-        s"before the sq8 layout mixed into $lake) — rebuild the store " +
-        "before serving SQ8 probes")
-    // one query → one LONG LUT, compiled driver-side: scoring a
-    // stored row is 64 long lookups + adds, bit-identical to scoreDec
-    // (Sq8Kit.scoreLutLong's same-scale argument; the q_ann_sq8
-    // byte-identity pin gates it)
-    val qu = kit.unitOf(qv)
-    val bc = spark.sparkContext.broadcast((kit, qu, kit.lutLongOf(qu)))
-    store
-      .filter(if (exclude.isEmpty) lit(true)
-              else !col("vec_id").isin(exclude.toSeq: _*))
-      .select(col("vec_id"), col("sq8"))
-      .dropDuplicates("vec_id")
-      .as[(Long, Seq[Int])]
-      .mapPartitions { it =>
-        val (k8, u, lutL) = bc.value
-        it.map { case (id, codes) =>
-          (id, k8.scoreLutLong(lutL, k8.lutOf(u), codes.toArray).doubleValue)
-        }
-      }
-      .toDF("vec_id", "adc")
-      .select(col("vec_id"), round(col("adc"), 9).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(k)
+    val (kit, codes) = servingLayout(spark, lake, store, rung)
+    val q = kit.query(qv, probes)
+    val pruned = store.filter(col("cell").isin(q.probeSet.map(_.toLong).toSeq: _*))
+    requireCoded(pruned, codes, lake)
+    graft.VectorQueries.scanTopK(
+      pruned
+        .filter(if (exclude.isEmpty) lit(true)
+                else !col("vec_id").isin(exclude.toSeq: _*))
+        .select(col("vec_id"), col("cell").cast("int"), col(codes))
+        .dropDuplicates("vec_id")
+        .as[(Long, Int, Array[Int])],
+      q, k)
   }
 
   /** Serve the BATCHED k-NN join from the store's persisted index — the
-    * many-query composition of [[adcProbe]] (which serves one query):
-    * `queries` is a bounded (qid, embedding) probe frame (the q_knn_join
-    * probe-frame contract — it is collected once to compile each
-    * query's ADC tables driver-side, exactly [[adcProbe]]'s per-query
-    * compilation). Everything is statically pruned to the UNION of the
-    * queries' probed `cell=` partitions, and the nomination stage comes
-    * in two spellings:
+    * many-query composition of [[adcProbe]]: `queries` is a bounded
+    * (qid, embedding) probe frame (the q_knn_join probe-frame contract —
+    * it is collected once to compile each query driver-side).
+    * Everything is statically pruned to the UNION of the queries' probed
+    * `cell=` partitions, and `nominate` names the rung that picks the r
+    * candidates per query:
     *
-    *   - `adcNominate = true` (the 100 TB serving path): nominate from
-    *     the stored code bytes ALONE — the embedding column is never
-    *     read in this stage. A driver-built inverted map cell →
-    *     queries-probing-it keeps the per-row work at |queries probing
-    *     this row's cell|, and the r-bounded topk_pairs partials keep
-    *     the one shuffle at q × r rows. Then the EXACT refine: only the
-    *     nominated (qid, vec_id) pairs (broadcast — q × r rows) pull
-    *     their raw vectors back from the same pruned partitions, and
-    *     [[graft.VectorQueries.knnRefine]] — the DECIMAL re-rank
-    *     spelling the declared joins use — ranks them. Recall follows
-    *     the residual-PQ trade q_ann_ivfadc documents: an 8-byte code
-    *     can misrank a true neighbor out of the r nomination slots
-    *     (VectorStoreSpec pins the structural contracts — exact scores
-    *     on whatever is served, probed-cell containment, and that
-    *     nomination recall is monotone in r, reaching the exact answer
-    *     when r covers the probed cells).
-    *   - `adcNominate = false`: nominate with the exact double cosine
-    *     over the store's raw vectors —
-    *     [[graft.VectorQueries.knnJoinFromCells]], the SAME engine body
-    *     q_knn_join_ivf runs, over the persisted cell layout instead of
-    *     a re-derived assignment. Byte-identical to the declared join
-    *     by shared code, pinned in VectorStoreSpec; reads the embedding
-    *     column of the probed cells.
-    *   - `sq8Nominate = true` (requires the `--sq8` layout): the
-    *     middle rung — nominate from the stored SCALAR codes
-    *     (reconstruct-and-dot through the shared
-    *     [[graft.VectorQueries.Sq8Kit]]), an order of magnitude finer
-    *     reconstruction than the 8-byte ADC at 8× the code bytes, still
-    *     without touching raw embeddings until the exact refine;
-    *     VectorStoreSpec pins exact scores on every served pair,
-    *     monotone recall in r, and convergence to the exact-nominate
-    *     answer at full r.
+    *   - [[Rung.Adc]] (the default, the 100 TB serving path) and
+    *     [[Rung.Sq8]] (the `--sq8` layout: an order of magnitude finer
+    *     reconstruction at 8× the code bytes) nominate from the stored
+    *     codes ALONE through [[graft.VectorQueries.nominatedOf]], the
+    *     stage the declared q_knn_join_ivfadc / q_knn_join_sq8 run — the
+    *     embedding column is never read there. Then the EXACT refine:
+    *     only the nominated (qid, vec_id) pairs (broadcast, q × r rows)
+    *     pull their raw vectors back from the same pruned partitions,
+    *     and [[graft.VectorQueries.knnRefine]] ranks them. A code can
+    *     misrank a true neighbor out of the r slots (VectorStoreSpec pins
+    *     the structural contracts: exact scores on whatever is served,
+    *     recall monotone in r, the exact answer when r covers the probed
+    *     cells).
+    *   - [[Rung.Exact]] nominates with the exact double cosine over the
+    *     store's raw vectors — [[graft.VectorQueries.knnJoinFromCells]],
+    *     the engine q_knn_join_ivf runs, over the persisted cell layout.
     *
-    * `excludeWhere` (over vec_id/cell) drops stored rows from the
-    * candidate side — a pushable predicate, not an id list, so the
-    * q_knn_join corpus split (`vec_id % 25 <> 0`) costs a scan filter
-    * rather than a giant isin. Zero-norm stored vectors never surface,
-    * and on a store with the `znorm` marker column (appends since the
-    * marker landed) the ADC nomination drops them BEFORE scoring via
-    * the codes-side marker — the declared q_knn_join_ivfadc's exact
-    * candidate set, without reading the embedding column. On a
-    * pre-marker store the codes alone cannot see the norm, so a
-    * zero-norm row can each waste one nomination slot there (the one
-    * documented deviation from the declared query, post-nomination
-    * filtering only); rebuild or re-append to remove it.
+    * Each is byte-identical to its declared join by shared code, pinned
+    * in VectorStoreSpec. `excludeWhere` (over vec_id/cell) drops stored
+    * rows from the candidate side — a pushable predicate, not an id
+    * list, so the q_knn_join corpus split (`vec_id % 25 <> 0`) costs a
+    * scan filter rather than a giant isin. Zero-norm stored vectors
+    * never surface, and on a store with the `znorm` marker column
+    * (appends since the marker landed) the code nomination drops them
+    * BEFORE scoring — the declared joins' exact candidate set, without
+    * reading the embedding column. On a pre-marker store the codes alone
+    * cannot see the norm, so a zero-norm row can waste one nomination
+    * slot there (post-nomination filtering only); rebuild or re-append to
+    * remove it.
     *
     * Replay duplicates from the at-least-once window fold once per
     * stage (byte-identical rows — same kit, same vector); the fold is
@@ -439,148 +403,29 @@ object VectorStore {
       r: Int = graft.VectorQueries.KnnR,
       k: Int = graft.VectorQueries.KnnK,
       excludeWhere: Option[org.apache.spark.sql.Column] = None,
-      adcNominate: Boolean = true,
-      sq8Nominate: Boolean = false): DataFrame = {
+      nominate: Rung = Rung.Adc): DataFrame = {
     import spark.implicits._
     graft.functions.GraftExtensions.ensureRegistered(spark)
     val empty = Seq.empty[(Long, Int, Long, Double)]
       .toDF("qid", "knn_rank", "vec_id", "cosine")
     val store = graft.ingest.Sink.readOrEmpty(spark, vecPath(lake), merge = true)
       .getOrElse(return empty)
-    require(store.columns.contains("codes"),
-      s"vector store at $lake predates the coded IVFADC layout — " +
-        "rebuild it (re-append the corpus to a fresh store, or Cli " +
-        "vector-index) before serving ADC probes")
-    val kit = servingKitOf(spark, lake)
-    // bounded probe frame, compiled driver-side; zero-norm queries are
-    // dropped here AND in knnQueryFrameOf (same predicate) so the two
-    // legs agree on the query set
-    val raw = queries.select(col("qid"), col("embedding"))
-      .as[(Long, Seq[Float])].collect()
-      .filter { case (_, v) => v.exists(_ != 0f) }
-    val compiled = raw.map { case (qid, v) => (qid, kit.query(v, probes)) }
+    val (kit, codes) = servingLayout(spark, lake, store, nominate)
+    val compiled = graft.VectorQueries.compiledOf(kit, queries, probes)
     if (compiled.isEmpty) return empty
-    val cells = compiled.flatMap(_._2.probeSet).distinct.map(_.toLong).toSeq
+    val cells = compiled.flatMap(_._2.probeSet).distinct.map(_.toLong)
     val pruned = store.filter(col("cell").isin(cells: _*))
-    // ONE validation job for both layout columns: the codes check
-    // and (when sq8-nominating) the sq8 check each cost a full pruned-
-    // store scan as separate jobs; a single two-column aggregate keeps
-    // the identical loud-refusal contract at half the scan count
-    val needSq8 = sq8Nominate && store.columns.contains("sq8")
-    // coalesce(…, 0): sum() over an EMPTY pruned slice (probed cells with
-    // zero stored rows) is SQL NULL, and getLong on a null row field
-    // throws; an empty slice must proceed to an empty result, as a
-    // per-check count() of 0 would
-    val chk = pruned.agg(
-      coalesce(sum(when(col("codes").isNull, 1L).otherwise(0L)), lit(0L)).as("nc"),
-      (if (needSq8)
-         coalesce(sum(when(col("sq8").isNull, 1L).otherwise(0L)), lit(0L))
-       else lit(0L)).as("ns")).head()
-    val nUncoded = chk.getLong(0)
-    require(nUncoded == 0L,
-      s"$nUncoded stored vectors in the probed cells have no codes " +
-        s"(pre-layout rows mixed into $lake) — rebuild the store before " +
-        "serving ADC probes")
-    val nUncodedSq8 = chk.getLong(1)
+    requireCoded(pruned, codes, lake)
     val candidates = excludeWhere.fold(pruned)(w => pruned.filter(!w))
-
-    if (sq8Nominate) {
-      // nominate from the SQ8 scalar codes (the finer-than-PQ
-      // rung serving the batched join too): reconstruct-and-dot per
-      // (probed row, probing query) through the ONE Sq8Kit spelling,
-      // round-9 scores into the same r-bounded partials, then the
-      // shared exact refine. The scan reads (vec_id, cell, sq8) — no
-      // raw embeddings, no PQ codes; cell pruning and the zero-norm
-      // marker behave exactly as the ADC leg.
-      require(store.columns.contains("sq8"),
-        s"vector store at $lake has no sq8 column — build the layout " +
-          "(Cli vector-index --sq8, or append with sq8 = true from the " +
-          "first batch) before sq8-nominated serving")
-      val kit8 = servingSq8KitOf(spark, lake)
-      val qUnits: Map[Long, Array[Double]] =
-        raw.map { case (qid, v) => qid -> kit8.unitOf(v) }.toMap
-      // per-query LONG LUTs compiled once driver-side, in parallel (the
-      // declared knnJoinSq8's spelling — Sq8Kit.lutLongsOf):
-      // 128 KB of unscaled longs per query — one broadcast copy per
-      // executor replaces the previous per-partition decimal-LUT cache
-      // (which re-built ~0.8 MB of BigDecimals per (partition, qid));
-      // scoring stays bit-identical (Sq8Kit.scoreLutLong's same-scale
-      // argument, gated by the q_knn_join_sq8 byte-identity pins)
-      val qLuts: Map[Long, Array[Array[Long]]] = kit8.lutLongsOf(qUnits)
-      val byCell8: Map[Int, Array[Long]] = compiled.toSeq
-        .flatMap { case (qid, qq) => qq.probeSet.iterator.map(c => (c, qid)) }
-        .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
-      val bcKit8 = spark.sparkContext.broadcast(kit8)
-      val bcQU = spark.sparkContext.broadcast(qUnits)
-      val bcQL = spark.sparkContext.broadcast(qLuts)
-      val bcByCell8 = spark.sparkContext.broadcast(byCell8)
-      val nomBase =
-        if (candidates.columns.contains("znorm"))
-          candidates.filter(!coalesce(col("znorm"), lit(false)))
-        else candidates
-      // counted in the shared validation aggregate above (over the
-      // probed cells — the adcProbe/sq8Probe whole-layout discipline)
-      require(nUncodedSq8 == 0L,
-        s"$nUncodedSq8 stored vectors in the probed cells have no sq8 " +
-          s"codes (rows appended before the sq8 layout mixed into $lake)" +
-          " — rebuild the store before sq8-nominated serving")
-      val nomIds8 = nomBase
-        .select(col("vec_id"), col("cell"), col("sq8"))
-        .dropDuplicates("vec_id")
-        .as[(Long, Long, Seq[Int])]
-        .mapPartitions { it =>
-          val k8 = bcKit8.value
-          val qs = bcQU.value
-          val ql = bcQL.value
-          val m = bcByCell8.value
-          it.flatMap { case (id, cell, codes) =>
-            m.get(cell.toInt) match {
-              case None => Iterator.empty
-              case Some(qids) =>
-                val arr = codes.toArray
-                qids.iterator.map { qid =>
-                  (qid, id,
-                    k8.scoreLutLong(ql(qid), k8.lutOf(qs(qid)), arr)
-                      .doubleValue)
-                }
-            }
-          }
-        }
-        .toDF("qid", "vec_id", "s8")
-        .groupBy("qid")
-        .agg(call_function("topk_pairs",
-          round(col("s8"), 9), col("vec_id"), col("vec_id"), lit(r)).as("cand"))
-        .select(col("qid"), explode(col("cand")).as("c"))
-        .select(col("qid"), col("c.id").as("vec_id"))
-      val nominated8 = candidates.select(col("vec_id"), col("embedding"))
-        .join(broadcast(nomIds8), Seq("vec_id"))
-        .dropDuplicates("qid", "vec_id")
-        .filter(call_function("dot_double",
-          col("embedding"), col("embedding")) > 0)
-        .select(col("qid"), col("vec_id"), col("embedding"))
-      return graft.VectorQueries.knnRefine(
-        nominated8, graft.VectorQueries.knnQueryFrameOf(queries), k)
-    }
-
-    if (!adcNominate) {
-      // AdcQuery.probeSet ranks cells exactly like probeCellsOf (the
-      // declared join's probe derivation) — reuse the compiled sets
-      val probeDf = compiled.toSeq
-        .flatMap { case (qid, qq) => qq.probeSet.toSeq.sorted.map(c => (qid, c.toLong)) }
+    if (nominate == Rung.Exact) {
+      val probeDf = compiled
+        .flatMap { case (qid, q) => q.probeSet.toSeq.sorted.map(c => (qid, c.toLong)) }
         .toDF("qid", "cell")
       return graft.VectorQueries.knnJoinFromCells(
         candidates.select(col("cell"), col("vec_id"), col("embedding"))
           .dropDuplicates("vec_id"),
         probeDf, queries, r, k)
     }
-
-    // cell → the queries probing it: per stored row, only those
-    // queries score it (the inverted shape of adcProbe's one probeSet)
-    val byCell: Map[Int, Array[(Long, graft.VectorQueries.AdcQuery)]] =
-      compiled.toSeq
-        .flatMap { case (qid, qq) => qq.probeSet.iterator.map(c => (c, (qid, qq))) }
-        .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).toArray) }
-    val bcByCell = spark.sparkContext.broadcast(byCell)
     // drop zero-norm rows from the nomination input via the codes-side
     // marker (null on pre-marker files → not zero-norm as far as the
     // marker knows; the post-refine filter below still excludes them
@@ -589,34 +434,15 @@ object VectorStore {
       if (candidates.columns.contains("znorm"))
         candidates.filter(!coalesce(col("znorm"), lit(false)))
       else candidates
-    val nomIds = nomInput
-      .select(col("vec_id"), col("cell"), col("codes"))
-      .dropDuplicates("vec_id")
-      .as[(Long, Long, Seq[Int])]
-      .mapPartitions { it =>
-        val m = bcByCell.value
-        it.flatMap { case (id, cell, codes) =>
-          m.get(cell.toInt) match {
-            case None => Iterator.empty
-            case Some(qs) =>
-              val arr = codes.toArray
-              qs.iterator.map { case (qid, qq) =>
-                (qid, id, qq.scoreDec(cell.toInt, arr).doubleValue)
-              }
-          }
-        }
-      }
-      .toDF("qid", "vec_id", "adc")
-      .groupBy("qid")
-      // round-9 nomination scores — the adcProbe output contract, and
-      // the spelling that makes this byte-identical to the declared
-      // q_knn_join_ivfadc (whose oracle replays the rounded ordering)
-      .agg(call_function("topk_pairs",
-        round(col("adc"), 9), col("vec_id"), col("vec_id"), lit(r)).as("cand"))
-      .select(col("qid"), explode(col("cand")).as("c"))
-      .select(col("qid"), col("c.id").as("vec_id"))
+    val nomIds = graft.VectorQueries.nominatedOf(
+      nomInput
+        .select(col("vec_id"), col("cell").cast("int"), col(codes),
+          col("vec_id").as("payload"))
+        .dropDuplicates("vec_id")
+        .as[(Long, Int, Array[Int], Long)],
+      compiled, r)
     val nominated = candidates.select(col("vec_id"), col("embedding"))
-      .join(broadcast(nomIds), Seq("vec_id"))
+      .join(broadcast(nomIds.select(col("qid"), col("vec_id"))), Seq("vec_id"))
       .dropDuplicates("qid", "vec_id")
       .filter(call_function("dot_double",
         col("embedding"), col("embedding")) > 0)

@@ -39,8 +39,9 @@ object AbHybridProbe {
     noop(SparkEntry.queries("q_retrieval_eval_hybrid")(spark, sfDir))
     noop(SparkEntry.queries("q_retrieval_eval_hybrid_sq8")(spark, sfDir))
 
-    for (sq8Dense <- Seq(false, true)) {
-      println(s"== hybrid sq8Dense=$sq8Dense ==")
+    for (dense <- Seq(graft.streaming.VectorStore.Rung.Adc,
+                      graft.streaming.VectorStore.Rung.Sq8)) {
+      println(s"== hybrid dense=$dense ==")
       val (_, _, lexRanks0) = t("lexStoreRanksOf")(
         VectorQueries.lexStoreRanksOf(spark, sfDir, VectorQueries.KnnQMod))
       val lexRanks = t("lex ckpt")(lexRanks0
@@ -53,7 +54,7 @@ object AbHybridProbe {
       val denseSys = t("knnJoin setup")(
         graft.streaming.VectorStore.knnJoin(spark, vstore, queries,
           excludeWhere = Some(pmod(col("vec_id"), lit(VectorQueries.KnnQMod)) === 0),
-          adcNominate = !sq8Dense, sq8Nominate = sq8Dense)
+          nominate = dense)
         .select(col("qid"), col("vec_id").as("doc_id"),
           col("knn_rank").cast(LongType).as("rank_dense")))
       val denseTru = t("knnJoinExact setup")(

@@ -80,6 +80,7 @@ class CliSpec extends AnyFunSuite {
     assert(run("deletecollection", lake, "1").contains("deleted collections 1, 2, 3"))
     assert(!Files.exists(java.nio.file.Paths.get(s"$lake/release/collection_id=1")))
     assert(run("deleteorphan", lake).contains("removed 2"))
+    assert(run("deleteorphan", lake).contains("removed 0"))
   }
 
   test("record-package load via the CLI: record facts, per-file compile, record checks") {
@@ -108,6 +109,7 @@ class CliSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(s"$lake/record_check/collection_id=1")))
     // and once the record is wiped, its content row is the orphan
     assert(run("deleteorphan", lake).contains("removed 1"))
+    assert(run("deleteorphan", lake).contains("removed 0"))
   }
 
   test("addchecks on a compiled-release collection is a clean no-op") {

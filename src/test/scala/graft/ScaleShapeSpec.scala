@@ -79,7 +79,7 @@ class ScaleShapeSpec extends AnyFunSuite {
     "q_retention" -> 6,
     // r18 weekly cohorts: same engine at week granularity — same shape
     "q_retention_weekly" -> 6,
-    // r17 residual IVFADC: ivfPqAdc's exact scan shape — probed-cell
+    // r17 residual IVFADC: the shared annTopK scan shape — probed-cell
     // pruned mapPartitions ADC + TakeOrdered, zero exchanges
     "q_ann_ivfadc" -> 0,
     // r17 IVF-OPQ: same probed-cell scan — the rotation is per-row

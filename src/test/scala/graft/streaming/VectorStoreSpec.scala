@@ -187,7 +187,7 @@ class VectorStoreSpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding"))
     def served = VectorStore.knnJoin(s, lake, queries,
       excludeWhere = Some(pmod(col("vec_id"), lit(25)) === 0),
-      adcNominate = false)
+      nominate = VectorStore.Rung.Exact)
     val got = served.collect().map(_.toString).toSeq
     val want = graft.Queries.byName("q_knn_join_ivf").run(s, dir)
       .collect().map(_.toString).toSeq
@@ -211,10 +211,10 @@ class VectorStoreSpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding"))
     val excl = Some(pmod(col("vec_id"), lit(25)) === 0)
     def adcAt(r: Int) = VectorStore.knnJoin(s, lake, queries, r = r,
-      excludeWhere = excl, adcNominate = true)
+      excludeWhere = excl, nominate = VectorStore.Rung.Adc)
       .collect().map(x => ((x.getLong(0), x.getLong(2)), (x.getInt(1), x.getDouble(3))))
     val exact = VectorStore.knnJoin(s, lake, queries,
-      excludeWhere = excl, adcNominate = false)
+      excludeWhere = excl, nominate = VectorStore.Rung.Exact)
       .collect().map(x => ((x.getLong(0), x.getLong(2)), (x.getInt(1), x.getDouble(3))))
     val truth = exact.map(_._1).toSet
     // the store-served ADC join IS the declared q_knn_join_ivfadc (the
@@ -308,10 +308,10 @@ class VectorStoreSpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding"))
     val excl = Some(pmod(col("vec_id"), lit(25)) === 0)
     def sq8At(r: Int) = VectorStore.knnJoin(s, lake, queries, r = r,
-      excludeWhere = excl, sq8Nominate = true)
+      excludeWhere = excl, nominate = VectorStore.Rung.Sq8)
       .collect().map(x => ((x.getLong(0), x.getLong(2)), (x.getInt(1), x.getDouble(3))))
     val exact = VectorStore.knnJoin(s, lake, queries,
-      excludeWhere = excl, adcNominate = false)
+      excludeWhere = excl, nominate = VectorStore.Rung.Exact)
       .collect().map(x => ((x.getLong(0), x.getLong(2)), (x.getInt(1), x.getDouble(3))))
     val truth = exact.map(_._1).toSet
     // the store-served SQ8 join IS the declared q_knn_join_sq8 (r20 —
@@ -342,7 +342,7 @@ class VectorStoreSpec extends AnyFunSuite {
     // the nomination scan reads the scalar codes, never raw embeddings
     // or the PQ codes
     val df = VectorStore.knnJoin(s, lake, queries,
-      excludeWhere = excl, sq8Nominate = true)
+      excludeWhere = excl, nominate = VectorStore.Rung.Sq8)
     df.collect()
     val storeScans = PlanWalk.fileScans(df.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("/vectors")))
@@ -355,7 +355,7 @@ class VectorStoreSpec extends AnyFunSuite {
     val plain = Files.createTempDirectory("graft-vstore-knn8n").toString
     VectorStore.append(s, plain, embAll.filter(col("vec_id") < 100))
     val e = intercept[IllegalArgumentException] {
-      VectorStore.knnJoin(s, plain, queries, sq8Nominate = true).collect()
+      VectorStore.knnJoin(s, plain, queries, nominate = VectorStore.Rung.Sq8).collect()
     }
     assert(e.getMessage.contains("--sq8"), e.getMessage)
   }
@@ -376,7 +376,7 @@ class VectorStoreSpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding"))
     val excl = Some(pmod(col("vec_id"), lit(25)) === 0)
     def served(lake: String) = VectorStore.knnJoin(s, lake, queries,
-      r = 1, k = 1, excludeWhere = excl, adcNominate = true)
+      r = 1, k = 1, excludeWhere = excl, nominate = VectorStore.Rung.Adc)
       .collect().map(_.toString).toSeq
     val want = served(clean)
     assert(want.nonEmpty)
