@@ -164,40 +164,35 @@ object VectorStore {
     case object Sq8 extends Rung
   }
 
-  /** Serving loads stored quantizers and never trains them: a store
-    * whose artifact vanished (partial store copy, deleted dir) while its
-    * coded rows survived would otherwise silently retrain and score the
-    * OLD persisted codes against a new quantizer epoch. */
-  private def requireStored(
-      spark: SparkSession, lake: String, path: String, what: String): Unit =
-    require(graft.ingest.Sink.readOrEmpty(spark, path).isDefined,
-      s"vector store at $lake has coded rows but no persisted $what — " +
-        "retraining at serve time would score the stored codes against " +
-        "a different quantizer epoch; rebuild the store (re-append the " +
-        "corpus to a fresh store, or Cli vector-index) before serving")
+  /** The training frame of a SERVING load: serving reads the stored
+    * quantizers and never trains them — a store whose artifact vanished
+    * (partial store copy, deleted dir) while its coded rows survived
+    * would otherwise silently retrain and score the OLD persisted codes
+    * against a new quantizer epoch. Passed as the `vecs` of the
+    * load-or-train helpers, it fails before anything trains. */
+  private def neverTrain(lake: String): Nothing =
+    throw new IllegalArgumentException(
+      s"vector store at $lake has coded rows but no persisted quantizer " +
+        "(vector_centroids / vector_codebooks) — retraining at serve time " +
+        "would score the stored codes against a different quantizer " +
+        "epoch; rebuild the store (re-append the corpus to a fresh store, " +
+        "or Cli vector-index) before serving")
 
-  /** The stored ADC kit for SERVING — load-only, never train
-    * ([[kitOf]]'s load-or-train fallback is correct at APPEND time only;
-    * see [[requireStored]]). */
-  def servingKitOf(spark: SparkSession, lake: String): graft.VectorQueries.AdcKit = {
-    requireStored(spark, lake, centroidPath(lake), "coarse quantizer (vector_centroids)")
-    requireStored(spark, lake, codebookPath(lake), "PQ codebooks (vector_codebooks)")
-    kitOf(spark, lake,
-      sys.error("unreachable: servingKitOf verified both artifacts exist"))
-  }
+  /** The stored ADC kit for SERVING — load-only ([[kitOf]]'s
+    * load-or-train fallback is correct at APPEND time only). */
+  def servingKitOf(spark: SparkSession, lake: String): graft.VectorQueries.AdcKit =
+    kitOf(spark, lake, neverTrain(lake))
 
-  /** The stored SQ8 kit for SERVING — load-only, never train — gated by
-    * the stored cells (a full scan probes them all). Fails with the build
+  /** The stored SQ8 kit for SERVING — load-only — gated by the stored
+    * cells (a full scan probes them all). Fails with the build
     * instruction when the store never enabled the layout. */
-  private def servingSq8KitOf(spark: SparkSession, lake: String): graft.VectorQueries.Sq8Kit = {
-    requireStored(spark, lake, centroidPath(lake), "coarse quantizer (vector_centroids)")
-    sq8KitOf(spark, lake, sys.error("unreachable: serving never trains"), enable = false)
+  private def servingSq8KitOf(spark: SparkSession, lake: String): graft.VectorQueries.Sq8Kit =
+    sq8KitOf(spark, lake, neverTrain(lake), enable = false)
       .getOrElse(throw new IllegalArgumentException(
         s"vector store at $lake has no persisted SQ8 kit (vector_sq8) — " +
           "build the layout (Cli vector-index --sq8, or append with " +
           "sq8 = true from the first batch) before serving SQ8 probes"))
-      .copy(cs = centroidsOf(spark, lake, sys.error("unreachable: checked above")))
-  }
+      .copy(cs = centroidsOf(spark, lake, neverTrain(lake)))
 
   /** The stored layout a rung scores, checked once: the serving kit and
     * the column holding its codes. A lake written before the layout has
