@@ -1,23 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Bucket-local LSH candidate-pair generation with a BOUNDED per-bucket
-  * cost — the shared engine behind the MinHash, SimHash and hyperplane-LSH
-  * near-dup paths (VERDICT r8 "What's wrong #3": the previous unconditional
-  * `collect_set` per bucket held one array element per member and emitted
-  * all C(n,2) pairs, so one boilerplate-heavy source dropping 10⁵
-  * near-identical docs into a bucket meant a 10⁵-element aggregation
-  * buffer and 10¹⁰ generated pairs — exact dedup upstream removes
-  * identical docs, not templated near-identicals).
+  * cost — the shared engine behind the MinHash, SimHash, perceptual
+  * media and hyperplane-LSH near-dup paths. An unconditional
+  * `collect_set` per bucket holds one array element per member and
+  * emits all C(n,2) pairs, so one boilerplate-heavy source dropping 10⁵
+  * near-identical docs into a bucket would mean a 10⁵-element
+  * aggregation buffer and 10¹⁰ generated pairs (exact dedup upstream
+  * removes identical docs, not templated near-identicals).
   *
   * Contract:
-  *  - buckets with ≤ `maxBucket` members: ALL pairs, exactly as before
-  *    (ids sorted, a < b) — unchanged output on any non-adversarial corpus;
+  *  - buckets with ≤ `maxBucket` members: ALL pairs (ids sorted, a < b)
+  *    — the exact output on any non-adversarial corpus;
   *  - larger buckets: STAR pairs only — every member paired with the
   *    bucket MINIMUM id, generated row-wise with no collected array at
   *    all. Candidates fall from C(n,2) to n−1 and the aggregation buffer
@@ -26,8 +26,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    so the bucket stays one connected component and min-keeper election
   *    is unchanged. What is knowingly given up is PAIR recall between two
   *    non-min members of an oversized bucket that collide in no smaller
-  *    bucket — the documented recall-vs-cost contract at 100 TB, with
-  *    `recoverySalts` as the opt-in buy-back (below).
+  *    bucket — the recall-vs-cost contract at 100 TB.
   *
   * Plan shape: ONE exchange of the signature frame on the bucket key,
   * then window functions (`min`, `count` over the bucket partition) tag
@@ -45,22 +44,21 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * an `observe()` metric and a session-registered listener WARNs with
   * the star-reduced row count whenever it fires.
   *
-  * This is the round-9 "window" engine, KEPT in round 10 after a
-  * three-way A/B (test-scoped [[graft.AbLshBench]], run at sf0.1 and on
-  * a 10× ScaleGen sf1 replica) adjudicated the judged r9 LSH-family
-  * bench regression. Measured against the unbounded r8 `collect_set`
-  * floor on a no-oversized-bucket corpus (identical candidate output):
+  * Two alternatives were measured against the unbounded `collect_set`
+  * shape on a corpus with no oversized bucket (identical candidate
+  * output; test-scoped [[graft.AbLshBench]] at sf0.1 and on a 10×
+  * ScaleGen sf1 replica):
   *  - THIS engine: 1.25× on the isolated candidate stage, 1.07×
   *    end-to-end q_ngram_jaccard at sf1 — the real cost of bounding is
   *    the window pass, and it AMORTIZES as data grows (the verify join
-  *    dominates); the rest of the judged 1.26–1.41× was run-to-run
-  *    noise, confirmed by interleaved min-of-5 timing.
+  *    dominates); interleaved min-of-5 timing showed larger readings to
+  *    be run-to-run noise.
   *  - A stats-JOIN variant (aggregate stats separately, join back):
   *    the aggregate's partial-agg exchange can never canonicalize equal
   *    to the probe's raw-row exchange, so the signature frame computes
-  *    twice — a measured 1.5–1.65× on the four LSH queries (r9).
+  *    twice — a measured 1.5–1.65× on the four LSH queries.
   *  - A capped TypedImperativeAggregate (`collect_capped`, kept in TEST
-  *    scope beside AbLshBench): restores the r8 one-agg shape with the
+  *    scope beside AbLshBench): restores the one-agg shape with the
   *    bound moved into the buffer, and AQE empty-relation propagation
   *    provably prunes its star branch when nothing overflows (verified
   *    in the final adaptive plan) — but the object-hash aggregate is
@@ -68,6 +66,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    the shuffle. Measured WORSE than this engine at both scales and
   *    DIVERGING with data: candidate stage 1.16× (sf0.1) → 1.56× (sf1)
   *    vs this engine's 1.19× → 1.25×; end-to-end 1.41× vs 1.07× at sf1.
+  *
+  * The 64-bit-hash kit ([[hashBands]], [[hammingVerify]],
+  * [[hammingPairs]]) is the SimHash and perceptual-media spelling on top
+  * of the engine: a packed hash banded low bits first, banded candidates
+  * → distinct → `bit_count` Hamming verify. The fingerprint store's
+  * probe bands and verifies with the same two functions.
   */
 object BucketPairs {
 
@@ -82,69 +86,72 @@ object BucketPairs {
     * member per bucket; `idCol` must be orderable — long or struct with
     * the id leading). Returns `keep ++ (a, b)` with a < b; `keep` must be
     * a subset of `bucketKeys`. Callers dedup across bands themselves
-    * (pairs colliding in several bands), as before.
-    *
-    * `recoverySalts` (opt-in, VERDICT r9 Next #5) trades bounded extra
-    * cost for pair recall INSIDE oversized buckets: for each salt, the
-    * oversized buckets' members are re-bucketed into salted sub-buckets
-    * of expected size maxBucket/2 and each sub-bucket emits exact
-    * all-pairs (sub-buckets that still exceed the cap are skipped —
-    * connectivity is already guaranteed by the star branch). Cost per
-    * salt is ≤ n·maxBucket/4 pairs per oversized bucket (linear in n,
-    * vs C(n,2) unbounded); measured against the exact pair set of a
-    * 300-doc bucket at maxBucket=64 (DedupClusterSpec "salted recovery"):
-    * star-only 0.67% pair recall, 1 salt 10.5%, 4 salts 34.6% — each salt
-    * recovers ≈ maxBucket/(2n) of true pairs minus overlap. Cluster/keeper
-    * needs no recovery (star preserves the component); this knob exists
-    * for callers that consume the PAIR list itself. */
+    * (pairs colliding in several bands). */
   def pairs(
       sig: DataFrame,
       bucketKeys: Seq[String],
       idCol: String,
       keep: Seq[String],
-      maxBucket: Int = DefaultMaxBucket,
-      recoverySalts: Int = 0): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     ensureListener(sig.sparkSession)
     val keys = bucketKeys.map(col)
-    // grouped must carry `keep` ++ a sorted `_ids` array; emits (keep, a, b)
-    def allPairs(grouped: DataFrame): DataFrame = grouped
-      .select(keep.map(col) :+ col("_ids") :+
-        posexplode(col("_ids")).as(Seq("_pos", "a")): _*)
-      .select(keep.map(col) :+ col("a") :+
-        explode(slice(col("_ids"), col("_pos") + lit(2), size(col("_ids")))).as("b"): _*)
     val w = Window.partitionBy(keys: _*)
     val tagged = sig
       .withColumn("_mn", min(col(idCol)).over(w))
       .withColumn("_cnt", count(lit(1)).over(w))
       .filter(col("_cnt") > 1)
-    val small = allPairs(tagged
+    val small = tagged
       .filter(col("_cnt") <= maxBucket)
       .groupBy(keys: _*)
-      .agg(sort_array(collect_set(col(idCol))).as("_ids")))
-    val bigMembers = tagged.filter(col("_cnt") > maxBucket)
-    val big = bigMembers
+      .agg(sort_array(collect_set(col(idCol))).as("_ids"))
+      .select(keep.map(col) :+ col("_ids") :+
+        posexplode(col("_ids")).as(Seq("_pos", "a")): _*)
+      .select(keep.map(col) :+ col("a") :+
+        explode(slice(col("_ids"), col("_pos") + lit(2), size(col("_ids")))).as("b"): _*)
+    val big = tagged
+      .filter(col("_cnt") > maxBucket)
       .filter(col(idCol) =!= col("_mn"))
       .select(keep.map(col) :+ col("_mn").as("a") :+ col(idCol).as("b"): _*)
       .observe(s"graft_lsh_truncation_${metricSeq.incrementAndGet()}",
         count(lit(1)).as("rows_star_reduced"))
-    val recovery = (0 until recoverySalts).map { salt =>
-      // expected sub-bucket size maxBucket/2, so re-overflowing the cap is
-      // a large-deviation event; sub-buckets that do overflow are dropped
-      // by the same bounded-count pattern as the main small branch
-      // (connectivity is already guaranteed by the star branch)
-      val nSub = greatest(
-        ceil(col("_cnt") * 2 / lit(maxBucket)).cast("long"), lit(2L))
-      val sub = bigMembers
-        .withColumn("_sb", pmod(xxhash64(col(idCol), lit(salt)), nSub))
-      val subKeys = keys :+ col("_sb")
-      val ws = Window.partitionBy(subKeys: _*)
-      allPairs(sub
-        .withColumn("_scnt", count(lit(1)).over(ws))
-        .filter(col("_scnt").between(2, maxBucket))
-        .groupBy(subKeys: _*)
-        .agg(sort_array(collect_set(col(idCol))).as("_ids")))
-    }
-    recovery.foldLeft(small.unionByName(big))(_ unionByName _)
+    small.unionByName(big)
+  }
+
+  /** The `bands` band values of a packed hash, `bits` bits each, low
+    * bits first. The mask follows the shift, so arithmetic and logical
+    * shift agree and the DuckDB oracles replay it with `>>` and `&`. */
+  def hashBands(hash: Column, bands: Int, bits: Int): Column =
+    array((0 until bands).map(i =>
+      shiftright(hash, bits * i).bitwiseAND(lit((1L << bits) - 1))): _*)
+
+  /** Hamming verify of banded candidates carrying both hashes: one row
+    * per distinct (a, b, ha, hb) — pairs collide in several bands —
+    * kept when `bit_count(ha ^ hb) <= maxHamming`. Returns
+    * (a, b, hamming) under the caller's column names. */
+  def hammingVerify(
+      cand: DataFrame, a: String, b: String, ha: String, hb: String,
+      maxHamming: Int): DataFrame =
+    cand.select(col(a), col(b), col(ha), col(hb))
+      .distinct()
+      .withColumn("hamming", expr(s"cast(bit_count($ha ^ $hb) AS BIGINT)"))
+      .filter(col("hamming") <= maxHamming)
+      .select(col(a), col(b), col("hamming"))
+
+  /** Near-dup pairs of a 64-bit hash frame: `hash` bands `bands`×`bits`
+    * ([[hashBands]]), each band bucket — blocked by `block` — yields
+    * candidates through [[pairs]] with the (id, hash) struct as the
+    * member, and [[hammingVerify]] keeps the pairs within `maxHamming`.
+    * Returns (a, b, hamming) with a < b by (id, hash). */
+  def hammingPairs(
+      hashes: DataFrame, block: Seq[String], id: String, hash: String,
+      bands: Int, bits: Int, maxHamming: Int): DataFrame = {
+    val sig = hashes.select(block.map(col) :+ struct(col(id), col(hash)).as("_sid") :+
+      posexplode(hashBands(col(hash), bands, bits)).as(Seq("band_id", "band_val")): _*)
+    hammingVerify(
+      pairs(sig, block ++ Seq("band_id", "band_val"), "_sid", Seq.empty)
+        .select(col(s"a.$id").as("a"), col(s"b.$id").as("b"),
+          col(s"a.$hash").as("ha"), col(s"b.$hash").as("hb")),
+      "a", "b", "ha", "hb", maxHamming)
   }
 
   /** WARN on any action whose plan star-reduced oversized buckets — the

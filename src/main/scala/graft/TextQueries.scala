@@ -512,12 +512,12 @@ object TextQueries {
     * closes them into components). See q_ngram_jaccard's QueryDef for the
     * banding/verification design notes.
     *
-    * Negative A/Bs, so they are not retried: (r11) replacing the verify
+    * Negative A/Bs, so they are not retried: replacing the verify
     * stream's `array_sort(transform(toks, xxhash64))` with a native
     * compiled hash+sort expression measured consistently ~15% SLOWER
     * end-to-end on the q_ngram_jaccard/q_dedup_clusters/q_dedup_payoff
     * trio (8.1 → 9.0-9.4 s, two runs) — unlike the gram-construction HOF
-    * (TokenGrams), this one is not the bottleneck; (r11) a fanOut on
+    * (TokenGrams), this one is not the bottleneck; a fanOut on
     * docsIn measured flat (14.1 vs 14.3 s over the family) — the per-doc
     * signature work below the first exchange is not scan-stage-bound
     * here. */
@@ -593,7 +593,7 @@ object TextQueries {
     // SortMergeJoin when the estimate crosses the threshold at scale
     // (the q_collection_notes sf1 lesson, gated in ScaleShapeSpec's
     // robust-join probe). Measured sf0.1 cost of giving up the small-SF
-    // broadcast (r12 A/B): q_ngram_jaccard 2.5→4.5 s, q_dedup_payoff
+    // broadcast (A/B): q_ngram_jaccard 2.5→4.5 s, q_dedup_payoff
     // 3.3→6.1 s, q_neardup_lsh 2.2→3.5 s — the docsH arrays now shuffle
     // instead of broadcasting. At 100 TB the broadcast side is
     // corpus-sized, so the broadcast plan simply does not exist there;
@@ -608,44 +608,25 @@ object TextQueries {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** Connected components by min-label propagation over an undirected edge
-    * set (`doc_a`, `doc_b`) — returns one (`doc_id`, `lbl`) row per vertex,
-    * `lbl` = the component's minimum doc_id (deterministic; no ordering
-    * sensitivity anywhere). The INIT round is free: each vertex starts at
-    * min(self, direct neighbors), computed straight off the edge list with
-    * no join — only propagation beyond distance 1 pays a join round. Each
-    * round is one shuffle-join + hash-agg over the EDGE set, and the
-    * convergence check rides the same aggregation (self rows carry their
-    * previous label; propagated rows carry MaxValue, so min(old_lbl) IS the
-    * previous label) — the round's "changed" count is a narrow filter over
-    * the checkpointed output, not a second join job (A/B on sf0.1:
-    * 3.96 → 3.51 s; the free init round then 3.51 → 3.27 s).
-    * Rounds = component radius; near-dup components are
-    * shallow hubs, so 1-3 rounds in practice — for graphs whose diameter
-    * or hub degree is unbounded, use [[connectedComponentsContracted]]
-    * (large-star/small-star, O(log²) rounds, same output contract). At
-    * warehouse scale checkpoint to durable storage. Callers should pass a
-    * checkpointed `edges` (it is scanned every round). Property-tested
-    * against a union-find oracle over random graphs (DedupClusterSpec). */
-  /** Round-boundary materialization for the iterative engines: executor-
-    * local blocks by default (fast; lossy on executor death — fine in
-    * local mode and for short loops), or DURABLE `checkpoint()` into
-    * `dir` when set — the cluster-scale mode (VERDICT r8 Next #9: an
-    * executor dying mid-loop under localCheckpoint kills the job; a
-    * durable checkpoint recomputes nothing). */
   /** Durable-checkpoint opt-in for the DECLARED queries' iterative
-    * engines (VERDICT r11 Next #7): `Cli dedup` threads an explicit dir,
-    * but the QueryDefs the bench/Verify surface runs had no seam — on a
-    * real cluster an executor death mid-CC-loop under localCheckpoint
-    * kills the job with nothing to recompute from. `GRAFT_CKPT_DIR`
-    * (env; `graft.ckpt.dir` system property as the in-JVM test seam —
-    * env wins) points the round-boundary materialization at durable
-    * storage for q_dedup_clusters / q_dedup_payoff without changing the
-    * default local-mode behavior. */
+    * engines: `Cli dedup` threads an explicit dir, but the QueryDefs the
+    * bench/Verify surface runs have no such seam — on a real cluster an
+    * executor death mid-CC-loop under localCheckpoint kills the job with
+    * nothing to recompute from. `GRAFT_CKPT_DIR` (env; `graft.ckpt.dir`
+    * system property as the in-JVM test seam — env wins) points the
+    * round-boundary materialization at durable storage for
+    * q_dedup_clusters / q_dedup_payoff / q_cluster_keep_best without
+    * changing the default local-mode behavior. */
   private[graft] def envCheckpointDir: Option[String] =
     sys.env.get("GRAFT_CKPT_DIR").orElse(sys.props.get("graft.ckpt.dir"))
       .filter(_.nonEmpty)
 
+  /** Round-boundary materialization for the iterative engines: executor-
+    * local blocks by default (fast; lossy on executor death — fine in
+    * local mode and for short loops), or DURABLE `checkpoint()` into
+    * `dir` when set — the cluster-scale mode: an executor dying mid-loop
+    * under localCheckpoint kills the job, while a durable checkpoint
+    * recomputes nothing. */
   private def ckpt(df: DataFrame, dir: Option[String]): DataFrame = dir match {
     case Some(d) =>
       val sc = df.sparkSession.sparkContext
@@ -658,9 +639,9 @@ object TextQueries {
     * materialized at a round boundary: the propagation loops scan it every
     * round, so it must never re-run the MinHash pipeline — and in durable
     * mode it must be a reliable `checkpoint()` like the label rounds it
-    * feeds (VERDICT r9 #2: an edge block lost to executor death under
+    * feeds: an edge block lost to executor death under
     * `localCheckpoint` has nothing to recompute from — the exact failure
-    * durable mode exists to survive, one hop upstream). */
+    * durable mode exists to survive, one hop upstream. */
   private[graft] def neardupEdgesOf(
       docsIn: DataFrame,
       checkpointDir: Option[String] = None,
@@ -668,17 +649,34 @@ object TextQueries {
     ckpt(minhashJaccardPairsOf(docsIn, maxBucket)
       .select(col("doc_a"), col("doc_b")), checkpointDir)
 
+  /** Connected components by min-label propagation over an undirected edge
+    * set (`doc_a`, `doc_b`) — returns one (`doc_id`, `lbl`) row per vertex,
+    * `lbl` = the component's minimum doc_id (deterministic; no ordering
+    * sensitivity anywhere). The INIT round is free: each vertex starts at
+    * min(self, direct neighbors), computed straight off the edge list with
+    * no join — only propagation beyond distance 1 pays a join round. Each
+    * round is one shuffle-join + hash-agg over the EDGE set, and the
+    * convergence check rides the same aggregation (self rows carry their
+    * previous label; propagated rows carry MaxValue, so min(old_lbl) IS the
+    * previous label) — the round's "changed" count is a narrow filter over
+    * the checkpointed output, not a second join job (A/B on sf0.1:
+    * 3.96 → 3.51 s; the free init round then 3.51 → 3.27 s).
+    * Rounds = component radius; near-dup components are shallow hubs, so
+    * 1-3 rounds in practice. At warehouse scale checkpoint to durable
+    * storage. Callers should pass a checkpointed `edges` (it is scanned
+    * every round). Property-tested against a union-find oracle over random
+    * graphs (DedupClusterSpec). */
   private[graft] def connectedComponents(
       edges: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
     val s = edges.sparkSession
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    // r21 (guide §2.4 — two operations keyed the same way share one
-    // exchange): the loop used to re-shuffle the EDGE set twice per round
+    // Two operations keyed the same way share one exchange: the loop
+    // used to re-shuffle the EDGE set twice per round
     // (a fwd and a bwd shuffle-hash join) plus a third exchange for the
     // union aggregation — ~5 exchanges per round of mostly-identical
     // bytes. Instead, the BIDIRECTIONAL adjacency is hash-partitioned by
-    // doc_id ONCE (explicit N so AQE byte-coalescing cannot re-key it —
-    // the r20 merge-parallelism argument) and checkpointed; Dataset
+    // doc_id ONCE (explicit N so AQE byte-coalescing cannot re-key it
+    // and shrink the merge parallelism) and checkpointed; Dataset
     // checkpoints preserve outputPartitioning, so every round's join
     // AND the init aggregation consume it exchange-free, and each round
     // pays exactly ONE exchange (the propagated labels re-keyed by their
@@ -715,66 +713,13 @@ object TextQueries {
     labels
   }
 
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the scale path [[connectedComponents]]'s scaladoc points
-    * at for graphs whose diameter or hub degree is unbounded: label
-    * propagation pays one round per unit of component RADIUS (a
-    * 10M-vertex path graph = 10M rounds), while star contraction halves
-    * structure every round (O(log²) rounds, in practice a handful).
-    *
-    *  - large-star(x): every neighbor LARGER than x re-attaches to
-    *    m(x) = min(N(x) ∪ {x}) — hubs flatten;
-    *  - small-star(x): every neighbor ≤ x (and x) attaches to m(x) —
-    *    chains contract.
-    *
-    * Each half-round is one groupBy + join over the current edge set;
-    * edges are kept canonical (u < v, distinct) and checkpointed per
-    * round. At fixpoint the edge set IS the star forest (center = the
-    * component's min id), so labels read directly off the edges. Same
-    * (doc_id, lbl) contract as [[connectedComponents]]; equivalence to a
-    * union-find oracle AND to the propagation engine is property-tested
-    * over random graphs (DedupClusterSpec). */
-  private[graft] def connectedComponentsContracted(
-      edges0: DataFrame, checkpointDir: Option[String] = None): DataFrame = {
-    def canon(df: DataFrame): DataFrame = df
-      .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    def bidir(e: DataFrame): DataFrame =
-      e.select(col("u").as("x"), col("v").as("y"))
-        .unionByName(e.select(col("v").as("x"), col("u").as("y")))
-    // m(x) = min over N(x) ∪ {x}, computed once per half-round
-    def withM(b: DataFrame): DataFrame =
-      b.join(
-        b.groupBy("x").agg(min(col("y")).as("mn"))
-          .select(col("x"), least(col("x"), col("mn")).as("m"))
-          .hint("shuffle_hash"),
-        "x")
-    var edges = ckpt(
-      canon(edges0.select(col("doc_a").as("x"), col("doc_b").as("y"))), checkpointDir)
-    var changed = 1L
-    while (changed > 0) {
-      val ls = ckpt(canon(withM(bidir(edges))
-        .filter(col("y") > col("x"))
-        .select(col("y").as("x"), col("m").as("y"))), checkpointDir)
-      // m over ls feeds BOTH small-star branches; materialize it once
-      // instead of re-running its groupBy+join per branch (ADVICE r8) —
-      // and ls itself is materialized above because bidir() references it
-      // twice inside this very plan
-      val lsM = ckpt(withM(bidir(ls)), checkpointDir)
-      val ss = ckpt(canon(lsM
-        .filter(col("y") <= col("x"))
-        .select(col("y").as("x"), col("m").as("y"))
-        .unionByName(lsM.select(col("x"), col("m").as("y")))), checkpointDir)
-      changed = ss.exceptAll(edges).count() + edges.exceptAll(ss).count()
-      edges = ss
-    }
-    // fixpoint edges are a star forest: v's label is its center u, and
-    // each center labels itself
-    edges.select(col("v").as("doc_id"), col("u").as("lbl"))
-      .unionByName(edges.select(col("u").as("doc_id"), col("u").as("lbl")))
-      .groupBy("doc_id").agg(min("lbl").as("lbl"))
-  }
+  /** The near-dup clusters of a (source, doc_id, text) frame: the
+    * materialized MinHash-LSH edge set ([[neardupEdgesOf]]) through
+    * [[connectedComponents]] — one (doc_id, lbl) row per clustered doc. */
+  private[graft] def neardupClustersOf(
+      docsIn: DataFrame, checkpointDir: Option[String] = None,
+      maxBucket: Int = BucketPairs.DefaultMaxBucket): DataFrame =
+    connectedComponents(neardupEdgesOf(docsIn, checkpointDir, maxBucket), checkpointDir)
 
   /** The dedup-payoff readout over ANY (source, doc_id, text) frame:
     * MinHash-LSH pairs → connected components → per-cluster keeper
@@ -784,8 +729,7 @@ object TextQueries {
   private[graft] def dedupPayoffOf(
       docsIn: DataFrame, checkpointDir: Option[String] = None,
       maxBucket: Int = BucketPairs.DefaultMaxBucket): DataFrame = {
-    val edges = neardupEdgesOf(docsIn, checkpointDir, maxBucket)
-    val clusters = connectedComponents(edges, checkpointDir)
+    val clusters = neardupClustersOf(docsIn, checkpointDir, maxBucket)
     val docs = docsIn
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast(LongType).as("tok"))
@@ -828,8 +772,7 @@ object TextQueries {
   private[graft] def clusterKeepBestOf(
       docsIn: DataFrame, checkpointDir: Option[String] = None,
       maxBucket: Int = BucketPairs.DefaultMaxBucket): DataFrame = {
-    val edges = neardupEdgesOf(docsIn, checkpointDir, maxBucket)
-    val clusters = connectedComponents(edges, checkpointDir)
+    val clusters = neardupClustersOf(docsIn, checkpointDir, maxBucket)
     val toks = tokens(coalesce(col("text"), lit("")))
     val docs = docsIn.select(
       col("doc_id"), col("source"),
@@ -2144,7 +2087,7 @@ object TextQueries {
       s: SparkSession, d: String,
       synth: (String, Long) => Array[Byte]): DataFrame = {
     import s.implicits._
-    // fanOut BEFORE the synth map (r20): the codec encode is ~ms-per-row
+    // fanOut BEFORE the synth map: the codec encode is ~ms-per-row
     // CPU sitting directly above a single-row-group scan, so without the
     // round-robin repartition the whole corpus encodes on ONE task (the
     // Tables.fanOut contract — the shuffle moves only the narrow
@@ -2156,7 +2099,7 @@ object TextQueries {
   }
 
   /** The (id_a, source) frame a media near-dup's final rollup joins —
-    * read straight off the documents table (r20): synthMediaOf passes
+    * read straight off the documents table: synthMediaOf passes
     * id/source through untouched, so joining its output re-ran the
     * whole codec ENCODE a second time just to drop the content column
     * (the typed map is opaque to column pruning). Same rows by
@@ -2169,11 +2112,10 @@ object TextQueries {
 
   /** Materialize a perceptual near-dup query's engine-computed
     * fingerprint table ((id, ahash)) as its oracle's aux artifact
-    * (VERDICT r19 Next #1 — the ndcg_discounts/kmeans_centroids idiom):
-    * the DECODE is the only SQL-inexpressible step of the media near-dup
-    * family, so the oracle reads this table — produced by the SAME
-    * hash-stage spelling the operator bands
-    * ([[graft.multimodal.Multimodal.imageHashesOf]] and siblings) — and
+    * (the ndcg_discounts/kmeans_centroids idiom): the DECODE is the only
+    * SQL-inexpressible step of the media near-dup family, so the oracle
+    * reads this table — produced by the SAME fingerprint stage the
+    * operator bands ([[graft.multimodal.Multimodal.hashesOf]]) — and
     * replays the 4×16 banding, the BucketPairs small/star election, the
     * hamming verify and the per-source rollup entirely in SQL. The
     * decode step itself stays pinned by MultimodalSpec (re-encode
@@ -2181,15 +2123,36 @@ object TextQueries {
   private def writeMediaFpAux(
       s: SparkSession, d: String, auxDir: String, table: String,
       synth: (String, Long) => Array[Byte],
-      hashes: (DataFrame, SparkSession) => DataFrame): Unit = {
+      hash: Array[Byte] => IterableOnce[Long]): Unit = {
     if (!mediaAuxWritten.add(s"$table::$d::$auxDir")) return
-    hashes(synthMediaOf(s, d, synth).select(col("id"), col("content")), s)
+    graft.multimodal.Multimodal.hashesOf(
+        synthMediaOf(s, d, synth).select(col("id"), col("content")), hash)
       .coalesce(1).write.mode("overwrite").parquet(s"$auxDir/$table")
   }
 
+  /** One perceptual media near-dup rung: `synth` payloads per document →
+    * `neardup` pairs → per-source (n_pairs, max_hamming) rollup over
+    * id_a's document; the oracle replays from the `hash` stage's
+    * fingerprint artifact `table`. */
+  private def mediaNeardupDef(
+      name: String, table: String,
+      synth: (String, Long) => Array[Byte],
+      hash: Array[Byte] => IterableOnce[Long],
+      neardup: DataFrame => DataFrame,
+      oracle: String, doc: String): QueryDef =
+    QueryDef(
+      name, Seq("S2", "F5", "A1"),
+      (s, d) => neardup(synthMediaOf(s, d, synth).select("id", "content"))
+        .join(mediaSourcesOf(s, d).hint("shuffle_hash"), Seq("id_a"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_pairs"), max("hamming").as("max_hamming"))
+        .orderBy("source"),
+      Some(oracle), doc,
+      aux = Some((s, d, a) => writeMediaFpAux(s, d, a, table, synth, hash)))
+
   /** The media near-dup oracle downstream of the materialized
-    * fingerprint table: replays [[graft.multimodal.Multimodal]]'s
-    * hash64Neardup tail — 4×16-bit band values (the shift-and-mask is
+    * fingerprint table: replays the media rungs' shared
+    * [[BucketPairs.hammingPairs]] tail — 4×16-bit band values (the shift-and-mask is
     * identical under arithmetic or logical shift semantics because the
     * mask follows the shift), the bounded BucketPairs election (ALL
     * pairs in buckets of 2..256 members, STAR pairs — bucket-min ×
@@ -2869,15 +2832,15 @@ object TextQueries {
     QueryDef(
       "q_ngram_jaccard", Seq("J1", "F2", "S8"),
       // MinHash LSH banding (the SURVEY §7.1 item-10 scale path; replaces
-      // the r2 same-source pair join whose candidate count grew O(n²) in
-      // corpus size — VERDICT r2). k=64 min-hashes per doc, banded 16×4:
+      // a same-source pair join whose candidate count grew O(n²) in
+      // corpus size). k=64 min-hashes per doc, banded 16×4:
       // the JOIN KEY is (source, band_id, band_hash), so candidate pairs
       // are bounded by true-similar density, not group size. Recall for a
       // jaccard-0.9 pair is 1-(1-0.9⁴)¹⁶ ≈ 1-4e-8, so the exact-Jaccard
       // verification step reproduces the brute-force oracle's row set;
       // candidates that collide by chance are filtered there.
       //
-      // Per-row engineering (all r5/r6 A/B-measured, see git history):
+      // Per-row engineering (each step A/B-measured, see git history):
       // each token is string-hashed ONCE (h1 = xxhash64(tok)) and the 64
       // per-seed hashes re-mix h1 with the seed (~10× cheaper, family
       // still uniform per-seed); pair generation is bucket-local (collect
@@ -2911,8 +2874,7 @@ object TextQueries {
         // the join lineage stays flat.
         // durable-mode opt-in for cluster runs of the declared query
         // (GRAFT_CKPT_DIR; see envCheckpointDir)
-        val edges = neardupEdgesOf(Tables.documents(s, d), envCheckpointDir)
-        connectedComponents(edges, envCheckpointDir)
+        neardupClustersOf(Tables.documents(s, d), envCheckpointDir)
           .select(col("doc_id"), col("lbl").as("cluster_id"))
           .orderBy("doc_id")
       },
@@ -2951,8 +2913,8 @@ object TextQueries {
         // (doc_id, source, tokens) projection with NO join hint: labels
         // exist for every doc in some near-dup pair, and web-scale corpora
         // run 30–50% near-dup, so at 100 TB the label frame is billions of
-        // rows — a mandatory broadcast would die at the broadcast ceiling
-        // (VERDICT r8 #2). The frame is two narrow longs; AQE broadcasts
+        // rows — a mandatory broadcast would die at the broadcast ceiling.
+        // The frame is two narrow longs; AQE broadcasts
         // it when it is genuinely small and shuffles on doc_id otherwise.
         dedupPayoffOf(Tables.documents(s, d), envCheckpointDir)
       },
@@ -3056,8 +3018,6 @@ object TextQueries {
         // collisions. Everything is md5/bit arithmetic both engines share,
         // so the DuckDB oracle rebuilds identical signatures and buckets.
         val Bits = 60
-        val Bands = 4
-        val BandBits = Bits / Bands
         // per-bit ±1 sums as 60 codegen'd SUM aggregates over the exploded
         // token stream (one md5 per token, then flat shift/mask columns —
         // the same one-pass shape as q_ngram_jaccard's minhash; the first
@@ -3075,24 +3035,11 @@ object TextQueries {
           .groupBy(col("source"), col("doc_id"))
           .agg(bitSums.head, bitSums.tail: _*)
           .select(col("source"), col("doc_id"), simhashCol.as("simhash"))
-        val bandVals = (0 until Bands).map(i =>
-          shiftright(col("simhash"), BandBits * i).bitwiseAND(lit((1L << BandBits) - 1)))
-        val sig = sh.select(col("source"), col("doc_id"), col("simhash"),
-          posexplode(array(bandVals: _*)).as(Seq("band_id", "band_val")))
-        // bucket-local pair generation, signatures carried in-row (struct
-        // id sorts by doc_id first) — bounded per-bucket cost via the
-        // shared BucketPairs engine, like the MinHash path above
-        val sigId = sig.select(col("source"), col("band_id"), col("band_val"),
-          struct(col("doc_id"), col("simhash")).as("id"))
-        val cand = BucketPairs.pairs(
-            sigId, Seq("source", "band_id", "band_val"), "id", Seq.empty)
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-            col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
-          .distinct()
-        cand
-          .withColumn("hamming", expr("cast(bit_count(sim_a ^ sim_b) AS BIGINT)"))
-          .filter(col("hamming") <= 4)
-          .select(col("doc_a"), col("doc_b"), col("hamming"))
+        // 4×15-bit bands through the shared bounded BucketPairs kit,
+        // blocked by source like the MinHash path above
+        BucketPairs.hammingPairs(sh, Seq("source"), "doc_id", "simhash",
+            bands = 4, bits = Bits / 4, maxHamming = 4)
+          .select(col("a").as("doc_a"), col("b").as("doc_b"), col("hamming"))
           .orderBy("doc_a", "doc_b")
       },
       Some("""WITH toks AS (
@@ -3181,169 +3128,91 @@ object TextQueries {
         "256-byte frame sampling, md5 frame hash, integer thumbnail resize — all in one " +
         "executor-side batch pass (the mapInPandas shape on the JVM)"),
 
-    QueryDef(
-      "q_image_neardup", Seq("S2", "F5", "A1"),
-      (s, d) => {
-        // perceptual IMAGE dedup — the pixel-domain member of the near-dup
-        // family: re-encodes, mild noise and small edits change every
-        // content hash but barely move a perceptual hash. Real end-to-end:
-        // the PNGs are deterministically SYNTHESIZED (no image column in
-        // the corpus: same-source EVEN docs are tiny perturbations of a
-        // shared base raster — the near-dup class — while odd docs repaint
-        // half the image), ENCODED with the JDK encoder, then the operator
-        // really decodes them (ImageIO), aHash-es real pixels, buckets the
-        // 64-bit hash 4×16 through the shared bounded BucketPairs engine
-        // and verifies by hamming ≤ 6 — the SimHash pipeline shape in the
-        // pixel domain. Oracled since r20 through the materialized
-        // fingerprint aux artifact (writeMediaFpAux): only the DECODE is
-        // SQL-inexpressible, so DuckDB reads the engine's (id, ahash)
-        // table and replays banding, the bounded election, the hamming
-        // verify and the rollup; the decode step stays pinned by
-        // MultimodalSpec (re-encode invariance, perturbation tolerance,
-        // inversion distance).
-        val imgs = synthMediaOf(s, d, graft.multimodal.Multimodal.synthPng)
-        val pairs = graft.multimodal.Multimodal
-          .imageNeardup(imgs.select("id", "content"), s)
-        pairs
-          .join(mediaSourcesOf(s, d).hint("shuffle_hash"), Seq("id_a"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_pairs"), max("hamming").as("max_hamming"))
-          .orderBy("source")
-      },
-      Some(mediaNeardupOracleSql("image_fps")),
+    // perceptual IMAGE dedup — the pixel-domain member of the near-dup
+    // family: re-encodes, mild noise and small edits change every content
+    // hash but barely move a perceptual hash. The PNGs are
+    // deterministically SYNTHESIZED (no image column in the corpus:
+    // same-source EVEN docs are tiny perturbations of a shared base
+    // raster — the near-dup class — while odd docs repaint half the
+    // image), ENCODED with the JDK encoder, then the operator really
+    // decodes them (ImageIO), aHash-es real pixels, bands the 64-bit hash
+    // 4×16 through the shared bounded BucketPairs kit and verifies by
+    // hamming ≤ 6 — the SimHash pipeline shape in the pixel domain. Only
+    // the DECODE is SQL-inexpressible, so the oracle reads the engine's
+    // (id, ahash) table (writeMediaFpAux) and replays banding, the bounded
+    // election, the hamming verify and the rollup; the decode step stays
+    // pinned by MultimodalSpec (re-encode invariance, perturbation
+    // tolerance, inversion distance).
+    mediaNeardupDef("q_image_neardup", "image_fps",
+      graft.multimodal.Multimodal.synthPng,
+      graft.multimodal.Multimodal.imageHash,
+      graft.multimodal.Multimodal.imageNeardup,
+      mediaNeardupOracleSql("image_fps"),
       "Perceptual image near-dup (aHash over REAL decoded pixels): deterministic " +
         "synthesized PNGs → ImageIO decode → 64-bit block-mean hash → banded " +
         "BucketPairs candidates → hamming verify; per-source pair rollup; oracle " +
         "replays everything downstream of the decode from the materialized " +
-        "fingerprint artifact",
-      aux = Some { (s, d, a) =>
-        writeMediaFpAux(s, d, a, "image_fps",
-          graft.multimodal.Multimodal.synthPng,
-          graft.multimodal.Multimodal.imageHashesOf)
-      }),
+        "fingerprint artifact"),
 
-    QueryDef(
-      "q_audio_neardup", Seq("S2", "F5", "A1"),
-      (s, d) => {
-        // perceptual AUDIO dedup (VERDICT r17 #4) — the signal-domain
-        // twin of q_image_neardup: re-encodes and small edits change
-        // every content hash but barely move a block-energy fingerprint.
-        // Real end-to-end: deterministic WAVs are SYNTHESIZED (no audio
-        // column in the corpus: same-source EVEN docs silence ≤ 3
-        // samples of a shared base signal — the near-dup class — while
-        // odd docs re-level the second half), ENCODED with the JDK WAV
-        // writer, then the operator really decodes them (javax.sound →
-        // PCM), block-energy-hashes the real samples, bands 4×16 through
-        // the shared bounded BucketPairs engine and verifies by hamming
-        // — the q_image_neardup pipeline shape in the signal domain,
-        // sharing its candidate/verify tail verbatim (hash64Neardup).
-        // No DuckDB oracle (SQL cannot parse WAV — the same adjudication
-        // as the image leg); MultimodalSpec pins the fingerprint
-        // contracts and the pair structure.
-        // Oracled since r20 through the materialized fingerprint aux
-        // artifact (the q_image_neardup pattern); decode stays
-        // MultimodalSpec-pinned.
-        val wavs = synthMediaOf(s, d, graft.multimodal.Multimodal.synthWav)
-        val pairs = graft.multimodal.Multimodal
-          .audioNeardup(wavs.select("id", "content"), s)
-        pairs
-          .join(mediaSourcesOf(s, d).hint("shuffle_hash"), Seq("id_a"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_pairs"), max("hamming").as("max_hamming"))
-          .orderBy("source")
-      },
-      Some(mediaNeardupOracleSql("audio_fps")),
+    // perceptual AUDIO dedup — the signal-domain twin of q_image_neardup:
+    // deterministic WAVs are SYNTHESIZED (same-source EVEN docs silence
+    // ≤ 3 samples of a shared base signal — the near-dup class — while odd
+    // docs re-level the second half), ENCODED with the JDK WAV writer,
+    // then really decoded (javax.sound → PCM) and block-energy-hashed;
+    // the candidate/verify tail and the aux-artifact oracle are the
+    // image rung's.
+    mediaNeardupDef("q_audio_neardup", "audio_fps",
+      graft.multimodal.Multimodal.synthWav,
+      graft.multimodal.Multimodal.audioHash,
+      graft.multimodal.Multimodal.audioNeardup,
+      mediaNeardupOracleSql("audio_fps"),
       "Perceptual audio near-dup (block-energy hash over REAL decoded PCM): " +
         "deterministic synthesized WAVs → javax.sound decode → 64-block integer " +
         "energy fingerprint → banded BucketPairs candidates → hamming verify; " +
         "per-source pair rollup; oracle replays everything downstream of the " +
-        "decode from the materialized fingerprint artifact",
-      aux = Some { (s, d, a) =>
-        writeMediaFpAux(s, d, a, "audio_fps",
-          graft.multimodal.Multimodal.synthWav,
-          graft.multimodal.Multimodal.audioHashesOf)
-      }),
+        "decode from the materialized fingerprint artifact"),
 
-    QueryDef(
-      "q_video_neardup", Seq("S2", "F5", "A1"),
-      (s, d) => {
-        // perceptual VIDEO dedup (VERDICT r18 Next #6) — the
-        // moving-picture member of the near-dup family, WITHIN the
-        // signed-off codec boundary: the one video format the JVM can
-        // pixel-decode without a codec (MJPEG-in-AVI — every movi chunk
-        // a standalone baseline JPEG). Real end-to-end: deterministic
-        // two-frame MJPEG AVIs are SYNTHESIZED (no video column in the
-        // corpus: same-source EVEN docs perturb ≤ 3 pixels of frame 0 —
-        // the near-dup class — while odd docs repaint half; frame 1 is
-        // per-doc noise, so detection cannot lean on later frames),
-        // frames REALLY encode through the lossy JDK JPEG writer and the
-        // operator really container-walks + ImageIO-decodes them, then
-        // aHashes the FIRST decoded frame and runs q_image_neardup's
-        // banded candidate/verify tail verbatim. No DuckDB oracle (SQL
-        // cannot parse AVI or decode JPEG — the image/audio-leg
-        // adjudication); MultimodalSpec pins the contracts.
-        // Oracled since r20 through the materialized fingerprint aux
-        // artifact (the q_image_neardup pattern); the container walk +
-        // JPEG decode stays MultimodalSpec-pinned (H.264+ stays the
-        // signed-off codec-bitstream stub).
-        val vids = synthMediaOf(s, d, graft.multimodal.Multimodal.synthMjpegAvi)
-        val pairs = graft.multimodal.Multimodal
-          .videoNeardup(vids.select("id", "content"), s)
-        pairs
-          .join(mediaSourcesOf(s, d).hint("shuffle_hash"), Seq("id_a"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_pairs"), max("hamming").as("max_hamming"))
-          .orderBy("source")
-      },
-      Some(mediaNeardupOracleSql("video_fps")),
+    // perceptual VIDEO dedup — the moving-picture member of the family,
+    // WITHIN the signed-off codec boundary: the one video format the JVM
+    // can pixel-decode without a codec (MJPEG-in-AVI — every movi chunk a
+    // standalone baseline JPEG). Two-frame AVIs are SYNTHESIZED
+    // (same-source EVEN docs perturb ≤ 3 pixels of frame 0 — the near-dup
+    // class — while odd docs repaint half; frame 1 is per-doc noise, so
+    // detection cannot lean on later frames), frames REALLY encode through
+    // the lossy JDK JPEG writer and the operator container-walks +
+    // ImageIO-decodes them, then aHashes the FIRST decoded frame and runs
+    // the image rung's tail. H.264+ stays the codec-bitstream stub.
+    mediaNeardupDef("q_video_neardup", "video_fps",
+      graft.multimodal.Multimodal.synthMjpegAvi,
+      graft.multimodal.Multimodal.videoHash,
+      graft.multimodal.Multimodal.videoNeardup,
+      mediaNeardupOracleSql("video_fps"),
       "Perceptual video near-dup (first-frame aHash over REALLY decoded " +
         "MJPEG-in-AVI rasters): deterministic synthesized two-frame MJPEG AVIs → " +
         "container walk + ImageIO JPEG decode → 64-bit block-mean hash of frame " +
         "0 → banded BucketPairs candidates → hamming verify; per-source rollup; " +
         "oracle replays everything downstream of the decode from the " +
-        "materialized fingerprint artifact",
-      aux = Some { (s, d, a) =>
-        writeMediaFpAux(s, d, a, "video_fps",
-          graft.multimodal.Multimodal.synthMjpegAvi,
-          graft.multimodal.Multimodal.videoHashesOf)
-      }),
+        "materialized fingerprint artifact"),
 
-    QueryDef(
-      "q_video_neardup_scenes", Seq("S2", "F5", "A1"),
-      (s, d) => {
-        // SCENE-level video dedup (VERDICT r19 Next #8 stretch): the
-        // frame-0 rung above is blind to a clip whose FIRST frame was
-        // edited; this one aHashes EVERY decoded frame of the MJPEG
-        // prefix and elects a pair when ANY frames of two clips verify
-        // (min hamming per pair). The synthesized corpus makes the
-        // blindness concrete: every clip's frame 0 is doc-unique noise
-        // (the edit), same-source EVEN docs share a perturbed scene on
-        // frame 1 — so frame-0 hashing finds NOTHING here while the
-        // scene rung recovers the near-dup classes. Oracled through the
-        // per-frame fingerprint aux artifact; decode stays
-        // MultimodalSpec-pinned (H.264+ stays the codec boundary).
-        val vids = synthMediaOf(s, d,
-          graft.multimodal.Multimodal.synthMjpegAviScened)
-        val pairs = graft.multimodal.Multimodal
-          .videoSceneNeardup(vids.select("id", "content"), s)
-        pairs
-          .join(mediaSourcesOf(s, d).hint("shuffle_hash"), Seq("id_a"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_pairs"), max("hamming").as("max_hamming"))
-          .orderBy("source")
-      },
-      Some(mediaSceneNeardupOracleSql("video_scene_fps")),
+    // SCENE-level video dedup: the frame-0 rung above is blind to a clip
+    // whose FIRST frame was edited; this one aHashes EVERY decoded frame
+    // of the MJPEG prefix and elects a pair when ANY frames of two clips
+    // verify (min hamming per pair). In the synthesized corpus every
+    // clip's frame 0 is doc-unique noise (the edit) and same-source EVEN
+    // docs share a perturbed scene on frame 1 — so frame-0 hashing finds
+    // NOTHING here while the scene rung recovers the near-dup classes.
+    // Oracled through the per-frame fingerprint aux artifact.
+    mediaNeardupDef("q_video_neardup_scenes", "video_scene_fps",
+      graft.multimodal.Multimodal.synthMjpegAviScened,
+      graft.multimodal.Multimodal.sceneHashes,
+      graft.multimodal.Multimodal.videoSceneNeardup,
+      mediaSceneNeardupOracleSql("video_scene_fps"),
       "Scene-level video near-dup (per-frame aHash over ALL decoded MJPEG " +
         "frames): catches clips whose first frame was edited but that share a " +
         "later scene — banded (video, frame) hashes through the bounded engine, " +
         "pair elected on ANY matching frames (min hamming), per-source rollup; " +
         "oracle replays banding, the struct-keyed election and the pair fold " +
-        "from the materialized per-frame fingerprint artifact",
-      aux = Some { (s, d, a) =>
-        writeMediaFpAux(s, d, a, "video_scene_fps",
-          graft.multimodal.Multimodal.synthMjpegAviScened,
-          graft.multimodal.Multimodal.videoSceneHashesOf)
-      }),
+        "from the materialized per-frame fingerprint artifact"),
 
     QueryDef(
       "q_cdc_chunk_dedup", Seq("F2", "W1", "A4", "A2"),

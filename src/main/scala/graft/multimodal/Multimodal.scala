@@ -41,7 +41,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Multimodal {
 
-  // Memory-backed ImageIO streams (r20): by default createImageInputStream
+  // Memory-backed ImageIO streams: by default createImageInputStream
   // over an InputStream and ImageIO.write to an OutputStream each spool
   // through a FileCache temp FILE — one create+write+delete per encoded or
   // decoded frame. Every payload here is an in-memory byte array, so the
@@ -51,7 +51,7 @@ object Multimodal {
   // knob, not a codec parameter (MultimodalSpec's golden rasters gate it).
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** javax.sound providers resolved ONCE per JVM (r20):
+  /** javax.sound providers resolved ONCE per JVM:
     * `AudioSystem.getAudioInputStream` and `AudioSystem.write` route every
     * call through the JDK's synchronized provider registry
     * (`JDK13Services.getProviders` — one global lock), which convoys
@@ -190,7 +190,7 @@ object Multimodal {
     * 33 Mpx) so 32 concurrent decode tasks stay within a normal executor
     * heap. The old guard (3 B/px vs the JVM array max) nominally kept
     * rgbBytes allocatable but still admitted ~5 GB transients from a
-    * few-hundred-byte hostile header (r14 review). Over-budget payloads
+    * few-hundred-byte hostile header. Over-budget payloads
     * keep the container-byte mapping with REAL header dims — never a
     * decode attempt, never a stub. */
   private def imageOverBudget(w: Long, h: Long): Boolean =
@@ -268,8 +268,8 @@ object Multimodal {
           // generic leg's [[imageOverBudget]] (7 B/px vs MaxImageBytes),
           // not the animation budget — otherwise a frame in the
           // 32-36.6 Mpx band would be refused here only to be decoded by
-          // the generic fallback anyway under its looser budget (r14
-          // ADVICE: one budget per single-image decode, both legs agree)
+          // the generic fallback anyway under its looser budget (one
+          // budget per single-image decode, so both legs agree)
           if (imageOverBudget(reader.getWidth(0).toLong, reader.getHeight(0).toLong))
             return None
           return Some(singleImageDecoded(reader.read(0)))
@@ -486,7 +486,7 @@ object Multimodal {
     * JPEGs. Frames are the DECODED row-major RGB rasters (the image leg's
     * signal-content contract, now per frame), `pixels` carries frame 0 so
     * the feature job emits a REAL thumbnail, and nFrames is the CONTAINER
-    * frame-chunk count. Decoding is CAPPED (ADVICE r9): a 60 s 1080p clip
+    * frame-chunk count. Decoding is CAPPED: a 60 s 1080p clip
     * is ~1800 × 6 MB ≈ 11 GB of raster if every frame is retained, which
     * blows up a single executor row — so at most [[MaxDecodedFrames]]
     * frames are decoded, sampled every-k-th with frame 0 always included
@@ -516,8 +516,8 @@ object Multimodal {
     * would make frame hashes differ between JVMs that parsed the knob and
     * JVMs that ignored it); set it identically on driver AND executors
     * (spark.executorEnv.*) — a split setting makes hashes for the
-    * 38-100 Mpx band partitioning-dependent. Lazy, not eager (ADVICE
-    * r15): an eager val would surface a bad value as
+    * 38-100 Mpx band partitioning-dependent. Lazy, not eager: an eager
+    * val would surface a bad value as
     * ExceptionInInitializerError at class init and NoClassDefFoundError
     * on every later use — lazy evaluation delivers the
     * IllegalArgumentException message directly to the first decode
@@ -867,59 +867,57 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** Perceptual near-dup LSH parameters of every media rung and of the
+    * fingerprint store: the 64-bit hash bands 4×16 bits, and a pair
+    * verifies at hamming ≤ 6. The DuckDB oracles spell the same
+    * constants. */
+  val HashBands = 4
+  val HashBandBits = 16
+  val MaxHamming = 6
+
   /** Perceptual near-dup pairs over an (id BIGINT, content BINARY) image
     * frame: decode (real ImageIO) → [[aHash64]] → 4×16-bit band buckets →
     * the shared bounded [[graft.BucketPairs]] engine → hamming ≤
-    * `maxHamming` verify. The SimHash pipeline's shape applied to
+    * [[MaxHamming]] verify. The SimHash pipeline's shape applied to
     * pixels: candidates track near-dup density, never all-pairs;
     * undecodable payloads drop out (they have no raster to hash).
     * Returns (id_a, id_b, hamming), id_a < id_b. */
-  def imageNeardup(
-      images: DataFrame, s: SparkSession, maxHamming: Int = 6): DataFrame =
-    hash64Neardup(imageHashesOf(images, s), maxHamming)
+  def imageNeardup(images: DataFrame): DataFrame =
+    hash64Neardup(hashesOf(images, imageHash))
 
-  /** The fingerprint stage of [[imageNeardup]] alone — (id, ahash) per
-    * decodable payload. Public (r20) so the declared query's oracle aux
-    * artifact materializes EXACTLY the hash frame the operator banded
-    * (the ndcg_discounts idiom: the only SQL-inexpressible step is the
-    * decode, so the oracle reads this table and replays banding, hamming
-    * verify and pair election downstream of it in SQL). */
-  def imageHashesOf(images: DataFrame, s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    images.select(col("id"), col("content")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          decodeImage(bytes).flatMap(d =>
-            d.pixels.map(px => (id, aHash64(px, d.width.toInt, d.height.toInt))))
-        }
-      }.toDF("id", "ahash")
+  /** One payload's image fingerprint: [[aHash64]] of the decoded raster
+    * (the first composed frame of an animated GIF); None when nothing
+    * decodes. */
+  def imageHash(bytes: Array[Byte]): Option[Long] =
+    decodeImage(bytes).flatMap(d =>
+      d.pixels.map(px => aHash64(px, d.width.toInt, d.height.toInt)))
+
+  /** The fingerprint stage of every media rung — one (id, ahash) row per
+    * hash that `hash` yields for a payload of the (id, content) frame.
+    * Public so the declared queries' oracle aux artifacts materialize
+    * EXACTLY the hash frame the operator banded: the only
+    * SQL-inexpressible step is the decode, so the oracle reads this
+    * table and replays banding, hamming verify and pair election
+    * downstream of it in SQL. */
+  def hashesOf(media: DataFrame, hash: Array[Byte] => IterableOnce[Long]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import media.sparkSession.implicits._
+    media.select(col("id"), col("content")).as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, bytes) =>
+        hash(bytes).iterator.map(h => (id, h))
+      }).toDF("id", "ahash")
   }
 
-  /** The shared candidate/verify tail of both perceptual near-dup legs:
-    * a 64-bit hash frame (id, ahash) bands 4×16 bits through the bounded
-    * [[graft.BucketPairs]] engine, then verifies by full-hash hamming ≤
-    * `maxHamming`. One spelling, two domains (pixels and PCM). */
-  private def hash64Neardup(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val bandVals = (0 until 4).map(b =>
-      shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xFFFFL)))
-    val sig = hashes.select(
-      struct(col("id"), col("ahash")).as("sid"),
-      posexplode(array(bandVals: _*)).as(Seq("band_id", "band_val")))
-    graft.BucketPairs.pairs(sig, Seq("band_id", "band_val"), "sid", Seq.empty)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.ahash").as("ha"), col("b.ahash").as("hb"))
-      .distinct()
-      .withColumn("hamming", expr("cast(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
+  /** The shared candidate/verify tail of every perceptual near-dup rung:
+    * the (id, ahash) frame through [[graft.BucketPairs.hammingPairs]]. */
+  private def hash64Neardup(hashes: DataFrame): DataFrame =
+    graft.BucketPairs.hammingPairs(hashes, Seq.empty, "id", "ahash",
+      HashBands, HashBandBits, MaxHamming).toDF("id_a", "id_b", "hamming")
 
   // ---- perceptual audio near-dup (block-energy hash) ------------------------
 
   /** 64-bit block-energy hash over a decoded 16-bit little-endian mono
-    * PCM stream — the audio twin of [[aHash64]] (VERDICT r17 #4): the
+    * PCM stream — the audio twin of [[aHash64]]: the
     * sample stream partitions into 64 equal blocks, each block's integer
     * mean |amplitude| compares against the global block mean — bit set
     * when louder. Exact integer arithmetic end to end (no FFT, no
@@ -1017,24 +1015,13 @@ object Multimodal {
     * decoded PCM → the shared banded candidate/verify tail. Undecodable
     * payloads drop out (no signal to hash). Returns
     * (id_a, id_b, hamming), id_a < id_b. */
-  def audioNeardup(
-      audio: DataFrame, s: SparkSession, maxHamming: Int = 6): DataFrame =
-    hash64Neardup(audioHashesOf(audio, s), maxHamming)
+  def audioNeardup(audio: DataFrame): DataFrame =
+    hash64Neardup(hashesOf(audio, audioHash))
 
-  /** The fingerprint stage of [[audioNeardup]] alone — (id, ahash) per
-    * decodable payload; public for the oracle aux artifact (see
-    * [[imageHashesOf]]). */
-  def audioHashesOf(audio: DataFrame, s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    audio.select(col("id"), col("content")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          decodeAudio(bytes).map(d =>
-            (id, audioHash64(d.frames.toArray.flatten)))
-        }
-      }.toDF("id", "ahash")
-  }
+  /** One payload's audio fingerprint: [[audioHash64]] over the decoded
+    * PCM; None when nothing decodes. */
+  def audioHash(bytes: Array[Byte]): Option[Long] =
+    decodeAudio(bytes).map(d => audioHash64(d.frames.toArray.flatten))
 
   // ---- perceptual video near-dup (first-frame aHash) ------------------------
 
@@ -1135,7 +1122,7 @@ object Multimodal {
   }
 
   /** Perceptual near-dup pairs over an (id BIGINT, content BINARY) VIDEO
-    * frame — the video legs that REALLY decode (VERDICT r18 Next #6):
+    * frame — the video legs that REALLY decode:
     * MJPEG-in-AVI (every movi chunk a standalone baseline JPEG —
     * [[aviMjpgDecoded]] yields true rasters) and animated GIF (composed
     * delta frames). The fingerprint is [[aHash64]] of the FIRST decoded
@@ -1146,13 +1133,11 @@ object Multimodal {
     * decode no raster (metadata-only MP4/AVI, stubs, still images)
     * drop out; candidates band through the shared bounded engine and
     * verify by hamming — [[imageNeardup]]'s tail verbatim. */
-  def videoNeardup(
-      videos: DataFrame, s: SparkSession, maxHamming: Int = 6): DataFrame =
-    hash64Neardup(videoHashesOf(videos, s), maxHamming)
+  def videoNeardup(videos: DataFrame): DataFrame =
+    hash64Neardup(hashesOf(videos, videoHash))
 
   /** SCENE-level perceptual near-dup over an (id BIGINT, content BINARY)
-    * VIDEO frame (VERDICT r19 Next #8, within the signed-off codec
-    * boundary): where [[videoNeardup]] fingerprints frame 0 only — and
+    * VIDEO frame (within the signed-off codec boundary): where [[videoNeardup]] fingerprints frame 0 only — and
     * so misses a clip whose FIRST frame was edited — this rung aHashes
     * EVERY decoded frame of the MJPEG/GIF prefix (the per-frame
     * multi-hash shape; [[aviMjpgDecoded]]'s byte-budgeted stride keeps
@@ -1161,38 +1146,21 @@ object Multimodal {
     * of one clip verifies within hamming of ANY frame of the other —
     * min hamming per pair, self-scene matches dropped. Returns
     * (id_a, id_b, hamming), id_a < id_b. */
-  def videoSceneNeardup(
-      videos: DataFrame, s: SparkSession, maxHamming: Int = 6): DataFrame = {
+  def videoSceneNeardup(videos: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    hash64Neardup(videoSceneHashesOf(videos, s), maxHamming)
+    hash64Neardup(hashesOf(videos, sceneHashes))
       .filter(col("id_a") =!= col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("hamming")).as("hamming"))
   }
 
-  /** The fingerprint stage of [[videoSceneNeardup]] alone — one
-    * (id, ahash) row per DECODED frame of each true multi-frame payload
-    * (frames whose raster does not match the declared dimensions are
-    * skipped rather than mis-strided); public for the oracle aux
-    * artifact (see [[imageHashesOf]]). */
-  def videoSceneHashesOf(videos: DataFrame, s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    videos.select(col("id"), col("content")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          sceneHashesOf(bytes).map(h => (id, h))
-        }
-      }.toDF("id", "ahash")
-  }
-
-  /** One payload's per-frame scene hashes — the per-row core of
-    * [[videoSceneHashesOf]], shared with the fingerprint store's scene
+  /** One payload's per-frame scene hashes — the fingerprint of
+    * [[videoSceneNeardup]], shared with the fingerprint store's scene
     * rows ([[graft.streaming.FingerprintStore]]) so batch and at-ingest
     * scene fingerprints cannot drift. Empty for non-multi-frame or
     * undecodable payloads; frames whose raster does not match the
     * declared dimensions are skipped rather than mis-strided. */
-  def sceneHashesOf(bytes: Array[Byte]): Seq[Long] =
+  def sceneHashes(bytes: Array[Byte]): Seq[Long] =
     decodeImage(bytes).orElse(decodeVideo(bytes))
       .filter(d => d.kind == "video" || d.nFrames.exists(_ > 1))
       .filter(_.pixels.isDefined) // real rasters, not sampled bytes
@@ -1261,20 +1229,11 @@ object Multimodal {
     mjpegAviOf(Seq(noise("edit"), f1), 16, 16)
   }
 
-  /** The fingerprint stage of [[videoNeardup]] alone — (id, ahash) of
-    * the first decoded frame per true video payload; public for the
-    * oracle aux artifact (see [[imageHashesOf]]). */
-  def videoHashesOf(videos: DataFrame, s: SparkSession): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    videos.select(col("id"), col("content")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          decodeImage(bytes).orElse(decodeVideo(bytes))
-            .filter(d => d.kind == "video" || d.nFrames.exists(_ > 1))
-            .flatMap(d => d.pixels.map(px =>
-              (id, aHash64(px, d.width.toInt, d.height.toInt))))
-        }
-      }.toDF("id", "ahash")
-  }
+  /** One payload's video fingerprint: [[aHash64]] of the first decoded
+    * frame of a true video (or multi-frame GIF) payload; None for still
+    * images and payloads that decode no raster. */
+  def videoHash(bytes: Array[Byte]): Option[Long] =
+    decodeImage(bytes).orElse(decodeVideo(bytes))
+      .filter(d => d.kind == "video" || d.nFrames.exists(_ > 1))
+      .flatMap(d => d.pixels.map(px => aHash64(px, d.width.toInt, d.height.toInt)))
 }

@@ -100,7 +100,7 @@ object FingerprintStore {
     * `scenes = true` (the at-ingest twin of the batch
     * q_video_neardup_scenes rung) additionally emits one `kind =
     * "scene"` row PER DECODED FRAME of each multi-frame payload
-    * ([[Multimodal.sceneHashesOf]], the ONE per-frame spelling), still
+    * ([[Multimodal.sceneHashes]], the ONE per-frame spelling), still
     * within the same single decode pass. Scene rows match scene rows
     * only (the within-kind probe contract), so the first-frame flag
     * semantics are unchanged and scene matches — clips whose FIRST
@@ -115,33 +115,31 @@ object FingerprintStore {
           val base = fpOf(bytes).map { case (kind, h) => (id, kind, h) }
           if (!scenes) base.iterator
           else base.iterator ++
-            Multimodal.sceneHashesOf(bytes).iterator.map(h => (id, "scene", h))
+            Multimodal.sceneHashes(bytes).iterator.map(h => (id, "scene", h))
         }
       }.toDF("id", "kind", "ahash")
   }
 
   private def fpOf(bytes: Array[Byte]): Option[(String, Long)] =
-    Multimodal.decodeImage(bytes).flatMap(d =>
-        d.pixels.map(px =>
-          ("image", Multimodal.aHash64(px, d.width.toInt, d.height.toInt))))
-      .orElse(Multimodal.decodeAudio(bytes).map(d =>
-        ("audio", Multimodal.audioHash64(d.frames.toArray.flatten))))
+    Multimodal.imageHash(bytes).map(("image", _))
+      .orElse(Multimodal.audioHash(bytes).map(("audio", _)))
       .orElse(Multimodal.decodeVideo(bytes).flatMap(d =>
         d.pixels.map(px =>
           ("video", Multimodal.aHash64(px, d.width.toInt, d.height.toInt)))))
 
-  private def bandsOf(fps: DataFrame): DataFrame = {
-    val bandVals = (0 until 4).map(b =>
-      shiftright(col("ahash"), 16 * b).bitwiseAND(lit(0xFFFFL)))
+  /** The stored row layout: the batch media rungs' banding
+    * ([[graft.BucketPairs.hashBands]], 4×16 bits) as rows, bucketed. */
+  private def bandsOf(fps: DataFrame): DataFrame =
     fps.select(col("id"), col("kind"), col("ahash"),
-        posexplode(array(bandVals: _*)).as(Seq("band_id", "band_val")))
+        posexplode(graft.BucketPairs.hashBands(col("ahash"),
+          Multimodal.HashBands, Multimodal.HashBandBits)).as(Seq("band_id", "band_val")))
       .withColumn("band_bucket", pmod(col("band_val"), lit(Buckets.toLong)))
-  }
 
   /** Probe a batch's fingerprints ((id, kind, ahash) —
     * [[fingerprintsOf]]'s output) against ALREADY-STORED fingerprints:
     * (id, dup_of, hamming) for each batch row within hamming ≤
-    * `maxHamming` of a stored row of the SAME kind (min dup_of on ties).
+    * [[Multimodal.MaxHamming]] of a stored row of the SAME kind (min
+    * dup_of on ties), verified by [[graft.BucketPairs.hammingVerify]].
     * The store scan is statically pruned to the batch's band buckets.
     * Empty frame when the store does not exist yet.
     *
@@ -154,7 +152,6 @@ object FingerprintStore {
     * with schema merge) carry nulls and are always kept. */
   def probe(
       spark: SparkSession, lake: String, fps: DataFrame,
-      maxHamming: Int = 6,
       excludeBatch: Option[(String, Long)] = None): DataFrame = {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long, Long)].toDF("id", "dup_of", "hamming")
@@ -173,16 +170,14 @@ object FingerprintStore {
     // partition pruning
     val touched = batch.select("band_bucket").distinct().as[Long].collect()
     if (touched.isEmpty) return empty
-    store.filter(col("band_bucket").isin(touched: _*))
+    val cand = store.filter(col("band_bucket").isin(touched: _*))
       .select(col("kind"), col("band_id"), col("band_val"),
         col("id").as("dup_of"), col("ahash").as("sh"))
       .join(batch.hint("shuffle_hash"), Seq("kind", "band_id", "band_val"))
       .filter(col("id") =!= col("dup_of"))
-      .select(col("id"), col("dup_of"), col("ahash"), col("sh"))
-      .distinct() // one candidate per pair (bands collide repeatedly);
-                  // also folds byte-identical replay rows in the store
-      .withColumn("hamming", expr("cast(bit_count(ahash ^ sh) AS BIGINT)"))
-      .filter(col("hamming") <= maxHamming)
+    // the verify's distinct also folds byte-identical replay rows in the store
+    graft.BucketPairs.hammingVerify(cand, "id", "dup_of", "ahash", "sh",
+        Multimodal.MaxHamming)
       .groupBy(col("id"))
       .agg(min_by(struct(col("dup_of"), col("hamming")), col("dup_of")).as("m"))
       .select(col("id"), col("m.dup_of").as("dup_of"), col("m.hamming").as("hamming"))
@@ -222,14 +217,13 @@ object FingerprintStore {
     * tolerant store, never into a lost batch). */
   def probeAppend(
       spark: SparkSession, lake: String, media: DataFrame,
-      maxHamming: Int = 6,
       batchId: Long = -1L, lineage: String = "adhoc",
       scenes: Boolean = false): DataFrame = {
     val keyed = batchId >= 0L
     val replayed = keyed && loadMeta(lake).exists(m =>
       Streaming.replayed(m.lastBatchId, Some(m.lineage), batchId, lineage))
     val fps = fingerprintsOf(media, spark, scenes).localCheckpoint()
-    val flags = probe(spark, lake, fps, maxHamming,
+    val flags = probe(spark, lake, fps,
       excludeBatch = if (keyed) Some((lineage, batchId)) else None)
       .localCheckpoint() // materialize BEFORE the append mutates the store
     if (!replayed) {

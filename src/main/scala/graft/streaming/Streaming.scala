@@ -418,7 +418,6 @@ object Streaming {
       lakeDir: String,
       collectionId: Long,
       checkpointDir: String,
-      maxHamming: Int = 6,
       maxFilesPerTrigger: Int = 1000,
       scenes: Boolean = false): StreamingQuery = {
     import org.apache.spark.sql.functions._
@@ -444,7 +443,7 @@ object Streaming {
             xxhash64(col("path")).as("id"), col("path").as("name"),
             col("content")).localCheckpoint()
           val flags = FingerprintStore.probeAppend(
-            spark, lakeDir, media.select("id", "content"), maxHamming,
+            spark, lakeDir, media.select("id", "content"),
             batchId = batchId, lineage = lineage, scenes = scenes)
           flags
             .withColumn("collection_id", lit(collectionId))

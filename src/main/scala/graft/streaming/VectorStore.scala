@@ -88,12 +88,16 @@ object VectorStore {
     val cs = centroidsOf(spark, lake, vecs)
     val (cbs, rot) = graft.ingest.Sink.readOrEmpty(spark, codebookPath(lake)) match {
       case Some(df) =>
-        val rows = df.select(col("m"), col("cell"), col("c"))
-          .as[(Long, Long, Seq[Double])].collect()
+        // the marker rides the codebook collect; a store written before
+        // the marker existed reads as not rotated
+        val marker =
+          if (df.columns.contains("rotated")) coalesce(col("rotated"), lit(false))
+          else lit(false)
+        val rows = df.select(col("m"), col("cell"), col("c"), marker)
+          .as[(Long, Long, Seq[Double], Boolean)].collect()
         val loaded = rows.groupBy(_._1).toArray.sortBy(_._1)
           .map(_._2.sortBy(_._2).map(_._3.toArray))
-        val rotated = df.columns.contains("rotated") &&
-          df.filter(col("rotated")).limit(1).count() > 0
+        val rotated = rows.exists(_._4)
         val storedRot = graft.ingest.Sink.readOrEmpty(spark, rotationPath(lake))
           .map(_.select(col("i"), col("r")).as[(Long, Seq[Double])].collect()
             .sortBy(_._1).map(_._2.toArray))

@@ -69,10 +69,10 @@ object AbFingerprintBench {
 
     def storeCheck(): DataFrame =
       FingerprintStore.probe(spark, lake,
-        FingerprintStore.fingerprintsOf(batchMedia, spark), maxHamming = 6)
+        FingerprintStore.fingerprintsOf(batchMedia, spark))
 
     def recomputeCheck(): DataFrame =
-      Multimodal.audioNeardup(corpusMedia.unionAll(batchMedia), spark, maxHamming = 6)
+      Multimodal.audioNeardup(corpusMedia.unionAll(batchMedia))
         .filter(col("id_b") >= 1000000000L && col("id_a") < 1000000000L)
         .groupBy(col("id_b").as("id"))
         .agg(min_by(struct(col("id_a"), col("hamming")), col("id_a")).as("m"))

@@ -678,7 +678,7 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, Multimodal.synthWav("srcA", 1L)), // re-leveled half: far
       (4L, "not audio at all".getBytes("UTF-8"))) // undecodable → drops out
       .toDF("id", "content")
-    def run(parts: Int) = Multimodal.audioNeardup(auds.repartition(parts), s)
+    def run(parts: Int) = Multimodal.audioNeardup(auds.repartition(parts))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run(1) === Set((1L, 2L)))
     // partitioning must not change the pair set (bounded-engine contract)
@@ -696,7 +696,7 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, encode(gradientImage(dark = true), "png")), // far
       (4L, "not an image at all".getBytes("UTF-8"))) // undecodable → drops out
       .toDF("id", "content")
-    def run(parts: Int) = Multimodal.imageNeardup(imgs.repartition(parts), s)
+    def run(parts: Int) = Multimodal.imageNeardup(imgs.repartition(parts))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run(1) === Set((1L, 2L)))
     // partitioning must not change the pair set (bounded-engine contract)
@@ -765,7 +765,7 @@ class MultimodalSpec extends AnyFunSuite {
       (6L, encode(gradientImage(), "png")), // STILL image: out of scope
       (7L, "not a video at all".getBytes("UTF-8"))) // undecodable → drops out
       .toDF("id", "content")
-    def run(parts: Int) = Multimodal.videoNeardup(vids.repartition(parts), s)
+    def run(parts: Int) = Multimodal.videoNeardup(vids.repartition(parts))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run(1) === Set((1L, 2L), (4L, 5L)))
     // partitioning must not change the pair set (bounded-engine contract)
@@ -783,12 +783,12 @@ class MultimodalSpec extends AnyFunSuite {
       (2L, Multimodal.synthMjpegAviScened("srcS", 2L)),
       (3L, Multimodal.synthMjpegAviScened("srcS", 1L)))
       .toDF("id", "content")
-    val scenePairs = Multimodal.videoSceneNeardup(vids, s)
+    val scenePairs = Multimodal.videoSceneNeardup(vids)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(scenePairs === Set((1L, 2L)),
       s"the shared later scene must pair the first-frame-edited clips, got $scenePairs")
     // …which the declared frame-0 rung is structurally blind to
-    assert(Multimodal.videoNeardup(vids, s).collect().isEmpty,
+    assert(Multimodal.videoNeardup(vids).collect().isEmpty,
       "frame-0 hashing must see nothing on a corpus whose first frames are edits")
     // the other direction: LAST-frame-edited clips (synthMjpegAvi —
     // shared frame 0, doc-unique frame 1) pair under BOTH rungs
@@ -796,9 +796,9 @@ class MultimodalSpec extends AnyFunSuite {
       (4L, Multimodal.synthMjpegAvi("srcT", 0L)),
       (5L, Multimodal.synthMjpegAvi("srcT", 2L)))
       .toDF("id", "content")
-    assert(Multimodal.videoNeardup(tails, s)
+    assert(Multimodal.videoNeardup(tails)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((4L, 5L)))
-    assert(Multimodal.videoSceneNeardup(tails, s)
+    assert(Multimodal.videoSceneNeardup(tails)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((4L, 5L)))
     // a clip never scene-matches ITSELF (same-clip frame bands drop)
     assert(!scenePairs.exists(p => p._1 == p._2))

@@ -29,6 +29,25 @@ class VectorStoreSpec extends AnyFunSuite {
     rows.toSeq.toDF("vec_id", "embedding")
   }
 
+  /** `body`'s result and the Spark jobs started while it ran (the
+    * JobBudgetSpec listener). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = s.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftBenchBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftBenchBus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("probe-before-append flags a same-cell near-copy, ignores strangers") {
     import s.implicits._
     val lake = Files.createTempDirectory("graft-vstore").toString
@@ -87,6 +106,17 @@ class VectorStoreSpec extends AnyFunSuite {
     // a DIFFERENT training frame must not change the stored quantizer
     val b = VectorStore.centroidsOf(s, lake, embAll.filter(col("vec_id") >= 100))
     assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
+  }
+
+  test("loading the serving kit reads the rotation marker from the collected codebook rows") {
+    val lake = Files.createTempDirectory("graft-vstore-kitjobs").toString
+    VectorStore.append(s, lake, embAll)
+    // centroids and codebooks: a footer read and a collect each; the
+    // rotation artifact is absent. The `rotated` marker rides the
+    // codebook collect, so it costs no job of its own.
+    val (kit, jobs) = jobsOf(VectorStore.servingKitOf(s, lake))
+    assert(kit.rot == null, "a plain residual-PQ store is not rotated")
+    assert(jobs === 4, s"servingKitOf ran $jobs Spark jobs")
   }
 
   test("store-served ADC probe is byte-identical to the batch IVFADC query") {
