@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The management-command surface end-to-end: load --upgrade, status,
   * incremental checks (idempotent), metadata, notes, orphan GC, tree
-  * delete — each invocation a separate main() call composing through the
+  * delete — each invocation a separate Cli.run call composing through the
   * persisted _control.json, like the reference's commands compose through
   * its control tables. */
 class CliSpec extends AnyFunSuite {
@@ -34,7 +34,7 @@ class CliSpec extends AnyFunSuite {
   private def run(args: String*): String = {
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      Cli.main(args.toArray)
+      Cli.run(args.toArray)
     }
     out.toString("UTF-8")
   }
@@ -197,7 +197,9 @@ class CliSpec extends AnyFunSuite {
     assert(run("addchecks", lake, "1").contains("checked=0"))
   }
 
-  test("dedup / corpus-select run the corpus pipeline over a LOADED collection") {
+  /** A loaded lake (source `dd_local`) whose collection 1 is the
+    * three-document near-dup fixture the corpus-verb cases share. */
+  private def dedupLake(): String = {
     val dir = Files.createTempDirectory("graft-cli-dedup")
     // two near-identical releases (one token apart over ~35 distinct
     // tokens → Jaccard ≈ 0.95, over the 0.9 near-dup threshold) plus one
@@ -219,6 +221,11 @@ class CliSpec extends AnyFunSuite {
          | "releases": [${rel("a1")}, ${rel("a2")}, $distinct]}""".stripMargin)
     val lake = Files.createTempDirectory("graft-cli-dedup-lake").toString
     run("load", dir.toString, lake, "--source", "dd_local")
+    lake
+  }
+
+  test("dedup / corpus-select run the corpus pipeline over a LOADED collection") {
+    val lake = dedupLake()
     // near-dup payoff: the a1/a2 pair forms one cluster, one doc removed
     val payoff = run("dedup", lake, "1")
     assert(payoff.contains("source=dd_local"))
@@ -444,6 +451,148 @@ class CliSpec extends AnyFunSuite {
     val rawTok = urows.map(r => graft.functions.Bpe
       .tokens(r.get("text").asText).length.toLong).sum
     assert(upwins.map(_.get("n_tokens").asLong).sum === rawTok)
+  }
+
+  test("golden: corpus verbs print the same stdout over the dedup fixture") {
+    val lake = dedupLake()
+    val out = Files.createTempDirectory("graft-cli-golden").toString
+    def sh(args: String*): String = run(args: _*).replace(lake, "<lake>").replace(out, "<out>")
+    val cases = Seq(
+      Seq("dedup", lake, "1"),
+      Seq("corpus-select", lake, "1"),
+      Seq("corpus-build", lake, "1"),
+      Seq("substr-dedup", lake, "1"),
+      Seq("substr-dedup", lake, "1", "--width", "4"),
+      Seq("quality-gate", lake, "1"),
+      Seq("source-mix", lake, "1"),
+      Seq("gopher-rules", lake, "1"),
+      Seq("length-stats", lake, "1"),
+      Seq("heavy-terms", lake, "1", "--width", "4", "--min", "2"),
+      Seq("search", lake, "1", "harbor"),
+      Seq("index", lake, "1"),
+      Seq("search", lake, "1", "harbor", "--indexed", "--top", "1"),
+      Seq("c4-lines", lake, "1"),
+      Seq("line-dedup", lake, "1"),
+      Seq("export", lake, "1", s"$out/plain", "--shards", "2"),
+      Seq("export", lake, "1", s"$out/epoch", "--shards", "2", "--epoch", "9"),
+      Seq("export", lake, "1", s"$out/unimax", "--shards", "2", "--epoch", "500", "--unimax", "2"),
+      Seq("export", lake, "1", s"$out/packed", "--shards", "2", "--epoch", "9", "--packed"))
+    // rows in engine order where the verb orders them (stages, ranks,
+    // heavy-hitter counts); sorted lines where it does not
+    val ordered = Set("corpus-build", "heavy-terms", "search")
+    val transcript = cases.flatMap { c =>
+      val lines = sh(c: _*).linesIterator.toSeq
+      s"### ${c.mkString(" ").replace(lake, "<lake>").replace(out, "<out>")}" +:
+        (if (ordered(c.head)) lines else lines.sorted)
+    }
+    assert(transcript.mkString("\n") ===
+      """### dedup <lake> 1
+        |source=dd_local docs_removed=1 tokens_removed=44 n_clusters=1
+        |### corpus-select <lake> 1
+        |source=dd_local n_total=3 n_pass=3 n_keeper=3 n_selected=2 tokens_selected=79
+        |### corpus-build <lake> 1
+        |stage=0:raw source=dd_local n_docs=3 n_tokens=123
+        |stage=1:gopher source=dd_local n_docs=3 n_tokens=123
+        |stage=2:c4_lines source=dd_local n_docs=3 n_tokens=123
+        |stage=3:line_dedup source=dd_local n_docs=3 n_tokens=123
+        |stage=4:exact_dedup source=dd_local n_docs=3 n_tokens=123
+        |stage=5:decontaminate source=dd_local n_docs=3 n_tokens=123
+        |stage=6:quality_gate source=dd_local n_docs=2 n_tokens=88
+        |stage=7:split_train source=dd_local n_docs=2 n_tokens=88
+        |stage=8:mix_targets source=dd_local n_docs=2 n_tokens=88 n_target=100000
+        |### substr-dedup <lake> 1
+        |width=6 docs=3 docs_hit=2 tokens_total=123 tokens_dup=86 dup_frac=0.6992
+        |### substr-dedup <lake> 1 --width 4
+        |width=4 docs=3 docs_hit=3 tokens_total=123 tokens_dup=90 dup_frac=0.7317
+        |### quality-gate <lake> 1
+        |source=dd_local n_total=3 n_cut=1 n_kept=2 threshold=0.1429
+        |### source-mix <lake> 1
+        |source=dd_local n_docs=3 n_tokens=123 weight=1.000000 n_target=100000
+        |### gopher-rules <lake> 1
+        |source=dd_local n_docs=3 n_pass=3 fail_words=0 fail_meanlen=0 fail_alpha=0 fail_stop=0 fail_symbol=0 fail_rep=0
+        |### length-stats <lake> 1
+        |source=dd_local n_docs=3 p50=44 p90=44 p99=44 max=44
+        |### heavy-terms <lake> 1 --width 4 --min 2
+        |n=3 gram=initiationType tender ocid ocds
+        |n=2 gram= date 2020 01
+        |n=2 gram=01 01T00 00 00Z
+        |n=2 gram=01T00 00 00Z id
+        |n=2 gram=2020 01 01T00 00
+        |n=2 gram=a kind jumps over
+        |n=2 gram=and waits while seven
+        |n=2 gram=brown fox of a
+        |n=2 gram=date 2020 01 01T00
+        |n=2 gram=dd1 tag tender tender
+        |n=2 gram=description the quick brown
+        |n=2 gram=dog in every harbor
+        |n=2 gram=every harbor and waits
+        |n=2 gram=fox of a kind
+        |n=2 gram=harbor and waits while
+        |n=2 gram=in every harbor and
+        |n=2 gram=jumps over to the
+        |n=2 gram=kind jumps over to
+        |n=2 gram=lazy dog in every
+        |n=2 gram=ocds dd1 tag tender
+        |### search <lake> 1 harbor
+        |doc_id=191222655828808795 n_terms=1 score=0.582562
+        |doc_id=3843385575106683804 n_terms=1 score=0.582562
+        |### index <lake> 1
+        |indexed collection 1: n_docs=3 n_tokens=123 store=<lake>/bm25_index_c1
+        |### search <lake> 1 harbor --indexed --top 1
+        |doc_id=191222655828808795 n_terms=1 score=0.582562
+        |### c4-lines <lake> 1
+        |source=dd_local n_docs=3 n_lines=3 n_kept=0 n_docs_lorem=0
+        |### line-dedup <lake> 1
+        |source=dd_local n_docs=3 n_lines=3 n_dup=0 chars_removed=0
+        |### export <lake> 1 <out>/plain --shards 2
+        |exported collection 1 to <out>/plain shards=2
+        |### export <lake> 1 <out>/epoch --shards 2 --epoch 9
+        |exported epoch (budget=9, rows=9) of collection 1 to <out>/epoch shards=2
+        |### export <lake> 1 <out>/unimax --shards 2 --epoch 500 --unimax 2
+        |exported unimax epoch (budget=500 tokens, rows=6, tokens=246, maxEpochs=2) of collection 1 to <out>/unimax shards=2
+        |### export <lake> 1 <out>/packed --shards 2 --epoch 9 --packed
+        |exported packed epoch (budget=9, windows=2, tokens=1506) of collection 1 to <out>/packed shards=2""".stripMargin)
+  }
+
+  test("usage errors: one line each, thrown to the caller instead of exiting the JVM") {
+    val lake = Files.createTempDirectory("graft-cli-usage").toString
+    run("load", inputTree().toString, lake, "--upgrade") // 1 root, 2 its upgraded child
+    val fresh = Files.createTempDirectory("graft-cli-usage-fresh").toString
+    val cases = Seq(
+      Seq("collectionstatus", lake, "x") -> "collection id must be a number, got 'x'",
+      Seq("collectionstatus", lake, "99") -> "unknown collection 99",
+      Seq("substr-dedup", lake, "1", "--width", "0") -> "--width needs a number >= 1, got '0'",
+      Seq("dedup", lake, "1", "--max-bucket", "1") -> "--max-bucket needs a number > 1, got '1'",
+      Seq("heavy-terms", lake, "1", "--widht", "4") ->
+        "heavy-terms: unrecognized arguments: --widht 4",
+      Seq("export", lake, "1", fresh, "--packed") -> "--packed requires --epoch N",
+      Seq("vector-search", fresh, fresh, "--batch", "--exact", "--sq8") ->
+        "--exact and --sq8 are different nomination modes — pick one",
+      Seq("load", inputTree().toString, fresh, "--complie") ->
+        "load: unrecognized arguments: --complie",
+      Seq("load", inputTree().toString, fresh, "--id") -> "--id needs a positive number",
+      Seq("collections", lake, "--with-compiles") ->
+        "collections: unrecognized arguments: --with-compiles",
+      Seq("notes", lake, "1", "--limt", "5") -> "notes: unrecognized arguments: --limt",
+      Seq("corpus-build", lake, "1", "--unimx", "2") ->
+        "corpus-build: unrecognized arguments: --unimx 2",
+      Seq("vector-index", fresh, fresh, "--sq9") -> "vector-index: unrecognized arguments: --sq9",
+      Seq("api", lake, "--prot", "9000") -> "api: unrecognized arguments: --prot 9000",
+      Seq("search", lake, "1", "harbor", "--topp", "5") ->
+        "search: unrecognized arguments: --topp",
+      Seq("compact", lake, "nope", "1") ->
+        s"unknown table 'nope' (one of: ${graft.control.Wipe.FactTables.mkString(", ")})",
+      Seq("compact", lake, "release", "99") -> "unknown collection 99: nothing to compact",
+      Seq("metadata", lake, "2") -> "The collection must be a compiled collection",
+      Seq("compile", lake, "2") ->
+        "Collection 2 is not a root collection. Its parent is collection 1.",
+      Seq("frobnicate", lake) -> s"unknown command: frobnicate $lake\n${Cli.Usage}")
+    cases.foreach { case (args, msg) =>
+      val e = intercept[Cli.UsageError](Cli.run(args.toArray))
+      assert(e.getMessage === msg, args.mkString(" "))
+    }
+    // the mistyped loads ran nothing
+    assert(!Files.exists(java.nio.file.Paths.get(s"$fresh/_control.json")))
   }
 
   test("dsir-select ranks a raw collection toward a curated target collection") {

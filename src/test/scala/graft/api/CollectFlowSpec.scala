@@ -633,7 +633,7 @@ class CollectFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the CLI reader serves the same slice
       val buf = new java.io.ByteArrayOutputStream()
       Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
-        graft.Cli.main(Array("manifest", lakeM, idA.toString))
+        graft.Cli.run(Array("manifest", lakeM, idA.toString))
       }
       assert(buf.toString("UTF-8").linesIterator.contains(
         s"collection=$idA stage=0:raw source=mfa_spider n_docs=3 " +

@@ -319,7 +319,7 @@ class StatsStoreSpec extends AnyFunSuite {
       docs("x y z"), "text", batchId = 1L)
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      graft.Cli.main(Array("corpus-stats", lake))
+      graft.Cli.run(Array("corpus-stats", lake))
     }
     val text = out.toString("UTF-8")
     assert(text.contains("kmv_sources=1 kmv_k=16 kmv_docs=1 PARTIAL(n_docs=2)"), text)
@@ -334,7 +334,7 @@ class StatsStoreSpec extends AnyFunSuite {
       "text", batchId = 0L, sourceCol = Some("source"))
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      graft.Cli.main(Array("corpus-stats", lake))
+      graft.Cli.run(Array("corpus-stats", lake))
     }
     val text = out.toString("UTF-8")
     assert(text.contains("kmv_sources=2"), text)
@@ -352,7 +352,7 @@ class StatsStoreSpec extends AnyFunSuite {
       docs("a b c", "a a"), "text", batchId = 0L)
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      graft.Cli.main(Array("corpus-stats", lake))
+      graft.Cli.run(Array("corpus-stats", lake))
     }
     val text = out.toString("UTF-8")
     assert(text.contains("n_docs=2 n_tokens=5 distinct_tokens=3 exact=true"), text)
